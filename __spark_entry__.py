@@ -29,80 +29,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return q.QUERIES["restructure_flagship"](spark, "/root/testdata/sf0.001")
 
 
-#: The driver's gate records only the first ~50 dict entries, so ordering
-#: chooses which queries get a CORRECTNESS row each round. Round-11 rotation
-#: (the r10-verdict "Next round" item 1, machine-checked by
-#: tests/test_registry_coverage.py against CERT_AGE.json): slots 1-48 are
-#: the full r8-certified backlog (age 2 entering round 11 -- certify-or-
-#: expire), and slots 49-50 refresh the two STALEST r9-certified rows
-#: (prior green r6, alphabetical tie-break: ann_int8_recall_at_k,
-#: ann_int8_topk) so the round-12 backlog shrinks to 44, matching the
-#: 3-round certification capacity (144 queries / ~150 slots). No new gated
-#: queries at rotation time; scripts/check_oracles.py still verifies the
-#: full registry locally via the committed ORACLES_LOCAL.json.
-_GATE_HEAD = (
-    # -- r8-certified backlog (48; age 2 -- certify-or-expire this round) --
-    "ann_ivf_incremental_topk",
-    "ann_multiprobe_lsh_topk",
-    "asof_last_purchase",
-    "asof_next_purchase",
-    "bpe_encode_docs",
-    "bpe_merges_docs",
-    "containment_pairs_docs",
-    "corpus_vocabulary_docs",
-    "cosine_range_search",
-    "cosine_topk_bruteforce",
-    "dedup_clusters_docs",
-    "dedup_survivors_docs",
-    "doc_fingerprint_overlap",
-    "doc_gopher_quality",
-    "doc_length_quantiles",
-    "doc_ngram_novelty",
-    "doc_train_split",
-    "doc_type_token_ratio",
-    "doc_winnow_fingerprints",
-    "dup_group_size_hist_docs",
-    "embedding_dedup_survivors",
-    "embedding_dup_clusters",
-    "embedding_gram_matrix",
-    "embedding_norms",
-    "embedding_quantize",
-    "event_time_cascade",
-    "extraction_check",
-    "hourly_event_counts",
-    "jaccard_pairs_docs",
-    "knn_label_accuracy",
-    "minhash_estimate_error_docs",
-    "minhash_lsh_pairs_docs",
-    "minhash_signatures_docs",
-    "multimodal_features",
-    "offset_antijoin",
-    "pmi_collocations_docs",
-    "scd2_user_state_events",
-    "session_windows_events",
-    "simhash_docs",
-    "source_balance_weights_docs",
-    "source_dup_rate_docs",
-    "temperature_mixture_docs",
-    "tokenizer_fertility_docs",
-    "tpch_q11_important_parts",
-    "tpch_q12_priority_lines",
-    "tpch_q20_part_promotion",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q9_profit_by_nation",
-    # -- slots 49-50: stalest r9-certified rows, refreshed a round early --
-    "ann_int8_recall_at_k",
-    "ann_int8_topk",
-    # After the head: the remaining r9/r10-certified queries ride the tail
-    # at age <= 1 entering round 12 -- the 44 other r9-certified queries
-    # are the round-12 rotation backlog (see CERT_AGE.json).
-)
-
-
 def _gate_order(d: dict) -> dict:
-    head = {k: d[k] for k in _GATE_HEAD if k in d}
-    rest = {k: v for k, v in d.items() if k not in head}
-    return {**head, **rest}
+    """`d` ordered stalest-first by certification age, computed from the
+    CORRECTNESS_r*.json artifacts: the external correctness gate records
+    only the first ~50 entries, so each round certifies the queries it saw
+    least recently."""
+    from scripts.cert_age import build, stalest_first
+
+    return {k: d[k] for k in stalest_first(build(names=d))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -28,9 +28,10 @@ DuckDB oracle reproduces every intermediate value exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.text import (
     FP_PRIME,
     horner_fold,
@@ -118,27 +119,20 @@ def _inverted_index_pairs(
     if max_token_df is not None:
         hot = ex.groupBy("shingle").count().filter(F.col("count") > max_token_df)
         ex = ex.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
-    # the shingle table feeds three branches (sizes + both self-join sides);
-    # materialize it once — the standard persist-before-inverted-index-join.
-    # (Spark's ReuseExchange dedups the join's own shuffle, but not the
-    # scan+explode feeding the separate `sizes` aggregation.)
-    ex = ex.localCheckpoint(eager=False)
     # Carry each doc's shingle count THROUGH the self-join instead of
     # joining a sizes frame onto the PAIR frame twice afterwards — the
-    # sparse_cosine_pairs norm-carry shape: one doc-keyed join on the
-    # postings frame plus 8 bytes per posting row through the shingle
-    # shuffle replaces two pair-frame joins AND the duplicated sizes
-    # aggregation (the static planner compiled groupBy(doc).count() once
-    # per join leg). first() is exact: n is constant per doc.
-    sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    # Materialize the SIZED postings once (r12): both self-join legs below
-    # reference this frame, and without a barrier the static planner
-    # compiles (and the executor runs) the sizes aggregation + doc-join
-    # once PER LEG — the r11 plans show the duplicated
-    # HashAggregate/Exchange pair under each join side. One more 8-byte
-    # column in the stored postings buys one fewer postings-wide exchange,
-    # aggregation and join per execution at every scale.
-    sized = ex.join(sizes, "doc").localCheckpoint(eager=False)
+    # sparse_cosine_pairs norm-carry shape: 8 bytes per posting row through
+    # the shingle shuffle replaces two pair-frame joins. first() is exact:
+    # n is constant per doc. The count is a window over the doc partition,
+    # so both self-join legs read ONE materialization of the sized
+    # postings. The explicit partition count keeps AQE from coalescing the
+    # doc exchange, whose partitions become the self-join's parallelism.
+    parts = int(ex.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sized = (
+        ex.repartition(parts, "doc")
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc")))
+        .localCheckpoint(eager=False)
+    )
     a = sized.select(
         F.col("doc").alias("doc_a"), "shingle", F.col("n").alias("na")
     )
@@ -675,32 +669,35 @@ def simhash_near_dup_pairs_wide(
     )
 
 
-def duplicate_clusters(
-    pairs: DataFrame, max_iterations: int = 20, driver_max_pairs: int = 5_000_000
-) -> DataFrame:
+#: near-dup pairs the driver union-find will hold; above this the
+#: distributed label propagation takes over
+CLUSTER_DRIVER_MAX_PAIRS = 5_000_000
+
+
+def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     """(doc, cluster): connected components of the near-duplicate pair graph,
     cluster id = min doc id in the component — the canonicalization step that
     turns pairwise near-dup hits into survivor groups.
 
-    Two physical paths, same result:
+    Two physical paths, same result, chosen by the shared
+    `driver_gate.collect_if_fits` against `CLUSTER_DRIVER_MAX_PAIRS`:
 
     * pair graph fits the driver (the NORMAL case — near-dup pairs are a
       vanishing fraction of the corpus): collect once, union-find in Python
-      (linear, alpha-inverse), parallelize the labels back. One Spark job,
-      no iterations.
-    * larger than `driver_max_pairs`: iterative min-label propagation (the
-      Pregel/GraphX pattern on plain DataFrames) — per round one join +
-      partial-agg min over the symmetrized edges, rounds = component
-      diameter, localCheckpoint per round keeps plans flat.
+      (linear, alpha-inverse), parallelize the labels back. No iterations.
+    * larger: iterative min-label propagation (the Pregel/GraphX pattern on
+      plain DataFrames) — per round one join + partial-agg min over the
+      symmetrized edges, rounds = component diameter, localCheckpoint per
+      round keeps plans flat.
     """
     spark = pairs.sparkSession
     # one evaluation of the (possibly expensive) pair plan: the barrier
-    # makes the limit probe, the edges union (which inlines its input into
-    # BOTH unionByName branches), and the label seed all read a single
+    # makes the gate, the edges union (which inlines its input into BOTH
+    # unionByName branches), and the label seed all read a single
     # materialization instead of re-running candidate generation 3x
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    rows = pairs.limit(driver_max_pairs + 1).collect()
-    if len(rows) <= driver_max_pairs:
+    rows = driver_gate.collect_if_fits(pairs, CLUSTER_DRIVER_MAX_PAIRS)
+    if rows is not None:
         parent: dict = {}
 
         def find(x):

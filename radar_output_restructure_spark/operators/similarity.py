@@ -25,6 +25,8 @@ from math import sqrt as math_sqrt
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators import driver_gate
+
 
 def _dot(a: Column, b: Column, dims: int | None = None) -> Column:
     """Dot product of two array columns, folded left-to-right in double.
@@ -68,6 +70,31 @@ def cosine(a: Column, b: Column, dims: int | None = None) -> Column:
     return _dot(a, b, dims) / (na * nb)
 
 
+def _collect_queries(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    caller: str,
+    label_col: str | None = None,
+):
+    """The driver-small query set every scorer ships in its closure: ONE
+    collect of (qid, qv[, ql]) sorted by qid. Returns (rows, q_lists,
+    q_norms): q_lists are exact Python-float lists so `_seq_sq_sum` and
+    `_adc_tables` fold in the oracle's order, and q_norms carry the
+    zero-norm guard. Raises on an empty query set."""
+    import numpy as np
+
+    cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")]
+    if label_col is not None:
+        cols.append(F.col(label_col).alias("ql"))
+    rows = sorted(queries.select(*cols).collect(), key=lambda r: r.qid)
+    if not rows:
+        raise ValueError(f"{caller} requires a non-empty query set")
+    q_lists = [[float(x) for x in r.qv] for r in rows]
+    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
+    return rows, q_lists, np.where(q_norms == 0.0, 1.0, q_norms)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -104,22 +131,15 @@ def cosine_topk(
     # would recompute a nondeterministic query frame (sample()/limit() over
     # an unordered source) into a DIFFERENT row set — KeyError at best, a
     # silently wrong exclusion mask at worst — and doubles the driver pull.
-    q_cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")]
-    if exclude_label_col is not None:
-        q_cols.append(F.col(exclude_label_col).alias("ql"))
-    q_rows = sorted(queries.select(*q_cols).collect(), key=lambda r: r.qid)
-    if not q_rows:
-        raise ValueError("cosine_topk requires a non-empty query set")
-    q_ids = [r.qid for r in q_rows]
+    q_rows, q_lists, q_norms = _collect_queries(
+        queries, id_col, vec_col, "cosine_topk", exclude_label_col
+    )
     q_labels = None
     if exclude_label_col is not None:
         q_labels = [r.ql for r in q_rows]
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
     q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    q_ids_arr = np.array(q_ids)
-    nq = len(q_ids)
+    q_ids_arr = np.array([r.qid for r in q_rows])
+    nq = len(q_rows)
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
@@ -197,18 +217,10 @@ def cosine_range_search(
     import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_rows, q_lists, q_norms = _collect_queries(
+        queries, id_col, vec_col, "cosine_range_search"
     )
-    if not q_rows:
-        raise ValueError("cosine_range_search requires a non-empty query set")
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
     q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
     q_ids_arr = np.array([r.qid for r in q_rows])
     nq = len(q_ids_arr)
 
@@ -913,19 +925,11 @@ def cosine_topk_int8(
     import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_rows, q_lists, _ = _collect_queries(
+        queries, id_col, vec_col, "cosine_topk_int8"
     )
-    if not q_rows:
-        raise ValueError("cosine_topk_int8 requires a non-empty query set")
     q_ids_arr = np.array([r.qid for r in q_rows])
-    q_codes = _int8_codes_np(
-        np.array([[float(x) for x in r.qv] for r in q_rows], dtype=np.float64),
-        bits,
-    )
+    q_codes = _int8_codes_np(np.array(q_lists, dtype=np.float64), bits)
     q_norms = np.sqrt((q_codes * q_codes).sum(axis=1).astype(np.float64))
     q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
     nq = len(q_rows)
@@ -979,25 +983,25 @@ def cosine_topk_int8(
     )
 
 
-#: Driver-path cap for Lloyd training (the duplicate_clusters / BPE dual-path
-#: pattern): a training frame with at most this many rows is collected ONCE
-#: (Arrow) and every merge round runs in-process with bit-identical
-#: arithmetic — the same numpy kernels as the distributed partials
-#: (`_codebook_argtop` assignment is a pure per-row function, so batching
-#: cannot change it; the integer-micro sums are associative, so one
-#: whole-matrix `np.add.at` equals any per-task partial order). Above the
-#: cap the per-iteration distributed loop takes over unchanged. 250k rows of
-#: 64 float64 dims is ~128 MB — driver-trivial; a 100 TB corpus falls back.
+#: Driver-path cap for Lloyd training: a training frame with at most this
+#: many rows is collected once through `driver_gate.collect_if_fits` and
+#: every iteration runs in-process; above it the per-iteration distributed
+#: loop takes over. Both paths run the same `_lloyd_partials` and
+#: `_lloyd_update`, so they are bit-equal. 250k rows of 64 float64 dims is
+#: ~128 MB — driver-trivial; a 100 TB corpus falls back.
 DRIVER_TRAIN_MAX_ROWS = 250_000
 
 
 def _driver_train_probe(df: DataFrame, id_col: str, vec_col: str):
-    """Collect the training frame when it fits `DRIVER_TRAIN_MAX_ROWS`.
+    """(ids list, x float64 matrix) of the training frame when it fits
+    `DRIVER_TRAIN_MAX_ROWS`, ([], None) for an empty frame, or None for
+    the distributed fallback.
 
-    Returns (ids list, x float64 matrix) or None when the frame is larger
-    than the cap (distributed fallback) or the id type's string rendering
-    is not provably identical between Python and Spark's CAST(.. AS STRING)
-    (the seed order hashes that rendering).
+    Two guards protect the bit-equal seed order, which hashes each id's
+    string rendering: the id type's rendering must be provably identical
+    between Python and Spark's CAST(.. AS STRING), and no id may be NULL
+    (Python would hash 'None' where Spark orders NULL first, and a None
+    breaks the (md5, id) tiebreak sort).
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -1007,37 +1011,15 @@ def _driver_train_probe(df: DataFrame, id_col: str, vec_col: str):
         (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.StringType),
     ):
         return None
-    # Cardinality gate BEFORE shipping vectors (r12 ADVICE): the over-cap
-    # case — i.e. every at-scale call — previously Arrow-collected 250k+1
-    # full rows (ids + embeddings, ~128 MB at 64 dims) just to decide to
-    # fall back. An id-only limit+count is a column-pruned scan that moves
-    # a few MB at most, so the big collect only ever happens when the
-    # driver path will actually be taken.
-    n = df.select(F.col(id_col).alias("id")).limit(
-        DRIVER_TRAIN_MAX_ROWS + 1
-    ).count()
-    if n > DRIVER_TRAIN_MAX_ROWS:
-        return None
-    probe = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .limit(DRIVER_TRAIN_MAX_ROWS + 1)
-        .toPandas()
+    rows = driver_gate.collect_if_fits(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        DRIVER_TRAIN_MAX_ROWS,
     )
-    if len(probe) > DRIVER_TRAIN_MAX_ROWS:
+    if rows is None or any(r.id is None for r in rows):
         return None
-    if len(probe) == 0:
+    if not rows:
         return [], None
-    # NULL ids break the bit-equality contract (r12 ADVICE, medium): a
-    # nullable Long/Int id column with any NULL comes back from toPandas()
-    # as float64 (str(id) renders '5.0' while Spark CASTs to '5'), and a
-    # None in a string id raises in the (md5, id) tiebreak sort — either
-    # way the driver seed order would silently diverge from the
-    # distributed orderBy(md5(cast(id as string)), id). Fall back.
-    if probe["id"].isna().any():
-        return None
-    ids = probe["id"].tolist()
-    x = np.stack(probe["v"].to_numpy()).astype(np.float64)
-    return ids, x
+    return [r.id for r in rows], np.array([r.v for r in rows], dtype=np.float64)
 
 
 def _driver_seed_order(ids: list) -> list[int]:
@@ -1054,6 +1036,53 @@ def _driver_seed_order(ids: list) -> list[int]:
             ids[i],
         ),
     )
+
+
+def _lloyd_partials(x, bounds, c_arrs, c_norms):
+    """The per-batch Lloyd partial of both training paths: per subspace
+    [lo, hi), assign each row of `x` to its nearest centroid
+    (`_codebook_argtop`: 6-decimal cosine, ties to the lowest cell) and
+    sum the assigned rows as integer micros. Returns int64 (counts (m, k),
+    sums (m, k, sd)). Assignment is a pure per-row function and integer
+    addition is associative, so one call on the whole matrix (driver path)
+    equals any reduction of per-batch calls (distributed path)."""
+    import numpy as np
+
+    k = len(c_arrs[0])
+    counts = np.zeros((len(bounds), k), dtype=np.int64)
+    sums = np.zeros((len(bounds), k, bounds[0][1] - bounds[0][0]), dtype=np.int64)
+    for s, (lo, hi) in enumerate(bounds):
+        xs = x[:, lo:hi]
+        cell = _codebook_argtop(xs, c_arrs[s], c_norms[s], 1)[:, 0]
+        counts[s] = np.bincount(cell, minlength=k)
+        np.add.at(sums[s], cell, np.floor(xs * 1e6).astype(np.int64))
+    return counts, sums
+
+
+def _lloyd_update(cents, counts, sums) -> bool:
+    """The Lloyd update of both training paths, in place on `cents`
+    (m x k x sd integer micros): a non-empty cell's new micro is
+    floor(sum * 1.0 / count) in IEEE double (sums stay far below 2^53, so
+    the division is exact cross-engine); empty cells keep their previous
+    centroid. Returns whether any centroid moved."""
+    import math
+
+    changed = False
+    for s, sub in enumerate(cents):
+        for j in range(len(sub)):
+            if counts[s, j] > 0:
+                new = [
+                    int(math.floor(int(t) * 1.0 / int(counts[s, j])))
+                    for t in sums[s, j]
+                ]
+                if new != sub[j]:
+                    sub[j] = new
+                    changed = True
+    return changed
+
+
+class _EmptyTrainingFrame(ValueError):
+    """The Lloyd trainer was given a frame with no rows."""
 
 
 def train_ivf_centroids(
@@ -1074,12 +1103,8 @@ def train_ivf_centroids(
       deterministic id-hash sampler (operators/curation.py uses the same
       trick), standing in for random seeding; cell = rank in that order.
     * assign — cosine affinity to each centroid rounded to 6 decimals
-      (Spark-exact, `_round6_spark`), ties to the lowest cell. Map-only and
-      Arrow-vectorized: the codebook ships in the mapInPandas closure and
-      each batch assigns + partially aggregates in numpy with the oracle's
-      exact fold order (`_codebook_affinities`) — no shuffle or window
-      touches the corpus, and the per-task partials (k rows each) reduce
-      driver-side.
+      (Spark-exact, `_round6_spark`), ties to the lowest cell, computed in
+      numpy with the oracle's exact fold order (`_codebook_affinities`).
     * update — per-dimension sums of floor(value * 1e6) as LONGS: integer
       addition is associative, so partial aggregation order cannot change
       the result. New centroid micro = floor(sum * 1.0 / count) evaluated
@@ -1090,148 +1115,26 @@ def train_ivf_centroids(
       remaining iterations are no-ops and early exit preserves equality
       with a fixed-iteration oracle).
 
-    Per iteration: one map-only assignment-and-partial-sum pass whose
-    output is k rows PER TASK, reduced on the driver (tasks x k x dims
-    longs — megabytes at thousand-executor scale). At 100 TB that is the
-    minimum possible data movement for Lloyd's algorithm; k-means|| style
-    oversampling would only change the init, which is already O(k) here.
+    This is `train_pq_codebooks` with one subspace (m=1): the same gate,
+    the same per-batch partial and the same update step, so the driver
+    path and the distributed map-only path (k partial rows per task,
+    reduced driver-side) are bit-equal.
 
     Returns (id_col int cell, vec_col array<double>) — feed directly to
     `cosine_topk_ivf`. Reference analogue: none (the reference has no ANN);
     this backs the training-data-pipeline ANN path (SURVEY §2 additions).
     """
-    import math
-
-    import numpy as np
-
-    spark = df.sparkSession
-
-    # Driver path (normal case): ONE Arrow collect replaces the seeds job
-    # plus `iters` (mapInPandas + toPandas) round-trips — the per-query win
-    # is pure coordination latency; the arithmetic below is the identical
-    # numpy code the distributed partials run, so results are bit-equal.
-    probe = _driver_train_probe(df, id_col, vec_col)
-    if probe is not None:
-        ids, xm = probe
-        if xm is None:  # empty frame
-            if dims is None:
-                raise ValueError("cannot train centroids on an empty frame")
-            return spark.createDataFrame(
-                [], schema=f"{id_col} int, {vec_col} array<double>"
-            )
-        if dims is None:
-            dims = xm.shape[1]
-        seed_idx = _driver_seed_order(ids)[:k]
-        cents = [
-            [int(math.floor(float(v) * 1e6)) for v in xm[i]] for i in seed_idx
-        ]
-        k = len(cents)
-        micro = np.floor(xm * 1e6).astype(np.int64)
-        for _ in range(iters):
-            cent_lists = [[m / 1e6 for m in cm] for cm in cents]
-            c_arr = np.array(cent_lists, dtype=np.float64)
-            c_norms = np.array(
-                [math.sqrt(_seq_sq_sum(c)) for c in cent_lists]
-            )
-            cell = _codebook_argtop(xm, c_arr, c_norms, 1)[:, 0]
-            counts = np.bincount(cell, minlength=k).astype(np.int64)
-            totals = np.zeros((k, dims), dtype=np.int64)
-            np.add.at(totals, cell, micro)
-            new_cents = [list(c) for c in cents]
-            for j in range(k):
-                if counts[j] > 0:
-                    new_cents[j] = [
-                        int(
-                            math.floor(
-                                int(totals[j, i]) * 1.0 / int(counts[j])
-                            )
-                        )
-                        for i in range(dims)
-                    ]
-            if new_cents == cents:
-                break
-            cents = new_cents
-        return spark.createDataFrame(
-            [(j, [m / 1e6 for m in cm]) for j, cm in enumerate(cents)],
-            schema=f"{id_col} int, {vec_col} array<double>",
-        )
-
     if dims is None:
         first = df.select(vec_col).first()
         if first is None:
             raise ValueError("cannot train centroids on an empty frame")
         dims = len(first[0])
-
-    seeds = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
-        .limit(k)
-        .collect()
-    )
-    # centroids as exact integer micros (the canonical representation)
-    cents: list[list[int]] = [
-        [int(math.floor(float(x) * 1e6)) for x in row.v] for row in seeds
-    ]
-
-    # Lloyd re-reads the corpus every iteration: persist the projected
-    # training frame once instead of re-scanning per iteration — the
-    # standard Spark iterative-ML pattern (MLlib's KMeans does the same).
-    # MEMORY_AND_DISK spills gracefully when the corpus outgrows executor
-    # memory.
-    import numpy as np
-    import pandas as pd
-    from pyspark import StorageLevel
-
-    src = df.select(F.col(vec_col).alias("v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    k = len(cents)
-    for _ in range(iters):
-        cent_lists = [[m / 1e6 for m in cm] for cm in cents]
-        c_arr = np.array(cent_lists, dtype=np.float64)
-        c_norms = np.array([math.sqrt(_seq_sq_sum(c)) for c in cent_lists])
-
-        def partials(batches, c_arr=c_arr, c_norms=c_norms):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                cell = _codebook_argtop(x, c_arr, c_norms, 1)[:, 0]
-                cnt = np.bincount(cell, minlength=k).astype(np.int64)
-                micro = np.floor(x * 1e6).astype(np.int64)  # (n, dims)
-                sums = np.zeros((k, micro.shape[1]), dtype=np.int64)
-                np.add.at(sums, cell, micro)
-                yield pd.DataFrame(
-                    {
-                        "cell": np.arange(k, dtype=np.int32),
-                        "cnt": cnt,
-                        "sums": list(sums),
-                    }
-                )
-
-        stats = src.mapInPandas(
-            partials, "cell int, cnt long, sums array<long>"
-        ).toPandas()
-        counts = np.zeros(k, dtype=np.int64)
-        totals = np.zeros((k, dims), dtype=np.int64)
-        for _i, row in stats.iterrows():
-            counts[row["cell"]] += row["cnt"]
-            totals[row["cell"]] += np.asarray(row["sums"], dtype=np.int64)
-        new_cents = [list(c) for c in cents]  # empty cells keep previous
-        for j in range(k):
-            if counts[j] > 0:
-                new_cents[j] = [
-                    int(math.floor(int(totals[j, i]) * 1.0 / int(counts[j])))
-                    for i in range(dims)
-                ]
-        if new_cents == cents:
-            break
-        cents = new_cents
-    src.unpersist()
-
-    return spark.createDataFrame(
-        [(j, [m / 1e6 for m in cm]) for j, cm in enumerate(cents)],
-        schema=f"{id_col} int, {vec_col} array<double>",
+    try:
+        (cents,) = train_pq_codebooks(df, 1, k, iters, id_col, vec_col, dims)
+    except _EmptyTrainingFrame:
+        cents = []
+    return df.sparkSession.createDataFrame(
+        list(enumerate(cents)), schema=f"{id_col} int, {vec_col} array<double>"
     )
 
 
@@ -1255,23 +1158,27 @@ def train_pq_codebooks(
     """Per-subspace spherical k-means codebooks for product quantization.
 
     Each of the `m` dim-slices trains its own `codebook_k`-centroid
-    codebook with the SAME deterministic Lloyd arithmetic as the IVF
-    coarse quantizer (`train_ivf_centroids` — md5-seeded init, 6-decimal
-    cosine assignment with lowest-cell ties, integer-micro updates, empty
-    cells carrying over), so the codebooks are bit-reproducible on any
-    engine and an oracle replaying each subspace independently matches.
-    Spherical (cosine) subquantizers instead of the classical L2 PQ
-    because the downstream metric IS cosine.
+    codebook with the deterministic Lloyd arithmetic documented on
+    `train_ivf_centroids` (md5-seeded init, 6-decimal cosine assignment
+    with lowest-cell ties, integer-micro updates, empty cells carrying
+    over), so the codebooks are bit-reproducible on any engine and an
+    oracle replaying each subspace independently matches. Spherical
+    (cosine) subquantizers instead of the classical L2 PQ because the
+    downstream metric IS cosine.
 
     FUSED training: all m subspaces assign and partially aggregate in ONE
-    Arrow pass per Lloyd iteration (m x k partial rows per task, reduced
-    driver-side) instead of m separate k-means runs — `iters` corpus scans
-    total rather than m x iters. Equality with the per-subspace runs is
-    exact: each subspace's update is a pure function of its own centroids,
-    and a subspace that has converged sits at a fixpoint, so fused
-    iterations reproduce the unfused sequence bit for bit. At 100 TB the
-    scan cost IS the training cost, so the fusion is the difference
-    between 2 and 8 passes at the default geometry.
+    pass per Lloyd iteration instead of m separate k-means runs — `iters`
+    corpus scans total rather than m x iters. Equality with the
+    per-subspace runs is exact: each subspace's update is a pure function
+    of its own centroids, and a subspace that has converged sits at a
+    fixpoint, so fused iterations reproduce the unfused sequence bit for
+    bit.
+
+    Two paths, one kernel: a frame that `driver_gate.collect_if_fits`
+    accepts (at most `DRIVER_TRAIN_MAX_ROWS` rows) is collected once and
+    `_lloyd_partials` runs on the whole matrix; a larger one is persisted
+    and `_lloyd_partials` runs per Arrow batch inside `mapInPandas`, its
+    per-task rows summed on the driver. `_lloyd_update` serves both.
 
     Returns plain nested lists (m x k x subdims doubles) — codebooks are
     driver-small by definition and ship inside operator closures.
@@ -1283,147 +1190,62 @@ def train_pq_codebooks(
     from pyspark import StorageLevel
 
     bounds = pq_subspace_bounds(dims, m)
-    sd = dims // m
-    k = codebook_k
-
-    # Driver path (normal case) — same dual-path rule and bit-equality
-    # argument as train_ivf_centroids, run per subspace slice: one Arrow
-    # collect instead of the seeds job + `iters` distributed passes.
     probe = _driver_train_probe(df, id_col, vec_col)
     if probe is not None:
         ids, xm = probe
-        if xm is None:
-            raise ValueError("cannot train PQ codebooks on an empty frame")
-        seed_idx = _driver_seed_order(ids)[:k]
-        cents = [
-            [
-                [int(math.floor(float(xm[i, lo + d]) * 1e6)) for d in range(sd)]
-                for i in seed_idx
-            ]
-            for lo, _hi in bounds
+        seeds = [] if xm is None else [
+            xm[i] for i in _driver_seed_order(ids)[:codebook_k]
         ]
-        micros = [
-            np.floor(xm[:, lo:hi] * 1e6).astype(np.int64) for lo, hi in bounds
+    else:
+        seeds = [
+            row.v
+            for row in df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+            .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
+            .limit(codebook_k)
+            .collect()
         ]
-        for _ in range(iters):
-            changed = False
-            for s, (lo, hi) in enumerate(bounds):
-                cent_lists = [[mc / 1e6 for mc in cm] for cm in cents[s]]
-                c_arr = np.array(cent_lists, dtype=np.float64)
-                c_norms = np.array(
-                    [math.sqrt(_seq_sq_sum(c)) for c in cent_lists]
-                )
-                xs = xm[:, lo:hi]
-                cell = _codebook_argtop(xs, c_arr, c_norms, 1)[:, 0]
-                counts = np.bincount(cell, minlength=k).astype(np.int64)
-                totals = np.zeros((k, sd), dtype=np.int64)
-                np.add.at(totals, cell, micros[s])
-                for j in range(k):
-                    if counts[j] > 0:
-                        new = [
-                            int(
-                                math.floor(
-                                    int(totals[j, d]) * 1.0 / int(counts[j])
-                                )
-                            )
-                            for d in range(sd)
-                        ]
-                        if new != cents[s][j]:
-                            cents[s][j] = new
-                            changed = True
-            if not changed:
-                break
-        return [
-            [[mc / 1e6 for mc in cm] for cm in cents[s]] for s in range(m)
-        ]
-
-    seeds = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
-        .limit(k)
-        .collect()
-    )
     if not seeds:
-        raise ValueError("cannot train PQ codebooks on an empty frame")
+        raise _EmptyTrainingFrame("cannot train PQ codebooks on an empty frame")
+    if probe is None:
+        # Lloyd re-reads the corpus every iteration: persist the projected
+        # training frame once instead of re-scanning per iteration — the
+        # standard Spark iterative-ML pattern (MLlib's KMeans does the
+        # same). MEMORY_AND_DISK spills when the corpus outgrows memory.
+        src = df.select(F.col(vec_col).alias("v")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
     # per-subspace centroids as exact integer micros (canonical form)
-    cents: list[list[list[int]]] = [
-        [
-            [int(math.floor(float(row.v[lo + d]) * 1e6)) for d in range(sd)]
-            for row in seeds
-        ]
-        for lo, _hi in bounds
+    cents = [
+        [[int(math.floor(float(v[d]) * 1e6)) for d in range(lo, hi)] for v in seeds]
+        for lo, hi in bounds
     ]
-
-    src = df.select(F.col(vec_col).alias("v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    shape = (m, len(seeds), dims // m)
     for _ in range(iters):
-        cent_lists = [
-            [[micro / 1e6 for micro in cm] for cm in cents[s]] for s in range(m)
-        ]
-        c_arrs = [np.array(cl, dtype=np.float64) for cl in cent_lists]
-        c_norms = [
-            np.array([math.sqrt(_seq_sq_sum(c)) for c in cl])
-            for cl in cent_lists
-        ]
+        lists = [[[mc / 1e6 for mc in cm] for cm in sub] for sub in cents]
+        c_arrs = [np.array(cl, dtype=np.float64) for cl in lists]
+        c_norms = [np.array([math.sqrt(_seq_sq_sum(c)) for c in cl]) for cl in lists]
+        if probe is not None:
+            counts, sums = _lloyd_partials(xm, bounds, c_arrs, c_norms)
+        else:
 
-        def partials(batches, c_arrs=c_arrs, c_norms=c_norms):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                frames = []
-                for s, (lo, hi) in enumerate(bounds):
-                    xs = x[:, lo:hi]
-                    cell = _codebook_argtop(xs, c_arrs[s], c_norms[s], 1)[:, 0]
-                    cnt = np.bincount(cell, minlength=k).astype(np.int64)
-                    micro = np.floor(xs * 1e6).astype(np.int64)
-                    sums = np.zeros((k, sd), dtype=np.int64)
-                    np.add.at(sums, cell, micro)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "sub": np.full(k, s, dtype=np.int32),
-                                "cell": np.arange(k, dtype=np.int32),
-                                "cnt": cnt,
-                                "sums": list(sums),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
+            def partials(batches, c_arrs=c_arrs, c_norms=c_norms):
+                for pdf in batches:
+                    if len(pdf):
+                        x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+                        cnt, sm = _lloyd_partials(x, bounds, c_arrs, c_norms)
+                        yield pd.DataFrame({"cnt": [cnt.ravel()], "sums": [sm.ravel()]})
 
-        stats = src.mapInPandas(
-            partials, "sub int, cell int, cnt long, sums array<long>"
-        ).toPandas()
-        counts = np.zeros((m, k), dtype=np.int64)
-        totals = np.zeros((m, k, sd), dtype=np.int64)
-        for _i, row in stats.iterrows():
-            counts[row["sub"], row["cell"]] += row["cnt"]
-            totals[row["sub"], row["cell"]] += np.asarray(
-                row["sums"], dtype=np.int64
-            )
-        changed = False
-        for s in range(m):
-            for j in range(k):
-                if counts[s, j] > 0:
-                    new = [
-                        int(
-                            math.floor(
-                                int(totals[s, j, d]) * 1.0 / int(counts[s, j])
-                            )
-                        )
-                        for d in range(sd)
-                    ]
-                    if new != cents[s][j]:
-                        cents[s][j] = new
-                        changed = True
-        if not changed:
+            stats = src.mapInPandas(
+                partials, "cnt array<long>, sums array<long>"
+            ).toPandas()
+            counts = sum(stats["cnt"], np.zeros(shape[:2], np.int64).ravel())
+            sums = sum(stats["sums"], np.zeros(shape, np.int64).ravel())
+            counts, sums = counts.reshape(shape[:2]), sums.reshape(shape)
+        if not _lloyd_update(cents, counts, sums):
             break
-    src.unpersist()
-
-    return [
-        [[micro / 1e6 for micro in cm] for cm in cents[s]] for s in range(m)
-    ]
+    if probe is None:
+        src.unpersist()
+    return [[[mc / 1e6 for mc in cm] for cm in sub] for sub in cents]
 
 
 def pq_encode(
@@ -1506,22 +1328,14 @@ def cosine_topk_pq(
     )
     codes = pq_encode(corpus, codebooks, id_col, vec_col)
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_rows, q_lists, q_norms = _collect_queries(
+        queries, id_col, vec_col, "cosine_topk_pq"
     )
-    if not q_rows:
-        raise ValueError("cosine_topk_pq requires a non-empty query set")
     q_ids_arr = np.array([r.qid for r in q_rows])
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
     nq = len(q_lists)
     # per-subspace ADC tables (shared with cosine_topk_ivfpq): the
     # reconstruction-dot / reconstruction-norm pieces in oracle fold order
     tq, csq = _adc_tables(q_lists, codebooks, dims, m)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
@@ -1668,12 +1482,7 @@ def cosine_topk_ivfpq(
     )
 
     # fused encode + home-cell assignment: one Arrow pass, zero shuffle
-    cent_rows = sorted(
-        centroids.select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
-        ).collect(),
-        key=lambda r: r.cell,
-    )
+    cent_rows = _collect_centroids(centroids, id_col, vec_col)
     coarse_cells = np.array([row.cell for row in cent_rows])
     coarse_lists = [[float(x) for x in row.centroid] for row in cent_rows]
     coarse = np.array(coarse_lists, dtype=np.float64)
@@ -1716,25 +1525,17 @@ def cosine_topk_ivfpq(
     ).mapInPandas(index_rows, index_schema)
 
     query_cells = ivf_cells(
-        queries, centroids, id_col, vec_col, nprobe=nprobe
+        queries, centroids, id_col, vec_col, nprobe=nprobe, cent_rows=cent_rows
     ).select(F.col("vec_id").alias("query_id"), "cell")
     cand = indexed.join(F.broadcast(query_cells), "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_rows, q_lists, q_norms = _collect_queries(
+        queries, id_col, vec_col, "cosine_topk_ivfpq"
     )
-    if not q_rows:
-        raise ValueError("cosine_topk_ivfpq requires a non-empty query set")
     q_ids = np.array([r.qid for r in q_rows])
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
     tq, csq = _adc_tables(q_lists, codebooks, dims, m)  # shared with PQ
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
@@ -1803,18 +1604,10 @@ def exact_rerank(
     import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_rows, q_lists, q_norms = _collect_queries(
+        queries, id_col, vec_col, "exact_rerank"
     )
-    if not q_rows:
-        raise ValueError("exact_rerank requires a non-empty query set")
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
     q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
     q_index = {r.qid: i for i, r in enumerate(q_rows)}
 
     id_type = corpus.schema[id_col].dataType.simpleString()

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators import driver_gate
+
 # --- token counting ---------------------------------------------------------
 
 TOKEN_SPLIT_RE = r"\s+"
@@ -677,10 +679,8 @@ def bpe_learn_merges(
     return df.sparkSession.createDataFrame(merges, schema)
 
 
-#: vocab rows the driver trainer will hold; above this the per-round
-#: distributed loop takes over (the duplicate_clusters dual-path pattern —
-#: a cap probe, not a sample: at or under the cap the limit() returned the
-#: WHOLE vocab, so both paths see identical data)
+#: vocab rows the driver trainer will hold (`driver_gate.collect_if_fits`);
+#: above this the per-round distributed loop takes over
 BPE_DRIVER_MAX_VOCAB = 2_000_000
 
 
@@ -718,12 +718,14 @@ def _bpe_train(df, text_col, n_merges):
     carry (word, seg, freq) so encoders can join words back to their final
     symbol decomposition.
 
-    Two physical paths, same result (the duplicate_clusters shape):
+    Two physical paths, same result, chosen by the shared
+    `driver_gate.collect_if_fits` against `BPE_DRIVER_MAX_VOCAB`:
 
     * vocab fits the driver (the NORMAL case — BPE training state is
       vocab-sized, not corpus-sized, and real tokenizer trainers hold it
-      in one process): ONE word-count job, then every merge round runs
-      in-process — no per-round Spark job, checkpoint, or plan compile.
+      in one process): the gate collects the whole vocab once, then every
+      merge round runs in-process — no per-round Spark job, checkpoint,
+      or plan compile.
       The n_merges sequential rounds each cost a job-scheduling round
       trip in the distributed loop (~0.25 s x 8 rounds measured at
       sf0.1, all driver-coordination overhead on a vocab of thousands).
@@ -750,8 +752,8 @@ def _bpe_train(df, text_col, n_merges):
         .localCheckpoint(eager=False)
     )
 
-    rows = words.limit(BPE_DRIVER_MAX_VOCAB + 1).collect()
-    if len(rows) <= BPE_DRIVER_MAX_VOCAB:
+    rows = driver_gate.collect_if_fits(words, BPE_DRIVER_MAX_VOCAB)
+    if rows is not None:
         merges, segs = _bpe_train_driver(rows, n_merges)
         from pyspark.sql import types as T
 

@@ -1,27 +1,24 @@
 #!/usr/bin/env python
-"""Certification-age ledger (VERDICT r6 item 8): one generated artifact
-mapping every registry query to the last round a DRIVER gate certified it
-hash-green, so rotation debt is a committed number instead of a comment.
-
-Reads the committed CORRECTNESS_r*.json driver artifacts plus the current
-registry and writes CERT_AGE.json:
+"""Certification-age ledger: maps every registry query to the last round
+the external correctness gate certified it hash-green, read from the
+committed CORRECTNESS_r*.json artifacts.
 
     {
       "latest_round": 6,
       "queries": {
         "tpch_q1_pricing": {"last_driver_green": 5},
-        "zorder_events":   {"last_driver_green": null},   # awaiting gate
+        "zorder_events":   {"last_driver_green": null},   # never certified
         ...
       }
     }
 
-tests/test_registry_coverage.py asserts the rotation invariant on this
-artifact: every query is either driver-green within the last TWO rounds or
-sits in the first 50 entries of the CURRENT gate head (i.e. it gets a
-fresh row at the next driver run) — the promise the `_GATE_HEAD` comment
-in __spark_entry__.py makes, now machine-checked.
+The gate records only the first `GATE_SLOTS` registry entries, so
+`__spark_entry__` orders the registry stalest-first from this ledger
+(`stalest_first`): the rotation advances by itself whenever a new
+CORRECTNESS_r*.json round lands. tests/test_registry_coverage.py derives the ledger and
+checks the rotation invariant on it.
 
-Usage: python scripts/cert_age.py          # writes CERT_AGE.json
+Usage: python scripts/cert_age.py          # prints ages and the gate head
 """
 
 from __future__ import annotations
@@ -34,6 +31,10 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+#: Registry entries the correctness gate records per round.
+GATE_SLOTS = 50
+
 
 #: Driver gate rows that certify a query. "rows-only" driver checks (no
 #: oracle) are weaker but still driver-fresh; hash mismatches are not.
@@ -49,32 +50,24 @@ def _is_green(row: dict) -> bool:
     return bool(row.get("rows_match"))
 
 
-def build(max_round: int | None = None) -> dict:
-    """Build the ledger from the CORRECTNESS_r*.json artifacts on disk.
-
-    ``max_round`` caps which driver rounds are read. The driver writes
-    CORRECTNESS_r{N}.json AFTER the builder's last round-N commit, so a
-    committed ledger is always one artifact behind the working tree at the
-    start of round N+1; the staleness test passes the committed ledger's own
-    ``latest_round`` here so that newer, not-yet-ledgered artifacts cannot
-    retroactively invalidate it (r7 verdict "What's wrong" #1).
-    """
+def build(names=None) -> dict:
+    """Build the ledger for `names` (default: the whole registry) from the
+    CORRECTNESS_r*.json artifacts on disk."""
     rounds: dict[int, dict] = {}
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
-        rnd = int(m.group(1))
-        if max_round is not None and rnd > max_round:
-            continue
         with open(path) as fh:
-            rounds[rnd] = json.load(fh)
+            rounds[int(m.group(1))] = json.load(fh)
     latest = max(rounds) if rounds else 0
 
-    import __spark_entry__ as entry
+    if names is None:
+        import __spark_entry__ as entry
 
+        names = entry.queries()
     ledger: dict[str, dict] = {}
-    for name in entry.queries():
+    for name in names:
         last = None
         for rnd in sorted(rounds):
             row = rounds[rnd].get(name)
@@ -84,12 +77,19 @@ def build(max_round: int | None = None) -> dict:
     return {"latest_round": latest, "queries": ledger}
 
 
+def stalest_first(ledger: dict) -> list[str]:
+    """Query names ordered stalest-first: never-certified queries, then by
+    last green round ascending, ties broken by name."""
+
+    def key(name):
+        last = ledger["queries"][name]["last_driver_green"]
+        return (-1 if last is None else last, name)
+
+    return sorted(ledger["queries"], key=key)
+
+
 def main() -> int:
     artifact = build()
-    out = os.path.join(REPO, "CERT_AGE.json")
-    with open(out, "w") as fh:
-        json.dump(artifact, fh, indent=1, sort_keys=True)
-        fh.write("\n")
     ages: dict[str | int, int] = {}
     for name, row in artifact["queries"].items():
         last = row["last_driver_green"]
@@ -98,7 +98,9 @@ def main() -> int:
     print(f"latest driver round: {artifact['latest_round']}")
     for age in sorted(ages, key=str):
         print(f"  age {age}: {ages[age]} queries")
-    print(f"wrote {out}")
+    print(f"next gate head ({GATE_SLOTS}):")
+    for name in stalest_first(artifact)[:GATE_SLOTS]:
+        print(f"  {name}")
     return 0
 
 

@@ -12,9 +12,15 @@ from radar_output_restructure_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+#: local cores for the test session: SPARK_GRAFT_CPUS, else every CPU
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="ros-tests", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="ros-tests", master=f"local[{CPUS}]", shuffle_partitions=CPUS
+    )
     yield spark
 
 
@@ -76,7 +82,6 @@ SLOW_TESTS = {
     "test_text_ops.py": {
         "test_audio_fingerprint_and_near_dup_pairs",
         "test_bigram_logprob_score",
-        "test_bpe_driver_and_distributed_paths_agree",
         "test_bpe_encode_counts_match_reference_segmentation",
         "test_bpe_learn_merges_matches_reference",
         "test_bpe_merged_tokens_can_chain_across_rounds",
@@ -114,8 +119,6 @@ SLOW_TESTS = {
         "test_train_ivf_centroids_deterministic",
         "test_train_ivf_centroids_empty_cell_keeps_seed",
         "test_train_ivf_centroids_recovers_clusters",
-        "test_train_ivf_driver_and_distributed_paths_agree",
-        "test_train_pq_driver_and_distributed_paths_agree",
         "test_trigram_backoff_paths",
     },
 }

@@ -21,6 +21,7 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.dedup_scale import (
     band_hashes,
     containment_pairs,
@@ -94,15 +95,14 @@ def test_duplicate_clusters_string_ids_under_cap(spark):
     }
 
 
-def test_duplicate_clusters_string_ids_distributed_path(spark):
+def test_duplicate_clusters_string_ids_distributed_path(spark, monkeypatch):
+    # force the distributed path: the driver gate declines
+    monkeypatch.setattr(driver_gate, "collect_if_fits", lambda df, cap: None)
     pairs = spark.createDataFrame(
         [("url-b", "url-c"), ("url-a", "url-b")],
         "doc_a string, doc_b string",
     )
-    got = {
-        (r["doc"], r["cluster"])
-        for r in duplicate_clusters(pairs, driver_max_pairs=0).collect()
-    }
+    got = {(r["doc"], r["cluster"]) for r in duplicate_clusters(pairs).collect()}
     assert got == {
         ("url-a", "url-a"),
         ("url-b", "url-a"),
@@ -115,13 +115,13 @@ def test_duplicate_clusters_string_ids_distributed_path(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_duplicate_clusters_zero_iterations_warns(spark):
+def test_duplicate_clusters_zero_iterations_warns(spark, monkeypatch):
+    # force the distributed path: the driver gate declines
+    monkeypatch.setattr(driver_gate, "collect_if_fits", lambda df, cap: None)
     pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        labels = duplicate_clusters(
-            pairs, max_iterations=0, driver_max_pairs=0
-        ).collect()
+        labels = duplicate_clusters(pairs, max_iterations=0).collect()
     assert any("did not converge" in str(w.message) for w in caught)
     assert len(labels) == 2  # initial self-labels returned, no crash
 

@@ -1278,31 +1278,6 @@ def test_bpe_stops_when_no_pairs_remain(spark):
     assert len(out) == 2
 
 
-def test_bpe_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """The capped driver trainer and the per-round distributed fallback
-    must learn identical merges AND identical final segmentations (the
-    dual-path contract _bpe_train inherited from duplicate_clusters)."""
-    from radar_output_restructure_spark.operators import text as X
-
-    texts = [
-        "low low low low low",
-        "lower lower newest newest newest newest newest newest",
-        "widest widest widest",
-        "the newest low lower the the",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    m_driver, seg_driver = X._bpe_train(df, "text", 5)
-    monkeypatch.setattr(X, "BPE_DRIVER_MAX_VOCAB", 0)  # force fallback
-    m_dist, seg_dist = X._bpe_train(df, "text", 5)
-    assert m_driver == m_dist
-    key = lambda r: (r.word, r.seg, r.freq)  # noqa: E731
-    assert sorted(map(key, seg_driver.collect())) == sorted(
-        map(key, seg_dist.collect())
-    )
-
-
 def test_bpe_encode_counts_match_reference_segmentation(spark):
     from radar_output_restructure_spark.operators.text import bpe_encode
 
@@ -2652,43 +2627,3 @@ def test_random_projection_preserves_distances(spark):
     d = ((proj[:, None, :] - proj[None, :, :]) ** 2).sum(-1).astype(float)
     d[np.arange(6), np.arange(6)] = np.inf
     assert d[0].argmin() == 1 and d[1].argmin() == 0
-
-
-def test_train_ivf_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """The capped driver Lloyd trainer and the distributed per-iteration
-    fallback must produce bit-identical centroids (the dual-path contract
-    train_ivf_centroids inherited from _bpe_train / duplicate_clusters)."""
-    import math
-
-    from radar_output_restructure_spark.operators import similarity as S
-
-    rows = [
-        (i, [math.sin(i * 13.7 + d) for d in range(8)]) for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = sorted(
-        (r.vec_id, tuple(r.embedding))
-        for r in S.train_ivf_centroids(df, k=4, iters=3, dims=8).collect()
-    )
-    monkeypatch.setattr(S, "DRIVER_TRAIN_MAX_ROWS", 0)  # force fallback
-    b = sorted(
-        (r.vec_id, tuple(r.embedding))
-        for r in S.train_ivf_centroids(df, k=4, iters=3, dims=8).collect()
-    )
-    assert a == b
-
-
-def test_train_pq_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """Same dual-path contract for the fused PQ subspace trainer."""
-    import math
-
-    from radar_output_restructure_spark.operators import similarity as S
-
-    rows = [
-        (i, [math.cos(i * 7.3 + d) for d in range(8)]) for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = S.train_pq_codebooks(df, m=2, codebook_k=4, iters=2, dims=8)
-    monkeypatch.setattr(S, "DRIVER_TRAIN_MAX_ROWS", 0)  # force fallback
-    b = S.train_pq_codebooks(df, m=2, codebook_k=4, iters=2, dims=8)
-    assert a == b
