@@ -25,15 +25,27 @@ Two modes:
 
 `excluded` drops leaves by their dotted name, the engine's `excludeFields`
 (config/FormatConfig.kt:17, format/CsvAvroConverter.kt:43-61).
+
+Materialization: map keys and array arities are data-dependent, so when the
+non-excluded schema has map or array leaves `flatten` runs ONE job — the
+input stored with `localCheckpoint` while an `Observation` on the same pass
+collects the shapes — and projects the stored rows. Whatever consumes the
+flat frame (the writer's dedup/repartition job, the cleaner's expectations)
+reads those rows instead of re-running the scan, the Avro decode and the
+path formatting. The stored blocks belong to the returned frame: Spark's
+ContextCleaner releases them once that frame is dropped. Schemas without
+map/array leaves get a plain projection and no job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from radar_output_restructure_spark.functions.javafmt import base64_no_pad
+
+SEP = "."  # dotted leaf names: a.b.c
 
 
 def _render_leaf(col: Column, dtype: T.DataType) -> Column:
@@ -51,7 +63,7 @@ def _render_leaf(col: Column, dtype: T.DataType) -> Column:
 
 
 def _collect_dynamic_paths(
-    schema: T.StructType, excluded: set[str], sep: str
+    schema: T.StructType, excluded: set[str]
 ) -> tuple[list[str], list[str]]:
     """Dotted paths of every non-excluded map / array column, mirroring the
     struct recursion of the flattener walk."""
@@ -59,7 +71,7 @@ def _collect_dynamic_paths(
     arrays: list[str] = []
 
     def walk(path: str, name: str, dtype: T.DataType) -> None:
-        dotted = f"{path}{sep}{name}" if path else name
+        dotted = f"{path}{SEP}{name}" if path else name
         if dotted in excluded:
             return
         if isinstance(dtype, T.StructType):
@@ -75,17 +87,20 @@ def _collect_dynamic_paths(
     return maps, arrays
 
 
-def _dynamic_shapes(
+def _materialize_shapes(
     df: DataFrame, map_paths: list[str], array_paths: list[str]
-) -> tuple[dict[str, list[str]], dict[str, int]]:
-    """Key unions for map columns and max arities for array columns — ONE
-    combined aggregate job for all of them, not one job per column.
+) -> tuple[DataFrame, dict[str, list[str]], dict[str, int]]:
+    """(stored df, key unions for map columns, max arities for array
+    columns), all from ONE job: the aggregates ride on the
+    `localCheckpoint` pass as an `Observation`, not as a separate aggregate
+    job per column or per frame. Sorted key unions; NULL arrays (`size`
+    NULL or -1) and empty frames give arity 0.
 
-    At 100 TB this is a single map-side partial agg (tiny per-partition
-    state: distinct keys + a max per column), no data shuffle.
+    At 100 TB the observation is a per-task partial agg (distinct keys + a
+    max per column) merged on the driver, no data shuffle. The stored
+    blocks are released by Spark's ContextCleaner once the returned frame
+    is dropped.
     """
-    if not map_paths and not array_paths:
-        return {}, {}
     aggs = [
         F.array_sort(
             F.array_distinct(F.flatten(F.collect_set(F.map_keys(F.col(p)))))
@@ -95,30 +110,30 @@ def _dynamic_shapes(
         F.max(F.size(F.col(p))).alias(f"__aa{i}")
         for i, p in enumerate(array_paths)
     ]
-    row = df.select(*aggs).first()
+    shapes = Observation()
+    stored = df.observe(shapes, *aggs).localCheckpoint()
+    row = shapes.get
     keys = {
         p: list(row[f"__mk{i}"] or []) for i, p in enumerate(map_paths)
     }
     arity = {
         p: max(int(row[f"__aa{i}"] or 0), 0) for i, p in enumerate(array_paths)
     }
-    return keys, arity
+    return stored, keys, arity
 
 
-def flatten_columns(
-    df: DataFrame,
-    rendered: bool = False,
-    excluded: set[str] | None = None,
-    sep: str = ".",
+def _flat_columns(
+    schema: T.StructType,
+    rendered: bool,
+    excluded: set[str],
+    map_keys: dict[str, list[str]],
+    array_arity: dict[str, int],
 ) -> list[Column]:
-    """Build the flat projection list without applying it."""
-    excluded = excluded or set()
-    map_paths, array_paths = _collect_dynamic_paths(df.schema, excluded, sep)
-    map_keys, array_arity = _dynamic_shapes(df, map_paths, array_paths)
+    """The flat projection list for `schema`, given the data's shapes."""
     cols: list[Column] = []
 
     def walk(path: str, name: str, dtype: T.DataType) -> None:
-        dotted = f"{path}{sep}{name}" if path else name
+        dotted = f"{path}{SEP}{name}" if path else name
         if dotted in excluded:
             return
         if isinstance(dtype, T.StructType):
@@ -127,7 +142,7 @@ def flatten_columns(
             return
         if isinstance(dtype, T.MapType):
             for key in map_keys[dotted]:
-                leaf_name = f"{dotted}{sep}{key}"
+                leaf_name = f"{dotted}{SEP}{key}"
                 if leaf_name in excluded:
                     continue
                 # try_element_at: null-safe under ANSI mode for absent keys
@@ -138,7 +153,7 @@ def flatten_columns(
             return
         if isinstance(dtype, T.ArrayType):
             for i in range(array_arity[dotted]):
-                leaf_name = f"{dotted}{sep}{i}"
+                leaf_name = f"{dotted}{SEP}{i}"
                 if leaf_name in excluded:
                     continue
                 # F.get: 0-based, returns null past the end (ANSI-safe)
@@ -147,7 +162,7 @@ def flatten_columns(
                     # array<record>: flatten each element's fields
                     for f in dtype.elementType.fields:
                         sub = leaf.getField(f.name)
-                        sub_name = f"{leaf_name}{sep}{f.name}"
+                        sub_name = f"{leaf_name}{SEP}{f.name}"
                         if sub_name in excluded:
                             continue
                         cols.append(
@@ -163,7 +178,7 @@ def flatten_columns(
             leaf = _render_leaf(leaf, dtype)
         cols.append(leaf.alias(dotted))
 
-    for f in df.schema.fields:
+    for f in schema.fields:
         walk("", f.name, f.dataType)
     return cols
 
@@ -210,9 +225,20 @@ def flatten(
     """Flatten `df` to dot-named leaf columns.
 
     `keep`: extra (already flat) columns to carry through unchanged, e.g.
-    derived partition columns.
+    derived partition columns. With map or array leaves this runs the one
+    materializing job described in the module docstring; the returned frame
+    reads the stored rows.
     """
-    cols = flatten_columns(df, rendered=rendered, excluded=excluded)
-    if keep:
-        cols = [F.col(k) for k in keep] + cols
-    return df.select(*cols)
+    excluded = excluded or set()
+    keep = keep or []
+    map_paths, array_paths = _collect_dynamic_paths(df.schema, excluded)
+    map_keys: dict[str, list[str]] = {}
+    array_arity: dict[str, int] = {}
+    if map_paths or array_paths:
+        # store only the top-level columns the projection reads
+        df = df.select(
+            *[F.col(c) for c in df.columns if c in keep or c not in excluded]
+        )
+        df, map_keys, array_arity = _materialize_shapes(df, map_paths, array_paths)
+    cols = _flat_columns(df.schema, rendered, excluded, map_keys, array_arity)
+    return df.select(*[F.col(k) for k in keep], *cols)

@@ -62,6 +62,7 @@ class SourceDataCleaner:
         # a service loop passes its long-lived plan so the cleaner shares
         # its storage index (and deletes update that index in place)
         self.plan = plan or RestructurePlan(spark, config)
+        self._owns_plan = plan is None
 
     # -- C1: candidates ------------------------------------------------------
 
@@ -76,7 +77,10 @@ class SourceDataCleaner:
         max_offset: dict[int, int] = {}
         parsed: list[tuple[str, int, int]] = []
         for path, mtime in committed.items():
-            if f"{os.sep}{topic}{os.sep}" not in path:
+            # <topic>/partition=N/<file>: the topic is the directory two
+            # levels up (AvroTopicLister's rule). A substring match would
+            # take topic `a`'s files as `in`'s when the input dir is `.../in`
+            if os.path.basename(os.path.dirname(os.path.dirname(path))) != topic:
                 continue
             meta = parse_offset_filename(os.path.basename(path))
             if meta is None:
@@ -361,4 +365,8 @@ class SourceDataCleaner:
         return {"deleted": deleted, "revoked": revoked}
 
     def run(self) -> dict[str, dict[str, list[str]]]:
+        if self._owns_plan and self.plan.storage_index is not None:
+            # no worker refreshes this plan's index: without this, topic
+            # discovery reads an empty index and nothing is ever cleaned
+            self.plan.storage_index.update()
         return {t: self.run_topic(t) for t in self.plan.topics()}

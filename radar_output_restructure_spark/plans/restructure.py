@@ -23,6 +23,7 @@ hash exchange when enabled, which AQE coalesces into it when keys align).
 from __future__ import annotations
 
 import json
+import logging
 import os
 from dataclasses import dataclass, field
 
@@ -52,6 +53,7 @@ from radar_output_restructure_spark.sources.manifest import (
 )
 from radar_output_restructure_spark.timer import Timer
 
+logger = logging.getLogger(__name__)
 
 # Arrival-order key: (kafka partition, starting offset, intra-file position).
 ORDER_COLS = ["__ord_part", "__ord_off", "__pos"]
@@ -419,7 +421,10 @@ class RestructurePlan:
     ) -> tuple[DataFrame, list[str]]:
         """Scan DataFrame -> flattened, partition-column-annotated DataFrame.
 
-        Returns (df, partition_cols). Pure plan construction — no actions.
+        Returns (df, partition_cols). Plan construction only, except
+        that `flatten` stores the pre-projection rows in one job when the
+        schema has map/array leaves (functions/flatten.py); the writer and
+        the cleaner both read those stored rows.
         `keep_cols`: extra scan columns carried through unchanged (e.g. the
         cleaner keeps `source_file` to attribute records back to sources).
         """
@@ -602,9 +607,7 @@ class RestructurePlan:
         try:
             return self._schema_canon(path)
         except Exception as exc:
-            import logging
-
-            logging.getLogger(__name__).error(
+            logger.error(
                 "skipping unreadable source file %s: %s", path, exc
             )
             return None
@@ -761,9 +764,7 @@ class RestructurePlan:
             return self.run_topic(topic)
         with self._lock_manager.try_with_lock(topic) as lock:
             if lock is None:
-                import logging
-
-                logging.getLogger(__name__).info(
+                logger.info(
                     "Skipping topic %s: locked by another instance", topic
                 )
                 return []
@@ -798,9 +799,7 @@ class RestructurePlan:
             try:
                 return self._run_topic_locked(topic)
             except Exception as exc:
-                import logging
-
-                logging.getLogger(__name__).exception(
+                logger.exception(
                     "topic %s failed this cycle; will retry next run", topic
                 )
                 self.last_errors[topic] = exc

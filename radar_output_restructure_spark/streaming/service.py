@@ -54,8 +54,14 @@ def run_service(
     plans = (
         [RestructurePlan(spark, c) for c in configs] if worker_enable else []
     )
+    # with the worker enabled each cleaner shares its config's plan, so its
+    # deletes update the worker's storage index in place; a cleaner-only
+    # service builds its own
     cleaner_jobs = (
-        [SourceDataCleaner(spark, c, cleaner) for c in configs]
+        [
+            SourceDataCleaner(spark, c, cleaner, plan=plans[i] if plans else None)
+            for i, c in enumerate(configs)
+        ]
         if cleaner
         else []
     )

@@ -17,6 +17,7 @@ from radar_output_restructure_spark.plans.restructure import (
 )
 from radar_output_restructure_spark.sources import avro_io
 from radar_output_restructure_spark.sources.kafka_tree import read_topic_tree
+from tests.test_functions import _jobs_in
 
 STATUS_SCHEMA = {
     "type": "record",
@@ -295,3 +296,65 @@ def test_native_avro_parity_with_python_codec(spark, tmp_path):
     assert len(native) == len(records) == 3
     for nrow, rec in zip(native, records):
         assert nrow.asDict(recursive=True) == rec
+
+
+DYNAMIC_SCHEMA = {
+    "type": "record", "name": "sensor", "fields": [
+        STATUS_SCHEMA["fields"][0],
+        {"name": "value", "type": {"type": "record", "name": "sv", "fields": [
+            {"name": "time", "type": "double"},
+            {"name": "levels", "type": {"type": "array", "items": "long"}},
+            {"name": "props", "type": {"type": "map", "values": "string"}},
+        ]}},
+    ],
+}
+
+
+def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
+    """With map/array leaves, flatten stores its input in one job whose
+    Observation yields the shapes, and the writer and the cleaner's
+    expectations read the stored rows: each pass decodes the Avro files
+    once. Before, a separate shape aggregate (two jobs under AQE) decoded
+    them too: 5 jobs per restructure run and 8 per verify_topic on this
+    fixture."""
+    from radar_output_restructure_spark.plans.cleaner import (
+        CleanerConfig,
+        SourceDataCleaner,
+    )
+
+    def rec(t, levels, props):
+        return {"key": {"projectId": "p", "userId": "u", "sourceId": "s"},
+                "value": {"time": t, "levels": levels, "props": props}}
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    old = _write_avro_fixture(
+        input_dir, "t", [rec(3600.0, [1, 2], {"b": "x"}), rec(3601.0, [], {})],
+        0, 0, 1, schema=DYNAMIC_SCHEMA,
+    )
+    _write_avro_fixture(
+        input_dir, "t", [rec(7200.0, [3], {"a": "y"})], 0, 2, 2,
+        schema=DYNAMIC_SCHEMA,
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro"
+    )
+    finals, n_run = _jobs_in(
+        spark, "restructure-pass", RestructurePlan(spark, cfg).run
+    )
+    assert n_run == 4
+    first = open(os.path.join(output_dir, "p/u/t/19700101_0100.csv")).read()
+    assert first.splitlines() == [
+        "key.projectId,key.userId,key.sourceId,value.time,"
+        "value.levels.0,value.levels.1,value.props.a,value.props.b",
+        "p,u,s,3600.0,1,2,,x",
+        "p,u,s,3601.0,,,,",
+    ]
+    assert len(finals["t"]) == 2
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    files = cleaner.candidate_files("t")
+    verdict, n_verify = _jobs_in(
+        spark, "verify-pass", lambda: cleaner.verify_topic("t", files)
+    )
+    assert verdict == {old: True}
+    assert n_verify == 7

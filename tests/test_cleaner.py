@@ -339,3 +339,41 @@ def test_cleaner_mixed_attempt_csv_verification(spark, tmp_path):
     result = cleaner.run_topic("t")
     assert sorted(result["deleted"]) == sorted([f0, f1])
     assert result["revoked"] == []
+
+
+def test_cleaner_candidates_stay_within_their_topic(spark, tmp_path):
+    """A topic is the directory two levels above its files. With the input
+    dir named `in` and a topic named `in`, every path contains `/in/`:
+    topic `a`'s files must still not become `in`'s candidates (they would
+    be verified under `in`'s config, bypass `a`'s exclude_from_delete and
+    mix the two topics' newest-offset guards)."""
+    from radar_output_restructure_spark.plans.restructure import TopicConfig
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    in_old = _write_fixture(
+        spark, input_dir, "in", _rows(3600.0, 2), 0, 0, 1, SERVER_STATUS_SCHEMA
+    )
+    in_new = _write_fixture(
+        spark, input_dir, "in", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
+    )
+    a_files = [
+        _write_fixture(
+            spark, input_dir, "a", _rows(3600.0, 1), 0, 0, 0, SERVER_STATUS_SCHEMA
+        ),
+        _write_fixture(
+            spark, input_dir, "a", _rows(7200.0, 1), 0, 5, 5, SERVER_STATUS_SCHEMA
+        ),
+    ]
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir,
+        topics={"a": TopicConfig(exclude_from_delete=True)},
+    )
+    RestructurePlan(spark, cfg).run()
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    assert [f.path for f in cleaner.candidate_files("in")] == [in_old]
+    assert cleaner.candidate_files("a") == []
+    result = cleaner.run()
+    assert result["in"] == {"deleted": [in_old], "revoked": []}
+    assert result["a"] == {"deleted": [], "revoked": []}
+    assert os.path.exists(in_new) and all(os.path.exists(f) for f in a_files)

@@ -104,12 +104,23 @@ def test_flatten_rendered_and_excluded(spark):
     assert row["m"] == "false"
 
 
-def test_flatten_header_derivation_single_job(spark):
-    """Map-key unions and array arities for ALL dynamic columns come from ONE
-    combined aggregate job, not one job per column (100-TB listing cost)."""
-    from pyspark.sql import Row
+def _jobs_in(spark, group: str, fn):
+    """(fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    from radar_output_restructure_spark.functions.flatten import flatten_columns
+
+def test_flatten_header_derivation_single_job(spark):
+    """Map-key unions and array arities for ALL dynamic columns come from the
+    ONE job that stores flatten's input (an Observation on the
+    localCheckpoint pass), not one job per column (100-TB listing cost);
+    the flat frame then reads the stored rows."""
+    from pyspark.sql import Row
 
     df = spark.createDataFrame(
         [
@@ -122,17 +133,57 @@ def test_flatten_header_derivation_single_job(spark):
         "a2 array<string>, v struct<inner_m: map<string,double>, "
         "inner_a: array<boolean>>",
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("flatten-shape-test", "header derivation")
-    try:
-        cols = flatten_columns(df)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("flatten-shape-test")
-    # one combined aggregate (AQE may stage it as 2 jobs); the per-column
-    # regression would be >= 6 here (6 dynamic columns)
-    assert len(jobs) <= 2, f"expected one combined shape job, saw {len(jobs)}"
-    names = [df.select(c).columns[0] for c in cols]
+    flat, jobs = _jobs_in(spark, "flatten-shape-test", lambda: flatten(df))
+    # the materializing job alone; the per-column regression would be >= 6
+    # here (6 dynamic columns), a separate aggregate 2-3
+    assert jobs == 1, f"expected one materializing job, saw {jobs}"
+    names = flat.columns
     assert "m1.a" in names and "m1.b" in names and "m2.x" in names
     assert "a1.0" in names and "a1.2" in names and "a2.0" in names
     assert "v.inner_m.k" in names and "v.inner_a.1" in names
+    assert "LogicalRDD" in flat._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_flatten_shape_edge_cases(spark):
+    """Key unions come out sorted; empty frames, empty maps and all-NULL
+    arrays (`size` NULL or -1) give no map columns and arity 0; an excluded
+    dynamic column runs no job and stores nothing."""
+    src = spark.range(3).select(
+        F.col("id").alias("x"),
+        F.create_map(
+            F.when(F.col("id") == 0, F.lit("z")).otherwise(F.lit("b")),
+            F.col("id"),
+        ).alias("m"),
+        F.when(F.col("id") == 1, F.array(F.col("id"), F.col("id")))
+        .otherwise(F.array())
+        .alias("a"),
+    )
+    flat, n = _jobs_in(spark, "flatten-sorted", lambda: flatten(src))
+    assert n == 1
+    assert flat.columns == ["x", "m.b", "m.z", "a.0", "a.1"]
+    assert sorted(tuple(r) for r in flat.collect()) == [
+        (0, None, 0, None, None), (1, 1, None, 1, 1), (2, 2, None, None, None),
+    ]
+
+    # Catalyst folds this to an empty relation: the checkpoint has no
+    # partitions to run, and the observation still reports empty shapes
+    empty = src.where(F.lit(False))
+    flat = flatten(empty)
+    assert flat.columns == ["x"] and flat.count() == 0
+
+    hollow = spark.range(2).select(
+        F.col("id").alias("x"),
+        F.create_map().cast("map<string,long>").alias("m"),
+        F.lit(None).cast("array<long>").alias("a"),
+    )
+    flat = flatten(hollow)
+    assert flat.columns == ["x"] and flat.count() == 2
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    flat, n = _jobs_in(
+        spark, "flatten-excluded", lambda: flatten(src, excluded={"m", "a"})
+    )
+    assert n == 0 and flat.columns == ["x"]
+    assert "LogicalRDD" not in plan(flat) and "Range" in plan(flat)

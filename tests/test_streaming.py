@@ -662,6 +662,52 @@ def test_service_covers_all_inputs_and_cleaner_first_cycle(spark, tmp_path):
     assert set(seen[0]["cleaner"]) == {"ta", "tb"}
 
 
+def test_service_cleaner_shares_worker_plan(spark, tmp_path, monkeypatch):
+    """With the worker enabled, each cleaner gets its config's worker plan:
+    a source file the cleaner deletes leaves the worker's storage index in
+    the same cycle, not at the index's next full re-sync. A cleaner-only
+    service builds its own plan and keeps that plan's index current."""
+    from radar_output_restructure_spark.plans.cleaner import CleanerConfig
+    from radar_output_restructure_spark.streaming import service
+
+    workers = []
+
+    class RecordingPlan(RestructurePlan):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            workers.append(self)
+
+    monkeypatch.setattr(service, "RestructurePlan", RecordingPlan)
+    input_dir, out = str(tmp_path / "in"), str(tmp_path / "out")
+    f0 = _write_fixture(spark, input_dir, "t", _rows(3600.0, 2), 0, 0, 1, SERVER_STATUS_SCHEMA)
+    f1 = _write_fixture(spark, input_dir, "t", _rows(7200.0, 2), 0, 2, 3, SERVER_STATUS_SCHEMA)
+    cfg = RestructureConfig(input_dir=input_dir, output_dir=out, use_storage_index=True)
+    seen = []
+    run_service(
+        spark, cfg, interval_s=0.0, max_iterations=1,
+        cleaner=CleanerConfig(age_days=0.0),
+        on_cycle=lambda i, r: seen.append(r),
+        sleep=lambda s: None,
+    )
+    assert seen[0]["cleaner"] == {"t": {"deleted": [f0], "revoked": []}}
+    (worker,) = workers
+    listed = {p for p, _m, _s in worker.storage_index.file_status_under(input_dir)}
+    assert f0 not in listed and f1 in listed
+
+    # a cleaner-only service keeps its own plan and refreshes its index
+    f2 = _write_fixture(spark, input_dir, "t", _rows(10800.0, 2), 0, 4, 5, SERVER_STATUS_SCHEMA)
+    RestructurePlan(spark, cfg).run()
+    seen.clear()
+    run_service(
+        spark, cfg, interval_s=0.0, max_iterations=1,
+        cleaner=CleanerConfig(age_days=0.0), worker_enable=False,
+        on_cycle=lambda i, r: seen.append(r),
+        sleep=lambda s: None,
+    )
+    assert seen[0]["cleaner"] == {"t": {"deleted": [f1], "revoked": []}}
+    assert os.path.exists(f2)
+
+
 def test_service_cleaner_only(spark, tmp_path):
     """worker.enable=false: the cleaner-only deployment the reference
     supports — restructure must NOT run."""
