@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
+from radar_output_restructure_spark.sinks.writers import decompress
 from radar_output_restructure_spark.sources.kafka_tree import (
     parse_offset_filename,
 )
@@ -134,7 +135,6 @@ class SourceDataCleaner:
         cfg = self.config
         parts: list[DataFrame] = []
         covered: set[str] = set()
-        ext0 = self.plan.output_extension()
         out_root = self._output_root()
         for attempt, _sup, df, group_files in self.plan.attempt_frames(
             topic, files
@@ -143,7 +143,7 @@ class SourceDataCleaner:
             flat, part_cols = self.plan.transform(
                 df, topic, keep_cols=("source_file",)
             )
-            ext = (f"_{attempt}" if attempt else "") + ext0
+            ext = self.plan.attempt_extension(attempt)
             target = F.concat_ws(
                 os.sep, F.lit(out_root),
                 *[F.col(c) for c in part_cols],
@@ -202,22 +202,14 @@ class SourceDataCleaner:
 
         def decode_rows(batches):
             import csv as csvmod
-            import gzip as gzipmod
             import io as iomod
             import re as remod
-            import zipfile
 
             for pdf in batches:
                 paths: list[str] = []
                 vals: list[str | None] = []
                 for path, content in zip(pdf["path"], pdf["content"]):
-                    data = bytes(content)
-                    if codec == "zip":
-                        with zipfile.ZipFile(iomod.BytesIO(data)) as zf:
-                            data = zf.read(zf.namelist()[0])
-                    elif codec == "gzip":
-                        data = gzipmod.decompress(data)
-                    text = data.decode("utf-8")
+                    text = decompress(bytes(content), codec).decode("utf-8")
                     p = remod.sub("^file:/+", "/", str(path))
                     if fmt == "json":
                         for line in text.splitlines():

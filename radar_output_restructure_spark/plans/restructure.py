@@ -12,7 +12,7 @@ plan per topic batch:
     path partition columns       (G1-G7: sanitize/time-bin/plugin segments)
     flatten                      (P1/P3: dot-named projection, excludeFields)
     optional window dedup        (D1-D4)
-    write_output_tree            (S10-S13: exact names + sidecars)
+    write_output_tree_direct     (S10-S13: exact names + sidecars)
     manifest.commit              (T2: write-then-commit)
 
 Catalyst sees the whole pipeline, so column pruning reaches the scan and the
@@ -41,7 +41,7 @@ from radar_output_restructure_spark.plans.path_format import (
     PathFormat,
 )
 from radar_output_restructure_spark.sinks.writers import (
-    write_output_tree,
+    output_extension,
     write_output_tree_direct,
 )
 from radar_output_restructure_spark.sources.kafka_tree import read_topic_tree
@@ -184,30 +184,7 @@ class RestructurePlan:
         # error isolation (transient read errors must not starve other
         # topics) would otherwise swallow a CONFIG mistake into last_errors
         # and silently write nothing, cycle after cycle.
-        from radar_output_restructure_spark.sinks.writers import (
-            _COMP_EXT,
-            _FMT_EXT,
-            _PARQUET_CODEC,
-        )
-
-        if config.output_format not in _FMT_EXT:
-            raise ValueError(
-                f"unknown output_format {config.output_format!r}; "
-                f"use one of {sorted(_FMT_EXT)}"
-            )
-        if config.compression not in _COMP_EXT:
-            raise ValueError(
-                f"unknown compression {config.compression!r}; "
-                f"use one of {sorted(_COMP_EXT, key=str)}"
-            )
-        if (
-            config.output_format == "parquet"
-            and config.compression not in _PARQUET_CODEC
-        ):
-            raise ValueError(
-                f"compression {config.compression!r} is not a parquet codec; "
-                "use None (snappy) or 'gzip'"
-            )
+        output_extension(config.output_format, config.compression)
         for fmt in [config.path_format] + [
             t.path_format for t in config.topics.values() if t.path_format
         ]:
@@ -654,19 +631,39 @@ class RestructurePlan:
             for attempt, groups in sorted(per_attempt.items())
         ]
 
-    def output_extension(self) -> str:
-        """`<format ext><compression ext>` — the attempt-0 target extension,
-        shared by the writer path and the cleaner's expectation rendering."""
-        from radar_output_restructure_spark.sinks.writers import (
-            _COMP_EXT,
-            _FMT_EXT,
+    def attempt_extension(self, attempt: int) -> str:
+        """Target file extension of a schema attempt (`_<attempt>` before
+        the format extension from attempt 1 on), shared by the writer and
+        the cleaner's expectation paths."""
+        cfg = self.config
+        return (f"_{attempt}" if attempt else "") + output_extension(
+            cfg.output_format, cfg.compression
         )
 
+    def write_frame(
+        self,
+        flat: DataFrame,
+        part_cols: list[str],
+        topic: str,
+        value_schema: T.StructType,
+        attempt: int = 0,
+    ) -> list[str]:
+        """Write one transformed frame of `topic` into the output tree —
+        the one write call of the batch and the streaming restructure.
+        The schema sidecar is written for attempt 0 only."""
         cfg = self.config
-        return _FMT_EXT[cfg.output_format] + (
-            ""
-            if cfg.output_format == "parquet"
-            else _COMP_EXT[cfg.compression]
+        return write_output_tree_direct(
+            flat,
+            cfg.output_dir,
+            part_cols,
+            fmt=cfg.output_format,
+            compression=cfg.compression,
+            extension=self.attempt_extension(attempt),
+            topic_col="pf_topic",
+            value_schema=value_schema if attempt == 0 else None,
+            order_col=ORDER_COLS,
+            storage=self.target_storage,
+            dedup=self.file_dedup(topic),
         )
 
     def attempt_frames(self, topic: str, files: list[FileEntry]):
@@ -705,11 +702,9 @@ class RestructurePlan:
             yield attempt, sup, df, [f for g in fp_groups for f in g]
 
     def run_topic(self, topic: str) -> list[str]:
-        cfg = self.config
         files = self.list_candidate_files(topic)
         if not files:
             return []
-        ext0 = self.output_extension()
         finals: list[str] = []
         for attempt, sup, df, group in self.attempt_frames(topic, files):
             flat, part_cols = self.transform(df, topic)
@@ -721,32 +716,10 @@ class RestructurePlan:
                 if sup is not None
                 else df.drop(*META_COLS, "topic").schema
             )
-            write_kwargs = dict(
-                fmt=cfg.output_format,
-                compression=cfg.compression,
-                extension=(f"_{attempt}" if attempt else "") + ext0,
-                topic_col="pf_topic",
-                value_schema=value_schema if attempt == 0 else None,
-                order_col=ORDER_COLS,
-                storage=self.target_storage,
-                dedup=self.file_dedup(topic),
-            )
             with Timer.time("restructure.write"):
-                if self.target_storage.executor_safe:
-                    finals += write_output_tree_direct(
-                        flat, cfg.output_dir, part_cols, **write_kwargs
-                    )
-                else:
-                    # object-store target: executors can't reach the
-                    # driver-side Hadoop handle, so use the native Spark
-                    # writer + driver finalize (server-side renames through
-                    # the connector). Unique tmp dir: topic-parallel runs
-                    # must not share one.
-                    finals += write_output_tree(
-                        flat, cfg.output_dir, part_cols,
-                        tmp_dir=f"{cfg.output_dir.rstrip('/')}+tmp-{topic}-{attempt}",
-                        **write_kwargs,
-                    )
+                finals += self.write_frame(
+                    flat, part_cols, topic, value_schema, attempt
+                )
             # Write-then-commit (T2) PER fingerprint group: the reference
             # commits accounting per file batch (worker loop), so a crash
             # exposes only the in-flight batch. Committing once per topic

@@ -1,1 +1,1 @@
-from radar_output_restructure_spark.sinks.writers import write_output_tree  # noqa: F401
+from radar_output_restructure_spark.sinks.writers import write_output_tree_direct  # noqa: F401

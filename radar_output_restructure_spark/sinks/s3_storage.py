@@ -1,13 +1,13 @@
 """Executor-safe S3 object-store backend (SURVEY §2.1 S2/S14; reference
 target/S3TargetStorage.kt:47-154).
 
-`HadoopTargetStorage` reaches s3a:// through the driver JVM and therefore
-cannot serve the direct (executor-side) exact-name writer. This backend
-speaks the S3 API natively through boto3 and IS picklable: the constructor
-captures only plain configuration (bucket-agnostic client kwargs), and the
-boto3 client is built lazily once per process — driver or executor worker —
-so `write_output_tree_direct` can write straight to S3 from every task
-without a finalize pass, matching the reference's per-file PUT model.
+`HadoopTargetStorage` reaches s3a:// through the driver JVM, so the writer
+runs its partition loop on the driver for it. This backend speaks the S3
+API natively through boto3 and IS picklable: the constructor captures only
+plain configuration (bucket-agnostic client kwargs), and the boto3 client is
+built lazily once per process — driver or executor worker — so
+`write_output_tree_direct` writes straight to S3 from every task, matching
+the reference's per-file PUT model.
 
 Semantics mirror the reference's S3TargetStorage:
 * `store_atomic*` publishes with a single PUT / multipart upload — the

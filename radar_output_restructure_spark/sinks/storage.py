@@ -7,15 +7,14 @@ makedirs / delete / walk — so the storage backend is one small class:
 
 * `LocalTargetStorage`: os/shutil on a mounted filesystem (local disk, NFS,
   FUSE mounts of object stores). Picklable, so it ships to executors and the
-  direct (`applyInPandas`) writer works with it.
+  writer's partition loop runs there.
 * `HadoopTargetStorage`: the driver-side seam to ANY Hadoop FileSystem URL —
   file://, hdfs://, s3a://, abfs:// — through the running JVM's FileSystem
   API, so the cloud connectors' config (credentials, retries, server-side
   copy) is Hadoop configuration, not engine code. NOT picklable (it holds a
-  py4j handle): usable from `write_output_tree`'s driver-side finalize, not
-  from the executor-side direct writer. An executor-side object-store
-  implementation is one class away (boto3 / azure-storage-blob with the same
-  six methods) when those SDKs are available.
+  py4j handle), so the writer runs its partition loop on the driver for it.
+  The executor-side object-store backends are `S3TargetStorage` and
+  `AzureTargetStorage` (`s3://`, `azure://`).
 
 Atomicity contract: `store_atomic` must publish the full payload or nothing
 (tmp file + rename locally; create-then-rename on Hadoop FileSystems, which
@@ -114,7 +113,8 @@ def storage_for(path: str, spark=None) -> "TargetStorage":
 class TargetStorage:
     """Storage surface the engine (writers, listings, ledgers) is built on."""
 
-    #: safe to pickle into executor tasks (the direct writer requires it)
+    #: safe to pickle into executor tasks; the writer's partition loop
+    #: runs on the executors when True and on the driver when False
     executor_safe = False
 
     def exists(self, path: str) -> bool:

@@ -1,35 +1,37 @@
-"""Exact-name output-tree writers with schema sidecars (SURVEY §2.1 S10-S13).
+"""The exact-name output-tree writer with schema sidecars (SURVEY §2.1 S10-S13).
 
 The reference writes one file per record-group at an exact path
 (`<project>/<user>/<topic>/<timebin>[_N].csv[.gz]`) plus a write-once
 `schema-<topic>.json` sidecar (worker/FileCacheStore.kt:131-151), appending to
-existing files across runs (worker/FileCache.kt:82-125). Spark's native
-writer controls directories, not file names, so two strategies exist:
+existing files across runs (worker/FileCache.kt:82-125), through whichever
+target storage is configured. Spark's native writer controls directories,
+not file names, so `write_output_tree_direct` is the one writer: one shuffle
+by the path segments, a sort within partitions by (path, arrival order),
+then one partition loop that writes every file of its partition in place
+through the storage backend's atomic store. The loop runs in one of two
+places, chosen by `storage.executor_safe`:
 
-* `write_output_tree_direct` (DEFAULT, used by the plan): one shuffle by the
-  path segments, then a key-sorted `mapInPandas` pass writes every file of
-  its partition in place with atomic tmp+renames. No N-file commit
-  protocol, no finalize pass; one Arrow round-trip per task, not per file.
-* `write_output_tree` (alternative): the pure-native path — partitionBy into
-  a temp tree with Spark's CSV/JSON writer, then a (thread-pooled)
-  driver-side finalize renames part files to exact names and concatenates
-  appends. Keeps the row path 100% JVM; the finalize renames are
-  server-side copies on object stores. Right when Python workers are
-  undesirable or the committer's atomicity guarantees are required.
+* executor-safe storage (local, `s3://`, `azure://`): `mapInPandas` on the
+  executors, one Arrow round-trip per task, not per file;
+* driver-only storage (`HadoopTargetStorage`: `file://`, `s3a://`, `abfs://`,
+  `hdfs://`, whose py4j handle cannot leave the driver): the same loop on
+  the driver, fed one partition at a time through `toLocalIterator`.
 
-Both append across runs (late data, SURVEY ST3), write gzip, and emit
-write-once schema sidecars; zip is direct-writer only.
+Both places append across runs (late data, SURVEY ST3), write plain, gzip or
+zip CSV/JSON and parquet, and emit write-once schema sidecars.
 """
 
 from __future__ import annotations
 
+import csv
 import gzip
 import io
+import itertools
 import json
 import os
+import shutil
 import threading
-import uuid
-from urllib.parse import unquote
+import zipfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -167,8 +169,6 @@ def _dedup_csv_content(
             last[key] = i
         kept = sorted(last.values())
         return ("\n".join([header_line, *(body[i] for i in kept)]) + "\n").encode()
-    import csv
-
     rows_old = list(csv.reader(io.StringIO(text_old)))
     header = rows_old[0]
     body_rows = rows_old[1:] + list(csv.reader(io.StringIO(text_new)))
@@ -200,18 +200,14 @@ def _dedup_json_content(old: bytes, new: bytes) -> bytes:
     return ("\n".join(out) + "\n").encode()
 
 
-def _read_full_content(
-    final: str, compression: str | None, storage: TargetStorage
-) -> bytes:
-    """Decompressed current content of an existing target file."""
-    data = storage.read(final)
+def decompress(data: bytes, compression: str | None) -> bytes:
+    """Content of one target file's bytes: gunzip (all members), the single
+    zip entry, or the bytes as they are."""
     if compression == "gzip":
-        data = gzip.decompress(data)
-    elif compression == "zip":
-        import zipfile
-
+        return gzip.decompress(data)
+    if compression == "zip":
         with zipfile.ZipFile(io.BytesIO(data)) as zf:
-            data = zf.read(zf.namelist()[0])
+            return zf.read(zf.namelist()[0])
     return data
 
 
@@ -228,8 +224,6 @@ def _write_full_content(
         storage.store_atomic(final, content)
         return
     if compression == "zip":
-        import zipfile
-
         entry = os.path.basename(final)[: -len(".zip")]
         with storage.store_atomic_writer(final) as out, zipfile.ZipFile(
             out, "w", zipfile.ZIP_DEFLATED, compresslevel=ZIP_LEVEL
@@ -237,65 +231,6 @@ def _write_full_content(
             zf.writestr(entry, content)
         return
     storage.store_atomic(final, content)
-
-
-def _concat_into(
-    dst: str,
-    parts: list[str],
-    gzipped: bool,
-    has_header: bool,
-    storage: TargetStorage,
-    dedup: tuple[list | None, list | None] | None = None,
-    fmt: str = "csv",
-) -> None:
-    """Append part files into dst (skipping their headers when dst exists),
-    publishing the result atomically through the storage backend.
-
-    The pre-existing dst content — unbounded, it grows with every appended
-    run — is STREAMED chunk-by-chunk into the staged copy, never held in
-    memory. Only the new parts (bounded: each is one task's output for one
-    user-hour group) are materialized, because header-stripping and the
-    fresh-gzip-member compression need whole-part views."""
-    exists = storage.exists(dst)
-    new_chunks: list[bytes] = []
-    skip_header = exists and has_header
-    for part in parts:
-        data = storage.read(part)
-        if gzipped:
-            data = gzip.decompress(data)
-        if skip_header and data:
-            nl = data.find(b"\n")
-            data = data[nl + 1 :] if nl >= 0 else b""
-        new_chunks.append(data)
-        skip_header = has_header  # subsequent parts always drop the header
-    payload = b"".join(new_chunks)
-    if exists and dedup is not None and fmt in ("csv", "json"):
-        # dedup-enabled append rewrites the WHOLE file old+new (reference
-        # FileCache.closeAndJoin: the tmp starts as a copy of the target
-        # and deduplicate() runs over all of it) — this is what makes
-        # dedup-on-append the mitigation for the write-then-commit
-        # at-least-once window: a crash-replayed batch's rows collapse
-        # into the survivors instead of accumulating
-        old = _read_full_content(dst, "gzip" if gzipped else None, storage)
-        if fmt == "csv":
-            content = _dedup_csv_content(old, payload, dedup[0], dedup[1])
-        else:
-            content = _dedup_json_content(old, payload)
-        _write_full_content(
-            dst, content, "gzip" if gzipped else None, storage
-        )
-        return
-    if gzipped:
-        # appended as a fresh member; gzip and the reference's
-        # decompress-on-append both accept multi-member files
-        payload = gzip.compress(payload)
-
-    def chunks():
-        if exists:
-            yield from storage.open_read_chunks(dst)
-        yield payload
-
-    storage.store_atomic_stream(dst, chunks())
 
 
 _FMT_EXT = {"csv": ".csv", "json": ".json", "parquet": ".parquet"}
@@ -306,6 +241,28 @@ _PARQUET_CODEC = {None: "snappy", "gzip": "gzip"}
 ZIP_LEVEL = 7  # compression/ZipCompression.kt:17
 
 
+def output_extension(fmt: str, compression: str | None) -> str:
+    """`<format ext><compression ext>` of a target file, after checking
+    that the format and compression exist and pair up."""
+    if fmt not in _FMT_EXT:
+        raise ValueError(
+            f"unknown output_format {fmt!r}; use one of {sorted(_FMT_EXT)}"
+        )
+    if compression not in _COMP_EXT:
+        raise ValueError(
+            f"unknown compression {compression!r}; "
+            f"use one of {sorted(_COMP_EXT, key=str)}"
+        )
+    if fmt != "parquet":
+        return _FMT_EXT[fmt] + _COMP_EXT[compression]
+    if compression not in _PARQUET_CODEC:
+        raise ValueError(
+            f"compression {compression!r} is not a parquet codec; "
+            "use None (snappy) or 'gzip'"
+        )
+    return _FMT_EXT[fmt]
+
+
 def _store_payload(
     final: str,
     payload: bytes,
@@ -313,21 +270,22 @@ def _store_payload(
     storage: TargetStorage,
     dedup: tuple[list | None, list | None] | None = None,
     fmt: str = "csv",
+    exists: bool | None = None,
 ) -> None:
     """Atomically store/append `payload` at `final` through the storage
     backend (the reference's FileCache store protocol: full new content is
     staged, then published atomically). gzip appends a new member; zip
     (single-entry archive, level 7) is rewritten with old+new content.
+    `exists` is the caller's answer to `storage.exists(final)`, when it
+    already has one (one metadata request per target on object stores).
 
     The existing target is STREAMED, never materialized: plain/gzip appends
     chunk-copy the old bytes into the staged file, and the zip rewrite pipes
     the old entry's decompressed stream straight into the new archive's
     entry stream (`ZipFile.open(mode="w")`). Peak memory is one copy chunk
     plus the (group-bounded) new payload, independent of target size."""
-    import shutil
-    import zipfile
-
-    exists = storage.exists(final)
+    if exists is None:
+        exists = storage.exists(final)
     if exists and dedup is not None and fmt in ("csv", "json"):
         # dedup-enabled append rewrites the WHOLE file old+new (reference
         # FileCache.closeAndJoin runs deduplicate() over the tmp copy of
@@ -335,7 +293,7 @@ def _store_payload(
         # write-then-commit at-least-once window: a crash-replayed batch's
         # rows collapse into the survivors instead of accumulating.
         # Memory: the one user-hour file, the reference's own invariant.
-        old_content = _read_full_content(final, compression, storage)
+        old_content = decompress(storage.read(final), compression)
         if fmt == "csv":
             content = _dedup_csv_content(old_content, payload, dedup[0], dedup[1])
         else:
@@ -382,7 +340,7 @@ def write_output_tree_direct(
     storage: TargetStorage | None = None,
     dedup: tuple[list | None, list | None] | None = None,
 ) -> list[str]:
-    """Exact-name writer: key-sorted `mapInPandas`, many files per task.
+    """Write `df` as the exact-name output tree; returns the final paths.
 
     `dedup=(distinct_fields, ignore_fields)` enables whole-file dedup on
     APPEND (reference FileCache.closeAndJoin parity): the existing target
@@ -397,13 +355,14 @@ def write_output_tree_direct(
     pre-rendered `line_col` (a to_json JSON-lines string per record, nesting
     preserved — format/JsonAvroConverter.kt:30-60) and no header is written.
 
-    Compared to a partitionBy+finalize path this is one shuffle, then each
-    executor writes its groups straight to their final
-    `<project>/<user>/<topic>/<timebin>.csv[.gz|.zip]` paths with an atomic
-    tmp+rename (the reference's own temp-file->store protocol,
-    worker/FileCache.kt:79,152-186) — no N-file Spark commit, no driver-side
-    finalize pass. Appends to a pre-existing target by copying it into the
-    tmp file first (append semantics incl. late data, SURVEY ST3).
+    One shuffle, then the partition loop writes each group straight to its
+    final `<project>/<user>/<topic>/<timebin>.csv[.gz|.zip]` path with an
+    atomic tmp+rename (the reference's own temp-file->store protocol,
+    worker/FileCache.kt:79,152-186) — no N-file Spark commit, no stage tree.
+    Appends to a pre-existing target by copying it into the tmp file first
+    (append semantics incl. late data, SURVEY ST3). The loop runs on the
+    executors for executor-safe storage and on the driver otherwise (see
+    the module docstring).
 
     Group size is bounded by one user-hour of one topic (same invariant the
     reference relies on for its per-file dedup buffer), so the pandas
@@ -412,23 +371,9 @@ def write_output_tree_direct(
     reference has between store and accounting commit; the run-level
     manifest makes whole-run retries safe.
     """
-    if extension is None:
-        extension = _FMT_EXT[fmt] + (
-            "" if fmt == "parquet" else _COMP_EXT[compression]
-        )
-    if fmt == "parquet" and compression not in _PARQUET_CODEC:
-        raise ValueError(
-            f"compression {compression!r} is not a parquet codec; "
-            "use None (snappy) or 'gzip'"
-        )
+    default_extension = output_extension(fmt, compression)  # validates
+    extension = default_extension if extension is None else extension
     storage = storage if storage is not None else LocalTargetStorage()
-    if not storage.executor_safe:
-        raise ValueError(
-            "write_output_tree_direct writes from executors; the storage "
-            "backend must be executor_safe (picklable, reachable from "
-            "workers). Driver-side backends like HadoopTargetStorage work "
-            "with write_output_tree's finalize path instead."
-        )
     order_cols = (
         [order_col] if isinstance(order_col, str) else list(order_col or [])
     )
@@ -453,12 +398,9 @@ def write_output_tree_direct(
         # file-create syscalls dominate and this is timing-neutral; the win
         # scales with rows-per-file, which is exactly the regime real
         # deployments (device-rate topics, hourly bins) sit in.
-        import csv as _csv_mod
-        import io as _io_mod
-
-        hdr_buf = _io_mod.StringIO()
-        _csv_mod.writer(
-            hdr_buf, lineterminator="", quoting=_csv_mod.QUOTE_MINIMAL
+        hdr_buf = io.StringIO()
+        csv.writer(
+            hdr_buf, lineterminator="", quoting=csv.QUOTE_MINIMAL
         ).writerow(header_names)
         csv_header_line = hdr_buf.getvalue()
 
@@ -494,7 +436,7 @@ def write_output_tree_direct(
             *[F.col(f"`{c}`") for c in order_cols],
         )
     else:
-        # applyInPandas resolves columns by name, which breaks on literal
+        # pandas batches resolve columns by name, which breaks on literal
         # dotted names (`key.projectId`); ship positional safe names and
         # restore the dotted header inside the writer.
         data_cols = [f"_c{i}" for i in range(len(header_names))]
@@ -518,7 +460,6 @@ def write_output_tree_direct(
         sidecar_obj = json.loads(
             _avro_schema_json(value_schema, "__TOPIC_PLACEHOLDER__")
         )
-    write_header = fmt == "csv"
     arrow_schema = None
     if fmt == "parquet":
         # Spark-typed Arrow schema for the data columns (dotted names kept):
@@ -534,31 +475,25 @@ def write_output_tree_direct(
         except Exception:
             arrow_schema = None
 
-    def write_group(keys, pdf, cache=None):
-        import io
-
-        import pandas as pd
-
+    def write_group(keys, pdf, cache):
         # NULL partition values take Spark's own Hive token: '' would be
         # DROPPED by os.path.join, silently collapsing one tree level (a
-        # null project would land its file inside the user directory) and
-        # diverging from write_output_tree, whose partitionBy emits this
-        # token for the identical input
+        # null project would land its file inside the user directory); the
+        # token keeps the output names stable across versions
         segs = [
             "__HIVE_DEFAULT_PARTITION__" if k is None else str(k)
             for k in keys
         ]
         *dir_segs, bin_seg = segs
         final_dir = os.path.join(out_dir, *dir_segs)
-        # Per-task directory cache (r11-VERDICT #9): a task writes many
+        # Per-partition directory cache (r11-VERDICT #9): a task writes many
         # bins into the same directory (72 per dir at bench density), so
         # makedirs and the write-once sidecar check run once per DIRECTORY
         # instead of once per output file — a syscall locally, a metadata
         # round-trip per file on object storage. Output bytes unchanged.
-        if cache is None or final_dir not in cache["dirs"]:
+        if final_dir not in cache["dirs"]:
             storage.makedirs(final_dir)
-            if cache is not None:
-                cache["dirs"].add(final_dir)
+            cache["dirs"].add(final_dir)
         final = os.path.join(final_dir, bin_seg + extension)
         exists = storage.exists(final)
         if fmt == "parquet":
@@ -585,30 +520,24 @@ def write_output_tree_direct(
             )
             storage.store_atomic(final, sink.getvalue())
         else:
-            if fmt == "json":
-                payload = (
-                    "\n".join(pdf[data_cols[0]].tolist()) + "\n"
-                ).encode()
-            else:
-                lines = "\n".join(pdf[data_cols[0]].tolist()) + "\n"
-                if write_header and not exists:
-                    lines = csv_header_line + "\n" + lines
-                payload = lines.encode()
+            lines = "\n".join(pdf[data_cols[0]].tolist()) + "\n"
+            if fmt == "csv" and not exists:
+                lines = csv_header_line + "\n" + lines
             _store_payload(
-                final, payload, compression, storage, dedup=dedup, fmt=fmt
+                final, lines.encode(), compression, storage,
+                dedup=dedup, fmt=fmt, exists=exists,
             )
         if sidecar_obj is not None:
             topic = segs[topic_idx]
             sidecar = os.path.join(final_dir, f"schema-{topic}.json")
-            if cache is None or sidecar not in cache["sidecars"]:
+            if sidecar not in cache["sidecars"]:
                 if not storage.exists(sidecar):
                     body = dict(sidecar_obj, name=topic)
                     storage.store_atomic(
                         sidecar, json.dumps(body, indent=2).encode()
                     )
-                if cache is not None:
-                    cache["sidecars"].add(sidecar)
-        return pd.DataFrame({"path": [final], "rows": [len(pdf)]})
+                cache["sidecars"].add(sidecar)
+        return final
 
     # One Arrow round-trip per PARTITION, not per output file: repartition on
     # the path key, sort within partitions by (key, arrival order), then a
@@ -626,7 +555,7 @@ def write_output_tree_direct(
 
         pending_key: tuple | None = None
         pending: list[pd.DataFrame] = []
-        results: list[tuple[str, int]] = []
+        paths: list[str] = []
 
         cache = {"dirs": set(), "sidecars": set()}
 
@@ -634,12 +563,7 @@ def write_output_tree_direct(
             if pending_key is None:
                 return
             pdf = pending[0] if len(pending) == 1 else pd.concat(pending)
-            results.append(
-                (
-                    write_group(pending_key, pdf, cache)["path"].iloc[0],
-                    len(pdf),
-                )
-            )
+            paths.append(write_group(pending_key, pdf, cache))
             pending.clear()
 
         for pdf in batches:
@@ -661,14 +585,14 @@ def write_output_tree_direct(
                     pending_key = key
                 pending.append(chunk)
         flush()
-        yield pd.DataFrame(
-            {
-                "path": pd.Series([r[0] for r in results], dtype=object),
-                "rows": pd.Series([r[1] for r in results], dtype="int64"),
-            }
-        )
+        yield pd.DataFrame({"path": pd.Series(paths, dtype=object)})
 
-    result = shuffled.mapInPandas(write_partition, "path string, rows long")
+    if not storage.executor_safe:
+        # driver-only storage: the same loop on the driver, fed one shuffle
+        # partition at a time, so driver memory holds one partition's rows
+        # plus one chunk, never the whole frame
+        return sorted(next(write_partition(_local_chunks(shuffled)))["path"])
+    result = shuffled.mapInPandas(write_partition, "path string")
     # AQE coalesces shuffle partitions by BYTE size, but this stage's cost is
     # per-output-FILE (open/rename/sidecar), not per byte — a few MB of
     # rendered rows can fan out to thousands of files, and coalescing to one
@@ -678,6 +602,16 @@ def write_output_tree_direct(
     # set/restore and leak the session conf.
     with _aqe_coalesce_disabled(df.sparkSession):
         return sorted(r.path for r in result.collect())
+
+
+def _local_chunks(df: DataFrame, rows: int = 10_000):
+    """`df`'s rows in order as pandas frames of up to `rows` rows, read on
+    the driver one partition at a time (`toLocalIterator`)."""
+    import pandas as pd
+
+    it = df.toLocalIterator()
+    while chunk := list(itertools.islice(it, rows)):
+        yield pd.DataFrame.from_records(chunk, columns=df.columns)
 
 
 #: reference-counted scope-disable of AQE partition coalescing: the session
@@ -713,220 +647,3 @@ class _aqe_coalesce_disabled:
             else:
                 _AQE_STATE[self._sid] = (count - 1, prev)
         return False
-
-
-#: Orphaned staging dirs older than this are swept (a crashed run can never
-#: resume its stage — finalize re-runs from the source batch, so deleting a
-#: day-old stage is always safe; a LIVE run's stage is younger than this).
-_STAGE_ORPHAN_MAX_AGE_MS = 24 * 3600 * 1000
-
-
-def _sweep_orphan_stage_dirs(
-    out_dir: str, storage: "TargetStorage", now_ms: int | None = None
-) -> list[str]:
-    """Delete sibling ``<out_dir>+tmp-<uuid>`` staging dirs whose NEWEST
-    file is older than `_STAGE_ORPHAN_MAX_AGE_MS` — the unique stage names
-    (concurrent-wipe fix) mean a crashed run orphans its stage forever,
-    so each successful write sweeps its predecessors' debris. Returns the
-    swept paths (for tests). Errors are swallowed per-candidate: another
-    run may be finalizing or deleting the same dir concurrently."""
-    import time as _time
-
-    stripped = out_dir.rstrip("/")
-    parent, _, base = stripped.rpartition("/")
-    parent = parent or "."
-    prefix = base + "+tmp-"
-    try:
-        siblings = storage.list_dirs(parent)
-    except Exception:
-        return []
-    now = now_ms if now_ms is not None else int(_time.time() * 1000)
-    swept: list[str] = []
-    for d in siblings:
-        # list_dirs returns bare names locally, full paths on object stores
-        name = d.rstrip("/").rsplit("/", 1)[-1]
-        if not name.startswith(prefix):
-            continue
-        full = d if "/" in d else f"{parent}/{d}"
-        try:
-            newest = max(
-                (m for _p, m, _s in storage.walk_file_status(full)),
-                default=None,
-            )
-            if newest is None:  # empty stage: fall back to the dir itself
-                newest = storage.mtime_ms(full)
-            if now - newest > _STAGE_ORPHAN_MAX_AGE_MS:
-                storage.delete(full)
-                swept.append(full)
-        except Exception:
-            continue
-    return swept
-
-
-def write_output_tree(
-    df: DataFrame,
-    out_dir: str,
-    partition_cols: list[str],
-    fmt: str = "csv",
-    compression: str | None = None,
-    extension: str | None = None,
-    topic_col: str = "pf_topic",
-    value_schema: T.StructType | None = None,
-    tmp_dir: str | None = None,
-    order_col: str | list[str] | None = None,
-    storage: TargetStorage | None = None,
-    dedup: tuple[list | None, list | None] | None = None,
-) -> list[str]:
-    """Write `df` as the reference's output tree; returns final file paths.
-
-    `dedup` enables whole-file dedup on append — see
-    `write_output_tree_direct` for the semantics.
-
-    `partition_cols`: ordered path segments; the last is the time-bin that
-    becomes the file name. The finalize pass runs through the storage
-    backend: LocalTargetStorage for mounted filesystems, or
-    HadoopTargetStorage for s3a://, abfs://, hdfs:// targets (driver-side
-    renames/reads through the cluster's Hadoop connectors).
-    """
-    if compression == "zip":
-        raise ValueError(
-            "zip is a direct-writer feature (single-entry archives need the "
-            "per-file python writer); use compression='gzip' or the direct "
-            "writer with an executor-safe storage backend"
-        )
-    if extension is None:
-        extension = _FMT_EXT[fmt] + (
-            ".gz" if compression == "gzip" and fmt != "parquet" else ""
-        )
-    if fmt == "parquet" and compression not in _PARQUET_CODEC:
-        raise ValueError(
-            f"compression {compression!r} is not a parquet codec; "
-            "use None (snappy) or 'gzip'"
-        )
-    storage = storage if storage is not None else LocalTargetStorage()
-    # unique default stage dir: a deterministic out_dir+'+tmp' default
-    # (deleted unconditionally below) would let two concurrent calls on
-    # the same out_dir wipe each other's staged parts mid-finalize —
-    # the survivor would silently append incomplete output
-    tmp = tmp_dir or (out_dir.rstrip("/") + f"+tmp-{uuid.uuid4().hex[:12]}")
-    storage.delete(tmp)
-    # the unique names mean a CRASHED run orphans its staging dir forever
-    # (the old deterministic name was self-cleaning); sweep stale siblings
-    _sweep_orphan_stage_dirs(out_dir, storage)
-
-    shuffled = df.repartition(*[df[c] for c in partition_cols])
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col or [])
-    if order_cols:
-        # restore record order inside each output file AFTER the shuffle
-        # (reference dedup output order, CsvAvroConverterFactory.kt:56-63).
-        # Sort key leads with the partition columns so FileFormatWriter sees
-        # its required ordering satisfied and does not add its own
-        # (order-destroying) sort on them.
-        shuffled = shuffled.sortWithinPartitions(
-            *partition_cols, *order_cols
-        ).drop(*order_cols)
-    writer = shuffled.write.mode("overwrite").partitionBy(*partition_cols)
-    if compression:
-        writer = writer.option("compression", compression)
-    data_cols = [c for c in shuffled.columns if c not in set(partition_cols)]
-    if fmt == "json" and data_cols == ["line"]:
-        # the plan pre-renders each record to ONE JSON-lines string; the text
-        # writer emits it verbatim (writer.json would double-encode)
-        writer.text(tmp)
-    elif fmt == "csv":
-        # escape='"' => RFC4180 doubled quotes, matching the reference's opencsv
-        (
-            writer.option("header", True)
-            .option("nullValue", "")
-            .option("emptyValue", "")
-            .option("escape", '"')
-            .csv(tmp)
-        )
-    else:
-        getattr(writer, fmt)(tmp)
-
-    gzipped = compression == "gzip" and fmt != "parquet"
-    has_header = fmt == "csv"
-    # Collect (final_path, parts, final_dir, segs) per output file, then
-    # finalize concurrently — renames/concats are independent per file, and
-    # on object stores each is a server-side copy; a thread pool keeps the
-    # driver-side pass from serializing on I/O latency for large file counts.
-    marker = "/" + os.path.basename(tmp.rstrip("/")) + "/"
-    by_dir: dict[str, list[str]] = {}
-    for f in storage.walk_files(tmp):
-        name = f.rsplit("/", 1)[-1]
-        if not name.startswith("part-") or name.endswith(".crc"):
-            continue
-        rel_dir = f.split(marker, 1)[1].rsplit("/", 1)[0]
-        by_dir.setdefault(rel_dir, []).append(f)
-    jobs: list[tuple[str, list[str], str, list[str]]] = []
-    for rel_dir, parts in by_dir.items():
-        # partitionBy Hive-escapes special chars in directory names
-        # (':' -> '%3A', '%' -> '%25', ...); the output tree's names must
-        # carry the RAW partition values, exactly as the direct writer
-        # derives them from the column values — a literal '%' is itself
-        # escaped by Hive, so percent-decoding is a faithful inverse
-        segs = [
-            unquote(kv.split("=", 1)[1]) for kv in rel_dir.split("/")
-        ]
-        *dir_segs, bin_seg = segs
-        final_dir = os.path.join(out_dir, *dir_segs)
-        final = os.path.join(final_dir, bin_seg + extension)
-        jobs.append((final, sorted(parts), final_dir, segs))
-
-    for final_dir in {j[2] for j in jobs}:
-        storage.makedirs(final_dir)
-
-    def _finalize(job: tuple[str, list[str], str, list[str]]) -> str:
-        final, parts, _final_dir, _segs = job
-        if fmt == "parquet":
-            # row-group merge, not byte concat: parquet footers make raw
-            # concatenation invalid, so read every part (+ the existing
-            # target on append) and atomically rewrite one file
-            import io as _io
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            tables = []
-            if storage.exists(final):
-                tables.append(pq.read_table(_io.BytesIO(storage.read(final))))
-            tables += [
-                pq.read_table(_io.BytesIO(storage.read(p))) for p in parts
-            ]
-            merged = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
-            sink = _io.BytesIO()
-            pq.write_table(
-                merged, sink, compression=_PARQUET_CODEC[compression]
-            )
-            storage.store_atomic(final, sink.getvalue())
-        else:
-            _concat_into(
-                final, parts, gzipped, has_header, storage,
-                dedup=dedup, fmt=fmt,
-            )
-        return final
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(32, max(4, len(jobs) // 64 + 4))) as pool:
-        finals = list(pool.map(_finalize, jobs))
-
-    # schema sidecar, write-once per output dir (FileCacheStore.kt:131-151)
-    if value_schema is not None:
-        sidecar_dirs: dict[str, str] = {}
-        for _final, _parts, final_dir, segs in jobs:
-            topic = None
-            for col, seg in zip(partition_cols, segs):
-                if col == topic_col:
-                    topic = seg
-            if topic:
-                sidecar_dirs.setdefault(final_dir, topic)
-        for final_dir, topic in sidecar_dirs.items():
-            sidecar = os.path.join(final_dir, f"schema-{topic}.json")
-            if not storage.exists(sidecar):
-                storage.store_atomic(
-                    sidecar, _avro_schema_json(value_schema, topic).encode()
-                )
-    storage.delete(tmp)
-    return sorted(finals)

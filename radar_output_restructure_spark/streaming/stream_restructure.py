@@ -52,11 +52,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from radar_output_restructure_spark.plans.restructure import (
-    ORDER_COLS,
+    META_COLS,
     RestructureConfig,
     RestructurePlan,
 )
-from radar_output_restructure_spark.sinks.writers import write_output_tree_direct
 from radar_output_restructure_spark.sources.kafka_tree import with_file_metadata
 from radar_output_restructure_spark.sources.manifest import FileEntry
 
@@ -162,35 +161,9 @@ def streaming_restructure(
                     F.col("source_file").isin(sorted(e.path for e in todo))
                 )
             flat, part_cols = plan.transform(batch_df, topic)
-            value_schema = batch_df.drop(
-                "source_file", "file_modified", "kafka_partition",
-                "offset_from", "offset_to",
-            ).schema
-            kwargs = dict(
-                fmt=cfg.output_format,
-                compression=cfg.compression,
-                topic_col="pf_topic",
-                value_schema=value_schema,
-                order_col=ORDER_COLS,
-                storage=plan.target_storage,
-                dedup=plan.file_dedup(topic),
+            plan.write_frame(
+                flat, part_cols, topic, batch_df.drop(*META_COLS).schema
             )
-            if plan.target_storage.executor_safe:
-                write_output_tree_direct(
-                    flat, cfg.output_dir, part_cols, **kwargs
-                )
-            else:
-                from radar_output_restructure_spark.sinks.writers import (
-                    write_output_tree,
-                )
-
-                write_output_tree(
-                    flat,
-                    cfg.output_dir,
-                    part_cols,
-                    tmp_dir=f"{cfg.output_dir.rstrip('/')}+tmp-{topic}-stream",
-                    **kwargs,
-                )
             # write-then-commit (T2): crash before this line replays the
             # epoch, and the manifest prune above makes the replay a no-op
             # for the files that did commit

@@ -6,31 +6,21 @@
    and withColumn silently replaced the first segment's rendering with the
    second's, corrupting the output tree
    (plans/path_format.PathFormat.partition_columns).
-2. CSV dedup fast path: a truncated/short line in an existing target must
-   not raise IndexError when distinct columns index past its fields
-   (sinks/writers._dedup_csv_content).
-3. streaming lock keeper: the renew-error grace window is measured from the
+2. streaming lock keeper: the renew-error grace window is measured from the
    ACQUIRE timestamp, not keeper-thread start — stream construction can eat
    most of a short TTL before the keeper runs
    (streaming/stream_restructure._keep_and_release).
-4. operators/text._marker_hits dead code is deleted (lang_scores uses the
+3. operators/text._marker_hits dead code is deleted (lang_scores uses the
    single-alternation split).
-5. orphaned '+tmp-<uuid>' staging dirs from crashed runs are swept by the
-   next successful write_output_tree (sinks/writers._sweep_orphan_stage_dirs).
 """
 
 from __future__ import annotations
 
-import os
 import threading
 import time
 
 import pytest
 
-from radar_output_restructure_spark.sinks.writers import (
-    _dedup_csv_content,
-    _sweep_orphan_stage_dirs,
-)
 from radar_output_restructure_spark.streaming.stream_restructure import (
     _keep_and_release,
 )
@@ -86,25 +76,7 @@ def test_repeated_param_segments_get_distinct_columns(spark, fmt):
 
 
 # ---------------------------------------------------------------------------
-# 2. CSV dedup fast path: short line must not IndexError
-# ---------------------------------------------------------------------------
-
-
-def test_dedup_csv_fast_path_tolerates_short_line():
-    old = b"a,b,c\n1,2,3\n1\n"  # truncated second record
-    new = b"1,2,9\n"
-    out = _dedup_csv_content(old, new, distinct=["a", "c"], ignore=None)
-    lines = out.decode().splitlines()
-    assert lines[0] == "a,b,c"
-    # key(1,3) then key(1,'') then key(1,9): all distinct, keep-last order
-    assert lines[1:] == ["1,2,3", "1", "1,2,9"]
-    # and a short line that COLLIDES on the padded key deduplicates keep-last
-    out2 = _dedup_csv_content(b"a,b,c\n1\n", b"1,2,\n", ["a", "c"], None)
-    assert out2.decode().splitlines()[1:] == ["1,2,"]
-
-
-# ---------------------------------------------------------------------------
-# 3. keeper grace window measured from acquire time
+# 2. keeper grace window measured from acquire time
 # ---------------------------------------------------------------------------
 
 
@@ -182,7 +154,7 @@ def test_keeper_fresh_acquire_still_tolerates_transient_error():
 
 
 # ---------------------------------------------------------------------------
-# 4. dead _marker_hits removed
+# 3. dead _marker_hits removed
 # ---------------------------------------------------------------------------
 
 
@@ -190,71 +162,3 @@ def test_marker_hits_dead_code_removed():
     from radar_output_restructure_spark.operators import text
 
     assert not hasattr(text, "_marker_hits")
-
-
-# ---------------------------------------------------------------------------
-# 5. orphan staging-dir sweep
-# ---------------------------------------------------------------------------
-
-
-def test_sweep_orphan_stage_dirs(tmp_path):
-    from radar_output_restructure_spark.sinks.storage import (
-        LocalTargetStorage,
-    )
-    from radar_output_restructure_spark.sinks.writers import (
-        _STAGE_ORPHAN_MAX_AGE_MS,
-    )
-
-    out = tmp_path / "out"
-    out.mkdir()
-    old_ms = int(time.time() * 1000) - _STAGE_ORPHAN_MAX_AGE_MS - 60_000
-
-    stale = tmp_path / "out+tmp-deadbeef0001"
-    stale.mkdir()
-    (stale / "part-0000.csv").write_text("x")
-    os.utime(stale / "part-0000.csv", (old_ms / 1000, old_ms / 1000))
-
-    stale_empty = tmp_path / "out+tmp-deadbeef0002"
-    stale_empty.mkdir()
-    os.utime(stale_empty, (old_ms / 1000, old_ms / 1000))
-
-    live = tmp_path / "out+tmp-cafecafe0003"
-    live.mkdir()
-    (live / "part-0000.csv").write_text("y")  # fresh mtime: a LIVE run
-
-    unrelated = tmp_path / "other+tmp-feedfeed0004"
-    unrelated.mkdir()
-    os.utime(unrelated, (old_ms / 1000, old_ms / 1000))
-
-    swept = _sweep_orphan_stage_dirs(str(out), LocalTargetStorage())
-    assert sorted(os.path.basename(p) for p in swept) == [
-        "out+tmp-deadbeef0001",
-        "out+tmp-deadbeef0002",
-    ]
-    assert not stale.exists() and not stale_empty.exists()
-    assert live.exists(), "a live run's fresh stage must never be swept"
-    assert unrelated.exists(), "only THIS out_dir's staging siblings are swept"
-
-
-def test_write_output_tree_sweeps_orphans(spark, tmp_path):
-    from radar_output_restructure_spark.sinks.writers import (
-        _STAGE_ORPHAN_MAX_AGE_MS,
-        write_output_tree,
-    )
-
-    out = str(tmp_path / "out")
-    orphan = tmp_path / "out+tmp-000000000bad"
-    orphan.mkdir(parents=True)
-    (orphan / "part-junk.csv").write_text("junk")
-    old_s = time.time() - _STAGE_ORPHAN_MAX_AGE_MS / 1000 - 60
-    os.utime(orphan / "part-junk.csv", (old_s, old_s))
-
-    df = spark.createDataFrame(
-        [("p", "t", "20200101_0000", "v")],
-        "pf_p string, pf_topic string, pf_bin string, v string",
-    )
-    finals = write_output_tree(
-        df, out, ["pf_p", "pf_topic", "pf_bin"], fmt="csv"
-    )
-    assert len(finals) == 1 and os.path.exists(finals[0])
-    assert not orphan.exists(), "successful write must sweep crashed stages"

@@ -10,6 +10,7 @@ import json
 import os
 import zipfile
 
+import pytest
 from pyspark.sql import Row
 
 from radar_output_restructure_spark.plans.restructure import (
@@ -115,50 +116,65 @@ def test_zip_json_append_across_runs(spark, tmp_path):
     assert len(body) == 2  # old content kept, new row appended
 
 
+PARTS = ["pf_p", "pf_u", "pf_topic", "pf_bin"]
+
+
+def _csv_frame(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "pf_p string, pf_u string, pf_topic string, pf_bin string, "
+        "__pos long, v string",
+    )
+
+
 def test_legacy_partitionby_writer_paths(spark, tmp_path):
-    """The alternative native-writer path (partitionBy + finalize) stays
-    correct: exact names, header, append across two invocations."""
+    """The one writer on driver-only storage (the Hadoop backend, here on a
+    plain path): exact names, header written once, append across two
+    invocations."""
     from pyspark.sql import functions as F
 
-    from radar_output_restructure_spark.sinks.writers import write_output_tree
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
 
-    df = spark.createDataFrame(
+    df = _csv_frame(
+        spark,
         [("p", "u", "t", "19700101_0100", 1, "a"), ("p", "u", "t", "19700101_0100", 2, "b")],
-        "pf_p string, pf_u string, pf_topic string, pf_bin string, __pos long, v string",
     )
     out = str(tmp_path / "out")
-    finals = write_output_tree(
-        df, out, ["pf_p", "pf_u", "pf_topic", "pf_bin"], fmt="csv", order_col="__pos"
-    )
+    kw = dict(fmt="csv", order_col="__pos", storage=HadoopTargetStorage(spark))
+    finals = write_output_tree_direct(df, out, PARTS, **kw)
     assert [os.path.relpath(f, out) for f in finals] == ["p/u/t/19700101_0100.csv"]
     assert open(finals[0]).read().splitlines() == ["v", "a", "b"]
     # second invocation appends without duplicating the header
-    write_output_tree(
-        df.withColumn("v", F.upper("v")), out,
-        ["pf_p", "pf_u", "pf_topic", "pf_bin"], fmt="csv", order_col="__pos",
-    )
+    write_output_tree_direct(df.withColumn("v", F.upper("v")), out, PARTS, **kw)
     assert open(finals[0]).read().splitlines() == ["v", "a", "b", "A", "B"]
 
 
 def test_finalize_unescapes_hive_partition_values(spark, tmp_path):
-    """partitionBy Hive-escapes special chars in directory names (':' ->
-    '%3A', '%' -> '%25'); finalize must undo that so output names carry
-    the RAW partition values, exactly like the direct writer (and like the
-    cleaner's expectation paths, which are built from the column values)."""
-    from radar_output_restructure_spark.sinks.writers import write_output_tree
+    """Output names carry the RAW partition values (like the cleaner's
+    expectation paths, which are built from the column values): '%' and
+    space on both storage kinds, ':' on local storage (a Hadoop Path
+    rejects ':' in a file name)."""
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
 
-    df = spark.createDataFrame(
-        [("p", "u 1", "t", "12:30_50%", 1, "a")],
-        "pf_p string, pf_u string, pf_topic string, pf_bin string, __pos long, v string",
-    )
-    out = str(tmp_path / "out")
-    finals = write_output_tree(
-        df, out, ["pf_p", "pf_u", "pf_topic", "pf_bin"], fmt="csv", order_col="__pos"
-    )
-    assert [os.path.relpath(f, out) for f in finals] == [
-        "p/u 1/t/12:30_50%.csv"
-    ]
-    assert open(finals[0]).read().splitlines() == ["v", "a"]
+    for storage, bin_value in [
+        (HadoopTargetStorage(spark), "1230_50%"),
+        (None, "12:30_50%"),
+    ]:
+        df = _csv_frame(spark, [("p", "u 1", "t", bin_value, 1, "a")])
+        out = str(tmp_path / f"out-{bin_value}")
+        finals = write_output_tree_direct(
+            df, out, PARTS, fmt="csv", order_col="__pos", storage=storage
+        )
+        assert [os.path.relpath(f, out) for f in finals] == [
+            f"p/u 1/t/{bin_value}.csv"
+        ]
+        assert open(finals[0]).read().splitlines() == ["v", "a"]
 
 
 def test_hadoop_target_storage_roundtrip(spark, tmp_path):
@@ -215,40 +231,202 @@ def test_hadoop_storage_streaming_writer_and_error_discard(spark, tmp_path):
 
 
 def test_write_output_tree_with_hadoop_storage(spark, tmp_path):
-    """The native-writer finalize runs through a driver-side Hadoop storage
-    backend (the object-store path, exercised here on file://)."""
-    from pyspark.sql import Row
-
+    """The writer runs its partition loop on the driver for the Hadoop
+    backend (the object-store path, exercised here on file://): one
+    exact-named file, arrival order kept."""
     from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
-    from radar_output_restructure_spark.sinks.writers import write_output_tree
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
 
     out = str(tmp_path / "out")
     df = spark.createDataFrame(
         [Row(pf_p="p", pf_u="u", pf_topic="t", pf_bin="19700101_0100",
              a=str(i), __pos=i) for i in range(5)]
     )
-    finals = write_output_tree(
-        df, out, ["pf_p", "pf_u", "pf_topic", "pf_bin"], fmt="csv",
+    finals = write_output_tree_direct(
+        df, "file://" + out, PARTS, fmt="csv",
         order_col="__pos", storage=HadoopTargetStorage(spark),
     )
-    assert len(finals) == 1
-    lines = open(finals[0]).read().splitlines()
+    assert finals == ["file://" + out + "/p/u/t/19700101_0100.csv"]
+    lines = open(out + "/p/u/t/19700101_0100.csv").read().splitlines()
     assert lines[0] == "a" and lines[1:] == ["0", "1", "2", "3", "4"]
 
 
-def test_direct_writer_rejects_driver_only_storage(spark, tmp_path):
-    import pytest as _pytest
-
+def test_direct_writer_accepts_driver_only_storage(spark, tmp_path, monkeypatch):
+    """A driver-only backend (not executor_safe) is written from the
+    driver, its rows read in chunks; a group spanning two chunks still
+    becomes one file with one header."""
+    from radar_output_restructure_spark.sinks import writers
     from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+
+    assert not HadoopTargetStorage.executor_safe
+    df = spark.range(25).selectExpr(
+        "cast(id % 3 as string) as pf_bin", "cast(id as string) as a", "id"
+    )
+    chunk_sizes = []
+    orig = writers._local_chunks
+
+    def small_chunks(frame):
+        for pdf in orig(frame, rows=4):
+            chunk_sizes.append(len(pdf))
+            yield pdf
+
+    monkeypatch.setattr(writers, "_local_chunks", small_chunks)
+    finals = writers.write_output_tree_direct(
+        df, str(tmp_path), ["pf_bin"], order_col="id",
+        storage=HadoopTargetStorage(spark),
+    )
+    assert [os.path.basename(f) for f in finals] == ["0.csv", "1.csv", "2.csv"]
+    assert max(chunk_sizes) == 4 and sum(chunk_sizes) == 25
+    for b, f in enumerate(finals):
+        assert open(f).read().splitlines() == ["a"] + [
+            str(i) for i in range(25) if i % 3 == b
+        ]
+
+
+def test_one_exists_call_per_output_file(spark, tmp_path):
+    """The writer asks the storage once per target file whether it exists
+    (a HEAD request per file on S3/Azure), also on the append run."""
+    from radar_output_restructure_spark.sinks.storage import LocalTargetStorage
     from radar_output_restructure_spark.sinks.writers import (
         write_output_tree_direct,
     )
 
-    df = spark.range(1).selectExpr("'x' as pf_bin", "cast(id as string) as a")
-    with _pytest.raises(ValueError, match="executor_safe"):
-        write_output_tree_direct(
-            df, str(tmp_path), ["pf_bin"], storage=HadoopTargetStorage(spark)
+    log = str(tmp_path / "exists.log")
+
+    class LoggingStorage(LocalTargetStorage):
+        def exists(self, path):
+            with open(log, "a") as fh:
+                fh.write(path + "\n")
+            return super().exists(path)
+
+    df = _csv_frame(
+        spark,
+        [("p", u, "t", "19700101_0100", i, str(i)) for i, u in enumerate("abcab")],
+    )
+    out = str(tmp_path / "out")
+    for compression, dedup in [(None, None), ("gzip", None), ("gzip", (None, None))]:
+        for _run in range(2):  # first write, then an append
+            if os.path.exists(log):
+                os.remove(log)
+            finals = write_output_tree_direct(
+                df, out, PARTS, compression=compression, order_col="__pos",
+                storage=LoggingStorage(), dedup=dedup,
+            )
+            assert len(finals) == 3
+            assert sorted(open(log).read().splitlines()) == finals
+
+
+# one frame with the values a CSV/JSON writer is most likely to alter:
+# leading/trailing spaces, empty and NULL cells, quotes, commas, an embedded
+# newline, a NULL partition value, and '%' and space in path segments
+EDGE_VALUES = [
+    " lead", "trail ", "", None, 'say "hi"', "a,b", "line\nbreak", "  ",
+]
+
+
+def _edge_frame(spark, fmt, round_no):
+    from pyspark.sql import functions as F
+
+    rows = [
+        (
+            None if i % 5 == 0 else "p",
+            "u 1" if i % 2 else "u%2",
+            "t",
+            "19700101_0100",
+            round_no * 100 + i,
+            v,
+            EDGE_VALUES[(i + 3) % len(EDGE_VALUES)],
+            None if i % 3 == 0 else i * 10**12,
         )
+        for i, v in enumerate(EDGE_VALUES * 2)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "pf_p string, pf_u string, pf_topic string, pf_bin string, "
+        "__pos long, v string, w string, n long",
+    )
+    if fmt == "json":
+        return df.select(
+            *PARTS, "__pos",
+            F.to_json(F.struct("v", "w", "n"), {"ignoreNullFields": "false"})
+            .alias("line"),
+        )
+    if fmt == "csv":
+        return df.drop("n")
+    return df
+
+
+def _tree(root, compression):
+    import pyarrow.parquet as pq
+
+    from radar_output_restructure_spark.sinks.writers import decompress
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if name.startswith("."):  # Hadoop's local-FS .crc sidecars
+                continue
+            path = os.path.join(dirpath, name)
+            data = open(path, "rb").read()
+            if name.endswith(".parquet"):
+                table = pq.read_table(path)
+                data = (table.schema, table.to_pylist())
+            elif not name.startswith("schema-"):
+                data = decompress(data, compression)
+            out[os.path.relpath(path, root)] = data
+    return out
+
+
+@pytest.mark.parametrize(
+    "fmt,compression",
+    [("csv", None), ("csv", "gzip"), ("csv", "zip"), ("json", None),
+     ("parquet", None)],
+)
+def test_local_and_hadoop_targets_write_identical_trees(
+    spark, tmp_path, fmt, compression
+):
+    """One writer, two places its loop runs: the same frames written
+    through LocalTargetStorage (executors) and HadoopTargetStorage on a
+    file:// URI (driver) give identical trees after decompression — a
+    first write, an append, and a dedup-on-append run."""
+    from pyspark.sql import types as T
+
+    from radar_output_restructure_spark.sinks.storage import (
+        HadoopTargetStorage,
+        LocalTargetStorage,
+    )
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
+
+    frames = [_edge_frame(spark, fmt, r) for r in range(3)]
+    schema = T.StructType([T.StructField("v", T.StringType())])
+    roots = {}
+    for name, storage, prefix in [
+        ("local", LocalTargetStorage(), ""),
+        ("hadoop", HadoopTargetStorage(spark), "file://"),
+    ]:
+        root = str(tmp_path / name)
+        roots[name] = root
+        for r, df in enumerate(frames):
+            finals = write_output_tree_direct(
+                df, prefix + root, PARTS, fmt=fmt, compression=compression,
+                value_schema=schema, order_col="__pos", storage=storage,
+                dedup=(None, None) if r == 2 else None,
+            )
+            assert len(finals) == 4
+    local, hadoop = (_tree(roots[n], compression) for n in ("local", "hadoop"))
+    assert sorted(local) == sorted(hadoop)
+    assert "__HIVE_DEFAULT_PARTITION__/u%2/t/schema-t.json" in local
+    for rel in local:
+        assert local[rel] == hadoop[rel], rel
+    if fmt != "parquet":
+        body = next(
+            v for k, v in local.items() if k.startswith("p/u 1/t/19700101_")
+        )
+        assert b" lead" in body and b"trail " in body
 
 
 def test_parquet_sink_typed_roundtrip(spark, tmp_path):
@@ -356,3 +534,122 @@ def test_csv_line_sql_matches_column_quote_minimal(spark):
     assert all(r.o == r.n for r in rows), [
         (r.o, r.n) for r in rows if r.o != r.n
     ]
+
+
+def test_sidecar_avro_names_are_unique():
+    """A schema with two struct fields must not emit duplicate Avro record
+    fullnames ('Can't redefine: record')."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from radar_output_restructure_spark.sinks.writers import _avro_schema_json
+
+    schema = T.StructType(
+        [
+            T.StructField(
+                "key",
+                T.StructType([T.StructField("userId", T.StringType())]),
+            ),
+            T.StructField(
+                "value",
+                T.StructType([T.StructField("time", T.DoubleType())]),
+            ),
+        ]
+    )
+    body = json.loads(_avro_schema_json(schema, "topic_a"))
+
+    names = []
+
+    def walk(node):
+        if isinstance(node, dict):
+            if node.get("type") == "record":
+                names.append(node["name"])
+            for v in node.values():
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+
+    walk(body)
+    assert len(names) == len(set(names)), names
+
+
+def test_direct_writer_null_partition_uses_hive_token(spark, tmp_path):
+    """A NULL partition value must become __HIVE_DEFAULT_PARTITION__ (as
+    Spark's partitionBy does), not '' which os.path.join silently drops."""
+    import os
+
+    from pyspark.sql import Row
+
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
+
+    df = spark.createDataFrame(
+        [
+            Row(pf_project=None, pf_topic="t", pf_bin="20240101_0000", v=1.0),
+            Row(pf_project="p", pf_topic="t", pf_bin="20240101_0000", v=2.0),
+        ],
+        "pf_project string, pf_topic string, pf_bin string, v double",
+    )
+    out = str(tmp_path / "out")
+    write_output_tree_direct(
+        df, out, ["pf_project", "pf_topic", "pf_bin"], fmt="csv"
+    )
+    got = sorted(
+        os.path.relpath(os.path.join(r, f), out)
+        for r, _d, fs in os.walk(out)
+        for f in fs
+        if f.endswith(".csv")
+    )
+    assert got == [
+        "__HIVE_DEFAULT_PARTITION__/t/20240101_0000.csv",
+        "p/t/20240101_0000.csv",
+    ]
+
+
+def test_sidecar_topic_with_quote_is_valid_json(spark, tmp_path):
+    import glob
+    import json
+
+    from pyspark.sql import Row
+    from pyspark.sql import types as T
+
+    from radar_output_restructure_spark.sinks.writers import (
+        write_output_tree_direct,
+    )
+
+    df = spark.createDataFrame(
+        [Row(pf_topic='a"b', pf_bin="20240101_0000", v=1.0)],
+        "pf_topic string, pf_bin string, v double",
+    )
+    out = str(tmp_path / "out")
+    write_output_tree_direct(
+        df,
+        out,
+        ["pf_topic", "pf_bin"],
+        fmt="csv",
+        value_schema=T.StructType([T.StructField("v", T.DoubleType())]),
+    )
+    sidecars = glob.glob(out + "/**/schema-*.json", recursive=True)
+    assert sidecars
+    body = json.loads(open(sidecars[0]).read())  # must parse
+    assert body["name"] == 'a"b'
+
+
+def test_dedup_csv_fast_path_tolerates_short_line():
+    """A truncated/short line in an existing target must not raise
+    IndexError when distinct columns index past its fields."""
+    from radar_output_restructure_spark.sinks.writers import _dedup_csv_content
+
+    old = b"a,b,c\n1,2,3\n1\n"  # truncated second record
+    new = b"1,2,9\n"
+    out = _dedup_csv_content(old, new, distinct=["a", "c"], ignore=None)
+    lines = out.decode().splitlines()
+    assert lines[0] == "a,b,c"
+    # key(1,3) then key(1,'') then key(1,9): all distinct, keep-last order
+    assert lines[1:] == ["1,2,3", "1", "1,2,9"]
+    # and a short line that COLLIDES on the padded key deduplicates keep-last
+    out2 = _dedup_csv_content(b"a,b,c\n1\n", b"1,2,\n", ["a", "c"], None)
+    assert out2.decode().splitlines()[1:] == ["1,2,"]

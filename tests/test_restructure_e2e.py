@@ -482,6 +482,25 @@ def test_pipeline_with_hadoop_scheme_uris(spark, tmp_path):
     assert os.path.exists(sidecar)
     # ledger lives behind the same scheme; rerun is a no-op
     assert RestructurePlan(spark, cfg).run() == {"t": []}
+    # a plain-path run over the same input writes the same tree, byte for
+    # byte (the ledger under offsets/ records paths and times, not output)
+    plain = RestructureConfig(
+        input_dir=str(tmp_path / "in"), output_dir=str(tmp_path / "plain")
+    )
+    RestructurePlan(spark, plain).run()
+
+    def tree(root):
+        return {
+            os.path.relpath(os.path.join(d, f), root): open(
+                os.path.join(d, f), "rb"
+            ).read()
+            for d, _dirs, files in os.walk(root)
+            for f in files
+            if not f.startswith(".")  # Hadoop's local-FS .crc sidecars
+            and os.path.relpath(d, root).split(os.sep)[0] != "offsets"
+        }
+
+    assert tree(str(tmp_path / "out")) == tree(str(tmp_path / "plain"))
 
 
 def test_corrupt_source_file_skipped_and_retried(spark, tmp_path):

@@ -304,113 +304,6 @@ def test_audio_frame_starts_align_to_channel_boundaries(spark):
 
 
 # ---------------------------------------------------------------------------
-# queries.py / sinks/writers.py review findings
-# ---------------------------------------------------------------------------
-
-
-def test_sidecar_avro_names_are_unique():
-    """A schema with two struct fields must not emit duplicate Avro record
-    fullnames ('Can't redefine: record')."""
-    import json
-
-    from pyspark.sql import types as T
-
-    from radar_output_restructure_spark.sinks.writers import _avro_schema_json
-
-    schema = T.StructType(
-        [
-            T.StructField(
-                "key",
-                T.StructType([T.StructField("userId", T.StringType())]),
-            ),
-            T.StructField(
-                "value",
-                T.StructType([T.StructField("time", T.DoubleType())]),
-            ),
-        ]
-    )
-    body = json.loads(_avro_schema_json(schema, "topic_a"))
-
-    names = []
-
-    def walk(node):
-        if isinstance(node, dict):
-            if node.get("type") == "record":
-                names.append(node["name"])
-            for v in node.values():
-                walk(v)
-        elif isinstance(node, list):
-            for v in node:
-                walk(v)
-
-    walk(body)
-    assert len(names) == len(set(names)), names
-
-
-def test_direct_writer_null_partition_uses_hive_token(spark, tmp_path):
-    """A NULL partition value must become __HIVE_DEFAULT_PARTITION__ (as
-    Spark's partitionBy does), not '' which os.path.join silently drops."""
-    import os
-
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.sinks.writers import (
-        write_output_tree_direct,
-    )
-
-    df = spark.createDataFrame(
-        [
-            Row(pf_project=None, pf_topic="t", pf_bin="20240101_0000", v=1.0),
-            Row(pf_project="p", pf_topic="t", pf_bin="20240101_0000", v=2.0),
-        ],
-        "pf_project string, pf_topic string, pf_bin string, v double",
-    )
-    out = str(tmp_path / "out")
-    write_output_tree_direct(
-        df, out, ["pf_project", "pf_topic", "pf_bin"], fmt="csv"
-    )
-    got = sorted(
-        os.path.relpath(os.path.join(r, f), out)
-        for r, _d, fs in os.walk(out)
-        for f in fs
-        if f.endswith(".csv")
-    )
-    assert got == [
-        "__HIVE_DEFAULT_PARTITION__/t/20240101_0000.csv",
-        "p/t/20240101_0000.csv",
-    ]
-
-
-def test_sidecar_topic_with_quote_is_valid_json(spark, tmp_path):
-    import glob
-    import json
-
-    from pyspark.sql import Row
-    from pyspark.sql import types as T
-
-    from radar_output_restructure_spark.sinks.writers import (
-        write_output_tree_direct,
-    )
-
-    df = spark.createDataFrame(
-        [Row(pf_topic='a"b', pf_bin="20240101_0000", v=1.0)],
-        "pf_topic string, pf_bin string, v double",
-    )
-    out = str(tmp_path / "out")
-    write_output_tree_direct(
-        df,
-        out,
-        ["pf_topic", "pf_bin"],
-        fmt="csv",
-        value_schema=T.StructType([T.StructField("v", T.DoubleType())]),
-    )
-    sidecars = glob.glob(out + "/**/schema-*.json", recursive=True)
-    assert sidecars
-    body = json.loads(open(sidecars[0]).read())  # must parse
-    assert body["name"] == 'a"b'
-
-
-# ---------------------------------------------------------------------------
 # write-then-commit crash window: documented behavior + dedup mitigation
 # ---------------------------------------------------------------------------
 
