@@ -18,9 +18,11 @@ Reference semantics, re-expressed as one Spark job per topic:
   entry so the next restructure run re-extracts it
   (AccountantImpl.kt:55-59 offset revocation).
 
-Target files are read back as text (CSV with header / JSON-lines; gzip
-decodes natively). Zip-compressed targets are not re-readable by the scan,
-so their sources are conservatively never deleted.
+Target files are read back per format: CSV and zip targets are parsed
+whole-file, each against its own header, through the writer's codec
+(`_whole_file_target_rows`); JSON-lines as text (gzip decodes natively);
+parquet typed, one scan per attempt. Both sides of the anti-join render a
+target path through one rule (`_path_key`).
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
@@ -39,6 +41,27 @@ from radar_output_restructure_spark.sources.kafka_tree import (
 )
 from radar_output_restructure_spark.sources.manifest import FileEntry
 from radar_output_restructure_spark.timer import Timer
+
+
+def _path_key(path: Column, url_encoded: bool) -> Column:
+    """A target path as the extraction check compares it: a local file as
+    its absolute path without the `file:` scheme, any other URI as is.
+    `url_encoded` paths (Spark's `_metadata.file_path`: a space or `%` in a
+    name is `%20` / `%25`) have their percent escapes decoded first; not
+    with `url_decode`, which also turns `+` into a space."""
+    if url_encoded:
+        parts = F.split(path, "%")
+        path = F.aggregate(
+            F.slice(parts, 2, F.size(parts)),
+            F.encode(parts[0], "UTF-8"),
+            lambda acc, s: F.concat(
+                acc,
+                F.unhex(F.substr(s, F.lit(1), F.lit(2))),
+                F.encode(F.substr(s, F.lit(3)), "UTF-8"),
+            ),
+            lambda acc: F.decode(acc, "UTF-8"),
+        )
+    return F.regexp_replace(path, "^file:/+", "/")
 
 
 @dataclass
@@ -107,12 +130,11 @@ class SourceDataCleaner:
     # -- C2: extraction verification ------------------------------------------
 
     def _output_root(self) -> str:
-        """The output root exactly as `_metadata.file_path` will render it:
-        URI targets (s3a://, abfs://, hdfs://) pass through; local paths are
-        made ABSOLUTE, because the target read-back reports absolute
-        `file:` URIs and a relative `output_dir` would make every
-        expectation path unmatched -> every file revoked -> unbounded
-        duplicate re-extraction."""
+        """The output root of the expectation paths: URIs (file://, s3a://,
+        abfs://, hdfs://) pass through; local paths are made ABSOLUTE,
+        because the target read-back reports absolute paths and a relative
+        `output_dir` would make every expectation path unmatched -> every
+        file revoked -> unbounded duplicate re-extraction."""
         root = self.config.output_dir.rstrip(os.sep)
         if "://" in root or root.startswith("file:"):
             return root
@@ -203,14 +225,12 @@ class SourceDataCleaner:
         def decode_rows(batches):
             import csv as csvmod
             import io as iomod
-            import re as remod
 
             for pdf in batches:
                 paths: list[str] = []
                 vals: list[str | None] = []
-                for path, content in zip(pdf["path"], pdf["content"]):
+                for p, content in zip(pdf["path"], pdf["content"]):
                     text = decompress(bytes(content), codec).decode("utf-8")
-                    p = remod.sub("^file:/+", "/", str(path))
                     if fmt == "json":
                         for line in text.splitlines():
                             if line:
@@ -232,7 +252,8 @@ class SourceDataCleaner:
                             )
                 yield pd.DataFrame({"target_path": paths, "payload": vals})
 
-        rows = bin_df.select("path", "content").mapInPandas(
+        path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
+        rows = bin_df.select(path.alias("path"), "content").mapInPandas(
             decode_rows, "target_path string, payload string"
         )
         if fmt == "json":
@@ -261,9 +282,7 @@ class SourceDataCleaner:
         if cfg.output_format == "json":
             df = self.spark.read.text(existing)
             time_str = F.get_json_object(F.col("value"), "$.value.time")
-            path = F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            )
+            path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
             return df.select("*", "_metadata").select(
                 path.alias("target_path"),
                 time_str.cast("string").alias("time_str"),
@@ -287,9 +306,7 @@ class SourceDataCleaner:
                 if "value.time" in df.columns
                 else F.lit(None)
             )
-            path = F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            )
+            path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
             parts.append(
                 df.select("*", "_metadata").select(
                     path.alias("target_path"),
@@ -322,8 +339,14 @@ class SourceDataCleaner:
             ]
             tgt = self._target_rows(targets)
             missing = (
-                src.withColumn(
-                    "time_str", F.coalesce(F.col("time_str"), F.lit("\x00missing"))
+                src.select(
+                    "source_file",
+                    _path_key(F.col("target_path"), url_encoded=False).alias(
+                        "target_path"
+                    ),
+                    F.coalesce(F.col("time_str"), F.lit("\x00missing")).alias(
+                        "time_str"
+                    ),
                 )
                 .join(tgt, ["target_path", "time_str"], "left_anti")
                 .groupBy("source_file")

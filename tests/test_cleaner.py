@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from radar_output_restructure_spark.plans.cleaner import CleanerConfig, SourceDataCleaner
@@ -13,6 +14,7 @@ from radar_output_restructure_spark.plans.restructure import (
     RestructureConfig,
     RestructurePlan,
 )
+from radar_output_restructure_spark.sinks.writers import output_extension
 from tests.test_restructure_e2e import SERVER_STATUS_SCHEMA, _write_fixture
 
 
@@ -86,25 +88,6 @@ def test_cleaner_age_gate(spark, tmp_path):
     # default 7-day age: nothing qualifies
     cleaner = SourceDataCleaner(spark, cfg)
     assert cleaner.candidate_files("t") == []
-
-
-def test_cleaner_json_target_verification(spark, tmp_path):
-    """C2 over JSON-lines targets: time extracted via get_json_object on
-    both sides (source line rendering vs target file rows)."""
-    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
-    cfg = RestructureConfig(
-        input_dir=input_dir, output_dir=output_dir, output_format="json"
-    )
-    RestructurePlan(spark, cfg).run()
-    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
-    result = cleaner.run_topic("t")
-    assert result["deleted"] == [f0] and result["revoked"] == []
 
 
 def test_cleaner_gzip_json_target_verification(spark, tmp_path):
@@ -189,27 +172,42 @@ def test_cleaner_zip_json_revokes_on_missing_target(spark, tmp_path):
     assert os.path.exists(f0)
 
 
-def test_cleaner_parquet_target_verification(spark, tmp_path):
-    """Parquet targets verify through a typed parquet re-read: the
-    double->string cast of value.time matches the expectations side, so
-    fully-extracted sources delete; a sabotaged target revokes."""
-    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+@pytest.mark.parametrize(
+    "fmt,compression",
+    [("csv", None), ("csv", "gzip"), ("json", None), ("json", "gzip"),
+     ("parquet", None)],
+    ids=["csv", "csv-gzip", "json", "json-gzip", "parquet"],
+)
+@pytest.mark.parametrize("root", ["path", "file-uri", "odd-name"])
+def test_cleaner_deletes_extracted_for_every_target_form(
+    spark, tmp_path, root, fmt, compression
+):
+    """Both sides of the anti-join render a target path the same way,
+    whatever the output dir looks like: a `file://` URI, or a name with a
+    space, `%` and `+`, which `_metadata.file_path` percent-encodes and a
+    binaryFile `path` does not. A mismatch revokes every extracted source,
+    and each revoke re-extracts it on the next run. Parquet targets verify
+    through a typed re-read whose double -> string cast matches the
+    expectations side."""
+    input_dir = str(tmp_path / "in")
+    out = str(tmp_path / ("out a%b+c" if root == "odd-name" else "out"))
+    output_dir = "file://" + out if root == "file-uri" else out
     f0 = _write_fixture(
         spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
     )
-    f1 = _write_fixture(
+    _write_fixture(
         spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
     )
-    del f1
     cfg = RestructureConfig(
-        input_dir=input_dir, output_dir=output_dir, output_format="parquet"
+        input_dir=input_dir, output_dir=output_dir,
+        output_format=fmt, compression=compression,
     )
     finals = RestructurePlan(spark, cfg).run()["t"]
-    assert all(f.endswith(".parquet") for f in finals)
+    ext = output_extension(fmt, compression)
+    assert finals and all(f.endswith(ext) for f in finals)
 
     cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
-    result = cleaner.run_topic("t")
-    assert result["deleted"] == [f0] and result["revoked"] == []
+    assert cleaner.run_topic("t") == {"deleted": [f0], "revoked": []}
     assert not os.path.exists(f0)
 
 
