@@ -2,40 +2,53 @@
 (SURVEY §2.9 C1-C3, reference cleaner/SourceDataCleaner.kt:48-131,
 TimestampExtractionCheck.kt:23-106).
 
-Reference semantics, re-expressed as one Spark job per topic:
+Reference semantics, re-expressed as one grouped Spark pass per topic:
 
 * C1 candidate filter (driver-side, cheap): file age > `age_days` AND the
   file is committed in the manifest (seen & unmodified) AND a later offset
   exists for its Kafka partition — the max-offset file is never removed
   (SourceDataCleaner.kt:99-113 `incrementTo` containment).
 * C2 extraction check (distributed): recompute each source record's target
-  file path and event time with the SAME plan the writer used, then
-  LEFT ANTI join against the target files' (path, time) pairs. A source
-  file is extracted iff it has zero unmatched records. Records with no
-  event time are conservatively unmatched (the reference's extraction check
-  also fails them: TimestampExtractionCheck errors => not extracted).
+  file path and event time with the SAME plan the writer used, shuffle the
+  records by target path, and run one partition loop over them. For each
+  target file it asks the storage once whether the file exists, reads it
+  once, builds the file's set of event times (the reference's
+  TimestampFileCache) and emits every source file with a record whose time
+  is not in that set. A missing target fails every source in its group;
+  records with no event time are conservatively unmatched (the reference's
+  extraction check also fails them: TimestampExtractionCheck errors => not
+  extracted). A source file is extracted iff it emitted nothing. The loop
+  runs where the writer's would (`sinks.writers.run_partition_loop`): on the
+  executors for executor-safe storage, on the driver otherwise. Each target
+  path is read exactly as the expectation rendered it, so no listing job
+  and no path normalisation sit between the two sides.
 * C3: extracted -> delete source; not extracted -> revoke its manifest
   entry so the next restructure run re-extracts it
   (AccountantImpl.kt:55-59 offset revocation).
 
-Target files are read back per format: CSV and zip targets are parsed
-whole-file, each against its own header, through the writer's codec
-(`_whole_file_target_rows`); JSON-lines as text (gzip decodes natively);
-parquet typed, one scan per attempt. Both sides of the anti-join render a
-target path through one rule (`_path_key`).
+Event times compare per format: CSV and zip targets are parsed whole-file
+through the writer's codec, each against its own header, and the
+`value.time` token is compared with the expectation's Spark string cast;
+JSON lines compare the `value.time` that one Python extraction (`_json_time`)
+finds in the target line and in the expectation's rendered line; parquet
+compares typed values, NaN matching NaN.
 """
 
 from __future__ import annotations
 
+import csv
+import io
+import json
 import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
-from radar_output_restructure_spark.sinks.writers import decompress
+from radar_output_restructure_spark.sinks.storage import TargetStorage
+from radar_output_restructure_spark.sinks.writers import decompress, run_partition_loop
 from radar_output_restructure_spark.sources.kafka_tree import (
     parse_offset_filename,
 )
@@ -43,25 +56,55 @@ from radar_output_restructure_spark.sources.manifest import FileEntry
 from radar_output_restructure_spark.timer import Timer
 
 
-def _path_key(path: Column, url_encoded: bool) -> Column:
-    """A target path as the extraction check compares it: a local file as
-    its absolute path without the `file:` scheme, any other URI as is.
-    `url_encoded` paths (Spark's `_metadata.file_path`: a space or `%` in a
-    name is `%20` / `%25`) have their percent escapes decoded first; not
-    with `url_decode`, which also turns `+` into a space."""
-    if url_encoded:
-        parts = F.split(path, "%")
-        path = F.aggregate(
-            F.slice(parts, 2, F.size(parts)),
-            F.encode(parts[0], "UTF-8"),
-            lambda acc, s: F.concat(
-                acc,
-                F.unhex(F.substr(s, F.lit(1), F.lit(2))),
-                F.encode(F.substr(s, F.lit(3)), "UTF-8"),
-            ),
-            lambda acc: F.decode(acc, "UTF-8"),
-        )
-    return F.regexp_replace(path, "^file:/+", "/")
+def _time_key(value):
+    """An event time as the check compares it: NaN as one token (NaN never
+    equals itself), anything else as it is."""
+    return "NaN" if value != value else value
+
+
+def _json_time(line: str):
+    """The `value.time` key of one JSON line, or None."""
+    try:
+        value = json.loads(line).get("value")
+    except (ValueError, AttributeError):
+        return None
+    return _time_key(value.get("time")) if isinstance(value, dict) else None
+
+
+def _unmatched_loop(storage: TargetStorage, fmt: str, codec: str | None):
+    """The extraction check's partition loop: over (source_file,
+    target_path, time) rows sorted by target path, yield each source file
+    that has a record whose time is not in its target file's time set. A
+    NULL target path is a record with no event time: always unmatched.
+    Each target file is read once; a group that spans two batches reuses
+    the set read for the first."""
+    key = _json_time if fmt == "json" else _time_key
+
+    def loop(batches):
+        import pandas as pd
+
+        bad: set[str] = set()
+        last, last_times = None, None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            paths = [
+                p for p in pdf["target_path"].unique()
+                if p is not None and p != last
+            ]
+            times = SourceDataCleaner._target_rows(storage, paths, fmt, codec)
+            times[last] = last_times
+            for source, path, t in zip(
+                pdf["source_file"], pdf["target_path"], pdf["time"]
+            ):
+                found = times.get(path)
+                if found is None or key(t) not in found:
+                    bad.add(source)
+            last = pdf["target_path"].iloc[-1]
+            last_times = times.get(last)
+        yield pd.DataFrame({"source_file": pd.Series(sorted(bad), dtype=object)})
+
+    return loop
 
 
 @dataclass
@@ -132,9 +175,10 @@ class SourceDataCleaner:
     def _output_root(self) -> str:
         """The output root of the expectation paths: URIs (file://, s3a://,
         abfs://, hdfs://) pass through; local paths are made ABSOLUTE,
-        because the target read-back reports absolute paths and a relative
-        `output_dir` would make every expectation path unmatched -> every
-        file revoked -> unbounded duplicate re-extraction."""
+        because the check reads each target path in a Python worker whose
+        working directory is not the driver's: a relative `output_dir`
+        would find no target -> every file revoked -> unbounded duplicate
+        re-extraction."""
         root = self.config.output_dir.rstrip(os.sep)
         if "://" in root or root.startswith("file:"):
             return root
@@ -143,8 +187,10 @@ class SourceDataCleaner:
     def _source_expectations(
         self, topic: str, files: list[FileEntry]
     ) -> tuple[DataFrame, set[str]]:
-        """((source_file, target_path, time_str) per source record, covered
+        """((source_file, target_path, time) per source record, covered
         source paths) — the same routing + rendering plan the writer ran.
+        `time` is the CSV cell string, the JSON line, or the typed parquet
+        value; `target_path` is NULL for a record with no event time.
 
         Shares `plan.attempt_frames` with `run_topic` — ONE definition of
         the per-attempt read+conform+union step, so dedup survivors in
@@ -172,23 +218,29 @@ class SourceDataCleaner:
             )
             target = F.concat(target, F.lit(ext))
             if cfg.output_format == "json":
-                time_str = F.get_json_object(F.col("line"), "$.value.time")
+                # the rendered line: the check extracts its time in Python,
+                # as it does from the target's lines
+                event_time = F.col("line")
             else:
-                time_str = (
+                event_time = (
                     F.col("`value.time`")
                     if "value.time" in flat.columns
-                    else F.lit(None)
+                    else F.lit(None).cast("string")
                 )
+                if cfg.output_format == "csv":
+                    event_time = event_time.cast("string")
+                # no event time: no target file can hold the record
+                target = F.when(event_time.isNotNull(), target)
             parts.append(
                 flat.select(
                     "source_file",
                     target.alias("target_path"),
-                    time_str.cast("string").alias("time_str"),
+                    event_time.alias("time"),
                 )
             )
         if not parts:
             empty = self.spark.createDataFrame(
-                [], "source_file string, target_path string, time_str string"
+                [], "source_file string, target_path string, time string"
             )
             return empty, covered
         out = parts[0]
@@ -196,131 +248,53 @@ class SourceDataCleaner:
             out = out.unionByName(p)
         return out, covered
 
-    def _whole_file_target_rows(
-        self, existing: list[str], codec: str | None
-    ) -> DataFrame:
-        """(target_path, time_str) by parsing each target file WHOLE.
+    @staticmethod
+    def _target_rows(
+        storage: TargetStorage, paths: list[str], fmt: str, codec: str | None
+    ) -> dict[str, set | None]:
+        """Each target file's set of event-time keys; None for a file that
+        does not exist. One `exists` and one `read` per file, decoded
+        through the writer's codec (reference cleaner/TimestampFileCache.kt:
+        39-51, compression/ZipCompression.kt:10-26). A CSV file is parsed
+        whole against its OWN header (schema-evolution attempts write
+        different headers; RFC4180 quoted newlines stay inside their
+        record). The partition loop calls it through the class, on an
+        executor or on the driver, so a profiler can wrap it there
+        (perfbench/trace.py does)."""
+        out: dict[str, set | None] = {}
+        for path in paths:
+            if not storage.exists(path):
+                out[path] = None
+                continue
+            data = storage.read(path)
+            if fmt == "parquet":
+                import pyarrow.parquet as pq
 
-        Targets load as binary files (they are group-bounded — one
-        user-hour of rows) and an Arrow-batched mapInPandas decodes the
-        codec (zip single entry / gzip / none) and parses rows PER FILE,
-        mirroring the writer's codec (sinks/writers.py ZIP_LEVEL) and the
-        reference's read-back-through-the-compression-factory verification
-        (cleaner/TimestampFileCache.kt:39-51, compression/ZipCompression.kt:
-        10-26). This is the only correct CSV read-back: a single
-        spark.read.csv over many files binds every file to the FIRST
-        file's header positionally (wrong column under schema-evolution
-        attempts) and splits RFC4180-quoted embedded newlines into garbage
-        rows without multiLine. Python csv parses each file against its
-        OWN header (the `value.time` index per file) and handles quoted
-        newlines natively. JSON rows come back as raw lines so the SAME
-        get_json_object expression as the line-reader path extracts the
-        time token — json round-trips through a float would re-render it.
-        """
-        import pandas as pd
-
-        fmt = self.config.output_format
-        bin_df = self.spark.read.format("binaryFile").load(existing)
-
-        def decode_rows(batches):
-            import csv as csvmod
-            import io as iomod
-
-            for pdf in batches:
-                paths: list[str] = []
-                vals: list[str | None] = []
-                for p, content in zip(pdf["path"], pdf["content"]):
-                    text = decompress(bytes(content), codec).decode("utf-8")
-                    if fmt == "json":
-                        for line in text.splitlines():
-                            if line:
-                                paths.append(p)
-                                vals.append(line)
-                    else:
-                        rows = list(csvmod.reader(iomod.StringIO(text)))
-                        if not rows:
-                            continue
-                        header, body = rows[0], rows[1:]
-                        try:
-                            ti = header.index("value.time")
-                        except ValueError:
-                            ti = -1
-                        for row in body:
-                            paths.append(p)
-                            vals.append(
-                                row[ti] if 0 <= ti < len(row) else None
-                            )
-                yield pd.DataFrame({"target_path": paths, "payload": vals})
-
-        path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
-        rows = bin_df.select(path.alias("path"), "content").mapInPandas(
-            decode_rows, "target_path string, payload string"
-        )
-        if fmt == "json":
-            time_str = F.get_json_object(F.col("payload"), "$.value.time")
-        else:
-            time_str = F.col("payload")
-        return rows.select(
-            "target_path", time_str.cast("string").alias("time_str")
-        )
-
-    def _target_rows(self, target_paths: list[str]) -> DataFrame:
-        """(target_path, time_str) for every row of the touched target files."""
-        cfg = self.config
-        tgt = self.plan.target_storage
-        existing = [p for p in target_paths if tgt.exists(p)]
-        if not existing:
-            return self.spark.createDataFrame(
-                [], "target_path string, time_str string"
-            )
-        if cfg.output_format == "csv" or cfg.compression == "zip":
-            # whole-file parse: per-file headers + RFC4180 quoted newlines
-            # (see _whole_file_target_rows) — one spark.read.csv over mixed
-            # -attempt files would bind columns positionally to the first
-            # file's header
-            return self._whole_file_target_rows(existing, cfg.compression)
-        if cfg.output_format == "json":
-            df = self.spark.read.text(existing)
-            time_str = F.get_json_object(F.col("value"), "$.value.time")
-            path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
-            return df.select("*", "_metadata").select(
-                path.alias("target_path"),
-                time_str.cast("string").alias("time_str"),
-            )
-        # parquet: typed target. Attempts exist BECAUSE schemas differ (a
-        # value.time TYPE change would make one scan over both attempts'
-        # files throw or null-fill), so read each attempt group separately
-        # and union the projected strings; the double -> string cast is the
-        # same Java rendering the expectations side applies.
-        import re as _re
-
-        by_attempt: dict[str, list[str]] = {}
-        for p in existing:
-            m = _re.search(r"_(\d+)\.parquet$", p)
-            by_attempt.setdefault(m.group(1) if m else "0", []).append(p)
-        parts: list[DataFrame] = []
-        for group in by_attempt.values():
-            df = self.spark.read.parquet(*group)
-            time_str = (
-                F.col("`value.time`")
-                if "value.time" in df.columns
-                else F.lit(None)
-            )
-            path = _path_key(F.col("_metadata.file_path"), url_encoded=True)
-            parts.append(
-                df.select("*", "_metadata").select(
-                    path.alias("target_path"),
-                    time_str.cast("string").alias("time_str"),
+                table = pq.read_table(io.BytesIO(data))
+                values = (
+                    table.column("value.time").to_pylist()
+                    if "value.time" in table.column_names
+                    else []
                 )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+                keys = map(_time_key, values)
+            else:
+                text = decompress(data, codec).decode("utf-8")
+                if fmt == "json":
+                    keys = map(_json_time, text.splitlines())
+                else:
+                    rows = csv.reader(io.StringIO(text))
+                    header = next(rows, [])
+                    ti = header.index("value.time") if "value.time" in header else -1
+                    keys = (row[ti] for row in rows if 0 <= ti < len(row))
+            out[path] = set(keys) - {None}
         return out
 
     @Timer.time("cleaner.verify")
     def verify_topic(self, topic: str, files: list[FileEntry]) -> dict[str, bool]:
-        """source_file -> fully extracted? One anti-join for the whole topic.
+        """source_file -> fully extracted? One grouped pass for the whole
+        topic: the expectations shuffle by target path and one partition
+        loop checks each target file against its own records; the driver
+        collects only the unmatched source files.
 
         A file the expectation scan could NOT cover (its schema read failed
         right now — transient storage error or post-commit corruption) is
@@ -331,30 +305,20 @@ class SourceDataCleaner:
         TimestampExtractionCheck.kt errors => failed)."""
         if not files:
             return {}
+        cfg = self.config
+        storage = self.plan.target_storage
         src, covered = self._source_expectations(topic, files)
-        src = src.cache()
-        try:
-            targets = [
-                r.target_path for r in src.select("target_path").distinct().collect()
-            ]
-            tgt = self._target_rows(targets)
-            missing = (
-                src.select(
-                    "source_file",
-                    _path_key(F.col("target_path"), url_encoded=False).alias(
-                        "target_path"
-                    ),
-                    F.coalesce(F.col("time_str"), F.lit("\x00missing")).alias(
-                        "time_str"
-                    ),
-                )
-                .join(tgt, ["target_path", "time_str"], "left_anti")
-                .groupBy("source_file")
-                .count()
+        grouped = src.repartition("target_path").sortWithinPartitions("target_path")
+        # AQE may coalesce the partitions by byte size: a target costs one
+        # read, small next to a Python task's fixed cost
+        bad = set(
+            run_partition_loop(
+                grouped,
+                _unmatched_loop(storage, cfg.output_format, cfg.compression),
+                "source_file",
+                storage,
             )
-            bad = {r.source_file for r in missing.collect()}
-        finally:
-            src.unpersist()
+        )
         return {
             f.path: f.path in covered and f.path not in bad for f in files
         }

@@ -113,8 +113,9 @@ def storage_for(path: str, spark=None) -> "TargetStorage":
 class TargetStorage:
     """Storage surface the engine (writers, listings, ledgers) is built on."""
 
-    #: safe to pickle into executor tasks; the writer's partition loop
-    #: runs on the executors when True and on the driver when False
+    #: safe to pickle into executor tasks; the writer's and the cleaner's
+    #: partition loops run on the executors when True and on the driver
+    #: when False (`sinks.writers.run_partition_loop`)
     executor_safe = False
 
     def exists(self, path: str) -> bool:

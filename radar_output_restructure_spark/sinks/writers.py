@@ -9,7 +9,8 @@ not file names, so `write_output_tree_direct` is the one writer: one shuffle
 by the path segments, a sort within partitions by (path, arrival order),
 then one partition loop that writes every file of its partition in place
 through the storage backend's atomic store. The loop runs in one of two
-places, chosen by `storage.executor_safe`:
+places, chosen by `storage.executor_safe` in `run_partition_loop` (the
+cleaner's extraction check runs its per-target loop there too):
 
 * executor-safe storage (local, `s3://`, `azure://`): `mapInPandas` on the
   executors, one Arrow round-trip per task, not per file;
@@ -587,21 +588,45 @@ def write_output_tree_direct(
         flush()
         yield pd.DataFrame({"path": pd.Series(paths, dtype=object)})
 
-    if not storage.executor_safe:
-        # driver-only storage: the same loop on the driver, fed one shuffle
-        # partition at a time, so driver memory holds one partition's rows
-        # plus one chunk, never the whole frame
-        return sorted(next(write_partition(_local_chunks(shuffled)))["path"])
-    result = shuffled.mapInPandas(write_partition, "path string")
     # AQE coalesces shuffle partitions by BYTE size, but this stage's cost is
     # per-output-FILE (open/rename/sidecar), not per byte — a few MB of
     # rendered rows can fan out to thousands of files, and coalescing to one
-    # partition serializes them (measured 3x slower at 7200 files). Scope-
-    # disable coalescing for just this action, reference-counted so
-    # topic-parallel threads (plans/restructure.py run()) can't interleave
-    # set/restore and leak the session conf.
+    # partition serializes them (measured 3x slower at 7200 files).
+    return sorted(
+        run_partition_loop(
+            shuffled, write_partition, "path", storage, coalesce=False
+        )
+    )
+
+
+def run_partition_loop(
+    df: DataFrame,
+    loop,
+    column: str,
+    storage: TargetStorage,
+    coalesce: bool = True,
+) -> list[str]:
+    """Run a partition loop over `df` where `storage` can be reached;
+    returns the values of the one string `column` it yields.
+
+    `loop` takes an iterator of pandas frames (a partition's rows in order)
+    and yields pandas frames. On executor-safe storage it runs as
+    `mapInPandas` on the executors. On driver-only storage (py4j handles)
+    the same loop runs on the driver, fed one partition at a time through
+    `toLocalIterator`, so driver memory holds one partition's rows plus one
+    chunk, never the whole frame. The writer and the cleaner's extraction
+    check both call this: `storage.executor_safe` is read here only.
+
+    `coalesce=False` keeps AQE from coalescing the shuffle partitions on
+    the executors, for a loop whose cost is per FILE it writes, not per byte
+    (see `write_output_tree_direct`)."""
+    if not storage.executor_safe:
+        return [v for pdf in loop(_local_chunks(df)) for v in pdf[column]]
+    result = df.mapInPandas(loop, f"{column} string")
+    if coalesce:
+        return [r[0] for r in result.collect()]
     with _aqe_coalesce_disabled(df.sparkSession):
-        return sorted(r.path for r in result.collect())
+        return [r[0] for r in result.collect()]
 
 
 def _local_chunks(df: DataFrame, rows: int = 10_000):

@@ -18,6 +18,11 @@ and prints, per operation, the CPU seconds (user + system) of:
 * the Python workers (the JVM's child processes, the daemon and the
   workers it forked and reaped).
 
+It also prints the Spark jobs each operation launched and the tasks they
+ran (each stage once, skipped stages none), from
+`SparkContext.statusTracker()`, so a change in job count shows without a
+traced run.
+
 A per-task fixed cost shows as Python-worker seconds that do not move with
 the records decoded; a job launch shows as JVM scheduler and py4j seconds.
 Seconds are raw CPU seconds on the host the script runs on, not scaled to
@@ -109,6 +114,25 @@ def descendants_cpu(root: int) -> float:
     return ticks / TICK
 
 
+def spark_jobs(sc) -> set[int]:
+    """Ids of the jobs Spark has run outside any job group (every job of
+    the workload, whichever Python thread launched it)."""
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def spark_counts(sc, jobs: set[int]) -> tuple[int, int]:
+    """(jobs, tasks) for the job ids `jobs`: completed tasks of every stage
+    the jobs touched, counting a stage shared by two jobs once."""
+    tracker = sc.statusTracker()
+    stages = {
+        s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds
+    }
+    tasks = sum(
+        st.numCompletedTasks for s in stages if (st := tracker.getStageInfo(s))
+    )
+    return len(jobs), tasks
+
+
 def snapshot(jvm_pid: int) -> dict[str, float]:
     f = _stat_fields("/proc/self/stat")
     snap = {"driver": (int(f[11]) + int(f[12])) / TICK}
@@ -144,24 +168,31 @@ def main(argv: list[str] | None = None) -> int:
         wl.setup()
         jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
         print(f"poll_append seed {args.seed}, local[{ncpu}], CPU seconds per operation")
-        print(f"{'op':>3} {'wall':>6} " + " ".join(f"{c:>12}" for c in COLUMNS) + f" {'total':>7}")
-        rows = []
+        print(
+            f"{'op':>3} {'wall':>6} " + " ".join(f"{c:>12}" for c in COLUMNS)
+            + f" {'total':>7} {'jobs':>5} {'tasks':>6}"
+        )
+        sc = spark.sparkContext
+        rows, counts = [], []
         for i in range(args.ops):
+            jobs_before = spark_jobs(sc)
             before = snapshot(jvm_pid)
             t0 = time.perf_counter()
             wl.op()
             wall = time.perf_counter() - t0
             after = snapshot(jvm_pid)
+            jobs, tasks = spark_counts(sc, spark_jobs(sc) - jobs_before)
             row = {c: after.get(c, 0.0) - before.get(c, 0.0) for c in COLUMNS}
             # the rest of the JVM: unnamed groups and threads that exited
             row["jvm.other"] = (after["jvm"] - before["jvm"]) - sum(
                 row[c] for c in COLUMNS if c.startswith("jvm.") and c != "jvm.other"
             )
             rows.append((wall, row))
+            counts.append((jobs, tasks))
             print(
                 f"{i:>3} {wall:6.2f} "
                 + " ".join(f"{row[c]:12.2f}" for c in COLUMNS)
-                + f" {sum(row.values()):7.2f}"
+                + f" {sum(row.values()):7.2f} {jobs:5d} {tasks:6d}"
             )
         n = len(rows)
         mean = {c: sum(r[c] for _w, r in rows) / n for c in COLUMNS}
@@ -169,6 +200,8 @@ def main(argv: list[str] | None = None) -> int:
             f"{'avg':>3} {sum(w for w, _r in rows) / n:6.2f} "
             + " ".join(f"{mean[c]:12.2f}" for c in COLUMNS)
             + f" {sum(mean.values()):7.2f}"
+            + f" {sum(j for j, _t in counts) / n:5.1f}"
+            + f" {sum(t for _j, t in counts) / n:6.1f}"
         )
     finally:
         bench.stop(spark)

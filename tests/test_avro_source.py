@@ -316,7 +316,9 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
     expectations read the stored rows: each pass decodes the Avro files
     once. Before, a separate shape aggregate (two jobs under AQE) decoded
     them too: 5 jobs per restructure run and 8 per verify_topic on this
-    fixture."""
+    fixture. verify_topic checks each target file inside the grouped pass
+    over its expectations (no target-path collect, listing job or
+    anti-join): 4 jobs."""
     from radar_output_restructure_spark.plans.cleaner import (
         CleanerConfig,
         SourceDataCleaner,
@@ -357,4 +359,4 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
         spark, "verify-pass", lambda: cleaner.verify_topic("t", files)
     )
     assert verdict == {old: True}
-    assert n_verify == 7
+    assert n_verify == 4

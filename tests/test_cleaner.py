@@ -1,5 +1,6 @@
 """Cleaner lifecycle test (SURVEY §2.9 / §3.2): age+offset candidate filter,
-extraction verification via anti-join, delete-or-revoke. Models
+extraction verification (one time-set check per target file),
+delete-or-revoke. Models
 cleaner/SourceDataCleanerTest behavior + TimestampExtractionCheck.kt:23-106."""
 
 from __future__ import annotations
@@ -28,14 +29,25 @@ def _rows(t0: float, n: int, status: str = "CONNECTED"):
     ]
 
 
+def _hour_files(
+    spark, input_dir: str, counts=(3, 2), status: str = "CONNECTED"
+) -> list[str]:
+    """Source files of topic `t`, the i-th holding `counts[i]` records in
+    the (i+1):00 bin, with increasing offsets: the last holds the newest
+    offset of its partition and is never a cleaner candidate."""
+    paths, offset = [], 0
+    for hour, n in enumerate(counts, start=1):
+        paths.append(_write_fixture(
+            spark, input_dir, "t", _rows(3600.0 * hour, n, status),
+            0, offset, offset + n - 1, SERVER_STATUS_SCHEMA,
+        ))
+        offset += n
+    return paths
+
+
 def test_cleaner_deletes_extracted_keeps_max_offset(spark, tmp_path):
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    f1 = _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0, f1 = _hour_files(spark, input_dir)
     cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
     RestructurePlan(spark, cfg).run()
 
@@ -50,12 +62,7 @@ def test_cleaner_deletes_extracted_keeps_max_offset(spark, tmp_path):
 
 def test_cleaner_revokes_unextracted(spark, tmp_path):
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
     plan = RestructurePlan(spark, cfg)
     finals = plan.run()["t"]
@@ -77,12 +84,7 @@ def test_cleaner_revokes_unextracted(spark, tmp_path):
 
 def test_cleaner_age_gate(spark, tmp_path):
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    _hour_files(spark, input_dir)
     cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
     RestructurePlan(spark, cfg).run()
     # default 7-day age: nothing qualifies
@@ -91,15 +93,10 @@ def test_cleaner_age_gate(spark, tmp_path):
 
 
 def test_cleaner_gzip_json_target_verification(spark, tmp_path):
-    """gzip-compressed JSON-lines targets verify through spark.read.text's
-    native gzip decode; extracted sources delete, compression intact."""
+    """gzip-compressed JSON-lines targets verify through the writer's
+    codec; extracted sources delete, compression intact."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(
         input_dir=input_dir, output_dir=output_dir,
         output_format="json", compression="gzip",
@@ -130,12 +127,7 @@ def test_cleaner_zip_csv_target_verification(spark, tmp_path):
     compression/ZipCompression.kt:10-26): extracted sources delete instead
     of the old conservative no-op."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(
         input_dir=input_dir, output_dir=output_dir, compression="zip"
     )
@@ -152,12 +144,7 @@ def test_cleaner_zip_json_revokes_on_missing_target(spark, tmp_path):
     """zip verification is a real check, not a rubber stamp: a sabotaged
     (deleted) zip target revokes the source file instead of deleting it."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(
         input_dir=input_dir, output_dir=output_dir,
         output_format="json", compression="zip",
@@ -182,45 +169,41 @@ def test_cleaner_zip_json_revokes_on_missing_target(spark, tmp_path):
 def test_cleaner_deletes_extracted_for_every_target_form(
     spark, tmp_path, root, fmt, compression
 ):
-    """Both sides of the anti-join render a target path the same way,
-    whatever the output dir looks like: a `file://` URI, or a name with a
-    space, `%` and `+`, which `_metadata.file_path` percent-encodes and a
-    binaryFile `path` does not. A mismatch revokes every extracted source,
-    and each revoke re-extracts it on the next run. Parquet targets verify
-    through a typed re-read whose double -> string cast matches the
-    expectations side."""
+    """The check reads each target path exactly as the expectation renders
+    it, whatever the output dir looks like: a `file://` URI (the driver
+    loop over Hadoop storage), or a name with a space, `%` and `+`. A path
+    mismatch would revoke every extracted source, and each revoke
+    re-extracts it on the next run. Parquet targets compare typed values.
+    Then one target file goes missing: exactly its sources are revoked and
+    the other candidate is still deleted."""
     input_dir = str(tmp_path / "in")
     out = str(tmp_path / ("out a%b+c" if root == "odd-name" else "out"))
     output_dir = "file://" + out if root == "file-uri" else out
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0, f1 = _hour_files(spark, input_dir, (3, 2, 1))[:2]
     cfg = RestructureConfig(
         input_dir=input_dir, output_dir=output_dir,
         output_format=fmt, compression=compression,
     )
     finals = RestructurePlan(spark, cfg).run()["t"]
     ext = output_extension(fmt, compression)
-    assert finals and all(f.endswith(ext) for f in finals)
+    assert len(finals) == 3 and all(f.endswith(ext) for f in finals)
 
     cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
-    assert cleaner.run_topic("t") == {"deleted": [f0], "revoked": []}
-    assert not os.path.exists(f0)
+    files = cleaner.candidate_files("t")
+    assert cleaner.verify_topic("t", files) == {f0: True, f1: True}
+
+    # f0's records all sit in the 01:00 file, f1's in the 02:00 file
+    (hour_01,) = [f for f in finals if "19700101_0100" in f]
+    os.remove(hour_01.removeprefix("file://"))
+    assert cleaner.run_topic("t") == {"deleted": [f1], "revoked": [f0]}
+    assert os.path.exists(f0) and not os.path.exists(f1)
 
 
 def test_cleaner_parquet_revokes_on_missing_target(spark, tmp_path):
     """Parquet verification is a real check: a sabotaged (deleted) parquet
     target revokes the source file instead of deleting it."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(
         input_dir=input_dir, output_dir=output_dir, output_format="parquet"
     )
@@ -241,13 +224,7 @@ def test_cleaner_csv_embedded_newline_roundtrip(spark, tmp_path):
     record into garbage rows, miss the expectation match, and revoke the
     source -> duplicate re-extraction forever."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t",
-        _rows(3600.0, 3, status="CONN\nECTED"), 0, 0, 2, SERVER_STATUS_SCHEMA,
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir, status="CONN\nECTED")[0]
     cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
     RestructurePlan(spark, cfg).run()
     cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
@@ -262,12 +239,7 @@ def test_cleaner_never_deletes_schema_unreadable_file(spark, tmp_path):
     'extracted with nothing unmatched' (reference: extraction-check errors
     mean NOT extracted, TimestampExtractionCheck.kt)."""
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
     RestructurePlan(spark, cfg).run()
 
@@ -281,17 +253,13 @@ def test_cleaner_never_deletes_schema_unreadable_file(spark, tmp_path):
 
 
 def test_cleaner_relative_output_dir(spark, tmp_path, monkeypatch):
-    """Expectation paths must match the ABSOLUTE URIs _metadata.file_path
-    reports even when output_dir is relative; a verbatim relative root
-    would leave every record unmatched -> revoke -> duplicate re-append."""
+    """Expectation paths are ABSOLUTE even when output_dir is relative: the
+    check reads them in Python workers whose working directory is not the
+    driver's, so a verbatim relative root would find no target -> revoke
+    -> duplicate re-append."""
     monkeypatch.chdir(tmp_path)
     input_dir = str(tmp_path / "in")
-    f0 = _write_fixture(
-        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
-    )
-    _write_fixture(
-        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
-    )
+    f0 = _hour_files(spark, input_dir)[0]
     cfg = RestructureConfig(input_dir=input_dir, output_dir="out_rel")
     RestructurePlan(spark, cfg).run()
     cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
@@ -375,3 +343,77 @@ def test_cleaner_candidates_stay_within_their_topic(spark, tmp_path):
     assert result["in"] == {"deleted": [in_old], "revoked": []}
     assert result["a"] == {"deleted": [], "revoked": []}
     assert os.path.exists(in_new) and all(os.path.exists(f) for f in a_files)
+
+
+def _job_descriptions(spark, group: str) -> list[str]:
+    """The description of every Spark job in `group`, from the status
+    store (a listing job sets its own: `Listing leaf files and ...`)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(job_id).description()
+        out.append(desc.get() if desc.isDefined() else "")
+    return out
+
+
+def test_cleaner_checks_each_target_once_without_listing(spark, tmp_path):
+    """With more target files than Spark lists in a job of its own
+    (spark.sql.sources.parallelPartitionDiscovery.threshold, 32), the check
+    still runs no listing job: it asks the storage once per target file
+    whether it exists and reads each at most once."""
+    from radar_output_restructure_spark.sinks.storage import LocalTargetStorage
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    hours = 40
+    f0 = _write_fixture(
+        spark, input_dir, "t",
+        [
+            Row(key=Row(projectId="p", userId="u", sourceId="s"),
+                value=Row(time=3600.0 * h, serverStatus="C", ipAddress=None))
+            for h in range(1, hours + 1)
+        ],
+        0, 0, hours - 1, SERVER_STATUS_SCHEMA,
+    )
+    _write_fixture(
+        spark, input_dir, "t", _rows(3600.0, 1), 0, hours, hours,
+        SERVER_STATUS_SCHEMA,
+    )
+    cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
+    finals = RestructurePlan(spark, cfg).run()["t"]
+    assert len(finals) == hours
+
+    log = str(tmp_path / "storage.log")
+
+    class LoggingStorage(LocalTargetStorage):
+        def exists(self, path):
+            with open(log, "a") as fh:
+                fh.write(f"exists {path}\n")
+            return super().exists(path)
+
+        def read(self, path):
+            with open(log, "a") as fh:
+                fh.write(f"read {path}\n")
+            return super().read(path)
+
+    plan = RestructurePlan(spark, cfg, target_storage=LoggingStorage())
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0), plan=plan)
+    files = cleaner.candidate_files("t")
+    if os.path.exists(log):
+        os.remove(log)
+    sc = spark.sparkContext
+    sc.setJobGroup("cleaner-verify", "cleaner-verify")
+    try:
+        verdict = cleaner.verify_topic("t", files)
+    finally:
+        sc.setJobGroup(None, None)
+    assert verdict == {f0: True}
+    assert not [
+        d for d in _job_descriptions(spark, "cleaner-verify")
+        if d.startswith("Listing leaf files")
+    ]
+    calls = [ln.split(" ", 1) for ln in open(log).read().splitlines()]
+    targets = [(op, p) for op, p in calls if p.endswith(".csv")]
+    assert sorted(p for op, p in targets if op == "exists") == sorted(finals)
+    reads = [p for op, p in targets if op == "read"]
+    assert len(reads) == len(set(reads)) and set(reads) <= set(finals)
