@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.similarity import (
     _codebook_affinities,
     _seq_sq_sum,
@@ -111,7 +112,7 @@ def probe_ivf_index(
     needed = sorted({r.cell for r in probe_rows})
 
     idx = spark.read.parquet(path).filter(F.col("cell").isin(needed))
-    qc = spark.createDataFrame(probe_rows, query_cells.schema)
+    qc = driver_gate.local_frame(spark, probe_rows, query_cells.schema)
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )

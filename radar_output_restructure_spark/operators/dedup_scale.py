@@ -684,7 +684,8 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
 
     * pair graph fits the driver (the NORMAL case — near-dup pairs are a
       vanishing fraction of the corpus): collect once, union-find in Python
-      (linear, alpha-inverse), parallelize the labels back. No iterations.
+      (linear, alpha-inverse), the labels return as a local relation
+      (`driver_gate.local_frame`). No iterations.
     * larger: iterative min-label propagation (the Pregel/GraphX pattern on
       plain DataFrames) — per round one join + partial-agg min over the
       symmetrized edges, rounds = component diameter, localCheckpoint per
@@ -721,13 +722,9 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         # preserve the pairs' actual id type (string/int ids must behave
         # the same under the cap as over it, where the distributed path
         # inherits the type naturally)
-        from pyspark.sql import types as T
-
-        id_type = pairs.schema["doc_a"].dataType
-        schema = T.StructType(
-            [T.StructField("doc", id_type), T.StructField("cluster", id_type)]
-        )
-        return spark.createDataFrame(labels, schema)
+        id_type = pairs.schema["doc_a"].dataType.simpleString()
+        schema = f"doc {id_type}, cluster {id_type}"
+        return driver_gate.local_frame(spark, labels, schema)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(

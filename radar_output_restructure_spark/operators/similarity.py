@@ -1133,9 +1133,8 @@ def train_ivf_centroids(
         (cents,) = train_pq_codebooks(df, 1, k, iters, id_col, vec_col, dims)
     except _EmptyTrainingFrame:
         cents = []
-    return df.sparkSession.createDataFrame(
-        list(enumerate(cents)), schema=f"{id_col} int, {vec_col} array<double>"
-    )
+    schema = f"{id_col} int, {vec_col} array<double>"
+    return driver_gate.local_frame(df.sparkSession, list(enumerate(cents)), schema)
 
 
 def pq_subspace_bounds(dims: int, m: int) -> list[tuple[int, int]]:

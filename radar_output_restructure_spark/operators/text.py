@@ -665,18 +665,13 @@ def bpe_learn_merges(
     (__spark_entry__ bpe oracle; prototype-verified identical on both
     engines). Everything stays JVM-side codegen — no UDF in any round.
     """
-    merges, _seg = _bpe_train(df, text_col, n_merges)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("rank", T.IntegerType(), False),
-            T.StructField("lhs", T.StringType(), False),
-            T.StructField("rhs", T.StringType(), False),
-            T.StructField("pair_freq", T.LongType(), False),
-        ]
+    merges, _seg_frame = _bpe_train(df, text_col, n_merges)
+    return driver_gate.local_frame(
+        df.sparkSession,
+        merges,
+        "rank int not null, lhs string not null, rhs string not null,"
+        " pair_freq bigint not null",
     )
-    return df.sparkSession.createDataFrame(merges, schema)
 
 
 #: vocab rows the driver trainer will hold (`driver_gate.collect_if_fits`);
@@ -714,9 +709,11 @@ def _bpe_train_driver(rows, n_merges):
 
 
 def _bpe_train(df, text_col, n_merges):
-    """(merges, final seg frame): the shared trainer. Segmentation frames
-    carry (word, seg, freq) so encoders can join words back to their final
-    symbol decomposition.
+    """(merges, seg_frame): the shared trainer. `seg_frame()` builds the
+    final segmentation frame, (word, seg, freq), that encoders join words
+    back to for their final symbol decomposition. It is built on call, so
+    `bpe_learn_merges`, which needs only the merges, never ships the
+    vocab-sized driver segmentation back into the JVM.
 
     Two physical paths, same result, chosen by the shared
     `driver_gate.collect_if_fits` against `BPE_DRIVER_MAX_VOCAB`:
@@ -755,17 +752,8 @@ def _bpe_train(df, text_col, n_merges):
     rows = driver_gate.collect_if_fits(words, BPE_DRIVER_MAX_VOCAB)
     if rows is not None:
         merges, segs = _bpe_train_driver(rows, n_merges)
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("word", T.StringType(), False),
-                T.StructField("seg", T.StringType(), False),
-                T.StructField("freq", T.LongType(), False),
-            ]
-        )
-        seg_frame = df.sparkSession.createDataFrame(segs, schema)
-        return merges, seg_frame
+        schema = "word string not null, seg string not null, freq bigint not null"
+        return merges, lambda: driver_gate.local_frame(df.sparkSession, segs, schema)
 
     merges: list[tuple[int, str, str, int]] = []
     seg_frame = words
@@ -804,7 +792,7 @@ def _bpe_train(df, text_col, n_merges):
             ).alias("seg"),
             "freq",
         ).localCheckpoint(eager=False)  # flat lineage: k rounds, k frames
-    return merges, seg_frame
+    return merges, lambda: seg_frame
 
 
 def bpe_encode(
@@ -827,7 +815,7 @@ def bpe_encode(
     """
     _merges, seg_frame = _bpe_train(df, text_col, n_merges)
     n_syms = F.size(F.filter(F.split(F.col("seg"), "  "), lambda x: x != ""))
-    word_sizes = seg_frame.select("word", n_syms.alias("n_syms"))
+    word_sizes = seg_frame().select("word", n_syms.alias("n_syms"))
     tokens = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(

@@ -46,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from radar_output_restructure_spark.operators.driver_gate import local_frame
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
 from radar_output_restructure_spark.sinks.storage import TargetStorage
 from radar_output_restructure_spark.sinks.writers import decompress, run_partition_loop
@@ -239,8 +240,8 @@ class SourceDataCleaner:
                 )
             )
         if not parts:
-            empty = self.spark.createDataFrame(
-                [], "source_file string, target_path string, time string"
+            empty = local_frame(
+                self.spark, [], "source_file string, target_path string, time string"
             )
             return empty, covered
         out = parts[0]

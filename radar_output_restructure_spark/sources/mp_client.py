@@ -232,8 +232,10 @@ class MPClient:
         data = [tuple(r.get(c) for c in cols) for r in rows]
         from pyspark.sql.types import StringType, StructField, StructType
 
+        from radar_output_restructure_spark.operators.driver_gate import local_frame
+
         schema = StructType([StructField(c, StringType()) for c in cols])
-        return spark.createDataFrame(data, schema)
+        return local_frame(spark, data, schema)
 
 
 @dataclass

@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -32,17 +34,6 @@ TABLES = (
 )
 
 
-def _nanos_ts_columns(path: str) -> set[str]:
-    import pyarrow as pa
-
-    schema = pq.read_schema(path)
-    out = set()
-    for field in schema:
-        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
-            out.add(field.name)
-    return out
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -56,37 +47,43 @@ def load_table(
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for col in sorted(_nanos_ts_columns(path)):
+    st = os.stat(path)
+    key = (id(spark._jsparkSession), path, st.st_size, st.st_mtime_ns)
+    if key not in _SCHEMAS:
+        nanos = [
+            f.name
+            for f in pq.read_schema(path)
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        ]
+        _SCHEMAS[key] = spark.read.parquet(path).schema, sorted(nanos)
+    schema, nanos = _SCHEMAS[key]
+    df = spark.read.schema(schema).parquet(path)
+    for col in nanos:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000")))
     # Micro-precision parquet timestamps without the UTC-adjusted flag arrive
     # as TIMESTAMP_NTZ; normalize to TimestampType so every consumer sees one
     # timestamp kind regardless of how the generator wrote the column. The
     # session timezone is UTC (session.py), so the cast maps wall-clock values
     # to the same epoch instants DuckDB sees reading the file natively.
-    import pyspark.sql.types as T
-
     for field in df.schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     if spread:
         target = spark.sparkContext.defaultParallelism
-        if _scan_partitions(spark, df, path) < target:
+        if key not in _SCAN_PARTS:
+            _SCAN_PARTS[key] = df.rdd.getNumPartitions()
+        if _SCAN_PARTS[key] < target:
             df = df.repartition(target)
     return df
 
 
-#: (session id, path, mtime_ns) -> scan partition count. getNumPartitions
-#: builds a full RDD conversion plan each call; the count only changes when
-#: the file or the session conf does, so cache it per (session, file).
-_SCAN_PARTS: dict[tuple[int, str, int], int] = {}
-
-
-def _scan_partitions(spark: SparkSession, df: DataFrame, path: str) -> int:
-    key = (id(spark._jsparkSession), path, os.stat(path).st_mtime_ns)
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    return _SCAN_PARTS[key]
+#: (session id, path, size, mtime_ns) -> the file's scan partition count,
+#: and -> its inferred Spark schema with its timestamp[ns] columns.
+#: getNumPartitions builds a full RDD conversion plan each call and reading
+#: without a schema runs one footer-inference job; both only change when
+#: the file or the session does, so they are kept per (session, file).
+_SCAN_PARTS: dict[tuple[int, str, int, int], int] = {}
+_SCHEMAS: dict[tuple[int, str, int, int], tuple[T.StructType, list[str]]] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

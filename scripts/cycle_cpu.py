@@ -1,12 +1,15 @@
 #!/usr/bin/env python3
-"""Where one polling-service cycle spends its CPU.
+"""Where one benchmark operation spends its CPU.
 
-    python3 scripts/cycle_cpu.py [--ops 4] [--seed 1] [--work .work/cycle_cpu]
+    python3 scripts/cycle_cpu.py [--workload poll_append|registry_mix]
+        [--ops 4] [--seed 1] [--work .work/cycle_cpu]
 
-Runs `--ops` operations of the benchmark's `poll_append` workload (one
-restructure service iteration plus one cleaner iteration over landed Avro
-files) through perfbench's own workload class and Spark session settings,
-and prints, per operation, the CPU seconds (user + system) of:
+Runs `--ops` operations of one benchmark workload through perfbench's own
+workload class and Spark session settings: `poll_append` (the default;
+one restructure service iteration plus one cleaner iteration over landed
+Avro files) or `registry_mix` (one pass over the heavy registry queries
+with the `noop` sink). It prints, per operation, the CPU seconds (user +
+system) of:
 
 * the driver Python process;
 * the JVM, split by thread name read from /proc/<pid>/task: JIT compiler
@@ -23,6 +26,10 @@ ran (each stage once, skipped stages none), from
 `SparkContext.statusTracker()`, so a change in job count shows without a
 traced run.
 
+The same split is then printed per span the workload opens (for
+`registry_mix`, each query's plan build and its exec), averaged over the
+operations.
+
 A per-task fixed cost shows as Python-worker seconds that do not move with
 the records decoded; a job launch shows as JVM scheduler and py4j seconds.
 Seconds are raw CPU seconds on the host the script runs on, not scaled to
@@ -33,6 +40,7 @@ changed; the generated inputs are cached under `--work`.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import re
 import shutil
@@ -141,8 +149,49 @@ def snapshot(jvm_pid: int) -> dict[str, float]:
     return snap
 
 
+@contextlib.contextmanager
+def measured(sc, jvm_pid: int, out: list):
+    """Append to `out` the (wall, CPU split, jobs, tasks) of the block."""
+    jobs_before = spark_jobs(sc)
+    before = snapshot(jvm_pid)
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        wall = time.perf_counter() - t0
+        after = snapshot(jvm_pid)
+        jobs, tasks = spark_counts(sc, spark_jobs(sc) - jobs_before)
+        row = {c: after.get(c, 0.0) - before.get(c, 0.0) for c in COLUMNS}
+        # the rest of the JVM: unnamed groups and threads that exited
+        row["jvm.other"] = (after["jvm"] - before["jvm"]) - sum(
+            row[c] for c in COLUMNS if c.startswith("jvm.") and c != "jvm.other"
+        )
+        out.append((wall, row, jobs, tasks))
+
+
+def print_row(label: str, wall: float, row: dict, jobs: float, tasks: float) -> None:
+    print(
+        f"{label:>3} {wall:6.2f} "
+        + " ".join(f"{row[c]:12.2f}" for c in COLUMNS)
+        + f" {sum(row.values()):7.2f} {jobs:5.1f} {tasks:6.1f}"
+    )
+
+
+def mean(rows: list) -> tuple:
+    n = len(rows)
+    return (
+        sum(r[0] for r in rows) / n,
+        {c: sum(r[1][c] for r in rows) / n for c in COLUMNS},
+        sum(r[2] for r in rows) / n,
+        sum(r[3] for r in rows) / n,
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--workload", choices=("poll_append", "registry_mix"), default="poll_append"
+    )
     ap.add_argument("--ops", type=int, default=4)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--work", default=os.path.join(ROOT, ".work", "cycle_cpu"))
@@ -160,49 +209,36 @@ def main(argv: list[str] | None = None) -> int:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
     ncpu = len(os.sched_getaffinity(0))
-    wl = WORKLOADS["poll_append"](None, work, cache, args.seed, False)
+    wl = WORKLOADS[args.workload](None, work, cache, args.seed, False)
     wl.make_inputs()
     spark = bench.session(work, ncpu, None)
     try:
         wl.spark = spark
         wl.setup()
-        jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-        print(f"poll_append seed {args.seed}, local[{ncpu}], CPU seconds per operation")
+        sc = spark.sparkContext
+        jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
+        spans: dict[str, list] = {}
+        # every span the workload opens is measured from here on
+        wl.span = lambda name: measured(sc, jvm_pid, spans.setdefault(name, []))
+        print(
+            f"{args.workload} seed {args.seed}, local[{ncpu}], "
+            "CPU seconds per operation"
+        )
         print(
             f"{'op':>3} {'wall':>6} " + " ".join(f"{c:>12}" for c in COLUMNS)
             + f" {'total':>7} {'jobs':>5} {'tasks':>6}"
         )
-        sc = spark.sparkContext
-        rows, counts = [], []
+        ops: list = []
         for i in range(args.ops):
-            jobs_before = spark_jobs(sc)
-            before = snapshot(jvm_pid)
-            t0 = time.perf_counter()
-            wl.op()
-            wall = time.perf_counter() - t0
-            after = snapshot(jvm_pid)
-            jobs, tasks = spark_counts(sc, spark_jobs(sc) - jobs_before)
-            row = {c: after.get(c, 0.0) - before.get(c, 0.0) for c in COLUMNS}
-            # the rest of the JVM: unnamed groups and threads that exited
-            row["jvm.other"] = (after["jvm"] - before["jvm"]) - sum(
-                row[c] for c in COLUMNS if c.startswith("jvm.") and c != "jvm.other"
-            )
-            rows.append((wall, row))
-            counts.append((jobs, tasks))
-            print(
-                f"{i:>3} {wall:6.2f} "
-                + " ".join(f"{row[c]:12.2f}" for c in COLUMNS)
-                + f" {sum(row.values()):7.2f} {jobs:5d} {tasks:6d}"
-            )
-        n = len(rows)
-        mean = {c: sum(r[c] for _w, r in rows) / n for c in COLUMNS}
-        print(
-            f"{'avg':>3} {sum(w for w, _r in rows) / n:6.2f} "
-            + " ".join(f"{mean[c]:12.2f}" for c in COLUMNS)
-            + f" {sum(mean.values()):7.2f}"
-            + f" {sum(j for j, _t in counts) / n:5.1f}"
-            + f" {sum(t for _j, t in counts) / n:6.1f}"
-        )
+            with measured(sc, jvm_pid, ops):
+                wl.op()
+            print_row(str(i), *ops[-1])
+        print_row("avg", *mean(ops))
+        if spans:
+            print(f"\nper span, mean over {args.ops} operations")
+            for name, rows in spans.items():
+                print(name)
+                print_row("", *mean(rows))
     finally:
         bench.stop(spark)
         shutil.rmtree(work, ignore_errors=True)

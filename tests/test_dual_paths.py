@@ -3,8 +3,12 @@
 Each operator with a driver path asks `driver_gate.collect_if_fits`
 whether its state fits; `assert_paths_agree` runs an operator once as is
 (the gate accepts) and once with that one function forced to decline (the
-distributed fallback), and requires exactly equal results. The model is
-spark-rapids' `assert_gpu_and_cpu_are_equal_collect`.
+distributed fallback), and requires exactly equal results: the same rows
+and, for a DataFrame, the same schema. The model is spark-rapids'
+`assert_gpu_and_cpu_are_equal_collect`.
+
+`driver_gate.local_frame`, the way driver results become frames again, is
+tested here too.
 """
 
 from __future__ import annotations
@@ -12,14 +16,25 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import DataFrame
 
 from radar_output_restructure_spark.operators import driver_gate
+
+
+def _observed(result):
+    """A DataFrame as (analyzed schema, sorted rows), a tuple item by item,
+    any other value as it is."""
+    if isinstance(result, DataFrame):
+        return result.select("*").schema, sorted(map(tuple, result.collect()))
+    if isinstance(result, tuple):
+        return tuple(_observed(r) for r in result)
+    return result
 
 
 def assert_paths_agree(run):
     """`run()` with the gate as is, then with the gate declining: the
     first run must actually take the driver path, and both results must
-    be equal."""
+    be equal, schemas included."""
     real = driver_gate.collect_if_fits
     accepted = []
 
@@ -30,9 +45,9 @@ def assert_paths_agree(run):
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(driver_gate, "collect_if_fits", spy)
-        driver = run()
+        driver = _observed(run())
         mp.setattr(driver_gate, "collect_if_fits", lambda df, cap: None)
-        distributed = run()
+        distributed = _observed(run())
     assert accepted and all(accepted), "the driver path was not taken"
     assert driver == distributed
 
@@ -49,8 +64,8 @@ def _bpe(spark):
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
 
     def run():
-        merges, seg = X._bpe_train(df, "text", 5)
-        return merges, sorted((r.word, r.seg, r.freq) for r in seg.collect())
+        merges, seg_frame = X._bpe_train(df, "text", 5)
+        return merges, seg_frame()
 
     return run
 
@@ -66,10 +81,7 @@ def _ivf(spark):
     )
 
     df = _vectors(spark, 60, lambda i, d: math.sin(i * 13.7 + d))
-    return lambda: sorted(
-        (r.vec_id, tuple(r.embedding))
-        for r in train_ivf_centroids(df, k=4, iters=3, dims=8).collect()
-    )
+    return lambda: train_ivf_centroids(df, k=4, iters=3, dims=8)
 
 
 def _pq(spark):
@@ -81,7 +93,10 @@ def _pq(spark):
     return lambda: train_pq_codebooks(df, m=2, codebook_k=4, iters=2, dims=8)
 
 
-def _clusters(pairs, schema):
+def _clusters(pairs, schema, components):
+    """`duplicate_clusters` over `pairs`; each path must label every doc
+    with the min id of its component (`components`: doc -> label)."""
+
     def make(spark):
         from radar_output_restructure_spark.operators.dedup_scale import (
             duplicate_clusters,
@@ -91,7 +106,8 @@ def _clusters(pairs, schema):
 
         def run():
             labels = duplicate_clusters(df)
-            return labels.dtypes, sorted(map(tuple, labels.collect()))
+            assert dict(map(tuple, labels.collect())) == components
+            return labels
 
         return run
 
@@ -103,10 +119,14 @@ CASES = {
     "ivf": _ivf,
     "pq": _pq,
     "clusters_int_ids": _clusters(
-        [(1, 2), (2, 3), (7, 9), (10, 4)], "doc_a long, doc_b long"
+        [(1, 2), (2, 3), (7, 9), (10, 4)],
+        "doc_a long, doc_b long",
+        {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 10: 4, 4: 4},
     ),
     "clusters_string_ids": _clusters(
-        [("url-b", "url-c"), ("url-a", "url-b")], "doc_a string, doc_b string"
+        [("url-b", "url-c"), ("url-a", "url-b")],
+        "doc_a string, doc_b string",
+        {"url-a": "url-a", "url-b": "url-a", "url-c": "url-a"},
     ),
 }
 
@@ -114,3 +134,22 @@ CASES = {
 @pytest.mark.parametrize("case", list(CASES))
 def test_driver_and_distributed_paths_agree(spark, case):
     assert_paths_agree(CASES[case](spark))
+
+
+LOCAL_ROWS = [("doc-1", 7, [0.5, None, -2.0]), ("dokümän-文書", None, None)]
+
+
+@pytest.mark.parametrize("n_rows", [2, 0])
+def test_local_frame_is_a_local_relation_of_the_list_frame(spark, n_rows):
+    """`local_frame` gives the rows and the schema `createDataFrame` over
+    the same Python list gives (NULLs, a non-nullable field, an array
+    column, non-ASCII strings, no rows), planned as a JVM local relation
+    rather than a scan of a pickled Python RDD."""
+    rows = LOCAL_ROWS[:n_rows]
+    schema = "id string not null, n bigint, v array<double>"
+    got = driver_gate.local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.select("*").schema == want.select("*").schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
