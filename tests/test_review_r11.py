@@ -4,11 +4,13 @@ operators/dedup_scale.py.
 1. snapshot_delta_dedup / snapshot_neardup_delta: NULL-text batch docs must
    be CLASSIFIED (NULL behaves as empty — the repo-wide convention), not
    silently dropped by md5(NULL)/no-token fingerprints.
-2. duplicate_clusters(max_iterations=0) on the distributed path warns
+2. duplicate_clusters driver path preserves the pairs' id type (string ids
+   crashed under the cap, worked over it).
+3. duplicate_clusters(max_iterations=0) on the distributed path warns
    instead of raising NameError on the unbound `changed`.
-3. band_hashes raises on num_hashes % rows_per_band != 0 instead of
+4. band_hashes raises on num_hashes % rows_per_band != 0 instead of
    silently ignoring trailing signatures.
-4. max_shingle_df=0 is honored as the tightest stop-shingle cap (falsy-zero
+5. max_shingle_df=0 is honored as the tightest stop-shingle cap (falsy-zero
    guard dropped the cap entirely).
 """
 
@@ -70,7 +72,46 @@ def test_snapshot_neardup_delta_classifies_null_text(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2. zero-iteration budget warns instead of NameError
+# 2. driver union-find preserves id type
+# ---------------------------------------------------------------------------
+
+
+def test_duplicate_clusters_string_ids_under_cap(spark):
+    pairs = spark.createDataFrame(
+        [("url-b", "url-c"), ("url-a", "url-b")],
+        "doc_a string, doc_b string",
+    )
+    got = {
+        (r["doc"], r["cluster"]) for r in duplicate_clusters(pairs).collect()
+    }
+    assert got == {
+        ("url-a", "url-a"),
+        ("url-b", "url-a"),
+        ("url-c", "url-a"),
+    }
+    assert dict(duplicate_clusters(pairs).dtypes) == {
+        "doc": "string",
+        "cluster": "string",
+    }
+
+
+def test_duplicate_clusters_string_ids_distributed_path(spark, monkeypatch):
+    # force the distributed path: the driver gate declines
+    monkeypatch.setattr(driver_gate, "collect_if_fits", lambda df, cap: None)
+    pairs = spark.createDataFrame(
+        [("url-b", "url-c"), ("url-a", "url-b")],
+        "doc_a string, doc_b string",
+    )
+    got = {(r["doc"], r["cluster"]) for r in duplicate_clusters(pairs).collect()}
+    assert got == {
+        ("url-a", "url-a"),
+        ("url-b", "url-a"),
+        ("url-c", "url-a"),
+    }
+
+
+# ---------------------------------------------------------------------------
+# 3. zero-iteration budget warns instead of NameError
 # ---------------------------------------------------------------------------
 
 
@@ -86,7 +127,7 @@ def test_duplicate_clusters_zero_iterations_warns(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# 3. band_hashes divisibility guard
+# 4. band_hashes divisibility guard
 # ---------------------------------------------------------------------------
 
 
@@ -99,7 +140,7 @@ def test_band_hashes_rejects_non_divisible_rows_per_band(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. zero df-cap is the tightest cap, not "no cap"
+# 5. zero df-cap is the tightest cap, not "no cap"
 # ---------------------------------------------------------------------------
 
 
