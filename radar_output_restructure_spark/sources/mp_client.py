@@ -229,7 +229,11 @@ class MPClient:
                 attr_cols.update(k for k in row if k not in fixed)
                 rows.append(row)
         cols = list(fixed) + sorted(attr_cols)
-        data = [tuple(r.get(c) for c in cols) for r in rows]
+        # Portal DTO ids are numeric; every column is a string column.
+        data = [
+            tuple(None if (v := r.get(c)) is None else str(v) for c in cols)
+            for r in rows
+        ]
         from pyspark.sql.types import StringType, StructField, StructType
 
         from radar_output_restructure_spark.operators.driver_gate import local_frame

@@ -13,6 +13,7 @@ values.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -49,16 +50,16 @@ def load_table(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     st = os.stat(path)
     key = (id(spark._jsparkSession), path, st.st_size, st.st_mtime_ns)
-    if key not in _SCHEMAS:
+    facts = _FILES.get(key)
+    if facts is None:
         nanos = [
             f.name
             for f in pq.read_schema(path)
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
         ]
-        _SCHEMAS[key] = spark.read.parquet(path).schema, sorted(nanos)
-    schema, nanos = _SCHEMAS[key]
-    df = spark.read.schema(schema).parquet(path)
-    for col in nanos:
+        facts = _FILES[key] = _FileFacts(spark.read.parquet(path).schema, nanos)
+    df = spark.read.schema(facts.schema).parquet(path)
+    for col in facts.nanos:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000")))
     # Micro-precision parquet timestamps without the UTC-adjusted flag arrive
     # as TIMESTAMP_NTZ; normalize to TimestampType so every consumer sees one
@@ -69,21 +70,30 @@ def load_table(
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     if spread:
+        if facts.scan_parts is None:
+            facts.scan_parts = df.rdd.getNumPartitions()
         target = spark.sparkContext.defaultParallelism
-        if key not in _SCAN_PARTS:
-            _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-        if _SCAN_PARTS[key] < target:
+        if facts.scan_parts < target:
             df = df.repartition(target)
     return df
 
 
-#: (session id, path, size, mtime_ns) -> the file's scan partition count,
-#: and -> its inferred Spark schema with its timestamp[ns] columns.
-#: getNumPartitions builds a full RDD conversion plan each call and reading
-#: without a schema runs one footer-inference job; both only change when
-#: the file or the session does, so they are kept per (session, file).
-_SCAN_PARTS: dict[tuple[int, str, int, int], int] = {}
-_SCHEMAS: dict[tuple[int, str, int, int], tuple[T.StructType, list[str]]] = {}
+@dataclass
+class _FileFacts:
+    """What `load_table` learns about one file in one session: its inferred
+    Spark schema, its timestamp[ns] columns and (filled on the first
+    `spread` load) its scan partition count. Reading without a schema runs
+    one footer-inference job and getNumPartitions builds a full RDD
+    conversion plan; neither answer changes until the file or the session
+    does."""
+
+    schema: T.StructType
+    nanos: list[str]
+    scan_parts: int | None = None
+
+
+#: (session id, path, size, mtime_ns) -> that file's `_FileFacts`.
+_FILES: dict[tuple[int, str, int, int], _FileFacts] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

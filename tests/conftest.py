@@ -94,6 +94,7 @@ SLOW_TESTS = {
         "test_cosine_topk",
         "test_cosine_topk_int8",
         "test_decontaminate_vs_eval_detects_planted_dup",
+        "test_duplicate_clusters_components",
         "test_exact_rerank_recovers_exact_topk",
         "test_fingerprint_overlap_pairs_stop_fp_cap",
         "test_gif_frame_features",

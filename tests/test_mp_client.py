@@ -111,6 +111,35 @@ def test_mp_dim_semantics(spark):
     assert dim[("radar-p2", "u3")].organization == "unknown-organization"
 
 
+def test_mp_dim_numeric_portal_ids_become_strings(spark):
+    """ManagementPortal DTO ids are numbers: a numeric organization id and a
+    subject with no login (userId and externalId fall back to its numeric
+    id) still give string columns."""
+
+    def transport(url, headers, data=None):
+        if url.endswith("/oauth/token"):
+            return json.dumps({"access_token": "tok"}).encode()
+        if url.endswith("/api/projects"):
+            return json.dumps(
+                [{"projectName": "radar-p9", "organization": {"id": 42}}]
+            ).encode()
+        return json.dumps([{"id": 7, "group": "g", "attributes": {"n": 3}}]).encode()
+
+    c = MPClient(
+        "http://mp.example", client_id="cid", client_secret="sec",
+        transport=transport,
+    )
+    (r,) = c.mp_dim(spark).collect()
+    assert r.asDict() == {
+        "projectId": "radar-p9",
+        "userId": "7",
+        "organization": "42",
+        "group": "g",
+        "externalId": "7",
+        "n": "3",
+    }
+
+
 def test_mp_dim_feeds_path_format(spark):
     from pyspark.sql import Row, functions as F
 

@@ -181,6 +181,17 @@ def test_multimodal_plumbing(spark):
     assert by_id[2].ascii_ratio == 1.0
 
 
+def test_duplicate_clusters_components(spark):
+    from radar_output_restructure_spark.operators.dedup_scale import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 9), (10, 4)], "doc_a long, doc_b long"
+    )
+    out = {r.doc: r.cluster for r in duplicate_clusters(pairs).collect()}
+    # chains collapse to the min id of the component
+    assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 10: 4, 4: 4}
+
+
 def test_jaccard_stop_shingle_cap(spark):
     """max_shingle_df drops hot shingles before the self-join (skew cap):
     pairs that only share the hot shingle disappear; identical docs stay."""
