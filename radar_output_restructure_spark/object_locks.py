@@ -64,7 +64,9 @@ one and, like the margin, only ever delays breaking.
 from __future__ import annotations
 
 import json
+import os
 import time
+import urllib.parse
 import uuid
 from abc import abstractmethod
 
@@ -450,7 +452,12 @@ def lock_manager_for(
     configuration (endpoint, credentials, addressing style) is reused so
     the locks land in the same account as the output objects — the normal
     multi-replica deployment (reference: one Redis serves both the locks
-    and the offsets, accounting/RedisRemoteLockManager.kt:8-45)."""
+    and the offsets, accounting/RedisRemoteLockManager.kt:8-45).
+
+    `file:` lock dirs resolve to their local path. Any other scheme has no
+    shared-filesystem meaning (the manager would create a directory named
+    after the URI under the process's cwd, so replicas started from
+    different directories would never contend): it raises ValueError."""
     if lock_dir.startswith(("s3://", "s3a://", "s3n://")):
         from radar_output_restructure_spark.sinks.s3_storage import (
             S3TargetStorage,
@@ -475,6 +482,16 @@ def lock_manager_for(
             )
         return AzureRemoteLockManager(
             lock_dir, ttl_s=ttl_s, storage=target_storage
+        )
+    if lock_dir.startswith("file:"):
+        url = urllib.parse.urlparse(lock_dir)
+        if url.netloc not in ("", "localhost"):
+            raise ValueError(f"file: lock_dir must be local: {lock_dir}")
+        lock_dir = os.path.abspath(urllib.parse.unquote(url.path))
+    elif "://" in lock_dir:
+        raise ValueError(
+            f"lock_dir scheme has no lock manager: {lock_dir} (use a local "
+            "or file: path on a shared filesystem, s3:// or azure://)"
         )
     from radar_output_restructure_spark.locks import FileRemoteLockManager
 

@@ -20,7 +20,25 @@ Designed for 100 TB corpora:
                        precision/recall; the bucket join replaces the O(n^2)
                        all-pairs comparison with per-bucket joins.
 * simhash            — b-bit fingerprint via per-bit weighted majority over
-                       token hashes, again explode + groupBy aggregates.
+                       token hashes, again explode + groupBy aggregates;
+                       simhash_wide is the same computation with two words.
+
+Integer-fingerprint near-duplicates share ONE banded-Hamming core. A
+fingerprint is a list of integer word columns (32-bit simhash: one word;
+wide simhash: [fp_lo, fp_hi]; image dHash / audio: one signed 64-bit word):
+
+* _simhash_words — the fingerprinter behind simhash and simhash_wide.
+* _banded        — band i of width w is (word[i*w // word_bits] >>
+                   (i*w % word_bits)) & mask; rejects bands that straddle
+                   two words and bands <= max_hamming.
+* _hamming       — the verify: sum over words of bit_count(xor).
+* _self_pairs    — materializes the narrowed (id, words) frame once, bucket
+                   self-join, in-join verify, optional hot-bucket cap.
+
+Wrappers: simhash_near_dup_pairs, simhash_near_dup_pairs_wide,
+fingerprint_near_dup_pairs, snapshot_neardup_delta_from_fp (banding and
+verify on an asymmetric probe join) and the batch mode of the streaming
+detectors in streaming/windows.py.
 
 All hashes are the shared md5-Horner (operators/text.md5_horner_sql), so the
 DuckDB oracle reproduces every intermediate value exactly.
@@ -28,15 +46,16 @@ DuckDB oracle reproduces every intermediate value exactly.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.text import (
     FP_PRIME,
-    horner_fold,
     horner_fold_sql,
-    md5_horner_sql,
 )
 
 HASH_CHARS = 12  # 12 hex chars of md5 through Horner — plenty for test scales
@@ -403,6 +422,184 @@ def lsh_candidate_pairs(
     )
 
 
+# --- banded-Hamming near-duplicates (the core: see the module docstring) ---
+
+#: the wide SimHash: two 32-bit words in 4 x 16-bit bands (65,536 buckets
+#: per band)
+WIDE_WORDS = ["fp_lo", "fp_hi"]
+WIDE_WORD_BITS = 32
+WIDE_BANDS = 4
+
+
+def _simhash_words(
+    df: DataFrame, text_col: str, id_col: str, names: list[str], word_bits: int
+) -> DataFrame:
+    """(doc, *names): a SimHash of `len(names)` words of `word_bits` bits.
+
+    Word k Horner-folds hex chars 12k+1..12k+12 of the token's md5 and has
+    bit b set when the token votes on it sum positive. One md5 per token
+    (the folds read substrings of it), one groupBy(doc) carrying every vote
+    sum (map-side combined, single shuffle). Fold, votes and fingerprint
+    are SQL-string expressions: the Column-algebra form paid hundreds of
+    py4j round-trips per plan and duplicated the md5 subtree per folded
+    char in the analyzed tree (see minhash_wide); the arithmetic is the
+    oracle's."""
+    words = range(len(names))
+    hashed = (
+        df.select(
+            F.col(id_col).alias("doc"),
+            F.explode(split_words(text_col)).alias("tok"),
+        )
+        .selectExpr(
+            "doc",
+            *[
+                f"substring(md5(tok), {k * HASH_CHARS + 1}, {HASH_CHARS})"
+                f" AS c{k}"
+                for k in words
+            ],
+        )
+        .selectExpr(
+            "doc",
+            *[
+                f"({horner_fold_sql(f'c{k}', HASH_CHARS)}) AS h{k}"
+                for k in words
+            ],
+        )
+    )
+    votes = [
+        F.expr(
+            f"sum(CASE WHEN (shiftright(h{k}, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
+        ).alias(f"v{k}_{b}")
+        for k in words
+        for b in range(word_bits)
+    ]
+    fp_sql = lambda k: " + ".join(  # noqa: E731
+        f"(CASE WHEN v{k}_{b} > 0 THEN {2**b} ELSE 0 END)"
+        for b in range(word_bits)
+    )
+    return (
+        hashed.groupBy("doc")
+        .agg(*votes)
+        .selectExpr("doc", *[f"({fp_sql(k)}) AS {names[k]}" for k in words])
+    )
+
+
+def _banded(
+    fp: DataFrame, words: list[str], word_bits: int, bands: int, max_hamming: int
+) -> DataFrame:
+    """`fp` plus (band, bv): one row per band. Band i of width w is
+    `(word[i*w // word_bits] >> (i*w % word_bits)) & mask`.
+
+    With bands > max_hamming, recall is exact by pigeonhole: <= max_hamming
+    differing bits cannot touch every band, so each qualifying pair shares
+    at least one (band, bv) bucket."""
+    bits = word_bits * len(words)
+    if bits % bands != 0:
+        raise ValueError("bits must divide evenly into bands")
+    if bands <= max_hamming:
+        raise ValueError(
+            "bands must exceed max_hamming for exact pigeonhole recall"
+        )
+    width = bits // bands
+    if word_bits % width != 0:
+        raise ValueError("a band must not straddle two fingerprint words")
+    mask = (1 << width) - 1
+    return fp.select(
+        "*",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.shiftright(
+                            F.col(words[i * width // word_bits]),
+                            i * width % word_bits,
+                        )
+                        .bitwiseAND(F.lit(mask))
+                        .alias("bv"),
+                    )
+                    for i in range(bands)
+                ]
+            )
+        ),
+    )
+
+
+def _band_side(
+    banded: DataFrame, id_col: str, words: list[str], tag: str
+) -> DataFrame:
+    """One side of a bucket join: (doc_<tag>, <tag>0.., band, bv)."""
+    return banded.select(
+        F.col(id_col).alias(f"doc_{tag}"),
+        *[F.col(w).alias(f"{tag}{k}") for k, w in enumerate(words)],
+        "band",
+        "bv",
+    )
+
+
+def _hamming(n_words: int, a: str, b: str) -> Column:
+    """The in-join verify: sum over the words of popcount(a_k xor b_k)."""
+    return reduce(
+        operator.add,
+        (
+            F.bit_count(F.col(f"{a}{k}").bitwiseXOR(F.col(f"{b}{k}")))
+            for k in range(n_words)
+        ),
+    ).cast("int")
+
+
+def _self_pairs(
+    fp: DataFrame,
+    id_col: str,
+    words: list[str],
+    word_bits: int,
+    bands: int,
+    max_hamming: int,
+    max_bucket_df: int | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, hamming): every pair of `fp` rows within
+    `max_hamming` bits, doc_a < doc_b.
+
+    The narrowed (id, words) frame is materialized once: it feeds both
+    sides of the bucket equijoin under different names, so ReuseExchange
+    cannot share them, and an expensive upstream (tokenize + vote
+    aggregation, a mapInPandas image decode) would otherwise run twice.
+    Each banded row carries its whole fingerprint, so the Hamming verify
+    runs inside the bucket join; the only shuffles are the bucket join and
+    the distinct over verified pairs (a pair may collide in several bands).
+
+    `max_bucket_df` drops (band, bv) buckets holding more rows than the cap
+    before the self-join: boilerplate-heavy corpora produce a few degenerate
+    buckets that dominate the quadratic verify. The hot buckets broadcast
+    back as an anti-join, so the cap costs one bucket-count aggregate, not a
+    corpus shuffle. Unset, recall stays exact."""
+    names = [f"w{k}" for k in range(len(words))]
+    narrow = fp.select(
+        F.col(id_col).alias("doc"),
+        *[F.col(w).alias(n) for w, n in zip(words, names)],
+    ).localCheckpoint(eager=False)
+    banded = _banded(narrow, names, word_bits, bands, max_hamming)
+    if max_bucket_df is not None:
+        hot = (
+            banded.groupBy("band", "bv")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") > max_bucket_df)
+            .select("band", "bv")
+        )
+        banded = banded.join(F.broadcast(hot), ["band", "bv"], "left_anti")
+    a = _band_side(banded, "doc", names, "a")
+    b = _band_side(banded, "doc", names, "b")
+    return (
+        a.join(b, ["band", "bv"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select(
+            "doc_a", "doc_b", _hamming(len(words), "a", "b").alias("hamming")
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def simhash(
     df: DataFrame,
     text_col: str = "text",
@@ -412,28 +609,7 @@ def simhash(
     """(doc, simhash): b-bit fingerprint; bit b set when the weighted majority
     of token hashes has bit b set. Near-duplicates differ in few bits
     (compare with bit_count(xor) downstream)."""
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
-    )
-    # md5 bound once, fold + votes + fp as sql-string expressions: the
-    # Column-algebra loops paid hundreds of py4j round-trips and handed the
-    # analyzer a tree with the md5 subtree duplicated per folded char
-    # (see minhash_wide for the measurement); identical arithmetic.
-    with_bits = tokens.selectExpr(
-        "doc", f"substring(md5(tok), 1, {HASH_CHARS}) AS hx"
-    ).selectExpr("doc", f"({horner_fold_sql('hx', HASH_CHARS)}) AS h")
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = with_bits.groupBy("doc").agg(*votes)
-    fp_sql = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(bits)
-    )
-    return agg.selectExpr("doc", f"({fp_sql}) AS simhash")
+    return _simhash_words(df, text_col, id_col, ["simhash"], bits)
 
 
 def simhash_near_dup_pairs(
@@ -448,69 +624,15 @@ def simhash_near_dup_pairs(
     hamming buckets — the consumer of the `simhash` fingerprint and the
     bit-domain analog of MinHash band LSH.
 
-    The b-bit fingerprint splits into `bands` equal byte-bands; candidate
-    pairs share at least one (band index, band value) bucket, then verify
-    with an exact popcount of the XOR. With bands > max_hamming the recall
-    is EXACT by pigeonhole: <= max_hamming differing bits cannot touch all
-    `bands` bands, so every qualifying pair collides in some band. At
-    100 TB: one groupBy per fingerprint (simhash itself), a map-only band
-    explode, a bucket-equijoin (never all-pairs), and integer popcount
-    verification restricted to candidates.
+    The b-bit fingerprint splits into `bands` equal bands; candidate pairs
+    share at least one (band index, band value) bucket, then verify with an
+    exact popcount of the XOR. With bands > max_hamming the recall is EXACT
+    by pigeonhole. At 100 TB: one groupBy per fingerprint (simhash itself),
+    a map-only band explode, a bucket-equijoin (never all-pairs), and
+    integer popcount verification restricted to candidates.
     """
-    if bits % bands != 0:
-        raise ValueError("bits must divide evenly into bands")
-    if bands <= max_hamming:
-        raise ValueError(
-            "bands must exceed max_hamming for exact pigeonhole recall"
-        )
-    width = bits // bands
-    mask = (1 << width) - 1
-    # fp feeds both sides of the band join: materialize the doc-per-row
-    # fingerprint frame once instead of re-tokenizing the corpus per branch
-    # (same pattern as tfidf's tf frame)
-    fp = simhash(df, text_col, id_col, bits).localCheckpoint(eager=False)
-    # Each banded row CARRIES its full fingerprint (8 extra bytes) so the
-    # hamming verification happens inside the bucket equijoin itself — the
-    # earlier shape re-joined the fingerprint frame twice after a pair
-    # distinct, which cost two additional shuffles; now the only shuffles
-    # are the bucket join and the final distinct over VERIFIED pairs (the
-    # smallest frame in the whole plan).
-    banded = fp.select(
-        "doc",
-        "simhash",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ),
-    )
-    left = banded.select(
-        F.col("doc").alias("doc_a"), F.col("simhash").alias("sa"), "band", "bv"
-    )
-    right = banded.select(
-        F.col("doc").alias("doc_b"), F.col("simhash").alias("sb"), "band", "bv"
-    )
-    return (
-        left.join(right, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may collide in several bands
-    )
+    fp = simhash(df, text_col, id_col, bits)
+    return _self_pairs(fp, "doc", ["simhash"], bits, bands, max_hamming)
 
 
 def simhash_wide(
@@ -531,76 +653,10 @@ def simhash_wide(
     anyway (hex chars 13..24 of the same md5 — no extra md5 call), and (b)
     sub-2^32 values keep every shift/xor/popcount in non-negative bigint
     range on BOTH engines (no signed-bit traps in the DuckDB oracle).
-
-    Plan shape is identical to `simhash`: one md5 per token, two cheap
-    Horner folds, ONE groupBy(doc) carrying all 64 vote sums (map-side
-    combined, single shuffle).
+    `fp_lo` equals `simhash(bits=32).simhash`: both are word 0 of
+    `_simhash_words`.
     """
-    half = 32
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
-    )
-    # md5 bound once into two half-columns, folds/votes/fp as sql-string
-    # expressions (same construction-cost rationale as minhash_wide: the
-    # Column-algebra form paid ~800 py4j round-trips and duplicated the
-    # md5 subtree 24x in the analyzed tree); identical arithmetic.
-    hashed = tokens.selectExpr(
-        "doc",
-        f"substring(md5(tok), 1, {HASH_CHARS}) AS c_lo",
-        f"substring(md5(tok), {HASH_CHARS + 1}, {HASH_CHARS}) AS c_hi",
-    ).selectExpr(
-        "doc",
-        f"({horner_fold_sql('c_lo', HASH_CHARS)}) AS h_lo",
-        f"({horner_fold_sql('c_hi', HASH_CHARS)}) AS h_hi",
-    )
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright({h}, {b}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"{h}_v{b}")
-        for h in ("h_lo", "h_hi")
-        for b in range(half)
-    ]
-    agg = hashed.groupBy("doc").agg(*votes)
-    fp_sql = lambda h: " + ".join(  # noqa: E731
-        f"(CASE WHEN {h}_v{b} > 0 THEN {2**b} ELSE 0 END)"
-        for b in range(half)
-    )
-    return agg.selectExpr(
-        "doc", f"({fp_sql('h_lo')}) AS fp_lo", f"({fp_sql('h_hi')}) AS fp_hi"
-    )
-
-
-def _banded_wide(fp: DataFrame, bands: int = 4, width: int = 16) -> DataFrame:
-    """(doc, fp_lo, fp_hi, band, bv): band a WIDE (two 32-bit halves)
-    SimHash frame into `bands` x `width`-bit buckets — the shared banding
-    geometry of `simhash_near_dup_pairs_wide` and `snapshot_neardup_delta`
-    (one definition so the two can never drift)."""
-    if bands * width != 64:
-        raise ValueError("wide banding must cover exactly the 64 fp bits")
-    per_half = 32 // width
-    mask = (1 << width) - 1
-    return fp.select(
-        "doc",
-        "fp_lo",
-        "fp_hi",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(
-                            F.col("fp_lo" if i < per_half else "fp_hi"),
-                            (i % per_half) * width,
-                        )
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ),
-    )
+    return _simhash_words(df, text_col, id_col, WIDE_WORDS, WIDE_WORD_BITS)
 
 
 def simhash_near_dup_pairs_wide(
@@ -620,52 +676,13 @@ def simhash_near_dup_pairs_wide(
     pigeonhole, while 65,536 buckets/band holds per-bucket occupancy ~256x
     lower than the 32-bit/8-bit geometry at the same corpus size (SCALE.md
     stress rows). `max_bucket_df` optionally drops band buckets hotter than
-    the cap before the self-join (boilerplate-heavy corpora produce a few
-    degenerate buckets that dominate the quadratic verify); the dropped
-    buckets are broadcast back as an anti-join, so the cap costs one
-    vocab-sized aggregate, not a corpus shuffle. With the cap unset recall
-    stays exact.
-
-    Verification is in-join (each banded row carries both fingerprint
-    halves); hamming = popcount(xor lo) + popcount(xor hi) <= max_hamming.
+    the cap before the self-join (see `_self_pairs`); with the cap unset
+    recall stays exact. hamming = popcount(xor lo) + popcount(xor hi).
     """
-    bands = 4  # x 16-bit bands — see _banded_wide
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for pigeonhole recall")
-    fp = simhash_wide(df, text_col, id_col).localCheckpoint(eager=False)
-    banded = _banded_wide(fp, bands=bands)
-    if max_bucket_df is not None:
-        hot = (
-            banded.groupBy("band", "bv")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_df)
-            .select("band", "bv")
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "bv"], "left_anti")
-    left = banded.select(
-        F.col("doc").alias("doc_a"),
-        F.col("fp_lo").alias("la"),
-        F.col("fp_hi").alias("ha"),
-        "band",
-        "bv",
-    )
-    right = banded.select(
-        F.col("doc").alias("doc_b"),
-        F.col("fp_lo").alias("lb"),
-        F.col("fp_hi").alias("hb"),
-        "band",
-        "bv",
-    )
-    hamming = (
-        F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
-        + F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    ).cast("int")
-    return (
-        left.join(right, ["band", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may collide in several bands
+    fp = simhash_wide(df, text_col, id_col)
+    return _self_pairs(
+        fp, "doc", WIDE_WORDS, WIDE_WORD_BITS, WIDE_BANDS, max_hamming,
+        max_bucket_df,
     )
 
 
@@ -884,63 +901,13 @@ def fingerprint_near_dup_pairs(
     max_hamming: int,
 ) -> DataFrame:
     """(id_a, id_b, hamming): banded near-dup pairs over an ALREADY-COMPUTED
-    integer fingerprint column — the fingerprint-agnostic core of
-    `simhash_near_dup_pairs`, reused by perceptual image hashing
-    (operators/multimodal.image_near_dup_pairs) and any other b-bit
-    signature. Exact pigeonhole recall when bands > max_hamming; the only
-    shuffles are the bucket equijoin and the distinct over verified pairs.
+    one-word integer fingerprint column — the shared near-dup core
+    (`_self_pairs`) as used by perceptual image hashing
+    (operators/multimodal.image_near_dup_pairs), audio fingerprints and any
+    other b-bit signature. Exact pigeonhole recall when bands > max_hamming.
     """
-    if bits % bands != 0:
-        raise ValueError("bits must divide evenly into bands")
-    if bands <= max_hamming:
-        raise ValueError(
-            "bands must exceed max_hamming for exact pigeonhole recall"
-        )
-    width = bits // bands
-    mask = (1 << width) - 1
-    # the fingerprint frame feeds BOTH sides of the band equijoin with
-    # differently-named projections, so ReuseExchange cannot dedup them —
-    # without the barrier an expensive upstream (mapInPandas image/audio
-    # decode in multimodal.image_near_dup_pairs) runs twice. Narrow to the
-    # two needed columns first so the materialization stays small.
-    fp = fp.select(
-        F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp")
-    ).localCheckpoint(eager=False)
-    banded = fp.select(
-        "__id",
-        "__fp",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("__fp"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ),
-    )
-    left = banded.select(
-        F.col("__id").alias("id_a"), F.col("__fp").alias("fa"), "band", "bv"
-    )
-    right = banded.select(
-        F.col("__id").alias("id_b"), F.col("__fp").alias("fb"), "band", "bv"
-    )
-    return (
-        left.join(right, ["band", "bv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may collide in several bands
+    return _self_pairs(fp, id_col, [fp_col], bits, bands, max_hamming).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "hamming"
     )
 
 
@@ -997,30 +964,16 @@ def snapshot_neardup_delta_from_fp(
     once and filters (one corpus pass instead of two). `fp_new` is read by
     two branches (band probe + final left join) — pass it materialized
     (localCheckpoint) when it is not already a cheap scan."""
-    bands = 4
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for pigeonhole recall")
-    probe = _banded_wide(fp_new).select(
-        F.col("doc").alias("doc_new"),
-        F.col("fp_lo").alias("ln"),
-        F.col("fp_hi").alias("hn"),
-        "band",
-        "bv",
-    )
-    hist = _banded_wide(fp_old).select(
-        F.col("doc").alias("doc_old"),
-        F.col("fp_lo").alias("lo"),
-        F.col("fp_hi").alias("ho"),
-        "band",
-        "bv",
-    )
-    hamming = (
-        F.bit_count(F.col("ln").bitwiseXOR(F.col("lo")))
-        + F.bit_count(F.col("hn").bitwiseXOR(F.col("ho")))
-    ).cast("int")
+    geometry = (WIDE_WORDS, WIDE_WORD_BITS, WIDE_BANDS, max_hamming)
+    probe = _band_side(_banded(fp_new, *geometry), "doc", WIDE_WORDS, "new")
+    hist = _band_side(_banded(fp_old, *geometry), "doc", WIDE_WORDS, "old")
     pairs = (
         probe.join(hist, ["band", "bv"])
-        .select("doc_new", "doc_old", hamming.alias("hamming"))
+        .select(
+            "doc_new",
+            "doc_old",
+            _hamming(len(WIDE_WORDS), "new", "old").alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()  # a pair may collide in several bands
     )

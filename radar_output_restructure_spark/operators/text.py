@@ -154,7 +154,7 @@ def md5_horner_sql(expr: str, chars: int = 16) -> str:
 
     NOTE: inlines `md5(expr)` once per folded char. Use only where `expr` is
     evaluated a handful of times per row; in hot paths materialize the md5
-    hex into a column first and fold it with `horner_fold_sql`/`horner_fold`.
+    hex into a column first and fold it with `horner_fold_sql`.
     """
     h = "0"
     for j in range(1, chars + 1):
@@ -169,15 +169,6 @@ def horner_fold_sql(hex_col: str, chars: int = 16) -> str:
     h = "0"
     for j in range(1, chars + 1):
         h = f"(({h}) * {FP_BASE} + ascii(substr({hex_col}, {j}, 1))) % {FP_PRIME}"
-    return h
-
-
-def horner_fold(hex_col: Column | str, chars: int = 16) -> Column:
-    """Column form of horner_fold_sql (identical arithmetic, codegen'd)."""
-    col = F.col(hex_col) if isinstance(hex_col, str) else hex_col
-    h: Column = F.lit(0).cast("bigint")
-    for j in range(1, chars + 1):
-        h = (h * FP_BASE + F.ascii(F.substring(col, j, 1))) % FP_PRIME
     return h
 
 

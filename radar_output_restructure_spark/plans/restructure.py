@@ -448,14 +448,7 @@ class RestructurePlan:
             # mp_<attr> columns already
             df = bucket.attach(df, ts, out_col="pf_bucket")
             part_cols = ["pf_bucket", *part_cols]
-        meta_cols = [
-            "source_file",
-            "file_modified",
-            "kafka_partition",
-            "offset_from",
-            "offset_to",
-            "topic",
-        ]
+        meta_cols = [*META_COLS, "topic"]
         excluded = cfg.exclude_fields | tcfg.exclude_fields | set(meta_cols)
         dedup_cfg = tcfg.dedup or cfg.dedup
         # Offset-aware arrival order (reference: files are processed in Kafka

@@ -703,7 +703,7 @@ def _sql_fp_sum_wide(half: str) -> str:
 
 #: 4 x 16-bit banding over the wide fingerprint — ONE definition shared by
 #: simhash_near_dup_docs and snapshot_neardup_delta_docs, mirroring the
-#: operator side's single _banded_wide (dedup_scale.py) so the two oracles
+#: operator side's single _banded (dedup_scale.py) so the two oracles
 #: can never drift in banding geometry.
 _SQL_BAND_WIDE = (
     "SELECT doc, i AS band,\n"

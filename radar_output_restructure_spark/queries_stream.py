@@ -23,7 +23,10 @@ from radar_output_restructure_spark.queries_sim import (
     sql_buckets_union,
 )
 from radar_output_restructure_spark.queries_docs import SQL_SHINGLES
-from radar_output_restructure_spark.sources.tables import load_table
+from radar_output_restructure_spark.sources.tables import (
+    load_table,
+    table_num_rows,
+)
 from radar_output_restructure_spark.streaming.windows import (
     hourly_event_counts,
     session_windows,
@@ -84,10 +87,15 @@ def q_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_DUP_COSINE = 0.4
 
 
-def _near_dup_from_buckets(emb: DataFrame, cb: DataFrame) -> DataFrame:
-    """Bucket-collision candidates -> exact cosine verification >= threshold.
+def _embedding_near_dup(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(embeddings, (vec_a, vec_b, sim) pairs): auto-plane LSH bucket
+    candidates -> exact cosine verification >= threshold. The one pair
+    builder of the three embedding near-dup queries.
 
-    Shared body of the fixed-plane and auto-plane near-dup queries: the
+    The plane count comes from the Parquet footer's row count
+    (`table_num_rows`), so building the plan runs no count job. The
     embedding analog of MinHash near-dup (candidates per bucket, never
     all-pairs). Verification is the per-bucket Arrow path
     (operators/similarity.near_dup_pairs_from_buckets): vectors shuffle once
@@ -99,7 +107,26 @@ def _near_dup_from_buckets(emb: DataFrame, cb: DataFrame) -> DataFrame:
         near_dup_pairs_from_buckets,
     )
 
-    return near_dup_pairs_from_buckets(emb, cb, NEAR_DUP_COSINE)
+    emb = load_table(spark, sf_dir, "embeddings")
+    planes = auto_num_planes(table_num_rows(spark, sf_dir, "embeddings"))
+    cb = hyperplane_lsh_buckets(emb, num_planes=planes, num_tables=NUM_TABLES)
+    return emb, near_dup_pairs_from_buckets(emb, cb, NEAR_DUP_COSINE)
+
+
+def _embedding_clusters(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(embeddings, (doc, cluster)): the near-dup pair graph's connected
+    components (operators/dedup_scale.duplicate_clusters)."""
+    from radar_output_restructure_spark.operators.dedup_scale import (
+        duplicate_clusters,
+    )
+
+    emb, pairs = _embedding_near_dup(spark, sf_dir)
+    edges = pairs.select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+    )
+    return emb, duplicate_clusters(edges)
 
 
 #: embeddings rows at the driver's FIXED sf0.01 correctness gate; the static
@@ -143,13 +170,10 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant, keeping the bucket self-join LINEAR in corpus size. This is
     the configuration a 100 TB run should use.
 
-    The Spark side computes n with a cheap parquet count; the DuckDB oracle
+    The Spark side reads n from the Parquet footer; the DuckDB oracle
     pre-bakes auto_num_planes(500) because the driver's gate always runs at
     sf0.01 (500 embeddings) and oracle SQL is registered statically."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = auto_num_planes(emb.count())
-    cb = hyperplane_lsh_buckets(emb, num_planes=planes, num_tables=NUM_TABLES)
-    return _near_dup_from_buckets(emb, cb)
+    return _embedding_near_dup(spark, sf_dir)[1]
 
 
 #: shared pair-graph + transitive-closure oracle fragments: the
@@ -277,17 +301,7 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup_scale.duplicate_clusters — capped driver union-find
     with the distributed min-label-propagation fallback). Completes the
     embedding dedup path: pairs -> clusters -> pick survivors downstream."""
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        duplicate_clusters,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = auto_num_planes(emb.count())
-    cb = hyperplane_lsh_buckets(emb, num_planes=planes, num_tables=NUM_TABLES)
-    pairs = _near_dup_from_buckets(emb, cb).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    return duplicate_clusters(pairs)
+    return _embedding_clusters(spark, sf_dir)[1]
 
 
 @register(
@@ -310,17 +324,8 @@ def q_embedding_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from radar_output_restructure_spark.operators.curation import (
         near_dup_survivors,
     )
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        duplicate_clusters,
-    )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = auto_num_planes(emb.count())
-    cb = hyperplane_lsh_buckets(emb, num_planes=planes, num_tables=NUM_TABLES)
-    pairs = _near_dup_from_buckets(emb, cb).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    clusters = duplicate_clusters(pairs)
+    emb, clusters = _embedding_clusters(spark, sf_dir)
     return near_dup_survivors(
         emb.select("vec_id", "label"), clusters, id_col="vec_id"
     )

@@ -49,7 +49,6 @@ import xml.etree.ElementTree as ET
 from contextlib import contextmanager
 
 from radar_output_restructure_spark.sinks.storage import (
-    CHUNK_SIZE,
     TargetStorage,
     as_prefix,
 )
@@ -359,14 +358,6 @@ class AzureTargetStorage(TargetStorage):
         _s, headers, _b = self._request("HEAD", container, key)
         size = int({k.lower(): v for k, v in headers.items()}["content-length"])
         return _RangedAzureBlob(self, container, key, size)
-
-    def open_read_chunks(self, path: str, chunk_size: int = CHUNK_SIZE):
-        with self.open_seekable(path) as fh:
-            while True:
-                chunk = fh.read(chunk_size)
-                if not chunk:
-                    return
-                yield chunk
 
 
 class _RangedAzureBlob(io.RawIOBase):

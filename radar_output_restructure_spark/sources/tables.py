@@ -47,17 +47,7 @@ def load_table(
     so the extra shuffle only ever moves data that fits on one core anyway.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    st = os.stat(path)
-    key = (id(spark._jsparkSession), path, st.st_size, st.st_mtime_ns)
-    facts = _FILES.get(key)
-    if facts is None:
-        nanos = [
-            f.name
-            for f in pq.read_schema(path)
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-        facts = _FILES[key] = _FileFacts(spark.read.parquet(path).schema, nanos)
+    facts = _file_facts(spark, path)
     df = spark.read.schema(facts.schema).parquet(path)
     for col in facts.nanos:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000")))
@@ -78,22 +68,48 @@ def load_table(
     return df
 
 
+def table_num_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of one testdata table, from its Parquet footer: no Spark
+    job, unlike `load_table(...).count()`."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return _file_facts(spark, path).num_rows
+
+
 @dataclass
 class _FileFacts:
     """What `load_table` learns about one file in one session: its inferred
-    Spark schema, its timestamp[ns] columns and (filled on the first
-    `spread` load) its scan partition count. Reading without a schema runs
-    one footer-inference job and getNumPartitions builds a full RDD
-    conversion plan; neither answer changes until the file or the session
-    does."""
+    Spark schema, its timestamp[ns] columns, its footer row count and
+    (filled on the first `spread` load) its scan partition count. Reading
+    without a schema runs one footer-inference job and getNumPartitions
+    builds a full RDD conversion plan; neither answer changes until the
+    file or the session does."""
 
     schema: T.StructType
     nanos: list[str]
+    num_rows: int
     scan_parts: int | None = None
 
 
 #: (session id, path, size, mtime_ns) -> that file's `_FileFacts`.
 _FILES: dict[tuple[int, str, int, int], _FileFacts] = {}
+
+
+def _file_facts(spark: SparkSession, path: str) -> _FileFacts:
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    st = os.stat(path)
+    key = (id(spark._jsparkSession), path, st.st_size, st.st_mtime_ns)
+    facts = _FILES.get(key)
+    if facts is None:
+        with pq.ParquetFile(path) as footer:
+            nanos = [
+                f.name
+                for f in footer.schema_arrow
+                if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            ]
+            num_rows = footer.metadata.num_rows
+        schema = spark.read.parquet(path).schema
+        facts = _FILES[key] = _FileFacts(schema, nanos, num_rows)
+    return facts
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -12,15 +12,30 @@ data needs:
 * session_windows — gap-based sessionization via applyInPandasWithState:
   the custom-stateful-operator pattern (state = open session per user,
   emitted when `gap` passes without events or at timeout).
+* streaming_simhash_near_dup_pairs / ..._wide — near-duplicate detection
+  per (band, bv) bucket. Banding comes from the batch near-dup core
+  (operators/dedup_scale._banded); one state function serves both
+  fingerprint widths; a batch frame runs the batch self-pair join.
+* streaming_dedup, stream_interval_join, streaming_funnel_conversions —
+  bounded-state dedup, attribution join and live funnel.
 
-Both work identically on batch DataFrames (window() and a groupBy-sort in
-batch mode), so tests validate semantics without a long-running query.
+Every operator works on batch DataFrames too (window(), a groupBy-sort or
+the batch operator in batch mode), so tests validate semantics without a
+long-running query.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from radar_output_restructure_spark.operators.dedup_scale import (
+    WIDE_BANDS,
+    WIDE_WORD_BITS,
+    WIDE_WORDS,
+    _banded,
+    _self_pairs,
+)
 
 #: two's-complement popcount mask for signed 64-bit fingerprints
 _U64 = (1 << 64) - 1
@@ -257,8 +272,86 @@ def stream_interval_join(
     return l_frame.join(r_frame, cond).drop(*[r_frame[k] for k in keys])
 
 
+def _ttl_timeout(state_ttl_s: float | None) -> str:
+    """applyInPandasWithState timeout for an optional state TTL: idle keys
+    expire after `state_ttl_s` of processing time, or never."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    if state_ttl_s is None:
+        return GroupStateTimeout.NoTimeout
+    return GroupStateTimeout.ProcessingTimeTimeout
+
+
 NEAR_DUP_PAIR_SCHEMA = "doc_a bigint, doc_b bigint, hamming int"
-_ND_STATE_SCHEMA = "docs array<bigint>, hashes array<bigint>"
+
+
+def _bucket_state_fn(words: list[str], max_hamming: int, state_ttl_s):
+    """The applyInPandasWithState function of both streaming near-dup
+    detectors: per (band, bv) bucket, the state holds the docs seen and
+    one array per fingerprint word. Each arrival popcount-verifies against
+    its bucket's state only, never the whole history."""
+
+    def fn(key, pdfs, state):
+        import pandas as pd
+
+        if state.hasTimedOut:
+            state.remove()
+            return
+        seen = list(zip(*state.get)) if state.exists else []
+        out = []
+        for pdf in pdfs:
+            # arrival order within the batch: doc id ascending for
+            # determinism (micro-batch arrival has no inherent order)
+            cols = [pdf[c].tolist() for c in ("doc", *words)]
+            for doc, *fp in sorted(zip(*cols)):
+                for seen_doc, *seen_fp in seen:
+                    # mask to 64 bits: Python ints are signed-unbounded, so
+                    # -256 ^ 0 popcounts the magnitude (1 bit) while the
+                    # batch verify's bit_count sees the two's-complement
+                    # pattern (56 bits)
+                    h = sum(
+                        ((x ^ y) & _U64).bit_count()
+                        for x, y in zip(fp, seen_fp)
+                    )
+                    if h <= max_hamming and seen_doc != doc:
+                        out.append((min(seen_doc, doc), max(seen_doc, doc), h))
+                seen.append((doc, *fp))
+        if seen:
+            state.update(tuple(list(c) for c in zip(*seen)))
+        if state_ttl_s is not None:
+            state.setTimeoutDuration(int(state_ttl_s * 1000))
+        if out:
+            yield pd.DataFrame(out, columns=["doc_a", "doc_b", "hamming"])
+
+    return fn
+
+
+def _streaming_near_dup_pairs(
+    df: DataFrame,
+    words: list[str],
+    word_bits: int,
+    bands: int,
+    max_hamming: int,
+    state_ttl_s: float | None,
+) -> DataFrame:
+    """Both modes of the streaming near-dup detectors over (doc, *words).
+    Batch frames run the batch operators' self-pair join; streams band with
+    the same `_banded` and keep per-bucket state. One banding definition
+    for both modes is what keeps them in parity."""
+    if not df.isStreaming:
+        return _self_pairs(df, "doc", words, word_bits, bands, max_hamming)
+    banded = _banded(
+        df.select("doc", *words), words, word_bits, bands, max_hamming
+    )
+    return banded.groupBy("band", "bv").applyInPandasWithState(
+        _bucket_state_fn(words, max_hamming, state_ttl_s),
+        outputStructType=NEAR_DUP_PAIR_SCHEMA,
+        stateStructType=", ".join(
+            f"{c} array<bigint>" for c in ("docs", *words)
+        ),
+        outputMode="append",
+        timeoutConf=_ttl_timeout(state_ttl_s),
+    )
 
 
 def streaming_simhash_near_dup_pairs(
@@ -287,114 +380,12 @@ def streaming_simhash_near_dup_pairs(
     sink with `foreach_batch_pair_dedup` for exact batch parity (all of a
     pair's emissions land in one micro-batch, see that helper).
 
-    On a BATCH frame: the equivalent banded self-join (delegates to the
-    batch operator's verify semantics) so tests compare modes directly.
+    On a BATCH frame: the batch operator's banded self-join itself
+    (`dedup_scale._self_pairs`), so tests compare modes directly.
     """
-    width = bits // bands
-    mask = (1 << width) - 1
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for exact recall")
-
-    # banded frame built ONCE before the mode branch (the wide variant's
-    # shape): two drifting copies of the shift/mask banding would silently
-    # break batch/stream parity
-    banded = df.select(
-        "doc",
-        "simhash",
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bv"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ),
+    return _streaming_near_dup_pairs(
+        df, ["simhash"], bits, bands, max_hamming, state_ttl_s
     )
-    if not df.isStreaming:
-        left = banded.select(
-            F.col("doc").alias("doc_a"), F.col("simhash").alias("sa"), "band", "bv"
-        )
-        right = banded.select(
-            F.col("doc").alias("doc_b"), F.col("simhash").alias("sb"), "band", "bv"
-        )
-        return (
-            left.join(right, ["band", "bv"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select(
-                "doc_a",
-                "doc_b",
-                F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-                .cast("int")
-                .alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            docs, hashes = state.get
-            docs, hashes = list(docs), list(hashes)
-        else:
-            docs, hashes = [], []
-        out_a, out_b, out_h = [], [], []
-        for pdf in pdfs:
-            # arrival order within the batch: doc id ascending for
-            # determinism (micro-batch arrival has no inherent order)
-            for doc, fp in sorted(
-                zip(pdf["doc"].tolist(), pdf["simhash"].tolist())
-            ):
-                for seen_doc, seen_fp in zip(docs, hashes):
-                    # mask to 64 bits: Python ints are signed-unbounded,
-                    # so bin(-256 ^ 0) popcounts the magnitude (1 bit)
-                    # while the batch mode's F.bit_count sees the
-                    # two's-complement 64-bit pattern (56 bits) — a
-                    # signed fingerprint producer would get false-positive
-                    # pairs and broken batch/stream parity
-                    h = bin((seen_fp ^ fp) & _U64).count("1")
-                    if h <= max_hamming and seen_doc != doc:
-                        a, b = sorted((seen_doc, doc))
-                        out_a.append(a)
-                        out_b.append(b)
-                        out_h.append(h)
-                docs.append(doc)
-                hashes.append(fp)
-        state.update((docs, hashes))
-        if state_ttl_s is not None:
-            state.setTimeoutDuration(int(state_ttl_s * 1000))
-        if out_a:
-            yield pd.DataFrame(
-                {"doc_a": out_a, "doc_b": out_b, "hamming": out_h}
-            )
-
-    return banded.groupBy("band", "bv").applyInPandasWithState(
-        fn,
-        outputStructType=NEAR_DUP_PAIR_SCHEMA,
-        stateStructType=_ND_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_s is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-_ND_STATE_SCHEMA_WIDE = (
-    "docs array<bigint>, lo array<bigint>, hi array<bigint>"
-)
 
 
 def streaming_simhash_near_dup_pairs_wide(
@@ -404,7 +395,7 @@ def streaming_simhash_near_dup_pairs_wide(
 ) -> DataFrame:
     """Streaming face of the WIDE (64-bit, 4x16-bit-band) simhash near-dup
     — the scale geometry of `operators/dedup_scale.simhash_near_dup_pairs_
-    wide` with the same per-bucket state design as
+    wide` with the same per-bucket state and batch mode as
     `streaming_simhash_near_dup_pairs`. Input: (doc, fp_lo, fp_hi).
 
     65,536 buckets per band means per-bucket state stays tiny even on
@@ -424,99 +415,8 @@ def streaming_simhash_near_dup_pairs_wide(
     emit at the arrival of the pair's LATER doc), so batch-local
     dropDuplicates is sufficient — no cross-batch dedup state needed.
     """
-    bands = 4
-    if bands <= max_hamming:
-        raise ValueError("bands must exceed max_hamming for exact recall")
-    # the ONE shared banding definition (dedup_scale._banded_wide): a third
-    # copy of the shift/mask geometry here would silently desynchronize the
-    # streaming detector from the batch operator and snapshot_neardup_delta
-    # if the geometry ever changed
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        _banded_wide,
-    )
-
-    banded = _banded_wide(df, bands=bands)
-
-    if not df.isStreaming:
-        left = banded.select(
-            F.col("doc").alias("doc_a"),
-            F.col("fp_lo").alias("la"),
-            F.col("fp_hi").alias("ha"),
-            "band",
-            "bv",
-        )
-        right = banded.select(
-            F.col("doc").alias("doc_b"),
-            F.col("fp_lo").alias("lb"),
-            F.col("fp_hi").alias("hb"),
-            "band",
-            "bv",
-        )
-        hamming = (
-            F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
-            + F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-        ).cast("int")
-        return (
-            left.join(right, ["band", "bv"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", hamming.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            docs, los, his = state.get
-            docs, los, his = list(docs), list(los), list(his)
-        else:
-            docs, los, his = [], [], []
-        out_a, out_b, out_h = [], [], []
-        for pdf in pdfs:
-            for doc, lo, hi in sorted(
-                zip(
-                    pdf["doc"].tolist(),
-                    pdf["fp_lo"].tolist(),
-                    pdf["fp_hi"].tolist(),
-                )
-            ):
-                for sd, sl, sh in zip(docs, los, his):
-                    # 64-bit masked popcount — see the narrow variant
-                    h = bin((sl ^ lo) & _U64).count("1") + bin(
-                        (sh ^ hi) & _U64
-                    ).count("1")
-                    if h <= max_hamming and sd != doc:
-                        a, b = sorted((sd, doc))
-                        out_a.append(a)
-                        out_b.append(b)
-                        out_h.append(h)
-                docs.append(doc)
-                los.append(lo)
-                his.append(hi)
-        state.update((docs, los, his))
-        if state_ttl_s is not None:
-            state.setTimeoutDuration(int(state_ttl_s * 1000))
-        if out_a:
-            yield pd.DataFrame(
-                {"doc_a": out_a, "doc_b": out_b, "hamming": out_h}
-            )
-
-    return banded.groupBy("band", "bv").applyInPandasWithState(
-        fn,
-        outputStructType=NEAR_DUP_PAIR_SCHEMA,
-        stateStructType=_ND_STATE_SCHEMA_WIDE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_s is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _streaming_near_dup_pairs(
+        df, WIDE_WORDS, WIDE_WORD_BITS, WIDE_BANDS, max_hamming, state_ttl_s
     )
 
 
@@ -613,7 +513,6 @@ def streaming_funnel_conversions(
     )
     if df.isStreaming:
         import pandas as pd
-        from pyspark.sql.streaming.state import GroupStateTimeout
 
         def fn(key, pdfs, state):
             (user_id,) = key
@@ -674,11 +573,7 @@ def streaming_funnel_conversions(
                 outputStructType=out_schema,
                 stateStructType=_FUNNEL_STATE_SCHEMA,
                 outputMode="append",
-                timeoutConf=(
-                    GroupStateTimeout.ProcessingTimeTimeout
-                    if state_ttl_s is not None
-                    else GroupStateTimeout.NoTimeout
-                ),
+                timeoutConf=_ttl_timeout(state_ttl_s),
             )
         )
 

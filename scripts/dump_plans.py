@@ -5,6 +5,10 @@ Plan-only capture (no noop execution) so before/after plan diffs can be
 taken independently of benchmarking. Note: queries whose build phase is
 eager (k-means training, persisted-index builds) still run those jobs.
 
+A query that calls `localCheckpoint` also gets DIR/<query>_checkpoints.txt:
+the formatted plan of every frame it checkpoints, in call order (the query
+plan shows a checkpoint only as `Scan ExistingRDD`).
+
 Usage: python scripts/dump_plans.py --out DIR [--sf DIR] [query ...]
 """
 
@@ -37,14 +41,35 @@ def main() -> None:
     if bad:
         sys.exit(f"unknown queries: {bad}")
     os.makedirs(args.out, exist_ok=True)
-    for name in names:
-        t0 = time.perf_counter()
-        df = registry[name](spark, args.sf)
-        plan = spark._jvm.PythonSQLUtils.explainString(
+
+    def explain(df) -> str:
+        return spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    checkpoints: list[str] = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def capture(self, eager=True, *rest, **kwargs):
+        checkpoints.append(
+            f"=== localCheckpoint #{len(checkpoints) + 1} "
+            f"(eager={eager}) ===\n{explain(self)}\n"
+        )
+        return local_checkpoint(self, eager, *rest, **kwargs)
+
+    DataFrame.localCheckpoint = capture
+    for name in names:
+        t0 = time.perf_counter()
+        checkpoints.clear()
+        df = registry[name](spark, args.sf)
         with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
-            fh.write(plan)
+            fh.write(explain(df))
+        if checkpoints:
+            path = os.path.join(args.out, f"{name}_checkpoints.txt")
+            with open(path, "w") as fh:
+                fh.write("".join(checkpoints))
         print(f"{name}: {time.perf_counter() - t0:.2f}s", flush=True)
 
 

@@ -207,3 +207,45 @@ def test_locked_topic_is_skipped_by_second_plan(tmp_path, spark):
     held.close()
     written = plan_b.run()["t"]
     assert written  # retried after release
+
+
+def test_file_uri_lock_dir_resolves_to_local_path(tmp_path, monkeypatch):
+    """A `file:` lock dir names the same directory from any cwd: two
+    replicas started in different directories contend on one lock."""
+    from radar_output_restructure_spark.object_locks import lock_manager_for
+
+    lock_dir = tmp_path / "locks"
+    for cwd, uri in (("a", f"file://{lock_dir}"), ("b", f"file:{lock_dir}")):
+        (tmp_path / cwd).mkdir()
+        monkeypatch.chdir(tmp_path / cwd)
+        mgr = lock_manager_for(uri)
+        assert isinstance(mgr, FileRemoteLockManager)
+        assert mgr.directory == str(lock_dir)
+    held = lock_manager_for(f"file://{lock_dir}").acquire_lock("t")
+    assert held is not None
+    assert (lock_dir / "t.lock").exists()
+    assert lock_manager_for(f"file:{lock_dir}").acquire_lock("t") is None
+    held.close()
+    assert not (tmp_path / "a" / "file:").exists()
+
+
+def test_unsupported_lock_dir_scheme_fails_plan_construction(tmp_path, spark):
+    """A scheme with no conditional-write lock manager (hdfs://) is a
+    configuration error at RestructurePlan construction, not a lock
+    directory created relative to the cwd."""
+    import pytest
+
+    from radar_output_restructure_spark.plans.restructure import (
+        RestructureConfig,
+        RestructurePlan,
+    )
+
+    cfg = RestructureConfig(
+        input_dir=str(tmp_path / "in"),
+        output_dir=str(tmp_path / "out"),
+        lock_dir="hdfs://nn/locks",
+    )
+    cwd = os.getcwd()
+    with pytest.raises(ValueError, match="hdfs://nn/locks"):
+        RestructurePlan(spark, cfg)
+    assert not os.path.exists(os.path.join(cwd, "hdfs:"))
