@@ -18,17 +18,17 @@ layout + Catalyst partition pruning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.similarity import (
-    _codebook_affinities,
-    _seq_sq_sum,
-    cosine,
+    _codebook,
+    _codebook_argtop,
+    _rerank,
+    _vectors,
     ivf_cells,
 )
-from math import sqrt as math_sqrt
 
 
 def write_ivf_index(
@@ -42,24 +42,15 @@ def write_ivf_index(
     """Materialize `corpus` as a cell-partitioned parquet index.
 
     Home-cell assignment is FUSED into the write scan (one Arrow pass that
-    carries the vector through, `ivf_cells` arithmetic exactly) — deriving
-    cells as a separate frame and joining back on vec_id would shuffle the
-    full corpus for a join of two copies of the same scan. The only
-    exchange in the job is the partitionBy write fan-out itself.
+    carries the vector through, `ivf_cells` arithmetic exactly: the
+    codebook arrays of `_codebook`, the home cell of `_codebook_argtop`) —
+    deriving cells as a separate frame and joining back on vec_id would
+    shuffle the full corpus for a join of two copies of the same scan. The
+    only exchange in the job is the partitionBy write fan-out itself.
     """
-    import numpy as np
     import pandas as pd
 
-    cent_rows = sorted(
-        centroids.select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
-        ).collect(),
-        key=lambda r: r.cell,
-    )
-    cells_arr = np.array([row.cell for row in cent_rows])
-    cent_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    cents = np.array(cent_lists, dtype=np.float64)
-    cnorms = np.array([math_sqrt(_seq_sq_sum(c)) for c in cent_lists])
+    cells, cents, cnorms = _codebook(centroids, id_col, vec_col)
     id_type = corpus.schema[id_col].dataType.simpleString()
     vec_type = corpus.schema[vec_col].dataType.simpleString()
     cell_type = centroids.schema[id_col].dataType.simpleString()
@@ -68,14 +59,12 @@ def write_ivf_index(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            aff = _codebook_affinities(x, cents, cnorms)
-            home = np.argsort(-aff, axis=1, kind="stable")[:, 0]
+            home = _codebook_argtop(_vectors(pdf), cents, cnorms, 1)[:, 0]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "embedding": pdf["__v"],
-                    "cell": cells_arr[home],
+                    "cell": cells[home],
                 }
             )
 
@@ -103,7 +92,9 @@ def probe_ivf_index(
     rounded cosine inside them, (sim desc, id asc) ranking), but candidate
     generation is a partition-pruned scan of only the probed cell
     directories — the dominant cost at scale is proportional to the probed
-    fraction, not the corpus.
+    fraction, not the corpus. The index rows carry their vectors, so they
+    feed the exact re-ranker (`similarity._rerank`) directly, with no join
+    back to the corpus.
     """
     query_cells = ivf_cells(
         queries, centroids, id_col, vec_col, nprobe=nprobe
@@ -113,26 +104,12 @@ def probe_ivf_index(
 
     idx = spark.read.parquet(path).filter(F.col("cell").isin(needed))
     qc = driver_gate.local_frame(spark, probe_rows, query_cells.schema)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    cand = idx.join(F.broadcast(qc), "cell").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__v"),
     )
-    sims = (
-        idx.join(F.broadcast(qc), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank(cand, queries, k, id_col, vec_col, "probe_ivf_index")
 
 
 def append_ivf_index(

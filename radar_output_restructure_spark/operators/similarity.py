@@ -1,21 +1,31 @@
 """Similarity search over embedding columns (`array<float>`).
 
-* cosine_topk            — brute-force exact top-k: broadcast the (small)
-                           query set against the corpus, dot products via
-                           zip_with/aggregate (JVM-side fold, no UDF), rank
-                           with a window. At 100 TB the corpus side stays
-                           partitioned; only queries broadcast.
-* hyperplane_lsh_buckets — sign-random-projection LSH: b deterministic
-                           pseudo-random hyperplanes hash each vector to a
-                           b-bit bucket; near neighbors collide with high
-                           probability. The scale path: bucket-join then
-                           re-rank within buckets (candidate ~ corpus/2^b).
-* cosine_topk_lsh        — the two combined: exact re-ranking over LSH
-                           candidates (approximate global recall).
+Every top-k operator here answers the same question: score a driver-small
+query set against the corpus, prune, then rank by (sim desc, neighbor_id
+asc). One private core does each of those steps once:
 
-Dot products fold left-to-right in DOUBLE, so an oracle that folds the same
-order (DuckDB list reduction) reproduces results bit-for-bit; ranking rounds
-to 6 decimals with vec_id tiebreak to stay deterministic anyway.
+* `_collect_queries`  — the one collect of the query set (ids, exact
+                        Python-float vectors, zero-guarded norms).
+* `_scan`             — the one map-only query-vs-corpus scan: a per-batch
+                        (n, nq) similarity matrix, an optional validity
+                        mask, then either the local top-k prune or a
+                        threshold. `cosine_topk` (label mask included),
+                        `cosine_topk_int8`, `cosine_topk_pq` and
+                        `cosine_range_search` differ only in their scorer.
+* `_rerank`           — the one exact re-ranker over (query_id,
+                        neighbor_id, vector) candidate rows. `exact_rerank`,
+                        both LSH operators (`_bucket_candidates`),
+                        `cosine_topk_ivf` and the persisted IVF probe end
+                        in it.
+* `_rank_topk`        — the one (sim desc, neighbor_id asc) rank tail.
+* `_codebook`, `_pq_coder`, `_adc_scorer` — the coarse codebook arrays,
+                        the PQ encoder and the one ADC accumulation shared
+                        by PQ and IVF-PQ.
+
+Dot products fold left-to-right in DOUBLE over dimensions, so an oracle
+that folds the same order (DuckDB list reduction) reproduces results
+bit-for-bit; sims round to 6 decimals Spark-exactly (`_round6_spark`) and
+neighbor_id breaks ties, so rankings stay deterministic anyway.
 """
 
 from __future__ import annotations
@@ -28,26 +38,10 @@ from pyspark.sql import functions as F
 from radar_output_restructure_spark.operators import driver_gate
 
 
-def _dot(a: Column, b: Column, dims: int | None = None) -> Column:
-    """Dot product of two array columns, folded left-to-right in double.
-
-    Two physical forms with bit-identical results (same fold order):
-
-    * dims=None (default) — zip_with+aggregate higher-order fold. Measured
-      FASTER at every scale tried (sf0.1, 600k pairs x 64 dims): the fold
-      runs on primitive double arrays inside the JVM, while the unrolled
-      alternative blows up generated-code size (192 element_at terms per
-      cosine) past what JIT handles well.
-    * dims=N — unrolled element_at sum, kept for plans where codegen
-      profiling shows the fold dominating; measure before switching.
-    """
-    if dims is not None:
-        acc: Column = F.lit(0.0)
-        for i in range(1, dims + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-                "double"
-            )
-        return acc
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns, folded left-to-right in double
+    (zip_with+aggregate: the fold runs on primitive double arrays inside
+    the JVM)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -55,19 +49,23 @@ def _dot(a: Column, b: Column, dims: int | None = None) -> Column:
     )
 
 
-def _norm(a: Column, dims: int | None = None) -> Column:
-    return F.sqrt(_dot(a, a, dims))
+def _norm(a: Column) -> Column:
+    return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column, dims: int | None = None) -> Column:
-    # zero-norm guard (module-wide convention): the numerator is 0 for a
-    # zero vector, so coalescing its norm to 1 pins cos at exactly 0.0 —
-    # under ANSI mode an unguarded 0/0 is a DIVIDE_BY_ZERO task failure,
-    # and NaN would rank differently between numpy prunes and SQL windows
-    na, nb = _norm(a, dims), _norm(b, dims)
-    na = F.when(na == F.lit(0.0), F.lit(1.0)).otherwise(na)
-    nb = F.when(nb == F.lit(0.0), F.lit(1.0)).otherwise(nb)
-    return _dot(a, b, dims) / (na * nb)
+def _vectors(pdf, col: str = "__v"):
+    """The (n, dims) float64 matrix of one Arrow batch's vector column."""
+    import numpy as np
+
+    return np.stack(pdf[col].to_numpy()).astype(np.float64)
+
+
+def _seq_norms(lists):
+    """Norms of exact Python-float vectors, each folded left-to-right
+    (`_seq_sq_sum`), unguarded."""
+    import numpy as np
+
+    return np.array([math_sqrt(_seq_sq_sum(v)) for v in lists])
 
 
 def _collect_queries(
@@ -78,10 +76,11 @@ def _collect_queries(
     label_col: str | None = None,
 ):
     """The driver-small query set every scorer ships in its closure: ONE
-    collect of (qid, qv[, ql]) sorted by qid. Returns (rows, q_lists,
-    q_norms): q_lists are exact Python-float lists so `_seq_sq_sum` and
-    `_adc_tables` fold in the oracle's order, and q_norms carry the
-    zero-norm guard. Raises on an empty query set."""
+    collect of (qid, qv[, ql]) sorted by qid. Returns (q_ids, q_lists,
+    q_norms, q_labels): q_lists are exact Python-float lists so
+    `_seq_sq_sum` and `_adc_scorer` fold in the oracle's order, q_norms
+    carry the zero-norm guard, q_labels is None without `label_col`.
+    Raises on an empty query set."""
     import numpy as np
 
     cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")]
@@ -91,8 +90,152 @@ def _collect_queries(
     if not rows:
         raise ValueError(f"{caller} requires a non-empty query set")
     q_lists = [[float(x) for x in r.qv] for r in rows]
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    return rows, q_lists, np.where(q_norms == 0.0, 1.0, q_norms)
+    q_norms = _seq_norms(q_lists)
+    labels = [r.ql for r in rows] if label_col is not None else None
+    return (
+        np.array([r.qid for r in rows]),
+        q_lists,
+        np.where(q_norms == 0.0, 1.0, q_norms),
+        labels,
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank) with rank <= k: the one ranking
+    tail of every top-k operator. (sim desc, neighbor_id asc) is a strict
+    total order, so ranks never depend on partitioning."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _scan(
+    frame: DataFrame,
+    q_ids,
+    score,
+    k: int | None = None,
+    threshold: float | None = None,
+    mask=None,
+) -> DataFrame:
+    """The one map-only query-vs-corpus scan. `frame` holds `vec_id` plus
+    whatever `score` reads; per Arrow batch `score(pdf)` returns the
+    (n, nq) rounded sims against `q_ids` and `mask(pdf)`, when given, an
+    (n, nq) validity matrix. Self-matches are never emitted.
+
+    With `k`, each batch keeps only its LOCAL top-k per query — safe
+    because (sim desc, neighbor_id asc) is a strict total order, so the
+    global top-k is contained in the union of batch top-ks — and
+    `_rank_topk` ranks tasks x queries x k rows: the ranking shuffle
+    carries kilobytes whatever the corpus size. With `threshold`, every
+    valid pair with sim >= threshold is emitted and nothing is ranked, so
+    the whole cost is one corpus scan.
+    """
+    import numpy as np
+    import pandas as pd
+
+    id_type = frame.schema["vec_id"].dataType.simpleString()
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sims = score(pdf)
+            ok = mask(pdf) if mask is not None else None
+            nbr = pdf["vec_id"].to_numpy()
+            qcol, ncol, scol = [], [], []
+            for j, qid in enumerate(q_ids):
+                keep = nbr != qid
+                if ok is not None:
+                    keep &= ok[:, j]
+                if threshold is not None:
+                    keep &= sims[:, j] >= threshold
+                sims_j, nbr_j = sims[keep, j], nbr[keep]
+                if k is not None:
+                    take = np.lexsort((nbr_j, -sims_j))[:k]
+                    sims_j, nbr_j = sims_j[take], nbr_j[take]
+                qcol.append(np.repeat(qid, len(nbr_j)))
+                ncol.append(nbr_j)
+                scol.append(sims_j)
+            if sum(map(len, ncol)):
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(qcol),
+                        "neighbor_id": np.concatenate(ncol),
+                        "sim": np.concatenate(scol),
+                    }
+                )
+
+    out = frame.mapInPandas(
+        run, f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    )
+    return out if k is None else _rank_topk(out, k)
+
+
+def _rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    caller: str,
+) -> DataFrame:
+    """The one exact candidate re-ranker: (query_id, neighbor_id, __v)
+    rows scored against their own query with the oracle's sequential
+    per-dimension fold, then `_rank_topk`.
+
+    Batch rows are grouped by query and each group folds against that one
+    query (the `_codebook_argtop` grouped-recompute trick): a dense
+    (n, nq) matrix would spend nq x the FLOPs to keep one column per row.
+    The single-column `_codebook_affinities` performs the identical IEEE
+    operations, so the scores equal the dense form bit for bit. Only
+    pairs whose query is in the collected set are scored, and
+    self-matches are dropped like everywhere in this module.
+    """
+    import numpy as np
+    import pandas as pd
+
+    q_ids, q_lists, q_norms, _ = _collect_queries(
+        queries, id_col, vec_col, caller
+    )
+    q_arr = np.array(q_lists, dtype=np.float64)
+    q_index = {q: j for j, q in enumerate(q_ids)}
+    nq = len(q_ids)
+
+    def score(batches):
+        for pdf in batches:
+            qidx = pdf["query_id"].map(q_index).fillna(-1).to_numpy()
+            keep = (qidx >= 0) & (
+                pdf["query_id"].to_numpy() != pdf["neighbor_id"].to_numpy()
+            )
+            if not keep.any():
+                continue
+            pdf, qidx = pdf[keep], qidx[keep].astype(np.int64)
+            x = _vectors(pdf)
+            sims = np.empty(len(pdf))
+            order = np.argsort(qidx, kind="stable")
+            bounds = np.searchsorted(qidx[order], np.arange(nq + 1))
+            for j in range(nq):
+                rows_j = order[bounds[j] : bounds[j + 1]]
+                if len(rows_j):
+                    sims[rows_j] = _codebook_affinities(
+                        x[rows_j], q_arr[j : j + 1], q_norms[j : j + 1]
+                    )[:, 0]
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"].to_numpy(),
+                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
+                    "sim": sims,
+                }
+            )
+
+    id_type = cand.schema["neighbor_id"].dataType.simpleString()
+    scored = cand.select("query_id", "neighbor_id", "__v").mapInPandas(
+        score, f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    )
+    return _rank_topk(scored, k)
 
 
 def cosine_topk(
@@ -110,19 +253,15 @@ def cosine_topk(
     excluded — the hard-negative-mining mode (contrastive training wants,
     per anchor, the most-similar vectors of a DIFFERENT class: negatives
     the model currently confuses). Same map-only scan either way — the
-    label test is one extra vectorized mask per batch.
+    label test is the `_scan` validity mask.
 
-    MAP-ONLY scoring with per-batch pruning: the query set is driver-small
-    by contract (the same object the earlier broadcast-crossJoin shipped),
-    so it is collected once and scored inside a mapInPandas closure with
-    the oracle's exact fold order (`_codebook_affinities` — the machinery
-    the IVF coarse quantizer already uses). Each Arrow batch keeps only its
-    LOCAL top-k per query — safe because (sim desc, neighbor_id asc) is a
-    strict total order, so the global top-k is contained in the union of
-    batch top-ks — and the final window ranks tasks x queries x k rows.
-    The earlier plan windowed ALL corpus x queries scored rows (one
-    corpus-sized shuffle per run — at 100 TB that shuffle IS the job);
-    this one shuffles kilobytes regardless of corpus size.
+    MAP-ONLY scoring with per-batch pruning (`_scan`): the query set is
+    driver-small by contract, so it is collected once and scored inside a
+    mapInPandas closure with the oracle's exact fold order
+    (`_codebook_affinities` — the machinery the IVF coarse quantizer
+    already uses). The earlier plan windowed ALL corpus x queries scored
+    rows (one corpus-sized shuffle per run — at 100 TB that shuffle IS the
+    job); this one shuffles kilobytes regardless of corpus size.
     """
     import numpy as np
     import pandas as pd
@@ -131,66 +270,39 @@ def cosine_topk(
     # would recompute a nondeterministic query frame (sample()/limit() over
     # an unordered source) into a DIFFERENT row set — KeyError at best, a
     # silently wrong exclusion mask at worst — and doubles the driver pull.
-    q_rows, q_lists, q_norms = _collect_queries(
+    q_ids, q_lists, q_norms, q_labels = _collect_queries(
         queries, id_col, vec_col, "cosine_topk", exclude_label_col
     )
-    q_labels = None
-    if exclude_label_col is not None:
-        q_labels = [r.ql for r in q_rows]
     q_arr = np.array(q_lists, dtype=np.float64)
-    q_ids_arr = np.array([r.qid for r in q_rows])
-    nq = len(q_rows)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            nbr = pdf["vec_id"].to_numpy()
-            lbl = pdf["__l"].to_numpy() if q_labels is not None else None
-            aff = _codebook_affinities(x, q_arr, q_norms)  # (n, nq) rounded
-            lbl_na = pd.isna(lbl) if lbl is not None else None
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                if lbl is not None:
-                    # IS DISTINCT FROM semantics, pinned against the oracle:
-                    # NULL label vs NULL label = SAME class (excluded);
-                    # NULL vs anything else = different (kept). Arrow hands
-                    # int labels with NULLs to pandas as float NaN, where
-                    # plain != would call NaN != NaN True and diverge.
-                    qj = q_labels[j]
-                    if qj is None or (isinstance(qj, float) and qj != qj):
-                        valid &= ~lbl_na
-                    else:
-                        valid &= lbl_na | (lbl != qj)
-                sims_j = aff[valid, j]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
-
     cols = [F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")]
+    mask = None
     if exclude_label_col is not None:
         cols.append(F.col(exclude_label_col).alias("__l"))
-    pruned = corpus.select(*cols).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+
+        def mask(pdf):
+            # IS DISTINCT FROM semantics, pinned against the oracle: NULL
+            # label vs NULL label = SAME class (excluded); NULL vs anything
+            # else = different (kept). Arrow hands int labels with NULLs to
+            # pandas as float NaN, where plain != would call NaN != NaN
+            # True and diverge.
+            lbl = pdf["__l"].to_numpy()
+            na = pd.isna(lbl)
+            return np.stack(
+                [
+                    ~na
+                    if ql is None or (isinstance(ql, float) and ql != ql)
+                    else na | (lbl != ql)
+                    for ql in q_labels
+                ],
+                axis=1,
+            )
+
+    return _scan(
+        corpus.select(*cols),
+        q_ids,
+        lambda pdf: _codebook_affinities(_vectors(pdf), q_arr, q_norms),
+        k=k,
+        mask=mask,
     )
 
 
@@ -207,53 +319,24 @@ def cosine_range_search(
     candidate generation, recall-oriented retrieval evaluation).
 
     STRICTLY MAP-ONLY — even the top-k's kilobyte ranking shuffle is gone:
-    the threshold filter is decided per row inside the scoring closure, so
+    `_scan` decides the threshold per row inside the scoring closure, so
     the operator's entire cost is one corpus scan regardless of corpus
-    size, and its output is exactly the matching pairs. Queries are
-    driver-small by contract (same as cosine_topk) and scored with the
-    oracle's exact fold order (`_codebook_affinities`, round-6), so the
-    >= comparison happens on engine-identical doubles.
+    size, and its output is exactly the matching pairs. Scores are
+    `cosine_topk`'s (`_codebook_affinities`, round-6), so the >=
+    comparison happens on engine-identical doubles.
     """
     import numpy as np
-    import pandas as pd
 
-    q_rows, q_lists, q_norms = _collect_queries(
+    q_ids, q_lists, q_norms, _ = _collect_queries(
         queries, id_col, vec_col, "cosine_range_search"
     )
     q_arr = np.array(q_lists, dtype=np.float64)
-    q_ids_arr = np.array([r.qid for r in q_rows])
-    nq = len(q_ids_arr)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            nbr = pdf["vec_id"].to_numpy()
-            aff = _codebook_affinities(x, q_arr, q_norms)  # (n, nq) rounded
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                keep = (aff[:, j] >= threshold) & (nbr != q_ids_arr[j])
-                if not keep.any():
-                    continue
-                qcol.append(np.repeat(q_ids_arr[j], int(keep.sum())))
-                ncol.append(nbr[keep])
-                scol.append(aff[keep, j])
-            if qcol:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(qcol),
-                        "neighbor_id": np.concatenate(ncol),
-                        "sim": np.concatenate(scol),
-                    }
-                )
-
-    return corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(score, out_schema)
+    return _scan(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")),
+        q_ids,
+        lambda pdf: _codebook_affinities(_vectors(pdf), q_arr, q_norms),
+        threshold=threshold,
+    )
 
 
 def _plane_weight(plane: int, dim: int) -> int:
@@ -384,6 +467,40 @@ def auto_num_planes(
     return min(31, max(min_planes, math.ceil(math.log2(n_vectors / target_bucket))))
 
 
+def _bucket_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    num_planes: int,
+    num_tables: int,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+    multiprobe: bool,
+) -> DataFrame:
+    """Distinct (query_id, neighbor_id) pairs sharing a (table, bucket):
+    the LSH candidate builder of both LSH operators. With `multiprobe`
+    each query ALSO probes the `num_planes` buckets at Hamming distance 1
+    (one sign bit flipped) in every table — expansion on the QUERY side
+    only (queries x L x (b+1) rows, broadcast), so the corpus-side plan is
+    the single-probe one."""
+    cb = hyperplane_lsh_buckets(corpus, num_planes, dims, id_col, vec_col, num_tables)
+    qb = hyperplane_lsh_buckets(queries, num_planes, dims, id_col, vec_col, num_tables)
+    bucket = F.col("bucket")
+    if multiprobe:
+        bucket = F.explode(
+            F.array(
+                bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
+            )
+        )
+    qp = qb.select(F.col("vec_id").alias("query_id"), "table", bucket.alias("bucket"))
+    return (
+        cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
+        .join(F.broadcast(qp), ["table", "bucket"])
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+
+
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -395,47 +512,30 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates = docs sharing any (table, bucket) with
-    the query, exact cosine re-rank over the candidate union.
+    the query, exact cosine re-rank (`exact_rerank`) over the candidate
+    union.
 
     At 100 TB: corpus buckets are precomputed once (map-only, L small ints
     per vector) and bucket-partitioned on disk; per-query work is L buckets'
     worth of exact scoring instead of the full corpus.
     """
-    cb = hyperplane_lsh_buckets(corpus, num_planes, dims, id_col, vec_col, num_tables)
-    qb = hyperplane_lsh_buckets(queries, num_planes, dims, id_col, vec_col, num_tables)
-    cand = (
-        cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
-        .join(
-            F.broadcast(qb.select(F.col("vec_id").alias("query_id"), "table", "bucket")),
-            ["table", "bucket"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    cand = _bucket_candidates(
+        corpus, queries, num_planes, num_tables, dims, id_col, vec_col, False
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)
 
 
-def _adc_tables(q_lists, codebooks, dims: int, m: int):
-    """Shared ADC lookup-table construction for PQ and IVF-PQ scoring:
-    tq[s][q, cell] = dot of the query subvector with the centroid
-    (sequential over subdims — the oracle fold order), csq[s][cell] =
-    centroid self-dot. Fold-order-critical arithmetic lives ONCE so
-    PQ-vs-IVFPQ score parity cannot drift."""
+def _adc_scorer(q_lists, q_norms, codebooks, dims: int, m: int):
+    """The one ADC (asymmetric distance) scorer of PQ and IVF-PQ.
+
+    Lookup tables first: tq[s][q, cell] = dot of the query subvector with
+    the centroid (sequential over subdims — the oracle fold order) and
+    csq[s][cell] = centroid self-dot. The returned `sims(codes, qidx=None)`
+    accumulates the subspace terms left to right, ((t0 + t1) + t2) + t3,
+    and rounds with `_round6_spark`: dense (n, nq) sims against every query
+    when `qidx` is None, else (n,) sims of row i against query qidx[i].
+    Fold-order-critical arithmetic lives ONCE so PQ-vs-IVFPQ score parity
+    cannot drift."""
     import numpy as np
 
     sd = dims // m
@@ -451,7 +551,24 @@ def _adc_tables(q_lists, codebooks, dims: int, m: int):
                 tab[qi, ci] = acc
         tq.append(tab)
         csq.append(np.array([_seq_sq_sum(c) for c in cents]))
-    return tq, csq
+
+    def sims(codes, qidx=None):
+        def term(s):
+            return tq[s].T[codes[s]] if qidx is None else tq[s][qidx, codes[s]]
+
+        num, sq = term(0), csq[0][codes[0]]
+        for s in range(1, m):
+            num = num + term(s)
+            sq = sq + csq[s][codes[s]]
+        # zero-norm guard: an all-zero reconstruction (a zero vector's
+        # codes) pins sim at 0.0 instead of NaN (see _codebook_affinities)
+        rnorm = np.sqrt(sq)
+        rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
+        if qidx is None:
+            return _round6_spark(num / (rnorm[:, None] * q_norms))
+        return _round6_spark(num / (rnorm * q_norms[qidx]))
+
+    return sims
 
 
 def near_dup_pairs_from_buckets(
@@ -716,6 +833,24 @@ def _collect_centroids(
     )
 
 
+def _codebook(
+    centroids: DataFrame, id_col: str, vec_col: str, rows: list | None = None
+):
+    """(cell ids, centroid matrix, centroid norms) of a coarse codebook,
+    from `rows` or one `_collect_centroids`: the arrays every home-cell
+    assignment (`_codebook_argtop`) ships in its closure."""
+    import numpy as np
+
+    if rows is None:
+        rows = _collect_centroids(centroids, id_col, vec_col)
+    lists = [[float(x) for x in r.centroid] for r in rows]
+    return (
+        np.array([r.cell for r in rows]),
+        np.array(lists, dtype=np.float64),
+        _seq_norms(lists),
+    )
+
+
 def ivf_cells(
     df: DataFrame,
     centroids: DataFrame,
@@ -730,46 +865,38 @@ def ivf_cells(
     The IVF coarse quantizer: corpus vectors index with nprobe=1 (their one
     home cell); queries probe several. Determinism: cosine rounded to 6
     decimals (Spark-exact HALF_UP, `_round6_spark`), centroid id breaks
-    ties (stable argsort over ascending cell order).
+    ties (`_codebook_argtop` over ascending cell order).
 
     MAP-ONLY and Arrow-vectorized: a codebook is driver-small by definition
     (k vectors — the same object every ANN system broadcasts), so it is
     collected once and ships inside the mapInPandas closure; each batch
-    ranks against it with numpy using the oracle's exact fold order
-    (`_codebook_affinities`). History of this plan: broadcast crossJoin +
-    row_number window (shuffled corpus x k rows — at 100 TB that shuffle IS
-    the job), then packed-literal array_sort HOFs (map-only but interpreted
-    — the k x dims fold per row dominated the ANN bench the same way the
-    LSH folds did). Cells are then bucket-partitioned on disk so probes
-    read only the matching buckets.
+    ranks against it with numpy using the oracle's exact fold order.
+    History of this plan: broadcast crossJoin + row_number window (shuffled
+    corpus x k rows — at 100 TB that shuffle IS the job), then
+    packed-literal array_sort HOFs (map-only but interpreted — the
+    k x dims fold per row dominated the ANN bench the same way the LSH
+    folds did). Cells are then bucket-partitioned on disk so probes read
+    only the matching buckets.
     """
     import numpy as np
     import pandas as pd
 
-    if cent_rows is None:
-        cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    cells = [row.cell for row in cent_rows]
-    cent_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    cents = np.array(cent_lists, dtype=np.float64)
-    cnorms = np.array([math_sqrt(_seq_sq_sum(c)) for c in cent_lists])
+    cells, cents, cnorms = _codebook(centroids, id_col, vec_col, cent_rows)
     cell_type = centroids.schema[id_col].dataType.simpleString()
     id_type = df.schema[id_col].dataType.simpleString()
     take = min(nprobe, len(cells))
-    cells_arr = np.array(cells)
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            order = _codebook_argtop(x, cents, cnorms, take)
-            n = x.shape[0]
+            order = _codebook_argtop(_vectors(pdf), cents, cnorms, take)
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(pdf["vec_id"].to_numpy(), take),
-                    "cell": cells_arr[order].reshape(-1),
+                    "cell": cells[order].reshape(-1),
                     "cell_rank": np.tile(
-                        np.arange(1, take + 1, dtype=np.int32), n
+                        np.arange(1, take + 1, dtype=np.int32), len(pdf)
                     ),
                 }
             )
@@ -910,9 +1037,8 @@ def cosine_topk_int8(
     an INTEGER dot over ±127 codes divided by two integer-sum norms —
     exact in any accumulation order on any engine (the one arithmetic in
     this module where no fold-order discipline is needed), with a single
-    rounded division at the end. Same per-batch local top-k prune as
-    `cosine_topk`: kilobytes reach the final window regardless of corpus
-    size.
+    rounded division at the end. The same `_scan` as `cosine_topk`:
+    kilobytes reach the final window regardless of corpus size.
 
     Quantization happens INSIDE the Arrow scorer (`_int8_codes_np`), not
     as a JVM Column transform: higher-order array functions evaluate
@@ -923,63 +1049,31 @@ def cosine_topk_int8(
     exactly in any order (numpy's int64 matmul has no BLAS path).
     """
     import numpy as np
-    import pandas as pd
 
-    q_rows, q_lists, _ = _collect_queries(
+    q_ids, q_lists, _, _ = _collect_queries(
         queries, id_col, vec_col, "cosine_topk_int8"
     )
-    q_ids_arr = np.array([r.qid for r in q_rows])
     q_codes = _int8_codes_np(np.array(q_lists, dtype=np.float64), bits)
-    q_norms = np.sqrt((q_codes * q_codes).sum(axis=1).astype(np.float64))
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    nq = len(q_rows)
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    def norms(codes):
+        # zero-norm guard (see _codebook_affinities): the numerator is 0
+        # anyway, and NaN would rank partition-dependently
+        n = np.sqrt((codes * codes).sum(axis=1).astype(np.float64))
+        return np.where(n == 0.0, 1.0, n)
 
+    q_norms = norms(q_codes)
     q_codes_f = q_codes.astype(np.float64)
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            x = _int8_codes_np(raw, bits)
-            nbr = pdf["vec_id"].to_numpy()
-            dots = x.astype(np.float64) @ q_codes_f.T
-            x_norms = np.sqrt((x * x).sum(axis=1).astype(np.float64))
-            # zero-norm guard (see _codebook_affinities): numerator is 0
-            # anyway, and NaN would rank partition-dependently
-            x_norms = np.where(x_norms == 0.0, 1.0, x_norms)
-            sims = _round6_spark(
-                dots / (q_norms[None, :] * x_norms[:, None])
-            )
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                sims_j = sims[valid, j]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
+    def score(pdf):
+        x = _int8_codes_np(_vectors(pdf), bits)
+        dots = x.astype(np.float64) @ q_codes_f.T
+        return _round6_spark(dots / (q_norms[None, :] * norms(x)[:, None]))
 
-    pruned = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _scan(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")),
+        q_ids,
+        score,
+        k=k,
     )
 
 
@@ -1222,7 +1316,7 @@ def train_pq_codebooks(
     for _ in range(iters):
         lists = [[[mc / 1e6 for mc in cm] for cm in sub] for sub in cents]
         c_arrs = [np.array(cl, dtype=np.float64) for cl in lists]
-        c_norms = [np.array([math.sqrt(_seq_sq_sum(c)) for c in cl]) for cl in lists]
+        c_norms = [_seq_norms(cl) for cl in lists]
         if probe is not None:
             counts, sums = _lloyd_partials(xm, bounds, c_arrs, c_norms)
         else:
@@ -1261,17 +1355,11 @@ def pq_encode(
     the corpus to m small ints per vector (64 floats -> 4 bytes at the
     default geometry) with zero shuffle at any corpus size.
     """
-    import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    cents = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    cnorms = [
-        np.array([math_sqrt(_seq_sq_sum(c)) for c in cb]) for cb in codebooks
-    ]
-    sd = cents[0].shape[1]
+    code_cols = [f"code_{s}" for s in range(len(codebooks))]
+    pq_codes = _pq_coder(codebooks)
     id_type = df.schema[id_col].dataType.simpleString()
-    code_cols = [f"code_{s}" for s in range(m)]
     out_schema = f"vec_id {id_type}, " + ", ".join(
         f"{c} int" for c in code_cols
     )
@@ -1280,17 +1368,35 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
             cols = {"vec_id": pdf["vec_id"].to_numpy()}
-            for s in range(m):
-                cols[code_cols[s]] = _codebook_argtop(
-                    x[:, s * sd : (s + 1) * sd], cents[s], cnorms[s], 1
-                )[:, 0].astype(np.int32)
+            cols.update(zip(code_cols, pq_codes(_vectors(pdf))))
             yield pd.DataFrame(cols)
 
     return df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
     ).mapInPandas(encode, out_schema)
+
+
+def _pq_coder(codebooks):
+    """The PQ encoder of `pq_encode` and the IVF-PQ index pass: returns
+    `codes(x)`, the m int32 arrays of each subvector's nearest codebook
+    centroid (`_codebook_argtop`: 6-decimal cosine, ties to the lowest
+    cell)."""
+    import numpy as np
+
+    cents = [np.array(cb, dtype=np.float64) for cb in codebooks]
+    norms = [_seq_norms(cb) for cb in codebooks]
+    sd = cents[0].shape[1]
+
+    def codes(x):
+        return [
+            _codebook_argtop(x[:, s * sd : (s + 1) * sd], c, n, 1)[:, 0].astype(
+                np.int32
+            )
+            for s, (c, n) in enumerate(zip(cents, norms))
+        ]
+
+    return codes
 
 
 def cosine_topk_pq(
@@ -1316,73 +1422,21 @@ def cosine_topk_pq(
 
     The 100 TB shape: codes are 16x smaller than float32 vectors (4 x 1B
     codes vs 64 x 4B floats), scoring is a map-only gather over two small
-    tables per query, and — like `cosine_topk` — each batch prunes to its
-    local top-k so the final window ranks tasks x queries x k rows.
+    tables per query, and — the same `_scan` as `cosine_topk` — each
+    batch prunes to its local top-k so the final window ranks
+    tasks x queries x k rows.
     """
-    import numpy as np
-    import pandas as pd
-
     codebooks = train_pq_codebooks(
         corpus, m, codebook_k, iters, id_col, vec_col, dims
     )
     codes = pq_encode(corpus, codebooks, id_col, vec_col)
-
-    q_rows, q_lists, q_norms = _collect_queries(
+    q_ids, q_lists, q_norms, _ = _collect_queries(
         queries, id_col, vec_col, "cosine_topk_pq"
     )
-    q_ids_arr = np.array([r.qid for r in q_rows])
-    nq = len(q_lists)
-    # per-subspace ADC tables (shared with cosine_topk_ivfpq): the
-    # reconstruction-dot / reconstruction-norm pieces in oracle fold order
-    tq, csq = _adc_tables(q_lists, codebooks, dims, m)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    adc = _adc_scorer(q_lists, q_norms, codebooks, dims, m)
     code_cols = [f"code_{s}" for s in range(m)]
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nbr = pdf["vec_id"].to_numpy()
-            code_arrs = [pdf[c].to_numpy() for c in code_cols]
-            # accumulate subspace terms in order: ((t0 + t1) + t2) + t3 —
-            # the oracle's explicit left-to-right sum
-            num = tq[0][:, code_arrs[0]]  # (nq, n)
-            den_inner = csq[0][code_arrs[0]]  # (n,)
-            for s in range(1, m):
-                num = num + tq[s][:, code_arrs[s]]
-                den_inner = den_inner + csq[s][code_arrs[s]]
-            # zero-norm guard: an all-zero reconstruction (zero vector's
-            # codes) pins sim at 0.0 instead of NaN (see _codebook_affinities)
-            rnorm = np.sqrt(den_inner)
-            rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
-            den = q_norms[:, None] * rnorm[None, :]
-            sim = _round6_spark(num / den)
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                sims_j = sim[j, valid]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
-
-    pruned = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _scan(
+        codes, q_ids, lambda pdf: adc([pdf[c].to_numpy() for c in code_cols]), k=k
     )
 
 
@@ -1406,8 +1460,9 @@ def cosine_topk_ivf(
 ) -> DataFrame:
     """IVF-flat approximate top-k: coarse-quantize the corpus (one cell per
     vector), probe the query's `nprobe` nearest cells, exact cosine re-rank
-    inside the probed cells. The complement of the LSH path: recall comes
-    from probing more cells instead of more hash tables."""
+    (`exact_rerank`) inside the probed cells. The complement of the LSH
+    path: recall comes from probing more cells instead of more hash
+    tables."""
     cent_rows = _collect_centroids(centroids, id_col, vec_col)
     corpus_cells = ivf_cells(
         corpus, centroids, id_col, vec_col, nprobe=1, cent_rows=cent_rows
@@ -1417,25 +1472,10 @@ def cosine_topk_ivf(
     ).select(F.col("vec_id").alias("query_id"), "cell")
     cand = (
         corpus_cells.join(F.broadcast(query_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)
 
 
 def cosine_topk_ivfpq(
@@ -1458,9 +1498,8 @@ def cosine_topk_ivfpq(
     ADC-scored — raw vectors are never touched at query time AND most of
     the corpus is never scored at all.
 
-    (query_id, neighbor_id, sim, rank); sim is the rounded ADC cosine with
-    the shared exact fold (subspace terms accumulate left-to-right,
-    `_round6_spark`), identical to `cosine_topk_pq`'s scoring, so the SQL
+    (query_id, neighbor_id, sim, rank); sim is the rounded ADC cosine of
+    `_adc_scorer`, identical to `cosine_topk_pq`'s scoring, so the SQL
     oracle replays training + encoding + probing + ADC bit-for-bit.
 
     The 100 TB shape: the corpus-side index row (home cell + m-byte PQ
@@ -1482,21 +1521,12 @@ def cosine_topk_ivfpq(
 
     # fused encode + home-cell assignment: one Arrow pass, zero shuffle
     cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    coarse_cells = np.array([row.cell for row in cent_rows])
-    coarse_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    coarse = np.array(coarse_lists, dtype=np.float64)
-    coarse_norms = np.array(
-        [math_sqrt(_seq_sq_sum(c)) for c in coarse_lists]
-    )
-    pq_cents = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    pq_norms = [
-        np.array([math_sqrt(_seq_sq_sum(c)) for c in cb]) for cb in codebooks
-    ]
-    sd_enc = dims // m
-    id_type_in = corpus.schema[id_col].dataType.simpleString()
+    cells, coarse, coarse_norms = _codebook(centroids, id_col, vec_col, cent_rows)
+    pq_codes = _pq_coder(codebooks)
+    id_type = corpus.schema[id_col].dataType.simpleString()
     cell_type = centroids.schema[id_col].dataType.simpleString()
     code_cols = [f"code_{s}" for s in range(m)]
-    index_schema = f"vec_id {id_type_in}, cell {cell_type}, " + ", ".join(
+    index_schema = f"vec_id {id_type}, cell {cell_type}, " + ", ".join(
         f"{c} int" for c in code_cols
     )
 
@@ -1504,19 +1534,10 @@ def cosine_topk_ivfpq(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+            x = _vectors(pdf)
             home = _codebook_argtop(x, coarse, coarse_norms, 1)[:, 0]
-            cols = {
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": coarse_cells[home],
-            }
-            for s in range(m):
-                cols[code_cols[s]] = _codebook_argtop(
-                    x[:, s * sd_enc : (s + 1) * sd_enc],
-                    pq_cents[s],
-                    pq_norms[s],
-                    1,
-                )[:, 0].astype(np.int32)
+            cols = {"vec_id": pdf["vec_id"].to_numpy(), "cell": cells[home]}
+            cols.update(zip(code_cols, pq_codes(x)))
             yield pd.DataFrame(cols)
 
     indexed = corpus.select(
@@ -1530,49 +1551,28 @@ def cosine_topk_ivfpq(
         F.col("vec_id") != F.col("query_id")
     )
 
-    q_rows, q_lists, q_norms = _collect_queries(
+    q_ids, q_lists, q_norms, _ = _collect_queries(
         queries, id_col, vec_col, "cosine_topk_ivfpq"
     )
-    q_ids = np.array([r.qid for r in q_rows])
-    tq, csq = _adc_tables(q_lists, codebooks, dims, m)  # shared with PQ
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-    code_cols = [f"code_{s}" for s in range(m)]
+    adc = _adc_scorer(q_lists, q_norms, codebooks, dims, m)
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             qidx = np.searchsorted(q_ids, pdf["query_id"].to_numpy())
-            code_arrs = [pdf[c].to_numpy() for c in code_cols]
-            # left-to-right subspace accumulation — the oracle's fold order
-            num = tq[0][qidx, code_arrs[0]]
-            den_inner = csq[0][code_arrs[0]]
-            for s in range(1, m):
-                num = num + tq[s][qidx, code_arrs[s]]
-                den_inner = den_inner + csq[s][code_arrs[s]]
-            rnorm = np.sqrt(den_inner)  # zero-norm guard, see the PQ scorer
-            rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
-            sim = _round6_spark(num / (q_norms[qidx] * rnorm))
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].to_numpy(),
                     "neighbor_id": pdf["vec_id"].to_numpy(),
-                    "sim": sim,
+                    "sim": adc([pdf[c].to_numpy() for c in code_cols], qidx),
                 }
             )
 
     sims = cand.select("query_id", "vec_id", *code_cols).mapInPandas(
-        score, out_schema
+        score, f"query_id {id_type}, neighbor_id {id_type}, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(sims, k)
 
 
 def exact_rerank(
@@ -1589,89 +1589,24 @@ def exact_rerank(
     4-byte codes), then ONLY those candidates' raw vectors are read and
     scored exactly, and the top-k comes from the exact scores. Recovers
     most of the recall the code quantization loses while still never
-    scanning raw vectors for the untouched corpus.
+    scanning raw vectors for the untouched corpus. The LSH and IVF-flat
+    operators end here too, with their bucket / cell candidates.
 
     Plan shape at 100 TB: `shortlist` is (queries x refine*k) rows —
     kilobytes — so it BROADCASTS into a semi-join-shaped inner join that
-    prunes the corpus scan to candidate rows only; scoring is the same
-    map-only Arrow closure as `cosine_topk` (the oracle's exact
-    sequential-over-dimensions fold), and the final window ranks a
-    shortlist-sized frame. One corpus scan, no corpus shuffle.
+    prunes the corpus scan to candidate rows only; scoring is `_rerank`
+    (the oracle's exact sequential-over-dimensions fold), and the final
+    window ranks a shortlist-sized frame. One corpus scan, no corpus
+    shuffle.
 
     (query_id, neighbor_id, sim, rank) with exact sims, rank <= k.
+    Shortlist rows whose query is not in `queries`, and self-matches, are
+    dropped.
     """
-    import numpy as np
-    import pandas as pd
-
-    q_rows, q_lists, q_norms = _collect_queries(
-        queries, id_col, vec_col, "exact_rerank"
-    )
-    q_arr = np.array(q_lists, dtype=np.float64)
-    q_index = {r.qid: i for i, r in enumerate(q_rows)}
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-
-    cand = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
-        )
-        .join(
-            F.broadcast(shortlist.select("query_id", "neighbor_id")),
-            "neighbor_id",
-        )
-        # self-matches excluded like every top-k operator here (the IVF-PQ
-        # shortlist never proposes them, but a caller-built one might)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            # group batch rows by their OWN query and fold only against
-            # that query (the _codebook_argtop grouped-recompute trick):
-            # a dense (n, nq) affinity matrix would spend nq x the FLOPs
-            # and keep one column per row. The per-query slice uses the
-            # identical sequential per-dimension fold, so the scores are
-            # bit-equal to the dense form.
-            qidx = pdf["query_id"].map(q_index).to_numpy()
-            sims = np.empty(len(pdf))
-            order = np.argsort(qidx, kind="stable")
-            bounds = np.searchsorted(qidx[order], np.arange(len(q_arr) + 1))
-            n_dims = x.shape[1]
-            for j in range(len(q_arr)):
-                lo, hi = bounds[j], bounds[j + 1]
-                if lo == hi:
-                    continue
-                rows_j = order[lo:hi]
-                xj = x[rows_j]
-                qj = q_arr[j]
-                acc = np.zeros(hi - lo)
-                self_dot = np.zeros(hi - lo)
-                for d in range(n_dims):
-                    xd = xj[:, d]
-                    acc = acc + xd * qj[d]
-                    self_dot = self_dot + xd * xd
-                vn = np.sqrt(self_dot)
-                vn = np.where(vn == 0.0, 1.0, vn)
-                sims[rows_j] = _round6_spark(acc / (vn * q_norms[j]))
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "sim": sims,
-                }
-            )
-
-    scored = cand.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    cand = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
+    ).join(F.broadcast(shortlist.select("query_id", "neighbor_id")), "neighbor_id")
+    return _rerank(cand, queries, k, id_col, vec_col, "exact_rerank")
 
 
 def semantic_dedup(
@@ -1946,31 +1881,24 @@ def decontaminate_vs_eval(
     against it map-only, so the plan is one corpus scan with zero
     shuffles — at 100 TB the cost is the scan itself.
 
-    Float parity: similarities accumulate SEQUENTIALLY over dims (the
-    DuckDB list_sum fold order) and round via `_round6_spark` BEFORE the
-    per-row max, so `max_eval_sim` is a max over already-identical
-    rounded values; `nearest_eval` ties break to the smallest eval id
-    (np.argmax first-hit over ids sorted ascending = SQL min() over the
-    argmax set). Zero-norm vectors score 0 against everything.
+    Float parity: the eval set is collected like any query set
+    (`_collect_queries`) and scored with `_codebook_affinities`:
+    similarities accumulate SEQUENTIALLY over dims (the DuckDB list_sum
+    fold order) and round via `_round6_spark` BEFORE the per-row max, so
+    `max_eval_sim` is a max over already-identical rounded values;
+    `nearest_eval` ties break to the smallest eval id (np.argmax first-hit
+    over ids sorted ascending = SQL min() over the argmax set). Zero-norm
+    vectors score 0 against everything (the guarded norm divides a zero
+    numerator).
     """
     import numpy as np
     import pandas as pd
 
-    rows = (
-        eval_df.select(F.col(id_col).alias("eid"), F.col(vec_col).alias("ev"))
-        .sort("eid")
-        .collect()
+    q_ids, q_lists, q_norms, _ = _collect_queries(
+        eval_df, id_col, vec_col, "decontaminate_vs_eval"
     )
-    if not rows:
-        raise ValueError("eval set is empty")
-    eval_ids = np.array([r.eid for r in rows], dtype=np.int64)
-    ev = np.array([list(r.ev) for r in rows], dtype=np.float64)  # (e, dims)
-    dims = ev.shape[1]
-    esq = np.zeros(len(rows))
-    for d in range(dims):  # sequential fold == oracle list_sum
-        esq = esq + ev[:, d] * ev[:, d]
-    enorm = np.sqrt(esq)
-    enorm_safe = np.where(enorm == 0, 1.0, enorm)
+    eval_ids = q_ids.astype(np.int64)
+    ev = np.array(q_lists, dtype=np.float64)  # (e, dims)
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = (
@@ -1982,18 +1910,7 @@ def decontaminate_vs_eval(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            xsq = np.zeros(len(pdf))
-            acc = np.zeros((len(pdf), len(eval_ids)))
-            for d in range(dims):
-                xd = x[:, d]
-                xsq = xsq + xd * xd
-                acc = acc + xd[:, None] * ev[None, :, d]
-            xnorm = np.sqrt(xsq)
-            denom = np.where(xnorm == 0, 1.0, xnorm)[:, None] * enorm_safe
-            sims = _round6_spark(acc / denom)
-            sims[xnorm == 0, :] = 0.0
-            sims[:, enorm == 0] = 0.0
+            sims = _codebook_affinities(_vectors(pdf), ev, q_norms)
             best = sims.max(axis=1)
             nearest = eval_ids[np.argmax(sims, axis=1)]
             yield pd.DataFrame(
@@ -2144,51 +2061,12 @@ def cosine_topk_lsh_multiprobe(
     b+1 buckets per table buys roughly the recall of (b+1)x as many
     tables while storing (and bucket-building over) L tables' worth of
     corpus — here 3 tables x 5 probes approach the 10-table single-probe
-    index (ann_lsh_topk) at 30% of the index footprint. Probe expansion
-    happens on the QUERY side only (queries x L x (b+1) rows, broadcast),
-    so the corpus-side plan is identical to the single-probe index: one
-    map-only bucket pass, join, per-query top-k.
+    index (ann_lsh_topk) at 30% of the index footprint. Only the query
+    buckets widen (`_bucket_candidates`), so the corpus-side plan is
+    identical to the single-probe index: one map-only bucket pass, join,
+    `exact_rerank`.
     """
-    cb = hyperplane_lsh_buckets(
-        corpus, num_planes, dims, id_col, vec_col, num_tables
+    cand = _bucket_candidates(
+        corpus, queries, num_planes, num_tables, dims, id_col, vec_col, True
     )
-    qb = hyperplane_lsh_buckets(
-        queries, num_planes, dims, id_col, vec_col, num_tables
-    )
-    probes = [F.col("bucket")] + [
-        F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)
-    ]
-    qp = qb.select(
-        F.col("vec_id").alias("query_id"),
-        "table",
-        F.explode(F.array(*probes)).alias("bucket"),
-    )
-    cand = (
-        cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
-        .join(F.broadcast(qp), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)

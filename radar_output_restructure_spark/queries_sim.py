@@ -33,7 +33,10 @@ from radar_output_restructure_spark.operators.similarity import (
 from radar_output_restructure_spark.operators.text import FP_PRIME, horner_fold_sql
 from radar_output_restructure_spark.queries import register
 from radar_output_restructure_spark.queries_docs import SQL_SHINGLES
-from radar_output_restructure_spark.sources.tables import load_table
+from radar_output_restructure_spark.sources.tables import (
+    load_table,
+    table_num_rows,
+)
 
 # ---------------------------------------------------------------------------
 # MinHash signatures + LSH near-dup pairs
@@ -587,7 +590,8 @@ def sem_auto_cells(n: int) -> int:
 
 
 #: the oracle pre-bakes the gate cardinality's k through the SAME function
-#: the Spark path sizes with (sem_auto_cells(emb.count())) — an inline
+#: the Spark path sizes with (sem_auto_cells of the footer row count,
+#: `table_num_rows`, so building the query runs no count job) — an inline
 #: re-derivation here could silently drift from a future floor/target change
 SEM_GATE_K = sem_auto_cells(SEM_GATE_N)  # = 16 at the gate
 
@@ -643,7 +647,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k = sem_auto_cells(emb.count())
+    k = sem_auto_cells(table_num_rows(spark, sf_dir, "embeddings"))
     centroids = train_ivf_centroids(emb, k=k, iters=KM_ITERS, dims=DIMS)
     return semantic_dedup(emb, centroids, SEMDEDUP_TAU)
 

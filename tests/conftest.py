@@ -53,6 +53,12 @@ SLOW_TESTS = {
         "test_semantic_dedup_drops_exact_duplicates",
         "test_semantic_dedup_matches_bruteforce",
     },
+    "test_similarity.py": {
+        "test_cosine_topk",
+        "test_cosine_topk_int8",
+        "test_exact_rerank_recovers_exact_topk",
+        "test_pq_encode_and_topk_deterministic",
+    },
     "test_storage_index.py": {
         "test_plan_with_index_is_incremental_and_correct",
     },
@@ -91,11 +97,8 @@ SLOW_TESTS = {
         "test_containment_pairs_quote_detection",
         "test_contamination_scores",
         "test_corpus_vocabulary",
-        "test_cosine_topk",
-        "test_cosine_topk_int8",
         "test_decontaminate_vs_eval_detects_planted_dup",
         "test_duplicate_clusters_components",
-        "test_exact_rerank_recovers_exact_topk",
         "test_fingerprint_overlap_pairs_stop_fp_cap",
         "test_gif_frame_features",
         "test_hll_distinct_estimate",
@@ -105,7 +108,6 @@ SLOW_TESTS = {
         "test_minhash_identical_docs_share_all_bands",
         "test_near_dup_bucket_verify_matches_column_form",
         "test_per_source_cap",
-        "test_pq_encode_and_topk_deterministic",
         "test_shingles_and_jaccard",
         "test_simhash_near_dup_pairs",
         "test_simhash_similar_docs_close",

@@ -182,35 +182,6 @@ def test_pmi_double_factors_match_bigint_at_small_counts(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_cosine_topk_zero_norm_vector_is_deterministic(spark):
-    """A zero-norm corpus vector must score sim 0.0 (never NaN, which ranks
-    differently in numpy's batch prune vs Spark's window)."""
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        cosine_topk,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            Row(vec_id=1, embedding=[1.0, 0.0]),
-            Row(vec_id=2, embedding=[0.0, 0.0]),  # degenerate
-            Row(vec_id=3, embedding=[0.9, 0.1]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    queries = spark.createDataFrame(
-        [Row(vec_id=10, embedding=[1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    out = {
-        r["neighbor_id"]: r["sim"]
-        for r in cosine_topk(corpus, queries, k=3).collect()
-    }
-    assert out[2] == 0.0  # not NaN, not rank-1
-    assert out[1] == 1.0
-
-
 def test_near_dup_pairs_chunked_generation_matches_single_chunk(spark):
     """Per-chunk pair generation (the O(m^2)-allocation fix) must emit the
     identical pair set as one big chunk."""

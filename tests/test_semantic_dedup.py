@@ -143,3 +143,31 @@ def test_codebook_argtop_zero_norm_rows():
         for zr in (0, 5, n - 1):
             assert list(out[zr]) == list(range(take))  # all-tied -> cell asc
         assert (out >= 0).all() and (out < k).all()
+
+
+def test_semantic_dedup_query_sizes_k_from_the_footer(
+    spark, sf_dir, monkeypatch
+):
+    """Building semantic_dedup_embeddings runs no count job: k is
+    sem_auto_cells of the Parquet footer's row count, which equals the
+    table's count. Training is stubbed so the build runs no job at all."""
+    from radar_output_restructure_spark.operators import similarity
+    from radar_output_restructure_spark.queries_sim import (
+        q_semantic_dedup,
+        sem_auto_cells,
+    )
+
+    ks = []
+
+    def train(emb, k, **kwargs):
+        ks.append(k)
+        return emb
+
+    monkeypatch.setattr(similarity, "train_ivf_centroids", train)
+    monkeypatch.setattr(similarity, "semantic_dedup", lambda emb, *a: emb)
+    emb = load_table(spark, sf_dir, "embeddings")  # session schema cache
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    q_semantic_dedup(spark, sf_dir)
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+    assert ks == [sem_auto_cells(emb.count())]

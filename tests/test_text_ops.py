@@ -19,7 +19,6 @@ from radar_output_restructure_spark.operators.multimodal import (
     attach_binary_payload,
     extract_features,
 )
-from radar_output_restructure_spark.operators.similarity import cosine_topk
 
 
 def test_token_counts(spark):
@@ -156,18 +155,6 @@ def test_simhash_wide_bucket_df_cap(spark):
         for r in simhash_near_dup_pairs_wide(df, max_bucket_df=4).collect()
     }
     assert capped == {(10, 11)}  # hot buckets (occupancy 6) dropped
-
-
-def test_cosine_topk(spark):
-    rows = [
-        Row(vec_id=0, embedding=[1.0, 0.0, 0.0]),
-        Row(vec_id=1, embedding=[0.9, 0.1, 0.0]),
-        Row(vec_id=2, embedding=[0.0, 1.0, 0.0]),
-        Row(vec_id=3, embedding=[0.0, 0.0, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, schema="vec_id int, embedding array<float>")
-    out = cosine_topk(df, df.filter(F.col("vec_id") == 0), k=2).collect()
-    assert [(r.neighbor_id, r.rank) for r in out] == [(1, 1), (2, 2)]
 
 
 def test_multimodal_plumbing(spark):
@@ -759,25 +746,6 @@ def test_plane_family_decorrelated():
     )
 
 
-def test_lsh_bucket_schema_and_range(spark):
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        hyperplane_lsh_buckets,
-    )
-
-    df = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float((i * 7 + d) % 5 - 2) for d in range(16)])
-         for i in range(20)]
-    )
-    out = hyperplane_lsh_buckets(df, num_planes=6, dims=16, num_tables=3)
-    assert dict(out.dtypes)["bucket"] == "bigint"
-    rows = out.collect()
-    assert len(rows) == 20 * 3
-    assert all(0 <= r.bucket < 2**6 for r in rows)
-    assert {r.table for r in rows} == {0, 1, 2}
-
-
 def test_round6_spark_matches_spark_round(spark):
     """_round6_spark must reproduce Spark's round(x, 6) bit-for-bit,
     including decimal-boundary cases where the naive floor(|x|*1e6+0.5)
@@ -1079,69 +1047,6 @@ def test_temperature_mixture_sample_rates(spark):
     )
 
 
-def test_pq_encode_and_topk_deterministic(spark):
-    """PQ codes are valid cell ids, stable under re-partitioning, and the
-    ADC top-k ranks self-consistently (rank 1..k per query, sims
-    non-increasing)."""
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        cosine_topk_pq,
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    dims, m, cbk = 16, 4, 4
-    emb = spark.createDataFrame(
-        [
-            Row(
-                vec_id=i,
-                embedding=[
-                    float(((i * 31 + d * 17) % 13) - 6) / 4.0
-                    for d in range(dims)
-                ],
-            )
-            for i in range(60)
-        ]
-    )
-    cbs = train_pq_codebooks(emb, m=m, codebook_k=cbk, iters=2, dims=dims)
-    assert len(cbs) == m and all(len(cb) == cbk for cb in cbs)
-    assert all(len(c) == dims // m for cb in cbs for c in cb)
-
-    codes = pq_encode(emb, cbs).collect()
-    assert len(codes) == 60
-    for r in codes:
-        for s in range(m):
-            assert 0 <= r[f"code_{s}"] < cbk
-    codes2 = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(m))
-        for r in pq_encode(emb.repartition(5), cbs).collect()
-    }
-    assert codes2 == {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(m)) for r in codes
-    }
-
-    topk = cosine_topk_pq(
-        emb,
-        emb.filter(F.col("vec_id") < 3),
-        k=4,
-        m=m,
-        codebook_k=cbk,
-        iters=2,
-        dims=dims,
-    ).collect()
-    by_q: dict[int, list] = {}
-    for r in topk:
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == {0, 1, 2}
-    for rows in by_q.values():
-        rows.sort(key=lambda r: r.rank)
-        assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
-        sims = [r.sim for r in rows]
-        assert sims == sorted(sims, reverse=True)
-        assert all(r.neighbor_id != r.query_id for r in rows)
-
-
 def test_winnowing_matches_pure_python_reference(spark):
     """The Arrow winnowing operator must agree with a direct pure-Python
     transcription of the definition (normalize -> k-gram polynomial hash ->
@@ -1306,56 +1211,6 @@ def test_bpe_encode_counts_match_reference_segmentation(spark):
         words = t.split()
         assert rows[i] == (len(words), sum(len(segs[w]) for w in words))
     assert rows[2] == (0, 0)  # empty doc keeps zeros via the left join
-
-
-def test_exact_rerank_recovers_exact_topk(spark):
-    """exact_rerank over a shortlist that CONTAINS the true top-k must
-    return exactly the brute-force ranking (exact sims, exact order); a
-    shortlist missing a true neighbor degrades gracefully to the best
-    available candidates."""
-    import math
-
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        cosine_topk,
-        exact_rerank,
-    )
-
-    rng = [(i, [math.sin(i * 0.7 + d) for d in range(8)]) for i in range(20)]
-    emb = spark.createDataFrame(
-        [Row(vec_id=i, embedding=v) for i, v in rng],
-        "vec_id long, embedding array<double>",
-    )
-    queries = emb.filter(F.col("vec_id") < 2)
-    exact = cosine_topk(emb, queries, k=3)
-    expected = sorted(
-        (r.query_id, r.neighbor_id, r.sim, r.rank) for r in exact.collect()
-    )
-
-    # full shortlist (everything): rerank == exact
-    full = emb.crossJoin(
-        queries.select(F.col("vec_id").alias("query_id"))
-    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.sim, r.rank)
-        for r in exact_rerank(emb, queries, full, k=3).collect()
-    )
-    assert got == expected
-
-    # shortlist missing one true neighbor: the remaining candidates rank
-    # in exact order without it
-    drop = expected[0][1]
-    partial = full.filter(
-        ~((F.col("query_id") == expected[0][0]) & (F.col("neighbor_id") == drop))
-    )
-    got2 = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in exact_rerank(emb, queries, partial, k=3).collect()
-    }
-    assert drop not in [
-        v for (q, _rk), v in got2.items() if q == expected[0][0]
-    ]
 
 
 # --- GIF fixtures: a real LZW encoder so decode round-trips are genuine ----
@@ -1986,46 +1841,6 @@ def test_int8_code_vectors_matches_quantize(spark):
     }
     for vid, q in vecs.items():
         assert q == [exploded[(vid, d + 1)] for d in range(4)]
-
-
-def test_cosine_topk_int8(spark):
-    import math
-
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        cosine_topk_int8,
-        int8_code_vectors,
-    )
-
-    rows = [
-        Row(vec_id=i, embedding=[((i * 7 + d * 3) % 11 - 5) / 5.0 for d in range(8)])
-        for i in range(20)
-    ]
-    df = spark.createDataFrame(rows)
-    got = cosine_topk_int8(df, df.filter("vec_id < 3"), k=4).collect()
-    # reference: quantize via the operator itself, then exact integer math
-    codes = {r.vec_id: [int(x) for x in r.q] for r in int8_code_vectors(df).collect()}
-
-    def sim(a, b):
-        dot = sum(x * y for x, y in zip(codes[a], codes[b]))
-        na = math.sqrt(sum(x * x for x in codes[a]))
-        nb = math.sqrt(sum(x * x for x in codes[b]))
-        return dot / (na * nb)
-
-    for qid in range(3):
-        expect = sorted(
-            ((round(sim(qid, n), 6), n) for n in codes if n != qid),
-            key=lambda t: (-t[0], t[1]),
-        )[:4]
-        mine = sorted(
-            [(r.sim, r.neighbor_id, r.rank) for r in got if r.query_id == qid],
-            key=lambda t: t[2],
-        )
-        assert [(s, n) for s, n, _ in mine] == expect
-        assert [r for _, _, r in mine] == [1, 2, 3, 4]
-    # self-matches excluded
-    assert all(r.query_id != r.neighbor_id for r in got)
 
 
 def test_per_source_cap(spark):
