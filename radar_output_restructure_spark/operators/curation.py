@@ -19,7 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from radar_output_restructure_spark.operators.text import md5_horner_sql
+from radar_output_restructure_spark.operators.text import (
+    FP_PRIME,
+    horner_fold_sql,
+    md5_horner_sql,
+    quality_score,
+    split_words,
+    token_count,
+    word_grams,
+)
 
 
 def stratified_sample(
@@ -65,11 +73,6 @@ def temperature_mixture_sample(
     The corpus itself sees one map-side-combined count shuffle and a
     map-only filter — no row-level shuffle.
     """
-    from radar_output_restructure_spark.operators.text import (
-        FP_PRIME,
-        md5_horner_sql,
-    )
-
     counts = df.groupBy(bucket_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n")
     )
@@ -176,17 +179,6 @@ def repetition_scores(
     leaves the row. The exploded groupBy formulation this replaces is kept
     in the oracle as the cross-engine reference semantics.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
-    words = F.col("__words")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    grams = F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k))),
-    ).otherwise(F.array().cast("array<string>"))
     # longest equal-run of the sorted gram array == max multiplicity
     run = F.aggregate(
         F.array_sort(F.col("__grams")),
@@ -211,7 +203,7 @@ def repetition_scores(
     )
     staged = df.select(
         F.col(id_col), split_words(text_col).alias("__words")
-    ).select(F.col(id_col), grams.alias("__grams"))
+    ).select(F.col(id_col), word_grams(F.col("__words"), k).alias("__grams"))
     # bind the run fold once: the final projection references it twice
     # (count + ratio) and the when-guard a third time — inlining tripled
     # the biggest lambda tree in the plan for the analyzer to walk.
@@ -252,10 +244,6 @@ def sliding_chunks(
     higher-order functions and inline-exploded — no shuffle, no UDF; the
     output row count is sum(ceil(max(n-W,0)/S)) + docs, known up front.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
     if stride <= 0 or window_tokens <= 0:
         raise ValueError("window_tokens and stride must be positive")
     # coalesce: NULL text chunks exactly like empty text (one empty
@@ -327,11 +315,6 @@ def source_quality_stats(
     mean_quality_micro is a SINGLE division of two exact integers, rounded
     once — identical in any engine.
     """
-    from radar_output_restructure_spark.operators.text import (
-        quality_score,
-        token_count,
-    )
-
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     per_doc = df.select(
         F.col(source_col).alias("source"),
@@ -381,8 +364,6 @@ def per_source_cap(
     shape's shuffle is cap-bounded no matter how mirror-heavy a domain is.
     """
     import pandas as pd
-
-    from radar_output_restructure_spark.operators.text import quality_score
 
     from pyspark.sql import Window as W
 
@@ -465,9 +446,6 @@ def segment_dedup(
     Unlike suffix-array exact-substring dedup this needs no global sort and
     no position arithmetic across documents — the trade C4 itself makes.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import split_words
-    from radar_output_restructure_spark.operators.text import horner_fold_sql
-
     staged = df.select(
         F.col(id_col).alias("doc_id"), split_words(text_col).alias("__w")
     )
@@ -574,8 +552,6 @@ def quality_resample(
     out proportionally — the soft alternative to a hard quality cutoff,
     preserving distributional coverage of the tail instead of truncating it.
     """
-    from radar_output_restructure_spark.operators.text import quality_score
-
     w_micro = F.round(quality_score(text_col) * 1_000_000).cast("long")
     u = F.expr(md5_horner_sql(f"CAST(`{id_col}` AS STRING) || '{salt}'")) % 1_000_000
     return df.withColumn("weight_micro", w_micro).filter(u < F.col("weight_micro"))

@@ -56,6 +56,9 @@ from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.text import (
     FP_PRIME,
     horner_fold_sql,
+    split_words,
+    windows,
+    word_grams,
 )
 
 HASH_CHARS = 12  # 12 hex chars of md5 through Horner — plenty for test scales
@@ -69,24 +72,10 @@ def minhash_seed_coeffs(i: int) -> tuple[int, int]:
 def shingles_from_words(words: Column, k: int = 3) -> Column:
     """Distinct word k-grams from a MATERIALIZED words-array column.
 
-    `words` must be a plain column reference, not a split() expression:
-    higher-order lambdas run interpreted (no codegen CSE), so an inline
-    split() would be re-evaluated for every gram element. One slice per
-    element over the bound array keeps this linear.
+    `words` must be a plain column reference, not a split() expression
+    (see `text.windows`).
     """
-    n = F.size(words)
-    # 1-based slice starts; the guard keeps the (descending) sequence(1,0)
-    # branch from ever being taken
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    gram = lambda i: F.concat_ws(" ", F.slice(words, i, k))  # noqa: E731
-    return F.when(n >= k, F.array_distinct(F.transform(idx, gram))).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def split_words(col: Column | str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(F.trim(col)), r"\s+")
+    return F.array_distinct(word_grams(words, k))
 
 
 def shingles(col: Column | str, k: int = 3) -> Column:
@@ -210,11 +199,8 @@ def char_ngrams_from_norm(norm: Column, n: int = 5) -> Column:
     """Distinct character n-grams of a MATERIALIZED normalized-text column
     (same bound-column rule as shingles_from_words: an inline expression
     would re-evaluate per gram under the interpreted lambda)."""
-    ln = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(ln - (n - 1), F.lit(1)))
-    gram = lambda i: F.substring(norm, i, n)  # noqa: E731
-    return F.when(ln >= n, F.array_distinct(F.transform(idx, gram))).otherwise(
-        F.array().cast("array<string>")
+    return F.array_distinct(
+        windows(F.length(norm), n, lambda i: F.substring(norm, i, n))
     )
 
 

@@ -34,7 +34,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from radar_output_restructure_spark.operators.text import horner_fold_sql
+from radar_output_restructure_spark.operators.text import (
+    horner_fold_sql,
+    split_words,
+    token_stream,
+    word_grams,
+)
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -42,15 +47,6 @@ HLL_M = 256  # 2^8 registers
 _HLL_WBITS = 46  # h < 2^53, w = h div 256 < 2^45 -> bin length <= 45
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_NUMERATOR = HLL_ALPHA * HLL_M * HLL_M * float(2**_HLL_WBITS)
-
-
-def _tokens(df: DataFrame, text_col: str) -> DataFrame:
-    """One row per whitespace token (the repo-standard tokenization)."""
-    return df.select(
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("tok")
-    ).filter(F.col("tok") != "")
 
 
 def _cms_bucket(md: Column, row: int, width: int) -> Column:
@@ -91,7 +87,7 @@ def cms_counters(
     """(row, bucket, cnt): the count-min counter table. ONE corpus scan;
     the groupBy(row, bucket) shuffle carries at most depth x width rows
     per map task after map-side combine — sketch-sized, not data-sized."""
-    toks = _tokens(df, text_col).select(F.md5(F.col("tok")).alias("md"))
+    toks = token_stream(df, text_col).select(F.md5(F.col("tok")).alias("md"))
     banded = toks.select(
         F.inline(
             F.array(
@@ -130,8 +126,7 @@ def cms_heavy_hitters(
     tokenized and hashed exactly once; both post-vocab shuffles are
     sketch-/vocab-sized.
     """
-    toks = _tokens(df, text_col)
-    vocab = toks.groupBy("tok").agg(
+    vocab = token_stream(df, text_col).groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")
     )
     vocab = vocab.localCheckpoint(eager=False)  # feeds counters + the join
@@ -190,12 +185,7 @@ def hll_distinct(
     register sum is the exact-integer form described in the module
     docstring.
     """
-    toks = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = token_stream(df, text_col, F.col(group_col).alias("grp"))
 
     # ONE corpus tokenization feeding both the registers and the exact
     # count: duplicate tokens hash to the same (register, rank) and max()
@@ -317,19 +307,12 @@ def bloom_ngram_filter(
     engines: positions are exact integer arithmetic, the filter is a
     boolean array, no RNG.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import split_words
-
     def grams(df: DataFrame) -> DataFrame:
         staged = df.select(
             F.col(id_col).alias("doc_id"), split_words(text_col).alias("__w")
         )
-        n = F.size("__w")
-        gram = lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i, g))  # noqa: E731
-        arr = F.when(
-            n >= g, F.transform(F.sequence(F.lit(1), n - g + 1), gram)
-        ).otherwise(F.array().cast("array<string>"))
         return staged.select(
-            "doc_id", F.explode(arr).alias("gram")
+            "doc_id", F.explode(word_grams(F.col("__w"), g)).alias("gram")
         ).withColumn("__md", F.md5("gram"))
 
     import numpy as np

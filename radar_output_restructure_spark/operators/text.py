@@ -14,6 +14,8 @@ both engines where the dialects overlap.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -24,6 +26,74 @@ from radar_output_restructure_spark.operators import driver_gate
 TOKEN_SPLIT_RE = r"\s+"
 # BPE-ish word/punct segmentation: letter-runs, digit-runs, single punct marks
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
+
+
+def split_words(col: Column | str) -> Column:
+    """The words array of a text column: the one tokenization rule.
+
+    Lowercase, `trim` (spaces only), split on `TOKEN_SPLIT_RE`. Blank text
+    gives `['']`; text that starts with a tab or newline keeps a leading
+    `''` (`"\\tHello  World "` gives `['', 'hello', 'world']`); NULL text
+    gives a NULL array. `token_stream` drops the `''` words; every other
+    user keeps them: the windows (`windows`, `word_grams`), the bigram and
+    trigram models' unigram tables and SimHash.
+    """
+    col = F.col(col) if isinstance(col, str) else col
+    return F.split(F.lower(F.trim(col)), TOKEN_SPLIT_RE)
+
+
+def token_stream(
+    df: DataFrame, text_col: str, *carry: Column, name: str = "tok"
+) -> DataFrame:
+    """`carry` plus one row per `split_words` word, in column `name`, with
+    the `''` words dropped: a blank document has no tokens."""
+    return df.select(*carry, F.explode(split_words(text_col)).alias(name)).filter(
+        F.col(name) != ""
+    )
+
+
+def windows(
+    n: Column, k: int, element: Callable[[Column], Column], element_type: str = "string"
+) -> Column:
+    """The width-`k` sliding windows of a length-`n` sequence: `element(i)`
+    for every start i = 1..n-k+1, or an empty `array<element_type>` when
+    n < k or n is NULL.
+
+    `element` should read bound columns (a materialized words array), not
+    inline expressions: higher-order lambdas run interpreted, with no
+    codegen CSE, so an inline `split()` would be re-evaluated per window.
+    """
+    # the guard keeps the descending sequence(1, 0) from ever being taken
+    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
+    return F.when(n >= k, F.transform(starts, element)).otherwise(
+        F.array().cast(f"array<{element_type}>")
+    )
+
+
+def word_grams(words: Column, k: int) -> Column:
+    """The space-joined word k-grams of a bound words array, repeats kept."""
+    return windows(
+        F.size(words), k, lambda i: F.concat_ws(" ", F.slice(words, i, k))
+    )
+
+
+def _adjacent_pairs(arr: Column) -> Column:
+    """(lhs, rhs) structs of the adjacent elements of `arr`."""
+    return windows(
+        F.size(arr),
+        2,
+        lambda i: F.struct(
+            F.element_at(arr, i).alias("lhs"), F.element_at(arr, i + 1).alias("rhs")
+        ),
+        "struct<lhs:string,rhs:string>",
+    )
+
+
+def _nonblank_words(text_col: str) -> Column:
+    """`split_words`, except that blank text has no words (`[]`)."""
+    return F.when(
+        F.trim(F.col(text_col)) == "", F.array().cast("array<string>")
+    ).otherwise(split_words(text_col))
 
 
 def token_count(col: Column | str) -> Column:
@@ -353,12 +423,9 @@ def unigram_logprob_score(
     corpus_vocabulary scale-killer; a web corpus has billions of terms),
     while the aggregate reduces tree-wise and ships one scalar.
     """
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")  # split(trim(''),'\s+') yields [''] — a
-    # blank doc must score over 0 tokens (token_count semantics), not over
+    # a blank doc scores over 0 tokens (token_count semantics), not over
     # one phantom '' token with a finite NLL
+    tokens = token_stream(df, text_col, F.col(id_col).alias("doc"))
     # freqs feeds the total scalar AND the scored join: checkpoint the
     # VOCAB-sized table (the bigram_logprob `cb` convention) so neither
     # branch re-inlines the corpus tokenization — the un-checkpointed form
@@ -453,22 +520,16 @@ def bigram_logprob_score(
     Three map-side-combined aggregations + two shuffle-or-adaptive joins —
     the minimum for a bigram LM without approximation.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
     w = df.select(F.col(id_col).alias("doc"), split_words(text_col).alias("__w"))
-    n = F.size("__w")
-    pairs = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-            lambda i: F.struct(
-                F.concat_ws(" ", F.slice(F.col("__w"), i, 2)).alias("bigram"),
-                F.element_at(F.col("__w"), i).alias("prev"),
-            ),
+    pairs = windows(
+        F.size("__w"),
+        2,
+        lambda i: F.struct(
+            F.concat_ws(" ", F.slice(F.col("__w"), i, 2)).alias("bigram"),
+            F.element_at(F.col("__w"), i).alias("prev"),
         ),
-    ).otherwise(F.array().cast("array<struct<bigram:string,prev:string>>"))
+        "struct<bigram:string,prev:string>",
+    )
     bg = w.select("doc", F.inline(pairs))
 
     # cb feeds BOTH the prefix derivation and the scored join: checkpoint
@@ -542,12 +603,7 @@ def corpus_vocabulary(
     """
     from pyspark.sql import Window
 
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "term"
-        ),
-    ).filter(F.col("term") != "")  # no phantom '' term from blank docs
+    tokens = token_stream(df, text_col, F.col(id_col).alias("doc"), name="term")
     per_doc = tokens.groupBy("doc", "term").agg(
         F.count(F.lit(1)).alias("tf_doc")
     )
@@ -588,10 +644,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")  # no phantom '' term from blank docs
+    tokens = token_stream(df, text_col, F.col(id_col).alias("doc"), name="term")
     # tf feeds three branches (docfreq, N, the scored join) — materialize it
     # once so the corpus is tokenized exactly one time
     tf = (
@@ -722,12 +775,7 @@ def _bpe_train(df, text_col, n_merges):
       round, bounded driver state.
     """
     words = (
-        df.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("word")
-        )
-        .filter(F.col("word") != "")
+        token_stream(df, text_col, name="word")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(
@@ -750,16 +798,8 @@ def _bpe_train(df, text_col, n_merges):
     seg_frame = words
     for rank in range(1, n_merges + 1):
         syms = F.filter(F.split(F.col("seg"), "  "), lambda x: x != "")
-        pairs = F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(syms) - 1, F.lit(1))),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("lhs"),
-                F.element_at(syms, i + 1).alias("rhs"),
-            ),
-        )
         best = (
-            seg_frame.filter(F.size(syms) >= 2)
-            .select(F.inline(pairs), "freq")
+            seg_frame.select(F.inline(_adjacent_pairs(syms)), "freq")
             .groupBy("lhs", "rhs")
             .agg(F.sum("freq").cast("bigint").alias("pair_freq"))
             .orderBy(
@@ -807,12 +847,7 @@ def bpe_encode(
     _merges, seg_frame = _bpe_train(df, text_col, n_merges)
     n_syms = F.size(F.filter(F.split(F.col("seg"), "  "), lambda x: x != ""))
     word_sizes = seg_frame().select("word", n_syms.alias("n_syms"))
-    tokens = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "word"
-        ),
-    ).filter(F.col("word") != "")
+    tokens = token_stream(df, text_col, F.col(id_col).alias("doc"), name="word")
     per_doc = (
         tokens.join(word_sizes, "word")
         .groupBy("doc")
@@ -936,31 +971,16 @@ def pmi_collocations(
     The top-k is an orderBy+limit = TakeOrdered — no global sort
     materialization at any scale.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
-    w = df.select(split_words(text_col).alias("__w"))
-    n = F.size("__w")
-    adj = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-            lambda i: F.struct(
-                F.element_at(F.col("__w"), i).alias("lhs"),
-                F.element_at(F.col("__w"), i + 1).alias("rhs"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<lhs:string,rhs:string>>"))
-    tokens = df.select(
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
-    uni = tokens.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=False
+    uni = (
+        token_stream(df, text_col)
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=False)
     )
     total = uni.agg(F.sum("c").cast("bigint").alias("n_total"))
     pair = (
-        w.select(F.inline(adj))
+        df.select(split_words(text_col).alias("__w"))
+        .select(F.inline(_adjacent_pairs(F.col("__w"))))
         .groupBy("lhs", "rhs")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pair"))
         .filter(F.col("n_pair") >= min_count)
@@ -1013,12 +1033,7 @@ def token_freq_spectrum(
     rows for ANY corpus — frequency values, not terms). Nothing sorts and
     nothing sees the full vocabulary on one task.
     """
-    tokens = df.select(
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("term")
-    ).filter(F.col("term") != "")  # no phantom '' term from blank docs
-    freqs = tokens.groupBy("term").agg(
+    freqs = token_stream(df, text_col, name="term").groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     return freqs.groupBy("tf").agg(
@@ -1058,31 +1073,17 @@ def sparse_cosine_pairs(
     * the self-join shuffles on term (posting lists co-locate), and the
       pair aggregation shuffles once on (doc_a, doc_b).
     """
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    doc = F.col(id_col).alias("doc")
     if ngram <= 1:
-        term = F.explode(words)
+        # blank docs: no phantom '' term (two blank docs would otherwise
+        # cos-match at 1.0 on it)
+        tokens = token_stream(df, text_col, doc, name="term")
     else:
         # all k-grams WITH multiplicity (tf weighting needs repeats, so
         # no array_distinct here unlike shingles_from_words)
-        staged_words = F.col("__w")
-        n = F.size(staged_words)
-        idx = F.sequence(F.lit(1), F.greatest(n - (ngram - 1), F.lit(1)))
-        gram = lambda i: F.concat_ws(  # noqa: E731
-            " ", F.slice(staged_words, i, ngram)
+        tokens = df.select(doc, split_words(text_col).alias("__w")).select(
+            "doc", F.explode(word_grams(F.col("__w"), ngram)).alias("term")
         )
-        grams = F.when(n >= ngram, F.transform(idx, gram)).otherwise(
-            F.array().cast("array<string>")
-        )
-        term = F.explode(grams)
-    if ngram <= 1:
-        tokens = df.select(
-            F.col(id_col).alias("doc"), term.alias("term")
-        ).filter(F.col("term") != "")  # blank docs: no phantom '' term
-        # (two blank docs would otherwise cos-match at 1.0 on it)
-    else:
-        tokens = df.select(
-            F.col(id_col).alias("doc"), words.alias("__w")
-        ).select("doc", term.alias("term"))
     tf = tokens.groupBy("doc", "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -1235,12 +1236,7 @@ def source_kl_divergence(
     totals and the corpus scalar broadcast explicitly (bounded by source
     count / 1 row).
     """
-    tokens = df.select(
-        F.col(source_col).alias("source"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("tok"),
-    ).filter(F.col("tok") != "")  # no phantom '' token from blank docs
+    tokens = token_stream(df, text_col, F.col(source_col).alias("source"))
     # (source, tok) counts feed EVERYTHING else: the corpus counts are the
     # sum over sources, so ct/ctot/stot all derive from the vocab-sized st
     # instead of re-running the corpus-sized explode per branch (three
@@ -1303,10 +1299,6 @@ def trigram_backoff_score(
     vocab-keyed joins — the honest shape of an n-gram LM without
     approximation; hot grams are AQE skew-split.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
     a2 = alpha * alpha
 
     # -- train-side count tables (one explode, three aggregations) --------
@@ -1326,29 +1318,14 @@ def trigram_backoff_score(
         F.sum("n1").cast("double").alias("n_total"),
         F.count(F.lit(1)).cast("double").alias("v"),
     )
-    n = F.size("__w")
-    bi_arr = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - 1, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     c2 = (
-        tw.select(F.explode(bi_arr).alias("bg"))
+        tw.select(F.explode(word_grams(F.col("__w"), 2)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).alias("n2"))
         .localCheckpoint(eager=False)  # joined twice (ctx + bi legs)
     )
-    tri_arr = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i, 3)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     c3 = (
-        tw.select(F.explode(tri_arr).alias("tg"))
+        tw.select(F.explode(word_grams(F.col("__w"), 3)).alias("tg"))
         .groupBy("tg")
         .agg(F.count(F.lit(1)).alias("n3"))
     )
@@ -1357,24 +1334,17 @@ def trigram_backoff_score(
     w = df.select(
         F.col(id_col).alias("doc"), split_words(text_col).alias("__w")
     )
-    ns = F.size("__w")
-    tri = F.when(
-        ns >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(ns - 2, F.lit(1))),
-            lambda i: F.struct(
-                F.concat_ws(" ", F.slice(F.col("__w"), i, 3)).alias("tri"),
-                F.concat_ws(" ", F.slice(F.col("__w"), i, 2)).alias("ctx"),
-                F.concat_ws(" ", F.slice(F.col("__w"), i + 1, 2)).alias("bi"),
-                F.element_at(F.col("__w"), i + 1).alias("mid"),
-                F.element_at(F.col("__w"), i + 2).alias("last"),
-            ),
+    tri = windows(
+        F.size("__w"),
+        3,
+        lambda i: F.struct(
+            F.concat_ws(" ", F.slice(F.col("__w"), i, 3)).alias("tri"),
+            F.concat_ws(" ", F.slice(F.col("__w"), i, 2)).alias("ctx"),
+            F.concat_ws(" ", F.slice(F.col("__w"), i + 1, 2)).alias("bi"),
+            F.element_at(F.col("__w"), i + 1).alias("mid"),
+            F.element_at(F.col("__w"), i + 2).alias("last"),
         ),
-    ).otherwise(
-        F.array().cast(
-            "array<struct<tri:string,ctx:string,bi:string,"
-            "mid:string,last:string>>"
-        )
+        "struct<tri:string,ctx:string,bi:string,mid:string,last:string>",
     )
     sg = w.select("doc", F.inline(tri))
     joined = (
@@ -1473,16 +1443,8 @@ def gopher_quality(
     of exact integers, so any engine reproduces it bit-for-bit. At 100 TB
     this is one corpus scan with zero shuffles.
     """
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
-    blank = F.trim(F.col(text_col)) == ""
     w = df.select(
-        F.col(id_col).alias("doc"),
-        F.when(blank, F.array().cast("array<string>"))
-        .otherwise(split_words(text_col))
-        .alias("__words"),
+        F.col(id_col).alias("doc"), _nonblank_words(text_col).alias("__words")
     )
     n_words = F.size(F.col("__words")).cast("bigint")
     sum_chars = F.aggregate(
@@ -1527,16 +1489,8 @@ def type_token_ratio(
     words over total words. Low TTR flags keyword-stuffed / template /
     repetitive documents that length and stopword screens miss. Map-only,
     integer-micro exact."""
-    from radar_output_restructure_spark.operators.dedup_scale import (
-        split_words,
-    )
-
-    blank = F.trim(F.col(text_col)) == ""
     w = df.select(
-        F.col(id_col).alias("doc"),
-        F.when(blank, F.array().cast("array<string>"))
-        .otherwise(split_words(text_col))
-        .alias("__words"),
+        F.col(id_col).alias("doc"), _nonblank_words(text_col).alias("__words")
     )
     n_tokens = F.size(F.col("__words")).cast("bigint")
     n_types = F.size(F.array_distinct(F.col("__words"))).cast("bigint")

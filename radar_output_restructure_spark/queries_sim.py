@@ -34,6 +34,7 @@ from radar_output_restructure_spark.operators.text import FP_PRIME, horner_fold_
 from radar_output_restructure_spark.queries import register
 from radar_output_restructure_spark.queries_docs import SQL_SHINGLES
 from radar_output_restructure_spark.sources.tables import (
+    dataset_fingerprint,
     load_table,
     table_num_rows,
 )
@@ -1525,6 +1526,30 @@ def _persisted_ivf_oracle_sql() -> str:
     return ORACLES["ann_ivf_topk"]
 
 
+def _ivf_index_path(sf_dir: str, kind: str = "", params: str = "") -> str:
+    """Cache path of a persisted IVF index over `sf_dir`'s embeddings.
+
+    The key holds the fingerprint of the source data (file names, sizes
+    and mtimes: regenerating the parquet at the same path changes it), the
+    index parameters, and a digest of the home-cell assignment code
+    (`ann_index.write_ivf_index`, which `append_ivf_index` calls, and
+    `similarity._codebook` / `_codebook_argtop`, read at call time): an
+    index whose cells were assigned under other data, another centroid set
+    or older assignment code is never probed."""
+    import hashlib
+    import inspect
+
+    from radar_output_restructure_spark.operators import ann_index, similarity
+
+    code = (ann_index.write_ivf_index, similarity._codebook, similarity._codebook_argtop)
+    digest = hashlib.md5("".join(map(inspect.getsource, code)).encode()).hexdigest()
+    tag = dataset_fingerprint(sf_dir, ("embeddings",))
+    return (
+        f"/tmp/spark_graft_ivf_index_{kind}{tag}_k{N_CENTROIDS}{params}"
+        f"_a{digest[:8]}"
+    )
+
+
 @register("ann_ivf_persisted_topk", _persisted_ivf_oracle_sql())
 def q_ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serving-side IVF path: the corpus is materialized ONCE as a
@@ -1534,26 +1559,16 @@ def q_ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB a probe scans the probed fraction, not the corpus. Results
     are bit-identical to the in-session `ann_ivf_topk`, so the oracle is
     shared."""
+    import os
+
     from radar_output_restructure_spark.operators.ann_index import (
         probe_ivf_index,
         write_ivf_index,
     )
 
-    from radar_output_restructure_spark.sources.tables import (
-        dataset_fingerprint,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < N_CENTROIDS)
-    # Index cache key = fingerprint of the SOURCE DATA (file names + sizes
-    # + mtimes — regenerating the parquet at the same path changes the tag)
-    # PLUS the index parameters: a code change to N_CENTROIDS would
-    # otherwise silently reuse an index whose home-cell assignment was
-    # computed under the OLD centroid set.
-    import os
-
-    tag = dataset_fingerprint(sf_dir, ("embeddings",))
-    path = f"/tmp/spark_graft_ivf_index_{tag}_k{N_CENTROIDS}"
+    path = _ivf_index_path(sf_dir)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):  # write-once per sf_dir, like any index
         write_ivf_index(emb, centroids, path)
@@ -1587,19 +1602,11 @@ def q_ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_ivf_index,
         write_ivf_index,
     )
-    from radar_output_restructure_spark.sources.tables import (
-        dataset_fingerprint,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < N_CENTROIDS)
-    # parameters in the key for the same reason as the persisted index —
-    # INCR_SPLIT additionally changes which vectors live in base vs delta
-    tag = dataset_fingerprint(sf_dir, ("embeddings",))
-    path = (
-        f"/tmp/spark_graft_ivf_index_incr_{tag}"
-        f"_k{N_CENTROIDS}_s{INCR_SPLIT}"
-    )
+    # INCR_SPLIT is in the key: it changes which vectors live in base vs delta
+    path = _ivf_index_path(sf_dir, "incr_", f"_s{INCR_SPLIT}")
     marker = os.path.join(path, "_DELTA_APPENDED")
     if not os.path.exists(marker):
         import shutil

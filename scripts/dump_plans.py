@@ -9,6 +9,22 @@ A query that calls `localCheckpoint` also gets DIR/<query>_checkpoints.txt:
 the formatted plan of every frame it checkpoints, in call order (the query
 plan shows a checkpoint only as `Scan ExistingRDD`).
 
+Each query prints one line of counts, so plan tables come from this script
+rather than from hand `grep`s over the files:
+
+    <query>: <build s> exchanges=N broadcasts=N scans=N mapinpandas=N
+        checkpoints=N checkpoint_exchanges=N jobs=N
+
+Node counts are `explain_audit.audit` over the formatted query plan
+(`checkpoint_exchanges` over the checkpointed frames' plans). `jobs` is the
+number of Spark jobs the build itself launched, read from the status
+tracker. A plan dump is not free of execution: eager builds (k-means
+training, persisted-index builds, driver-gated collects) run jobs, and so
+does a `localCheckpoint(eager=False)` whose input holds an Exchange, whose
+shuffle stages run while the query is being built. A non-zero `jobs` shows
+that work, which the build/exec split of `profile_queries.py` books as
+build time.
+
 Usage: python scripts/dump_plans.py --out DIR [--sf DIR] [query ...]
 """
 
@@ -30,11 +46,14 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from explain_audit import audit
+
     from radar_output_restructure_spark import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     registry = entry_mod.queries()
     names = args.queries or list(registry)
     bad = [n for n in names if n not in registry]
@@ -63,14 +82,26 @@ def main() -> None:
     for name in names:
         t0 = time.perf_counter()
         checkpoints.clear()
+        jobs_before = set(sc.statusTracker().getJobIdsForGroup(None))
         df = registry[name](spark, args.sf)
+        jobs = set(sc.statusTracker().getJobIdsForGroup(None)) - jobs_before
+        plan = explain(df)
         with open(os.path.join(args.out, f"{name}.txt"), "w") as fh:
-            fh.write(explain(df))
+            fh.write(plan)
         if checkpoints:
             path = os.path.join(args.out, f"{name}_checkpoints.txt")
             with open(path, "w") as fh:
                 fh.write("".join(checkpoints))
-        print(f"{name}: {time.perf_counter() - t0:.2f}s", flush=True)
+        c = audit(plan)
+        ckpt_exchanges = sum(audit(p).get("shuffle", 0) for p in checkpoints)
+        print(
+            f"{name}: {time.perf_counter() - t0:.2f}s"
+            f" exchanges={c.get('shuffle', 0)} broadcasts={c.get('bcast', 0)}"
+            f" scans={c.get('scan', 0)} mapinpandas={c.get('py_map', 0)}"
+            f" checkpoints={len(checkpoints)}"
+            f" checkpoint_exchanges={ckpt_exchanges} jobs={len(jobs)}",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":

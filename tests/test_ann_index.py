@@ -335,3 +335,33 @@ def test_index_lifecycle_aging_tracks_size_not_append_count(
     }
     assert rounds == 10
     assert all(n <= 2 for n in per_cell.values()), per_cell
+
+
+def test_cached_index_path_keys_on_the_assignment_code(tmp_path, monkeypatch):
+    """The registry's persisted IVF indexes are cached by path: the path
+    changes when the home-cell assignment code does, so an index built by
+    older code is never probed."""
+    from radar_output_restructure_spark import queries_sim
+    from radar_output_restructure_spark.operators import ann_index, similarity
+
+    def paths() -> tuple[str, str]:
+        return (
+            queries_sim._ivf_index_path(str(tmp_path)),
+            queries_sim._ivf_index_path(str(tmp_path), "incr_", "_s300"),
+        )
+
+    base = paths()
+    assert paths() == base and base[0] != base[1]
+
+    def _codebook_argtop(x, cents, cnorms, t):  # another assignment rule
+        return similarity._codebook_argtop(x, cents, cnorms, t)[:, ::-1]
+
+    def write_ivf_index(*args, **kwargs):  # another index writer
+        return None
+
+    for module, fn in ((similarity, _codebook_argtop), (ann_index, write_ivf_index)):
+        with monkeypatch.context() as m:
+            m.setattr(module, fn.__name__, fn)
+            changed = paths()
+        assert changed[0] != base[0] and changed[1] != base[1]
+    assert paths() == base

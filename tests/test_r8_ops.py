@@ -1,106 +1,18 @@
-"""Round-8 operators: rule-based quality, splits, mixing weights, dedup
-observability, sketch calibration, Gram matrix."""
+"""Round-8 operators: splits, mixing weights, dedup observability, sketch
+calibration, Gram matrix, SCD2 intervals. The round-8 text operators
+(Gopher quality, type-token ratio, tokenizer fertility, n-gram novelty)
+are tested in test_text_ops.py."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(
         [Row(doc_id=i, text=t, source=s) for i, (t, s) in enumerate(rows)]
     )
-
-
-def test_gopher_quality_rules(spark):
-    from radar_output_restructure_spark.operators.text import gopher_quality
-
-    long_good = "the quick brown fox jumps over a lazy dog " * 10  # 90 words
-    out = {
-        r.doc: r
-        for r in gopher_quality(
-            _docs(
-                spark,
-                [
-                    (long_good, "s"),  # passes every rule
-                    ("short text only", "s"),  # < 50 words
-                    ("", "s"),  # blank
-                ],
-            )
-        ).collect()
-    }
-    good = out[0]
-    assert good.n_words == 90
-    assert good.passes == 1
-    assert good.n_stop_distinct >= 2  # 'the', 'a', 'over' not counted...
-    assert 3000 <= good.mean_word_len_milli <= 10000
-    assert good.alpha_ratio_micro == 1_000_000
-    assert out[1].passes == 0 and out[1].n_words == 3
-    assert out[2].n_words == 0 and out[2].passes == 0
-    assert out[2].mean_word_len_milli == 0 and out[2].alpha_ratio_micro == 0
-
-
-def test_type_token_ratio(spark):
-    from radar_output_restructure_spark.operators.text import type_token_ratio
-
-    out = {
-        r.doc: r
-        for r in type_token_ratio(
-            _docs(spark, [("a b a b", "s"), ("x y z", "s"), ("", "s")])
-        ).collect()
-    }
-    assert (out[0].n_tokens, out[0].n_types, out[0].ttr_micro) == (4, 2, 500000)
-    assert out[1].ttr_micro == 1_000_000
-    assert (out[2].n_tokens, out[2].ttr_micro) == (0, 0)
-
-
-def test_tokenizer_fertility(spark):
-    from radar_output_restructure_spark.operators.text import (
-        tokenizer_fertility,
-    )
-
-    out = {
-        r.source: r
-        for r in tokenizer_fertility(
-            _docs(
-                spark,
-                [("plain words here", "a"), ("hy-phen x2 token", "b")],
-            )
-        ).collect()
-    }
-    assert out["a"].n_words == 3 and out["a"].n_bpe_tokens == 3
-    assert out["a"].fertility_micro == 1_000_000
-    # "hy-phen" -> hy,-,phen ; "x2" -> x,2 ; "token" -> token = 6 BPE-ish
-    assert out["b"].n_words == 3 and out["b"].n_bpe_tokens == 6
-    assert out["b"].fertility_micro == 2_000_000
-
-
-def test_ngram_novelty(spark):
-    from radar_output_restructure_spark.operators.text import ngram_novelty
-
-    out = {
-        r.doc: r
-        for r in ngram_novelty(
-            _docs(
-                spark,
-                [
-                    ("one two three four", "s"),  # shares 'one two three'
-                    ("one two three five", "s"),
-                    ("entirely different words here", "s"),
-                    ("zz", "s"),  # < k words: absent from output
-                ],
-            )
-        ).collect()
-    }
-    assert 3 not in out
-    assert out[2].novelty_micro == 1_000_000
-    # docs 0/1: 2 shingles each, 1 shared (df=2) + 1 unique
-    for d in (0, 1):
-        assert out[d].n_shingles == 2 and out[d].n_novel == 1
-        assert out[d].novelty_micro == 500000
 
 
 def test_train_split_deterministic_and_leakproof(spark, sf_dir):

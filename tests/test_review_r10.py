@@ -1,7 +1,10 @@
 """Regression tests for the round-10 code-review findings in
-operators/text.py and operators/curation.py (each was mirrored into the
-DuckDB oracle in queries_docs.py — these tests pin the SEMANTICS the
-oracle comparison alone cannot see, because the oracle mirrored the bug).
+operators/curation.py and the similarity, multimodal, sketch, timeseries,
+funnel and streaming operators, plus the write-then-commit crash window.
+The curation findings were mirrored into the DuckDB oracle in
+queries_docs.py: these tests pin the SEMANTICS the oracle comparison alone
+cannot see, because the oracle mirrored the bug. The operators/text.py
+findings are tested in test_text_ops.py.
 """
 
 from __future__ import annotations
@@ -9,101 +12,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t, lang="en", source="s") for i, t in rows],
-        "doc_id long, text string, lang string, source string",
-    )
-
-
-def test_stopword_count_counts_adjacent_repeats(spark):
-    """'the the the' has three stopword hits, not two: single-space
-    delimiters were consumed by non-overlapping matches."""
-    from radar_output_restructure_spark.operators.text import quality_features
-
-    df = _docs(spark, [(1, "the the the"), (2, "the cat the dog the")])
-    f = quality_features("text")
-    out = {
-        r["doc_id"]: r["n"]
-        for r in df.select("doc_id", f["n_stopwords"].alias("n")).collect()
-    }
-    assert out == {1: 3, 2: 3}
-
-
-def test_lang_marker_count_counts_adjacent_repeats(spark):
-    from radar_output_restructure_spark.operators.text import lang_scores
-
-    df = _docs(spark, [(1, "der der und und ist")])
-    s = lang_scores("text")
-    row = df.select(s["de"].alias("de"), s["en"].alias("en")).first()
-    assert row["de"] == 5
-    assert row["en"] == 0
-
-
-def test_blank_doc_scores_zero_tokens(spark):
-    """A blank document must have n_tokens=0 and nll_micro=0, not one
-    phantom '' token with a finite NLL."""
-    from radar_output_restructure_spark.operators.text import (
-        unigram_logprob_score,
-    )
-
-    df = _docs(spark, [(1, "a b a"), (2, ""), (3, "   ")])
-    out = {r["doc"]: r for r in unigram_logprob_score(df).collect()}
-    assert out[2]["n_tokens"] == 0 and out[2]["nll_micro"] == 0
-    assert out[3]["n_tokens"] == 0 and out[3]["nll_micro"] == 0
-    assert out[1]["n_tokens"] == 3
-
-
-def test_blank_doc_not_in_vocabulary(spark):
-    from radar_output_restructure_spark.operators.text import corpus_vocabulary
-
-    df = _docs(spark, [(1, "x y"), (2, ""), (3, "")])
-    terms = {r["term"] for r in corpus_vocabulary(df, k=10).collect()}
-    assert "" not in terms
-    assert terms == {"x", "y"}
-
-
-def test_blank_docs_do_not_cosine_match(spark):
-    """Two blank docs must not emit a cos=1.0 pair on the '' term."""
-    from radar_output_restructure_spark.operators.text import (
-        sparse_cosine_pairs,
-    )
-
-    df = _docs(spark, [(1, ""), (2, ""), (3, "w w"), (4, "w w")])
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in sparse_cosine_pairs(df, threshold=0.5).collect()
-    }
-    assert (1, 2) not in pairs
-    assert (3, 4) in pairs
-
-
-def test_sparse_cosine_norms_use_pruned_term_space(spark):
-    """With max_df pruning, cos must be the cosine of the SURVIVING-term
-    vectors: a pair identical on kept terms scores 1.0 even when a capped
-    term dominates the raw vectors."""
-    from radar_output_restructure_spark.operators.text import (
-        sparse_cosine_pairs,
-    )
-
-    # 'boiler' appears in all 4 docs (df=4 > max_df=3) and dominates the
-    # raw norms; docs 1 and 2 are identical on the surviving term 'rare'.
-    df = _docs(
-        spark,
-        [
-            (1, "boiler boiler boiler rare"),
-            (2, "boiler boiler boiler rare"),
-            (3, "boiler other"),
-            (4, "boiler thing"),
-        ],
-    )
-    out = {
-        (r["doc_a"], r["doc_b"]): r["cos"]
-        for r in sparse_cosine_pairs(df, threshold=0.1, max_df=3).collect()
-    }
-    assert out.get((1, 2)) == 1.0
 
 
 def test_temperature_mixture_keeps_null_bucket_rows(spark):
@@ -155,26 +63,6 @@ def test_content_split_null_text_hashes_like_empty(spark):
     assert out[1] == out[2]  # NULL == empty content: same bucket, same split
     assert out[1][0] is not None  # a real hex bucket, not NULL-to-'test'
     assert out[1] == ("d4", "train")  # md5('')[0:2]
-
-
-def test_pmi_double_factors_match_bigint_at_small_counts(spark):
-    """The overflow fix (cast factors to double before multiplying) must be
-    value-identical at small counts: exact integers below 2^53."""
-    from radar_output_restructure_spark.operators.text import pmi_collocations
-
-    df = _docs(
-        spark,
-        [(i, "fast car fast car slow boat") for i in range(4)],
-    )
-    out = {
-        (r["lhs"], r["rhs"]): r["pmi_micro"]
-        for r in pmi_collocations(df, min_count=2, k=10).collect()
-    }
-    import math
-
-    # c(fast)=8, c(car)=8, n(fast car)=8, total=24
-    expect = round(math.log((8 * 24) / (8 * 8)) * 1_000_000)
-    assert out[("fast", "car")] == expect
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -2442,3 +2444,286 @@ def test_random_projection_preserves_distances(spark):
     d = ((proj[:, None, :] - proj[None, :, :]) ** 2).sum(-1).astype(float)
     d[np.arange(6), np.arange(6)] = np.inf
     assert d[0].argmin() == 1 and d[1].argmin() == 0
+
+
+# ---------------------------------------------------------------------------
+# the shared tokenizer: split_words, token_stream and windows
+# ---------------------------------------------------------------------------
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(
+        [Row(doc_id=i, text=t, lang="en", source="s") for i, t in rows],
+        "doc_id long, text string, lang string, source string",
+    )
+
+
+def _source_docs(spark, rows):
+    return spark.createDataFrame(
+        [Row(doc_id=i, text=t, source=s) for i, (t, s) in enumerate(rows)]
+    )
+
+
+def _model_words(text):
+    """Pure-Python split_words: trim spaces only, lowercase, split on
+    whitespace runs, keep every '' piece; NULL text has no array."""
+    return None if text is None else re.split(r"\s+", text.strip(" ").lower())
+
+
+def test_tokenizer_matches_python_model(spark):
+    texts = [
+        "\tHello  World ",  # trim keeps the tab: a leading ''
+        "",
+        "   ",
+        None,
+        "MiXeD Case wOrDs",
+        "runs    of   spaces and\na newline",
+        "one",
+        "a b a b a",
+    ]
+    df = _docs(spark, list(enumerate(texts, start=1)))
+    w = F.col("__w")
+
+    def ends(k):  # struct elements: the first and last word of the window
+        return X.windows(
+            F.size(w),
+            k,
+            lambda i: F.struct(
+                F.element_at(w, i).alias("first"),
+                F.element_at(w, i + (k - 1)).alias("last"),
+            ),
+            "struct<first:string,last:string>",
+        )
+
+    ks = range(1, 5)
+    rows = (
+        df.select("doc_id", X.split_words("text").alias("__w"))
+        .select(
+            "doc_id",
+            "__w",
+            *[X.word_grams(w, k).alias(f"g{k}") for k in ks],
+            *[ends(k).alias(f"e{k}") for k in ks],
+        )
+        .collect()
+    )
+    assert sorted(r.doc_id for r in rows) == list(range(1, len(texts) + 1))
+    for r in rows:
+        words = _model_words(texts[r.doc_id - 1])
+        assert r["__w"] == words
+        for k in ks:
+            starts = range(len(words) - k + 1) if words is not None else ()
+            assert r[f"g{k}"] == [" ".join(words[i : i + k]) for i in starts]
+            assert [tuple(e) for e in r[f"e{k}"]] == [
+                (words[i], words[i + k - 1]) for i in starts
+            ]
+    assert _model_words(texts[0]) == ["", "hello", "world"]
+
+    toks = X.token_stream(df, "text", F.col("doc_id").alias("doc"), name="t")
+    assert sorted((r.doc, r.t) for r in toks.collect()) == sorted(
+        (i, t)
+        for i, text in enumerate(texts, start=1)
+        for t in _model_words(text) or ()
+        if t != ""
+    )
+
+    # which operators keep the tab's leading '': the unigram token stream
+    # drops it, the bigram window keeps it (' hello' is a bigram)
+    tab = df.filter(F.col("doc_id") == 1)
+    assert X.unigram_logprob_score(tab).first()["n_tokens"] == 2
+    assert X.bigram_logprob_score(tab).first()["n_bigrams"] == 2
+
+
+def test_gopher_quality_rules(spark):
+    from radar_output_restructure_spark.operators.text import gopher_quality
+
+    long_good = "the quick brown fox jumps over a lazy dog " * 10  # 90 words
+    out = {
+        r.doc: r
+        for r in gopher_quality(
+            _source_docs(
+                spark,
+                [
+                    (long_good, "s"),  # passes every rule
+                    ("short text only", "s"),  # < 50 words
+                    ("", "s"),  # blank
+                ],
+            )
+        ).collect()
+    }
+    good = out[0]
+    assert good.n_words == 90
+    assert good.passes == 1
+    assert good.n_stop_distinct >= 2  # 'the', 'a', 'over' not counted...
+    assert 3000 <= good.mean_word_len_milli <= 10000
+    assert good.alpha_ratio_micro == 1_000_000
+    assert out[1].passes == 0 and out[1].n_words == 3
+    assert out[2].n_words == 0 and out[2].passes == 0
+    assert out[2].mean_word_len_milli == 0 and out[2].alpha_ratio_micro == 0
+
+
+def test_type_token_ratio(spark):
+    from radar_output_restructure_spark.operators.text import type_token_ratio
+
+    out = {
+        r.doc: r
+        for r in type_token_ratio(
+            _source_docs(spark, [("a b a b", "s"), ("x y z", "s"), ("", "s")])
+        ).collect()
+    }
+    assert (out[0].n_tokens, out[0].n_types, out[0].ttr_micro) == (4, 2, 500000)
+    assert out[1].ttr_micro == 1_000_000
+    assert (out[2].n_tokens, out[2].ttr_micro) == (0, 0)
+
+
+def test_tokenizer_fertility(spark):
+    from radar_output_restructure_spark.operators.text import (
+        tokenizer_fertility,
+    )
+
+    out = {
+        r.source: r
+        for r in tokenizer_fertility(
+            _source_docs(
+                spark,
+                [("plain words here", "a"), ("hy-phen x2 token", "b")],
+            )
+        ).collect()
+    }
+    assert out["a"].n_words == 3 and out["a"].n_bpe_tokens == 3
+    assert out["a"].fertility_micro == 1_000_000
+    # "hy-phen" -> hy,-,phen ; "x2" -> x,2 ; "token" -> token = 6 BPE-ish
+    assert out["b"].n_words == 3 and out["b"].n_bpe_tokens == 6
+    assert out["b"].fertility_micro == 2_000_000
+
+
+def test_ngram_novelty(spark):
+    from radar_output_restructure_spark.operators.text import ngram_novelty
+
+    out = {
+        r.doc: r
+        for r in ngram_novelty(
+            _source_docs(
+                spark,
+                [
+                    ("one two three four", "s"),  # shares 'one two three'
+                    ("one two three five", "s"),
+                    ("entirely different words here", "s"),
+                    ("zz", "s"),  # < k words: absent from output
+                ],
+            )
+        ).collect()
+    }
+    assert 3 not in out
+    assert out[2].novelty_micro == 1_000_000
+    # docs 0/1: 2 shingles each, 1 shared (df=2) + 1 unique
+    for d in (0, 1):
+        assert out[d].n_shingles == 2 and out[d].n_novel == 1
+        assert out[d].novelty_micro == 500000
+
+
+def test_stopword_count_counts_adjacent_repeats(spark):
+    """'the the the' has three stopword hits, not two: single-space
+    delimiters were consumed by non-overlapping matches."""
+    from radar_output_restructure_spark.operators.text import quality_features
+
+    df = _docs(spark, [(1, "the the the"), (2, "the cat the dog the")])
+    f = quality_features("text")
+    out = {
+        r["doc_id"]: r["n"]
+        for r in df.select("doc_id", f["n_stopwords"].alias("n")).collect()
+    }
+    assert out == {1: 3, 2: 3}
+
+
+def test_lang_marker_count_counts_adjacent_repeats(spark):
+    from radar_output_restructure_spark.operators.text import lang_scores
+
+    df = _docs(spark, [(1, "der der und und ist")])
+    s = lang_scores("text")
+    row = df.select(s["de"].alias("de"), s["en"].alias("en")).first()
+    assert row["de"] == 5
+    assert row["en"] == 0
+
+
+def test_blank_doc_scores_zero_tokens(spark):
+    """A blank document must have n_tokens=0 and nll_micro=0, not one
+    phantom '' token with a finite NLL."""
+    from radar_output_restructure_spark.operators.text import (
+        unigram_logprob_score,
+    )
+
+    df = _docs(spark, [(1, "a b a"), (2, ""), (3, "   ")])
+    out = {r["doc"]: r for r in unigram_logprob_score(df).collect()}
+    assert out[2]["n_tokens"] == 0 and out[2]["nll_micro"] == 0
+    assert out[3]["n_tokens"] == 0 and out[3]["nll_micro"] == 0
+    assert out[1]["n_tokens"] == 3
+
+
+def test_blank_doc_not_in_vocabulary(spark):
+    from radar_output_restructure_spark.operators.text import corpus_vocabulary
+
+    df = _docs(spark, [(1, "x y"), (2, ""), (3, "")])
+    terms = {r["term"] for r in corpus_vocabulary(df, k=10).collect()}
+    assert "" not in terms
+    assert terms == {"x", "y"}
+
+
+def test_blank_docs_do_not_cosine_match(spark):
+    """Two blank docs must not emit a cos=1.0 pair on the '' term."""
+    from radar_output_restructure_spark.operators.text import (
+        sparse_cosine_pairs,
+    )
+
+    df = _docs(spark, [(1, ""), (2, ""), (3, "w w"), (4, "w w")])
+    pairs = {
+        (r["doc_a"], r["doc_b"])
+        for r in sparse_cosine_pairs(df, threshold=0.5).collect()
+    }
+    assert (1, 2) not in pairs
+    assert (3, 4) in pairs
+
+
+def test_sparse_cosine_norms_use_pruned_term_space(spark):
+    """With max_df pruning, cos must be the cosine of the SURVIVING-term
+    vectors: a pair identical on kept terms scores 1.0 even when a capped
+    term dominates the raw vectors."""
+    from radar_output_restructure_spark.operators.text import (
+        sparse_cosine_pairs,
+    )
+
+    # 'boiler' appears in all 4 docs (df=4 > max_df=3) and dominates the
+    # raw norms; docs 1 and 2 are identical on the surviving term 'rare'.
+    df = _docs(
+        spark,
+        [
+            (1, "boiler boiler boiler rare"),
+            (2, "boiler boiler boiler rare"),
+            (3, "boiler other"),
+            (4, "boiler thing"),
+        ],
+    )
+    out = {
+        (r["doc_a"], r["doc_b"]): r["cos"]
+        for r in sparse_cosine_pairs(df, threshold=0.1, max_df=3).collect()
+    }
+    assert out.get((1, 2)) == 1.0
+
+
+def test_pmi_double_factors_match_bigint_at_small_counts(spark):
+    """The overflow fix (cast factors to double before multiplying) must be
+    value-identical at small counts: exact integers below 2^53."""
+    from radar_output_restructure_spark.operators.text import pmi_collocations
+
+    df = _docs(
+        spark,
+        [(i, "fast car fast car slow boat") for i in range(4)],
+    )
+    out = {
+        (r["lhs"], r["rhs"]): r["pmi_micro"]
+        for r in pmi_collocations(df, min_count=2, k=10).collect()
+    }
+    import math
+
+    # c(fast)=8, c(car)=8, n(fast car)=8, total=24
+    expect = round(math.log((8 * 24) / (8 * 8)) * 1_000_000)
+    assert out[("fast", "car")] == expect
