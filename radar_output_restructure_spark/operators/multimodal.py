@@ -26,6 +26,14 @@ metadata struct. The Spark-side plumbing — schema, Arrow batch shape,
 * `extract_features` computes deterministic byte-level features (length,
   md5 digest, ascii ratio) — codec-independent profiling.
 
+Every operator over a `payload` column runs through one batch loop,
+`_map_payloads`: it carries the caller's id column, runs the operator's
+per-payload row function inside one error net (`_features_or_nulls`) and
+builds one object-dtype frame per batch. Images reach pixels through one
+magic-byte dispatch (`_image_planes`) and one channel-mean summary
+(`_image_summary`); WAV reaches samples through one PCM reader
+(`_wav_pcm`).
+
 At 100 TB: binary payloads stay columnar through Arrow; mapInPandas streams
 record batches (never materializes a partition), and feature extraction is
 embarrassingly parallel map-only work. Batch size is controlled by
@@ -57,9 +65,10 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", payload).withColumn("meta", meta)
 
 
-def _wav_samples(payload: bytes):
-    """(normalized float64 samples, sample_rate, channels, n_frames) of a
-    RIFF/WAVE PCM payload (stdlib `wave` decode, interleaved channels)."""
+def _wav_pcm(payload: bytes):
+    """(int64 interleaved samples, sample width in bytes, sample_rate,
+    channels, n_frames) of a RIFF/WAVE PCM payload: the one stdlib `wave`
+    decode. 8-bit WAV is unsigned and comes back re-centred on zero."""
     import wave
 
     import numpy as np
@@ -73,26 +82,41 @@ def _wav_samples(payload: bytes):
     dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
     if dtype is None:
         raise ValueError(f"unsupported sample width: {width}")
-    samples = np.frombuffer(raw, dtype=dtype).astype(np.float64)
+    samples = np.frombuffer(raw, dtype=dtype).astype(np.int64)
     if width == 1:
-        samples -= 128.0  # 8-bit WAV is unsigned
-    full_scale = float(2 ** (8 * width - 1))
-    return samples / full_scale, rate, channels, n_frames
+        samples -= 128
+    return samples, width, rate, channels, n_frames
+
+
+def _wav_samples(payload: bytes):
+    """(normalized float64 samples, sample_rate, channels, n_frames) of a
+    RIFF/WAVE PCM payload (interleaved channels, full scale = 1.0)."""
+    samples, width, rate, channels, n_frames = _wav_pcm(payload)
+    return samples / float(2 ** (8 * width - 1)), rate, channels, n_frames
+
+
+def _rms_peak(norm) -> dict:
+    """RMS and peak amplitude of normalized samples (0.0 when empty)."""
+    import numpy as np
+
+    if not len(norm):
+        return {"rms": 0.0, "peak": 0.0}
+    return {
+        "rms": round(float(np.sqrt((norm**2).mean())), 6),
+        "peak": round(float(np.abs(norm).max()), 6),
+    }
 
 
 def decode_wav(payload: bytes) -> dict:
     """Decode a RIFF/WAVE PCM payload with the stdlib `wave` module: real
     sample data, no external libs. Returns rate/channels/duration plus
     RMS and peak amplitude over the (normalized) samples."""
-    import numpy as np
-
     norm, rate, channels, n_frames = _wav_samples(payload)
     return {
         "sample_rate": rate,
         "channels": channels,
         "duration_s": round(n_frames / rate, 6) if rate else 0.0,
-        "rms": round(float(np.sqrt((norm**2).mean())), 6) if len(norm) else 0.0,
-        "peak": round(float(np.abs(norm).max()), 6) if len(norm) else 0.0,
+        **_rms_peak(norm),
     }
 
 
@@ -143,19 +167,38 @@ def encode_bmp(px) -> bytes:
     return header + data
 
 
+def _channel_planes(px) -> tuple:
+    """The (r, g, b) (h, w) planes of an (h, w, channels) pixel array:
+    grayscale (+alpha) replicates its one plane, alpha is dropped."""
+    if px.shape[2] <= 2:
+        return (px[:, :, 0],) * 3
+    return px[:, :, 0], px[:, :, 1], px[:, :, 2]
+
+
+def _image_summary(planes, mask=None) -> dict:
+    """The image feature dict: dimensions plus per-channel means over the
+    pixels `mask` keeps visible (GIF transparency), or over every pixel
+    when there is no mask or it hides them all. A zero-area image has no
+    means and raises ValueError."""
+    height, width = planes[0].shape
+    if not height or not width:
+        raise ValueError(f"zero-area image ({width}x{height})")
+    if mask is not None and mask.any():
+        planes = [p[mask] for p in planes]
+    r, g, b = (round(float(p.mean()), 6) for p in planes)
+    return {
+        "width": int(width),
+        "height": int(height),
+        "mean_r": r,
+        "mean_g": g,
+        "mean_b": b,
+    }
+
+
 def decode_bmp(payload: bytes) -> dict:
     """Decode an uncompressed 24-bit BMP (BITMAPINFOHEADER) by hand: real
     pixels, no external libs. Returns dimensions and per-channel means."""
-    px = _bmp_pixels(payload)
-    h, width = px.shape[0], px.shape[1]
-    means = px.reshape(-1, 3).mean(axis=0)
-    return {
-        "width": width,
-        "height": h,
-        "mean_r": round(float(means[0]), 6),
-        "mean_g": round(float(means[1]), 6),
-        "mean_b": round(float(means[2]), 6),
-    }
+    return _image_summary(_channel_planes(_bmp_pixels(payload)))
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -248,21 +291,7 @@ def decode_png(payload: bytes) -> dict:
     Paeth per the PNG spec §9). Returns the same feature dict as
     `decode_bmp`; alpha is ignored for the channel means and grayscale
     replicates into all three."""
-    px = _png_pixels(payload)
-    height, width, channels = px.shape
-    if channels <= 2:  # grayscale (+alpha): replicate into RGB
-        mean = float(px[:, :, 0].mean())
-        means = (mean, mean, mean)
-    else:  # RGB / RGBA: alpha (if any) excluded from the means
-        m = px[:, :, :3].reshape(-1, 3).mean(axis=0)
-        means = (float(m[0]), float(m[1]), float(m[2]))
-    return {
-        "width": int(width),
-        "height": int(height),
-        "mean_r": round(means[0], 6),
-        "mean_g": round(means[1], 6),
-        "mean_b": round(means[2], 6),
-    }
+    return _image_summary(_channel_planes(_png_pixels(payload)))
 
 
 def _gif_lzw_decode(data: bytes, min_code_size: int) -> list[int]:
@@ -393,26 +422,40 @@ def _gif_frames(payload: bytes):
             raise ValueError(f"unexpected GIF block 0x{b0:02x}")
 
 
+def _first_gif_frame(payload: bytes):
+    """(planes, transparency mask) of the first frame of a GIF."""
+    for rgb, mask, _left, _top in _gif_frames(payload):
+        return _channel_planes(rgb), mask
+    raise ValueError("GIF contains no image frame")
+
+
 def decode_gif(payload: bytes) -> dict:
     """Decode the FIRST frame of a GIF87a/89a by hand: logical screen
     descriptor, global/local color table, full LZW decompression of the
     image data (variable-width codes, clear/end handling, the KwKwK case),
     interlace de-weave, transparency-aware channel means. Pure
     stdlib+numpy — same feature dict as `decode_bmp`/`decode_png`."""
-    for rgb, mask, _left, _top in _gif_frames(payload):
-        height, width = rgb.shape[0], rgb.shape[1]
-        vis = rgb[mask]
-        if len(vis) == 0:
-            vis = rgb.reshape(-1, 3)
-        means = vis.reshape(-1, 3).mean(axis=0)
-        return {
-            "width": int(width),
-            "height": int(height),
-            "mean_r": round(float(means[0]), 6),
-            "mean_g": round(float(means[1]), 6),
-            "mean_b": round(float(means[2]), 6),
-        }
-    raise ValueError("GIF contains no image frame")
+    return _image_summary(*_first_gif_frame(payload))
+
+
+def _image_planes(payload: bytes):
+    """(planes, mask) of the first image of a payload, dispatched on magic
+    bytes: the (r, g, b) planes (uint8; float64 for JPEG, its clipped IDCT
+    output) and the GIF transparency mask (None for the other formats).
+    BMP, PNG, GIF and baseline JPEG decode; anything else (video
+    containers) raises NotImplementedError."""
+    if payload[:2] == b"BM":
+        return _channel_planes(_bmp_pixels(payload)), None
+    if payload[:8] == PNG_MAGIC:
+        return _channel_planes(_png_pixels(payload)), None
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        return _first_gif_frame(payload)
+    if payload[:2] == b"\xff\xd8":
+        return _jpeg_planes(payload), None
+    raise NotImplementedError(
+        "video/container decoding requires ffmpeg (not in container); "
+        "BMP, PNG, GIF, baseline JPEG and WAV decode natively"
+    )
 
 
 def decode_image(payload: bytes) -> dict:
@@ -420,136 +463,116 @@ def decode_image(payload: bytes) -> dict:
     real in pure stdlib+numpy; anything else (video containers, progressive
     JPEG) raises NotImplementedError — the real implementation slots into
     the same mapInPandas batch loop."""
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == PNG_MAGIC:
-        return decode_png(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload)
-    raise NotImplementedError(
-        "video/container decoding requires ffmpeg (not in container); "
-        "BMP, PNG, GIF, baseline JPEG and WAV decode natively"
+    return _image_summary(*_image_planes(payload))
+
+
+def _features_or_nulls(rows, payload, failed: list[dict]) -> list[dict]:
+    """Malformed-payload policy: a corrupt/truncated/NULL payload must
+    never crash an executor task. `rows` (decode AND derive) runs inside
+    the net; a NULL payload or any exception gives `failed` instead. Feature
+    EXTRACTORS pass one all-NULL row (accounting preserves one row per
+    input doc); fingerprint / frame-expansion operators pass none and DROP
+    the payload (a NULL dedup key or half-decoded frame row is meaningless
+    downstream). `except Exception` is the right net here: the pure-Python
+    decoders raise typed ValueError/NotImplementedError on unsupported
+    formats, but TRUNCATION can surface as struct.error, zlib.error,
+    EOFError or IndexError from any depth of a codec."""
+    if payload is None:
+        return failed
+    try:
+        return rows(bytes(payload))
+    except Exception:
+        return failed
+
+
+def _map_payloads(
+    df: DataFrame, id_col: str, fields: str, rows, keep_failed: bool
+) -> DataFrame:
+    """The one Arrow batch loop of every payload operator: select
+    (`id_col`, `payload`), map each payload to its rows with
+    `rows(payload) -> [feature dict, ...]` under `_features_or_nulls`, and
+    emit (`id_col`, *`fields`) with the id column's own name and type.
+    `keep_failed` is the operator family's policy: extractors keep a
+    failed payload as one all-NULL row, expanders and fingerprinters drop
+    it. Columns are dtype=object: default inference would coerce a
+    nullable int column (None + ints) to float64, which Arrow then refuses
+    (or rounds) casting back to the declared int/long output schema."""
+    names = [f.split()[0] for f in fields.split(",")]
+    failed = [dict.fromkeys(names)] if keep_failed else []
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if len(pdf) == 0:
+                continue  # empty batch -> column-less frame -> Arrow error
+            ids, out = [], []
+            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+                got = _features_or_nulls(rows, payload, failed)
+                ids += [doc_id] * len(got)
+                out += got
+            if out:
+                data = {id_col: pd.Series(ids, dtype=object)}
+                for c in names:
+                    data[c] = pd.Series([r.get(c) for r in out], dtype=object)
+                yield pd.DataFrame(data)
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return df.select(id_col, "payload").mapInPandas(
+        batches, f"`{id_col}` {id_type}, {fields}"
     )
 
 
+#: output columns after the caller's id column, per operator
 AUDIO_FEATURE_SCHEMA = (
-    "doc_id long, sample_rate int, channels int, duration_s double, "
-    "rms double, peak double"
+    "sample_rate int, channels int, duration_s double, rms double, "
+    "peak double"
 )
 IMAGE_FEATURE_SCHEMA = (
-    "doc_id long, width int, height int, mean_r double, mean_g double, "
-    "mean_b double"
+    "width int, height int, mean_r double, mean_g double, mean_b double"
 )
-
-
-def _features_or_nulls(decode, payload, columns: list[str]) -> dict:
-    """Malformed-payload policy: a corrupt/truncated/NULL payload must
-    never crash an executor task. Feature EXTRACTORS keep the doc with
-    NULL features (accounting preserves one row per input doc);
-    fingerprint / frame-expansion operators DROP the payload instead (a
-    NULL dedup key or half-decoded frame row is meaningless downstream) —
-    see `_decoded_or_skip`. `except Exception` is the right net here: the
-    pure-Python decoders raise typed ValueError/NotImplementedError on
-    unsupported formats, but TRUNCATION can surface as struct.error,
-    zlib.error, EOFError or IndexError from any depth of a codec."""
-    if payload is None:
-        return dict.fromkeys(columns)
-    try:
-        return decode(bytes(payload))
-    except Exception:
-        return dict.fromkeys(columns)
-
-
-def _object_frame(doc_ids, feats: list[dict], columns: list[str]):
-    """Feature dicts -> a pandas frame with dtype=object columns: default
-    inference would coerce a nullable int column (None + ints) to float64,
-    which Arrow then refuses (or rounds) casting back to the declared
-    int/long output schema."""
-    data = {"doc_id": pd.Series(list(doc_ids), dtype=object)}
-    for c in columns:
-        data[c] = pd.Series([f.get(c) for f in feats], dtype=object)
-    return pd.DataFrame(data)
 
 
 def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Arrow-batched WAV feature extraction (real sample decoding).
     Undecodable payloads yield NULL features, never task crashes."""
-    cols = ["sample_rate", "channels", "duration_s", "rms", "peak"]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            feats = [
-                _features_or_nulls(decode_wav, b, cols)
-                for b in pdf["payload"]
-            ]
-            yield _object_frame(pdf[id_col], feats, cols)
-
-    return df.select(id_col, "payload").mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+    return _map_payloads(
+        df, id_col, AUDIO_FEATURE_SCHEMA, lambda b: [decode_wav(b)], True
+    )
 
 
 def image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched BMP feature extraction (real pixel decoding).
-    Undecodable payloads yield NULL features, never task crashes."""
-    cols = ["width", "height", "mean_r", "mean_g", "mean_b"]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            feats = [
-                _features_or_nulls(decode_image, b, cols)
-                for b in pdf["payload"]
-            ]
-            yield _object_frame(pdf[id_col], feats, cols)
-
-    return df.select(id_col, "payload").mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    """Arrow-batched image feature extraction (real pixel decoding of BMP,
+    PNG, GIF and baseline JPEG via `decode_image`). Undecodable payloads
+    yield NULL features, never task crashes."""
+    return _map_payloads(
+        df, id_col, IMAGE_FEATURE_SCHEMA, lambda b: [decode_image(b)], True
+    )
 
 
-FEATURE_SCHEMA = "doc_id long, n_bytes long, digest string, ascii_ratio double"
+FEATURE_SCHEMA = "n_bytes long, digest string, ascii_ratio double"
+
+
+def _byte_features(payload: bytes) -> dict:
+    """Length, md5 digest and share of ASCII bytes of one payload."""
+    import numpy as np
+
+    arr = np.frombuffer(payload, dtype=np.uint8)
+    return {
+        "n_bytes": len(payload),
+        "digest": hashlib.md5(payload).hexdigest(),
+        "ascii_ratio": round(float((arr < 128).mean()), 6) if len(arr) else 0.0,
+    }
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Arrow-batched; one pass, no shuffle. The feature set is a deterministic
-    stand-in for embedding/EXIF extraction.
+    stand-in for embedding/EXIF extraction. NULL payloads (e.g.
+    encode(NULL text)) give NULL features.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def ascii_ratio(b: bytes) -> float:
-            if not b:
-                return 0.0
-            arr = np.frombuffer(b, dtype=np.uint8)
-            return round(float((arr < 128).mean()), 6)
-
-        for pdf in it:
-            payloads = pdf["payload"]
-            # NULL payloads (e.g. encode(NULL text)) propagate as NULL
-            # features — .map(len) would crash the task on None
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": payloads.map(
-                        lambda b: None if b is None else len(b)
-                    ),
-                    "digest": payloads.map(
-                        lambda b: None
-                        if b is None
-                        else hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "ascii_ratio": payloads.map(
-                        lambda b: None if b is None else ascii_ratio(bytes(b))
-                    ),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_payloads(
+        df, id_col, FEATURE_SCHEMA, lambda b: [_byte_features(b)], True
+    )
 
 
 # --- baseline JPEG (ITU T.81 sequential DCT, Huffman) ----------------------
@@ -655,15 +678,20 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def decode_jpeg(payload: bytes, return_pixels: bool = False):
+def decode_jpeg(payload: bytes) -> dict:
     """Decode a BASELINE sequential JPEG (SOF0, Huffman, 8-bit) by hand:
     marker walk, canonical Huffman tables, per-MCU entropy decode with DC
     prediction and restart intervals, dequantize + zigzag de-order, exact
     float IDCT, chroma upsampling (any h/v sampling factors incl. 4:2:0),
     YCbCr->RGB (JFIF full-range). Pure stdlib+numpy. Returns the shared
-    image-feature dict, or with `return_pixels` the (h, w, 3) uint8 RGB
-    array. Progressive (SOF2) and arithmetic coding raise
-    NotImplementedError."""
+    image-feature dict, its means taken over the unrounded planes.
+    Progressive (SOF2) and arithmetic coding raise NotImplementedError."""
+    return _image_summary(_jpeg_planes(payload))
+
+
+def _jpeg_planes(payload: bytes):
+    """The clipped float64 (r, g, b) planes of a baseline JPEG (see
+    `decode_jpeg`): the marker walk, then `_jpeg_decode_scan`."""
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
@@ -728,7 +756,7 @@ def decode_jpeg(payload: bytes, return_pixels: bool = False):
             data_pos = pos + 2 + seg_len
             return _jpeg_decode_scan(
                 payload, data_pos, frame, qt, huff_dc, huff_ac, scan_sel,
-                restart_interval, return_pixels=return_pixels,
+                restart_interval,
             )
         pos += 2 + seg_len
     raise ValueError("JPEG contains no scan")
@@ -736,7 +764,7 @@ def decode_jpeg(payload: bytes, return_pixels: bool = False):
 
 def _jpeg_decode_scan(
     payload, data_pos, frame, qt, huff_dc, huff_ac, scan_sel,
-    restart_interval, return_pixels=False,
+    restart_interval,
 ):
     import numpy as np
 
@@ -800,27 +828,13 @@ def _jpeg_decode_scan(
         p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
         full.append(p[:h, :w])
     if len(full) == 1:  # grayscale
-        ych = np.clip(full[0], 0, 255)
-        if return_pixels:
-            gray = np.round(ych).astype(np.uint8)
-            return np.repeat(gray[:, :, None], 3, axis=2)
-        mean = float(ych.mean())
-        means = (mean, mean, mean)
-    else:
-        y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-        r = np.clip(y + 1.402 * cr, 0, 255)
-        g = np.clip(y - 0.344136 * cb - 0.714136 * cr, 0, 255)
-        b = np.clip(y + 1.772 * cb, 0, 255)
-        if return_pixels:
-            return np.round(np.stack([r, g, b], axis=2)).astype(np.uint8)
-        means = (float(r.mean()), float(g.mean()), float(b.mean()))
-    return {
-        "width": int(w),
-        "height": int(h),
-        "mean_r": round(means[0], 6),
-        "mean_g": round(means[1], 6),
-        "mean_b": round(means[2], 6),
-    }
+        return (np.clip(full[0], 0, 255),) * 3
+    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
+    return (
+        np.clip(y + 1.402 * cr, 0, 255),
+        np.clip(y - 0.344136 * cb - 0.714136 * cr, 0, 255),
+        np.clip(y + 1.772 * cb, 0, 255),
+    )
 
 
 # --- ISO-BMFF (MP4/MOV) metadata probe -------------------------------------
@@ -910,8 +924,8 @@ def probe_mp4(payload: bytes) -> dict:
 
 
 VIDEO_META_SCHEMA = (
-    "doc_id long, brand string, duration_s double, n_tracks int, "
-    "width int, height int, has_video boolean, has_audio boolean"
+    "brand string, duration_s double, n_tracks int, width int, height int, "
+    "has_video boolean, has_audio boolean"
 )
 
 
@@ -919,23 +933,9 @@ def video_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """mapInPandas video-metadata extraction over a binary `payload` column
     — the same Arrow-batched plumbing as `image_features`/`audio_features`,
     one probe per payload, no frame decode."""
-
-    cols = [
-        "brand", "duration_s", "n_tracks", "width", "height",
-        "has_video", "has_audio",
-    ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            feats = [
-                _features_or_nulls(probe_mp4, b, cols)
-                for b in pdf["payload"]
-            ]
-            yield _object_frame(pdf[id_col], feats, cols)
-
-    return df.select(id_col, "payload").mapInPandas(batches, VIDEO_META_SCHEMA)
+    return _map_payloads(
+        df, id_col, VIDEO_META_SCHEMA, lambda b: [probe_mp4(b)], True
+    )
 
 
 # --- resize / frame-sample operators ---------------------------------------
@@ -945,25 +945,11 @@ def decode_image_pixels(payload: bytes):
     """(h, w, 3) uint8 RGB pixels, dispatched on magic bytes — the pixel
     form of `decode_image` for operators that transform rather than
     summarize. Grayscale replicates into RGB; GIF yields its first frame's
-    rect; alpha is dropped."""
+    rect; alpha is dropped; JPEG planes round to the nearest integer."""
     import numpy as np
 
-    if payload[:2] == b"BM":
-        return np.ascontiguousarray(_bmp_pixels(payload))
-    if payload[:8] == PNG_MAGIC:
-        px = _png_pixels(payload)
-        if px.shape[2] <= 2:  # gray (+alpha)
-            return np.repeat(px[:, :, :1], 3, axis=2)
-        return np.ascontiguousarray(px[:, :, :3])
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        for rgb, _mask, _left, _top in _gif_frames(payload):
-            return np.ascontiguousarray(rgb.astype(np.uint8))
-        raise ValueError("GIF contains no image frame")
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload, return_pixels=True)
-    raise NotImplementedError(
-        "pixel decode supports BMP, PNG, GIF, baseline JPEG"
-    )
+    planes, _mask = _image_planes(payload)
+    return np.round(np.stack(planes, axis=2)).astype(np.uint8)
 
 
 def resize_image_nn(px, out_w: int, out_h: int):
@@ -981,7 +967,12 @@ def resize_image_nn(px, out_w: int, out_h: int):
     return px[rows][:, cols]
 
 
-RESIZED_SCHEMA = "doc_id long, width int, height int, payload binary"
+RESIZED_SCHEMA = "width int, height int, payload binary"
+
+
+def _resized_rows(payload: bytes, out_w: int, out_h: int) -> list[dict]:
+    px = resize_image_nn(decode_image_pixels(payload), out_w, out_h)
+    return [{"width": out_w, "height": out_h, "payload": encode_bmp(px)}]
 
 
 def resize_images(
@@ -991,39 +982,52 @@ def resize_images(
     neighbor resize, re-encode as uncompressed 24-bit BMP — the
     normalization pass a vision-training pipeline runs so every downstream
     consumer sees one size and one codec. Map-only at any corpus size; the
-    output column is `binary` and round-trips through `decode_bmp`."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                # drop-policy: an undecodable image produces no resized row
-                if payload is None:
-                    continue
-                try:
-                    px = decode_image_pixels(bytes(payload))
-                except Exception:
-                    continue
-                resized = resize_image_nn(px, out_w, out_h)
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": out_w,
-                        "height": out_h,
-                        "payload": encode_bmp(resized),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.select(id_col, "payload").mapInPandas(batches, RESIZED_SCHEMA)
+    output column is `binary` and round-trips through `decode_bmp`. An
+    undecodable or zero-area image produces no row; a non-positive output
+    size raises ValueError here, before any job runs."""
+    if out_w <= 0 or out_h <= 0:
+        raise ValueError(f"resize to an empty size: {out_w}x{out_h}")
+    return _map_payloads(
+        df,
+        id_col,
+        RESIZED_SCHEMA,
+        lambda b: _resized_rows(b, out_w, out_h),
+        False,
+    )
 
 
-AUDIO_FRAME_SCHEMA = (
-    "doc_id long, frame int, start_s double, rms double, peak double"
-)
+AUDIO_FRAME_SCHEMA = "frame int, start_s double, rms double, peak double"
+
+
+def _audio_frame_rows(
+    payload: bytes, n_frames: int, frame_s: float
+) -> list[dict]:
+    norm, rate, channels, _nf = _wav_samples(payload)
+    frame_len = max(int(frame_s * rate) * channels, channels)
+    n = len(norm)
+    if n <= frame_len:
+        starts = [0]
+        frame_len = max(n, 1)
+    elif n_frames == 1:
+        starts = [0]
+    else:
+        span = n - frame_len
+        # align each start DOWN to a channel boundary: an odd
+        # interleaved-sample index on a stereo payload would begin the
+        # window mid-PCM-frame, mixing channel offsets and putting start_s
+        # between frames
+        starts = [
+            ((i * span) // (n_frames - 1)) // channels * channels
+            for i in range(n_frames)
+        ]
+    return [
+        {
+            "frame": fi,
+            "start_s": round(s / (rate * channels), 6) if rate else 0.0,
+            **_rms_peak(norm[s : s + frame_len]),
+        }
+        for fi, s in enumerate(starts)
+    ]
 
 
 def audio_frame_rms(
@@ -1038,66 +1042,49 @@ def audio_frame_rms(
     shipping whole waveforms downstream. Frame starts are integer sample
     indices floor(i * (n - len) / (n_frames - 1)), so the sampling grid is
     deterministic; a payload shorter than one frame yields its single
-    whole-signal frame."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            out_rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                # drop-policy: an undecodable WAV contributes no frame rows
-                if payload is None:
-                    continue
-                try:
-                    norm, rate, channels, _nf = _wav_samples(bytes(payload))
-                except Exception:
-                    continue
-                frame_len = max(int(frame_s * rate) * channels, channels)
-                n = len(norm)
-                if n <= frame_len:
-                    starts = [0]
-                    frame_len = max(n, 1)
-                elif n_frames == 1:
-                    starts = [0]
-                else:
-                    span = n - frame_len
-                    # align each start DOWN to a channel boundary: an odd
-                    # interleaved-sample index on a stereo payload would
-                    # begin the window mid-PCM-frame, mixing channel
-                    # offsets and putting start_s between frames
-                    starts = [
-                        ((i * span) // (n_frames - 1)) // channels * channels
-                        for i in range(n_frames)
-                    ]
-                for fi, s in enumerate(starts):
-                    seg = norm[s : s + frame_len]
-                    out_rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame": fi,
-                            "start_s": round(s / (rate * channels), 6)
-                            if rate
-                            else 0.0,
-                            "rms": round(float(np.sqrt((seg**2).mean())), 6)
-                            if len(seg)
-                            else 0.0,
-                            "peak": round(float(np.abs(seg).max()), 6)
-                            if len(seg)
-                            else 0.0,
-                        }
-                    )
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-
-    return df.select(id_col, "payload").mapInPandas(batches, AUDIO_FRAME_SCHEMA)
+    whole-signal frame. An undecodable WAV contributes no rows."""
+    return _map_payloads(
+        df,
+        id_col,
+        AUDIO_FRAME_SCHEMA,
+        lambda b: _audio_frame_rows(b, n_frames, frame_s),
+        False,
+    )
 
 
 GIF_FRAME_SCHEMA = (
-    "doc_id long, frame int, n_frames int, left int, top int, "
-    "width int, height int, mean_r double, mean_g double, mean_b double"
+    "frame int, n_frames int, left int, top int, width int, height int, "
+    "mean_r double, mean_g double, mean_b double"
 )
+
+
+def _gif_frame_rows(payload: bytes, max_frames: int) -> list[dict]:
+    frames = list(_gif_frames(payload))
+    total = len(frames)
+    if total <= max_frames:
+        keep = range(total)
+    elif max_frames == 1:
+        # single-frame sample: the even-spacing formula divides by
+        # (max_frames - 1); keep frame 0, the same convention as
+        # audio_frame_rms's n_frames == 1
+        keep = [0]
+    else:  # evenly spaced keep-set
+        keep = sorted(
+            {(i * (total - 1)) // (max_frames - 1) for i in range(max_frames)}
+        )
+    rows = []
+    for fi in keep:
+        rgb, mask, left, top = frames[fi]
+        rows.append(
+            {
+                "frame": fi,
+                "n_frames": total,
+                "left": left,
+                "top": top,
+                **_image_summary(_channel_planes(rgb), mask),
+            }
+        )
+    return rows
 
 
 def gif_frame_features(
@@ -1109,68 +1096,21 @@ def gif_frame_features(
     channel means — real frame-sampling over a real multi-frame container,
     the shape a video pipeline uses once a codec is available (MP4 frame
     decode stays NotImplementedError by documented design; `probe_mp4`
-    covers its metadata)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                # drop-policy: an undecodable GIF contributes no frame rows
-                if payload is None:
-                    continue
-                try:
-                    frames = list(_gif_frames(bytes(payload)))
-                except Exception:
-                    continue
-                total = len(frames)
-                if total > max_frames:  # evenly spaced keep-set
-                    if max_frames == 1:
-                        # single-frame sample: the even-spacing formula
-                        # divides by (max_frames - 1); keep frame 0, the
-                        # same convention as audio_frame_rms's n_frames==1
-                        keep = [0]
-                    else:
-                        keep = sorted(
-                            {
-                                (i * (total - 1)) // (max_frames - 1)
-                                for i in range(max_frames)
-                            }
-                        )
-                else:
-                    keep = list(range(total))
-                for fi in keep:
-                    rgb, mask, left, top = frames[fi]
-                    vis = rgb[mask]
-                    if len(vis) == 0:
-                        vis = rgb.reshape(-1, 3)
-                    means = vis.reshape(-1, 3).mean(axis=0)
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame": fi,
-                            "n_frames": total,
-                            "left": left,
-                            "top": top,
-                            "width": rgb.shape[1],
-                            "height": rgb.shape[0],
-                            "mean_r": round(float(means[0]), 6),
-                            "mean_g": round(float(means[1]), 6),
-                            "mean_b": round(float(means[2]), 6),
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.select(id_col, "payload").mapInPandas(batches, GIF_FRAME_SCHEMA)
+    covers its metadata). An undecodable GIF contributes no rows."""
+    return _map_payloads(
+        df,
+        id_col,
+        GIF_FRAME_SCHEMA,
+        lambda b: _gif_frame_rows(b, max_frames),
+        False,
+    )
 
 
 # ---------------------------------------------------------------------------
 # perceptual image hashing (dHash) + near-duplicate pairs
 # ---------------------------------------------------------------------------
 
-DHASH_SCHEMA = "doc_id long, dhash long, width int, height int"
+DHASH_SCHEMA = "dhash long, width int, height int"
 
 
 def image_dhash(px) -> int:
@@ -1195,40 +1135,21 @@ def image_dhash(px) -> int:
     return int(h.astype(np.int64))  # two's-complement into Spark LONG
 
 
+def _dhash_rows(payload: bytes) -> list[dict]:
+    px = decode_image_pixels(payload)
+    return [
+        {"dhash": image_dhash(px), "width": px.shape[1], "height": px.shape[0]}
+    ]
+
+
 def image_dhash_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, dhash, width, height): Arrow-batched perceptual hashing of
+    """(id_col, dhash, width, height): Arrow-batched perceptual hashing of
     a binary image column (BMP/PNG/GIF/baseline-JPEG via
     `decode_image_pixels`). Map-only at any corpus size; the hash is the
     dedup key image pipelines band-join downstream
-    (`image_near_dup_pairs`)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                # drop-policy (see _features_or_nulls): a NULL dhash would
-                # band-join on garbage keys — undecodable payloads leave
-                # the fingerprint frame instead of crashing the task
-                if payload is None:
-                    continue
-                try:
-                    px = decode_image_pixels(bytes(payload))
-                except Exception:
-                    continue
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "dhash": image_dhash(px),
-                        "width": int(px.shape[1]),
-                        "height": int(px.shape[0]),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.select(id_col, "payload").mapInPandas(batches, DHASH_SCHEMA)
+    (`image_near_dup_pairs`). An undecodable or zero-area image leaves the
+    fingerprint frame: a NULL dhash would band-join on garbage keys."""
+    return _map_payloads(df, id_col, DHASH_SCHEMA, _dhash_rows, False)
 
 
 def image_near_dup_pairs(
@@ -1257,7 +1178,7 @@ def image_near_dup_pairs(
 # audio fingerprinting (energy-delta hash) + near-duplicate pairs
 # ---------------------------------------------------------------------------
 
-AUDIO_FP_SCHEMA = "doc_id long, afp long, n_frames_total int, duration_us long"
+AUDIO_FP_SCHEMA = "afp long, n_frames_total int, duration_us long"
 
 
 def audio_fingerprint(payload: bytes, bits: int = 64) -> tuple[int, int, int]:
@@ -1265,24 +1186,13 @@ def audio_fingerprint(payload: bytes, bits: int = 64) -> tuple[int, int, int]:
     the audio analog of `image_dhash`. Samples cut into `bits`+1 equal
     frames; bit i set when frame i+1's energy exceeds frame i's. Energy is
     a sum of squared integer sample values (no normalization, no float
-    accumulation), so the hash is platform-stable and robust to uniform
-    gain changes being... NOT removed — matching the dHash trade: level
-    shifts flip few bits, structural change flips many."""
-    import wave
-
+    accumulation), so the hash is platform-stable. A uniform gain scales
+    every frame's energy alike and so leaves the bits as they are, up to
+    sample rounding and clipping; as with dHash, small level changes flip
+    few bits and structural change flips many."""
     import numpy as np
 
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        rate = w.getframerate()
-        width = w.getsampwidth()
-        n = w.getnframes()
-        raw = w.readframes(n)
-    dtype = {1: np.uint8, 2: np.int16, 4: np.int32}.get(width)
-    if dtype is None:
-        raise ValueError(f"unsupported sample width: {width}")
-    samples = np.frombuffer(raw, dtype=dtype).astype(np.int64)
-    if width == 1:
-        samples -= 128
+    samples, _width, rate, _channels, n = _wav_pcm(payload)
     n_frames = bits + 1
     total = len(samples)
     if total < n_frames:
@@ -1304,39 +1214,19 @@ def audio_fingerprint(payload: bytes, bits: int = 64) -> tuple[int, int, int]:
     return h, n_frames, duration_us
 
 
+def _afp_rows(payload: bytes) -> list[dict]:
+    h, nf, dur = audio_fingerprint(payload)
+    return [{"afp": h, "n_frames_total": nf, "duration_us": dur}]
+
+
 def audio_fingerprint_features(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Arrow-batched audio fingerprinting over a binary WAV column —
     map-only at any corpus size; the emitted hash band-joins downstream
-    exactly like the image dHash."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue  # empty batch -> column-less frame -> Arrow error
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                # drop-policy (see _features_or_nulls): a NULL fingerprint
-                # would band-join on garbage keys
-                if payload is None:
-                    continue
-                try:
-                    h, nf, dur = audio_fingerprint(bytes(payload))
-                except Exception:
-                    continue
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "afp": h,
-                        "n_frames_total": nf,
-                        "duration_us": dur,
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.select(id_col, "payload").mapInPandas(batches, AUDIO_FP_SCHEMA)
+    exactly like the image dHash. An undecodable WAV leaves the
+    fingerprint frame."""
+    return _map_payloads(df, id_col, AUDIO_FP_SCHEMA, _afp_rows, False)
 
 
 def audio_near_dup_pairs(

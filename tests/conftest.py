@@ -41,6 +41,11 @@ def sf_dir():
 # ---------------------------------------------------------------------------
 
 SLOW_TESTS = {
+    "test_multimodal.py": {
+        "test_audio_fingerprint_and_near_dup_pairs",
+        "test_gif_frame_features",
+        "test_image_dhash_and_near_dup_pairs",
+    },
     "test_review_r11b.py": {
         "test_late_event_extends_open_session_start",
         "test_streaming_funnel_drops_null_ts_and_string_keys",
@@ -86,7 +91,6 @@ SLOW_TESTS = {
         "test_streaming_simhash_fuzz_no_crash",
     },
     "test_text_ops.py": {
-        "test_audio_fingerprint_and_near_dup_pairs",
         "test_bigram_logprob_score",
         "test_bpe_encode_counts_match_reference_segmentation",
         "test_bpe_learn_merges_matches_reference",
@@ -100,9 +104,7 @@ SLOW_TESTS = {
         "test_decontaminate_vs_eval_detects_planted_dup",
         "test_duplicate_clusters_components",
         "test_fingerprint_overlap_pairs_stop_fp_cap",
-        "test_gif_frame_features",
         "test_hll_distinct_estimate",
-        "test_image_dhash_and_near_dup_pairs",
         "test_jaccard_stop_shingle_cap",
         "test_log_bucket_quantiles_mergeable_and_bounded_error",
         "test_minhash_identical_docs_share_all_bands",

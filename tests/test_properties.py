@@ -253,7 +253,7 @@ def test_png_decoder_roundtrip_property(w, h, channels, filters, seed):
     import numpy as np
 
     from radar_output_restructure_spark.operators.multimodal import decode_png
-    from tests.test_text_ops import _make_png
+    from tests.test_multimodal import _make_png
 
     px = np.random.RandomState(seed % (2**31)).randint(
         0, 256, size=(h, w, channels), dtype=np.uint8

@@ -1,10 +1,11 @@
 """Regression tests for the round-10 code-review findings in
-operators/curation.py and the similarity, multimodal, sketch, timeseries,
-funnel and streaming operators, plus the write-then-commit crash window.
+operators/curation.py and the similarity, sketch, timeseries, funnel and
+streaming operators, plus the write-then-commit crash window.
 The curation findings were mirrored into the DuckDB oracle in
 queries_docs.py: these tests pin the SEMANTICS the oracle comparison alone
 cannot see, because the oracle mirrored the bug. The operators/text.py
-findings are tested in test_text_ops.py.
+findings are tested in test_text_ops.py, the multimodal one in
+test_multimodal.py.
 """
 
 from __future__ import annotations
@@ -66,7 +67,7 @@ def test_content_split_null_text_hashes_like_empty(spark):
 
 
 # ---------------------------------------------------------------------------
-# similarity.py / multimodal.py review findings
+# similarity.py review findings
 # ---------------------------------------------------------------------------
 
 
@@ -122,44 +123,6 @@ def test_label_centroid_zero_norm_label_pins_cos_zero(spark):
     rows = label_centroid_similarity(emb).collect()
     assert len(rows) == 1
     assert rows[0]["cos"] == 0.0  # not NaN
-
-
-def test_audio_frame_starts_align_to_channel_boundaries(spark):
-    """Stereo WAV: every sampled window must start on a PCM frame boundary
-    (an even interleaved index), not mid-frame."""
-    import io
-    import struct
-    import wave
-
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.multimodal import (
-        audio_frame_rms,
-    )
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(1000)
-        # left channel loud, right silent: channel mixing would show up as
-        # rms differing between aligned and misaligned windows
-        frames = b"".join(
-            struct.pack("<hh", 10000, 0) for _ in range(1003)  # odd-ish span
-        )
-        w.writeframes(frames)
-    df = spark.createDataFrame(
-        [Row(doc_id=1, payload=bytearray(buf.getvalue()))],
-        "doc_id long, payload binary",
-    )
-    rows = audio_frame_rms(df, n_frames=5, frame_s=0.1).collect()
-    assert len(rows) == 5
-    # all windows cover identical (loud, silent) frame pairs -> equal rms
-    rmss = {r["rms"] for r in rows}
-    assert len(rmss) == 1, f"channel-misaligned windows: {sorted(rmss)}"
-    # start_s must land on whole PCM frames (multiples of 1/rate)
-    for r in rows:
-        assert (r["start_s"] * 1000) == int(r["start_s"] * 1000)
 
 
 # ---------------------------------------------------------------------------
