@@ -1192,18 +1192,20 @@ def audio_fingerprint(payload: bytes, bits: int = 64) -> tuple[int, int, int]:
     few bits and structural change flips many."""
     import numpy as np
 
-    samples, _width, rate, _channels, n = _wav_pcm(payload)
+    samples, width, rate, _channels, n = _wav_pcm(payload)
     n_frames = bits + 1
     total = len(samples)
     if total < n_frames:
         samples = np.pad(samples, (0, n_frames - total))
         total = n_frames
+    if width == 4:
+        # python ints: a frame's squared 32-bit samples sum past 2^63
+        samples = samples.astype(object)
     # deterministic equal cut points (the same floor-map as resize_image_nn)
     edges = (np.arange(n_frames + 1, dtype=np.int64) * total) // n_frames
-    energy = np.array(
-        [int((samples[edges[i] : edges[i + 1]] ** 2).sum()) for i in range(n_frames)],
-        dtype=object,  # python ints: squared 32-bit samples can pass 2^63
-    )
+    energy = [
+        int((samples[edges[i] : edges[i + 1]] ** 2).sum()) for i in range(n_frames)
+    ]
     h = 0
     for i in range(bits):
         if energy[i + 1] > energy[i]:

@@ -9,8 +9,10 @@ Reference semantics, re-expressed as one grouped Spark pass per topic:
   exists for its Kafka partition — the max-offset file is never removed
   (SourceDataCleaner.kt:99-113 `incrementTo` containment).
 * C2 extraction check (distributed): recompute each source record's target
-  file path and event time with the SAME plan the writer used, shuffle the
-  records by target path, and run one partition loop over them. For each
+  file path and event time with the SAME plan the writer used, group the
+  records by the partition columns (the shuffle `transform` already ran;
+  a target path is one partition-column tuple per attempt), sort them by
+  target path, and run one partition loop over them. For each
   target file it asks the storage once whether the file exists, reads it
   once, builds the file's set of event times (the reference's
   TimestampFileCache) and emits every source file with a record whose time
@@ -46,7 +48,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from radar_output_restructure_spark.operators.driver_gate import local_frame
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
 from radar_output_restructure_spark.sinks.storage import TargetStorage
 from radar_output_restructure_spark.sinks.writers import decompress, run_partition_loop
@@ -187,11 +188,13 @@ class SourceDataCleaner:
 
     def _source_expectations(
         self, topic: str, files: list[FileEntry]
-    ) -> tuple[DataFrame, set[str]]:
-        """((source_file, target_path, time) per source record, covered
-        source paths) — the same routing + rendering plan the writer ran.
-        `time` is the CSV cell string, the JSON line, or the typed parquet
-        value; `target_path` is NULL for a record with no event time.
+    ) -> tuple[DataFrame | None, list[str], set[str]]:
+        """((source_file, target_path, time, *partition columns) per source
+        record, the partition columns, covered source paths) — the same
+        routing + rendering plan the writer ran. `time` is the CSV cell
+        string, the JSON line, or the typed parquet value; `target_path` is
+        NULL for a record with no event time. The frame is None when no
+        file is covered.
 
         Shares `plan.attempt_frames` with `run_topic` — ONE definition of
         the per-attempt read+conform+union step, so dedup survivors in
@@ -203,6 +206,7 @@ class SourceDataCleaner:
         unverified, never as extracted."""
         cfg = self.config
         parts: list[DataFrame] = []
+        part_cols: list[str] = []
         covered: set[str] = set()
         out_root = self._output_root()
         for attempt, _sup, df, group_files in self.plan.attempt_frames(
@@ -237,17 +241,15 @@ class SourceDataCleaner:
                     "source_file",
                     target.alias("target_path"),
                     event_time.alias("time"),
+                    *part_cols,
                 )
             )
         if not parts:
-            empty = local_frame(
-                self.spark, [], "source_file string, target_path string, time string"
-            )
-            return empty, covered
+            return None, part_cols, covered
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return out, covered
+        return out, part_cols, covered
 
     @staticmethod
     def _target_rows(
@@ -293,9 +295,13 @@ class SourceDataCleaner:
     @Timer.time("cleaner.verify")
     def verify_topic(self, topic: str, files: list[FileEntry]) -> dict[str, bool]:
         """source_file -> fully extracted? One grouped pass for the whole
-        topic: the expectations shuffle by target path and one partition
-        loop checks each target file against its own records; the driver
-        collects only the unmatched source files.
+        topic: the expectations shuffle by their partition columns (the
+        hash `transform` already applied, so Spark plans no second
+        Exchange), sort by target path within each partition, and one
+        partition loop checks each target file against its own records;
+        the driver collects only the unmatched source files. A target path
+        is one (partition columns, attempt) pair, so its records share a
+        partition.
 
         A file the expectation scan could NOT cover (its schema read failed
         right now — transient storage error or post-commit corruption) is
@@ -308,8 +314,14 @@ class SourceDataCleaner:
             return {}
         cfg = self.config
         storage = self.plan.target_storage
-        src, covered = self._source_expectations(topic, files)
-        grouped = src.repartition("target_path").sortWithinPartitions("target_path")
+        src, part_cols, covered = self._source_expectations(topic, files)
+        if src is None:
+            return {f.path: False for f in files}
+        grouped = (
+            src.repartition(*part_cols)
+            .select("source_file", "target_path", "time")
+            .sortWithinPartitions("target_path")
+        )
         # AQE may coalesce the partitions by byte size: a target costs one
         # read, small next to a Python task's fixed cost
         bad = set(

@@ -15,9 +15,10 @@ plan per topic batch:
     write_output_tree_direct     (S10-S13: exact names + sidecars)
     manifest.commit              (T2: write-then-commit)
 
-Catalyst sees the whole pipeline, so column pruning reaches the scan and the
-only shuffle is the final repartition-by-output-file (plus the dedup window's
-hash exchange when enabled, which AQE coalesces into it when keys align).
+Catalyst sees the whole pipeline, so column pruning reaches the scan, and the
+one shuffle is `transform`'s hash partitioning by the output-file path
+columns: the dedup window's key holds every path column, and the writer's
+repartition by the same columns is dropped as redundant.
 """
 
 from __future__ import annotations
@@ -398,10 +399,12 @@ class RestructurePlan:
     ) -> tuple[DataFrame, list[str]]:
         """Scan DataFrame -> flattened, partition-column-annotated DataFrame.
 
-        Returns (df, partition_cols). Plan construction only, except
-        that `flatten` stores the pre-projection rows in one job when the
-        schema has map/array leaves (functions/flatten.py); the writer and
-        the cleaner both read those stored rows.
+        Returns (df, partition_cols), hash-partitioned by partition_cols
+        before the optional dedup window: the window, the writer and the
+        cleaner's grouping then share that one shuffle. Plan construction
+        only, except that `flatten` stores the pre-projection rows in one
+        job when the schema has map/array leaves (functions/flatten.py);
+        the writer and the cleaner both read those stored rows.
         `keep_cols`: extra scan columns carried through unchanged (e.g. the
         cleaner keeps `source_file` to attribute records back to sources).
         """
@@ -492,7 +495,7 @@ class RestructurePlan:
                 *[F.col(c) for c in ORDER_COLS],
                 *[F.col(c) for c in keep_cols],
                 F.to_json(record, {"ignoreNullFields": "false"}).alias("line"),
-            )
+            ).repartition(*part_cols)
             if dedup_cfg.enable:
                 # JSON dedup is whole-line keep-FIRST regardless of
                 # distinct/ignore config (RecordConverterFactory.kt:63-92,
@@ -512,7 +515,7 @@ class RestructurePlan:
             rendered=cfg.output_format != "parquet",
             excluded=excluded | {*ORDER_COLS, *part_cols},
             keep=[*part_cols, *ORDER_COLS, *keep_cols],
-        )
+        ).repartition(*part_cols)
         if dedup_cfg.enable:
             # Dedup scope is ONE OUTPUT FILE in the reference (FileCache close),
             # so the partition columns always join the distinct key; the order
@@ -548,15 +551,7 @@ class RestructurePlan:
             from radar_output_restructure_spark.sources import avro_io
 
             with self.source_storage.open_seekable(path) as fh:
-                head = fh.read(64 * 1024)  # header is metadata-only
-                try:
-                    schema, _, _, _ = avro_io.read_header(head)
-                except (EOFError, IndexError, KeyError):
-                    # pathological schema larger than the prefix: a truncated
-                    # buffer can surface as EOFError, IndexError (varint cut
-                    # mid-byte) or KeyError (metadata map cut mid-entry)
-                    fh.seek(0)
-                    schema, _, _, _ = avro_io.read_header(fh.read(-1))
+                schema = avro_io.read_schema(fh)
             struct, _ = avro_io.avro_to_spark_type(schema)
             return struct.json()
         import pyarrow.parquet as pq

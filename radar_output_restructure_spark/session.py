@@ -4,6 +4,8 @@ Local test runs use ``local[N]``; the same config block is what we would ship
 to a 1000-executor cluster (AQE on, UTC session time, Arrow for the few
 Pandas-UDF paths). Shuffle partitions default to the local core count — on a
 real cluster AQE coalescing makes the static number far less important.
+
+PySpark's DataFrame call-site capture is switched off (`get_spark`).
 """
 
 from __future__ import annotations
@@ -19,6 +21,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session; `extra_conf` entries override any setting.
+
+    `spark.python.sql.dataFrameDebugging.enabled=false` switches off
+    PySpark's DataFrame call-site capture. With it on, every Column and
+    DataFrame call walks the Python stack and makes five py4j round trips
+    (`getActiveSession`, `isDefined`, `conf.get`, `PySparkCurrentOrigin`
+    set and clear) to attach its caller's line to the plan. The engine
+    builds its plans itself, so that error context would name package
+    lines, and a poll cycle (a restructure pass and a cleaner pass) made
+    about 1,800 of its 2,700 py4j calls for it. An error keeps its class, its message text and its Python
+    traceback; only the `== DataFrame ==` context under the message names
+    a JVM frame instead of a Python line."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or cpus)
@@ -39,6 +53,8 @@ def get_spark(
         # the driver-generated testdata uses TIMESTAMP(NANOS); Spark reads it
         # as long with this flag, and sources/tables.py converts to timestamp
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # no per-call Python stack walk and py4j round trips (docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

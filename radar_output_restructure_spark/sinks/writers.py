@@ -8,7 +8,10 @@ target storage is configured. Spark's native writer controls directories,
 not file names, so `write_output_tree_direct` is the one writer: one shuffle
 by the path segments, a sort within partitions by (path, arrival order),
 then one partition loop that writes every file of its partition in place
-through the storage backend's atomic store. The loop runs in one of two
+through the storage backend's atomic store. For the restructure plan that
+shuffle normally comes from `RestructurePlan.transform`, which already
+hash-partitions by the path segments; Spark then drops the writer's own
+repartition as redundant. The loop runs in one of two
 places, chosen by `storage.executor_safe` in `run_partition_loop` (the
 cleaner's extraction check runs its per-target loop there too):
 

@@ -274,6 +274,21 @@ def read_header(source) -> tuple[dict, str, bytes, _Reader]:
     return schema, codec, sync, r
 
 
+def read_schema(fh) -> dict:
+    """Writer schema of the container open on the seekable binary `fh`.
+
+    The header is metadata only, so one 64 KB prefix read serves any
+    realistic schema. A schema larger than the prefix re-reads the whole
+    file: the cut buffer surfaces as EOFError, IndexError (varint cut
+    mid-byte) or KeyError (metadata map cut mid-entry)."""
+    head = fh.read(64 * 1024)
+    try:
+        return read_header(head)[0]
+    except (EOFError, IndexError, KeyError):
+        fh.seek(0)
+        return read_header(fh.read(-1))[0]
+
+
 def read_container(source) -> tuple[dict, list]:
     """Decode a whole container file -> (schema, records)."""
     schema, codec, sync, r = read_header(source)

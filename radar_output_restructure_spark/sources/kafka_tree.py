@@ -21,12 +21,18 @@ one declarative scan:
 Format "avro" (the reference's native input) uses the spark-avro DataSource
 when its jar is on the classpath; otherwise the distributed pure-Python
 container reader in avro_io.py (binaryFile scan + Arrow mapInPandas decode)
-takes over with identical downstream semantics. Parquet shares the same tree
-semantics — they live in the path parsing, not the codec.
+takes over with identical downstream semantics. That reader's record type is
+read on the driver from the container header of the first file it loads
+(the first `paths` entry, or the first match of the glob in the source
+storage's sorted listing), so building a jar-less scan runs no Spark job.
+Parquet shares the same tree semantics — they live in the path parsing, not
+the codec.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import glob
 import re
 import weakref
 
@@ -172,6 +178,55 @@ def has_native_avro(spark: SparkSession) -> bool:
     return cached
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule for names a scan never reads: `.x`, `_x`
+    (a `_` name holding `=` is a partition directory) and in-flight
+    `._COPYING_` copies."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _probe_file(spark: SparkSession, load, exclude_topics: set[str] | None):
+    """(storage, path) of the first file of `load` outside `exclude_topics`,
+    or None when there is none. A literal path is its own file; a glob
+    (`<in>/<topic or *>/partition=*/`) takes the first file of its root's
+    sorted `walk_files` whose leading segments match the glob and whose
+    names below it are not hidden. Driver-side listing only: no Spark
+    job."""
+    from radar_output_restructure_spark.sinks.storage import storage_for
+
+    def kept(path: str) -> bool:
+        # tree layout <in>/<topic>/partition=*/<file>: the topic is the
+        # third-from-last path segment, as in the scan's filter
+        segs = path.split("/")
+        return len(segs) < 3 or segs[-3] not in (exclude_topics or ())
+
+    for entry in [load] if isinstance(load, str) else load:
+        if not glob.has_magic(entry):
+            if kept(entry):
+                return storage_for(entry, spark), entry
+            continue
+        cut = re.search(r"[^/]*[*?\[]", entry).start()
+        root, pattern = entry[:cut], [s for s in entry[cut:].split("/") if s]
+        storage = storage_for(root, spark)
+        # walk_files lists local URIs as plain paths
+        prefix = re.sub("^file:/+", "/", root)
+        for path in sorted(storage.walk_files(root)):
+            segs = [s for s in path[len(prefix):].split("/") if s]
+            if (
+                path.startswith(prefix)
+                and len(segs) > len(pattern)
+                and all(map(fnmatch.fnmatchcase, segs, pattern))
+                and not any(map(_hidden, segs[len(pattern):]))
+                and kept(path)
+            ):
+                return storage, path
+    return None
+
+
 def _read_avro_tree_python(
     spark: SparkSession, load, exclude_topics: set[str] | None = None
 ) -> DataFrame:
@@ -181,6 +236,12 @@ def _read_avro_tree_python(
     natural split granularity — the same unit the reference processes
     (util/GenericRecordReader.kt:11-43).
 
+    The record type comes from the driver: `avro_io.read_schema` reads the
+    header of the first file of the load list (`_probe_file`) through the
+    source storage, the same header read `plans/restructure._schema_canon`
+    fingerprints with, so building the scan launches no Spark job. Every
+    decoded file is checked against that type.
+
     `exclude_topics` prunes BEFORE the decode (path predicate pushed to the
     binaryFile scan): an excluded topic must never be schema-probed or
     decoded — its containers may carry a different schema, and a post-scan
@@ -189,27 +250,18 @@ def _read_avro_tree_python(
 
     from radar_output_restructure_spark.sources import avro_io
 
+    probe = _probe_file(spark, load, exclude_topics)
+    if probe is None:
+        raise FileNotFoundError(f"no avro files under {load!r}")
+    storage, probe_path = probe
+    with storage.open_seekable(probe_path) as fh:
+        writer_schema = avro_io.read_schema(fh)
     bin_df = spark.read.format("binaryFile").load(load)
     if exclude_topics:
         # tree layout <in>/<topic>/partition=*/<file>: the topic is the
         # third-from-last path segment
         topic_seg = F.element_at(F.split(F.col("path"), "/"), -3)
         bin_df = bin_df.filter(~topic_seg.isin(*sorted(exclude_topics)))
-    # header-only probe: read_header needs O(KB), not the whole container
-    probe = (
-        bin_df.select(F.substring("content", 1, 64 * 1024).alias("head"))
-        .limit(1)
-        .first()
-    )
-    if probe is None:
-        raise FileNotFoundError(f"no avro files under {load!r}")
-    try:
-        writer_schema, _, _, _ = avro_io.read_header(bytes(probe.head))
-    except (EOFError, IndexError, KeyError):
-        # pathological schema larger than the prefix (same fallback as
-        # plans/restructure._schema_canon): fetch the whole probe file
-        whole = bin_df.select("content").limit(1).first()
-        writer_schema, _, _, _ = avro_io.read_header(bytes(whole.content))
     record_type, _ = avro_io.avro_to_spark_type(writer_schema)
     if not isinstance(record_type, T.StructType):
         raise ValueError("top-level avro schema must be a record")

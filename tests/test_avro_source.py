@@ -12,6 +12,7 @@ import os
 import pytest
 
 from radar_output_restructure_spark.plans.restructure import (
+    DedupConfig,
     RestructureConfig,
     RestructurePlan,
 )
@@ -318,7 +319,9 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
     them too: 5 jobs per restructure run and 8 per verify_topic on this
     fixture. verify_topic checks each target file inside the grouped pass
     over its expectations (no target-path collect, listing job or
-    anti-join): 4 jobs."""
+    anti-join). The Avro record type is read on the driver, not by a
+    `first()` job: 3 jobs per pass (the checkpoint, then the shuffle's
+    map stage and result stage), 4 before."""
     from radar_output_restructure_spark.plans.cleaner import (
         CleanerConfig,
         SourceDataCleaner,
@@ -343,7 +346,7 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
     finals, n_run = _jobs_in(
         spark, "restructure-pass", RestructurePlan(spark, cfg).run
     )
-    assert n_run == 4
+    assert n_run == 3
     first = open(os.path.join(output_dir, "p/u/t/19700101_0100.csv")).read()
     assert first.splitlines() == [
         "key.projectId,key.userId,key.sourceId,value.time,"
@@ -359,4 +362,109 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
         spark, "verify-pass", lambda: cleaner.verify_topic("t", files)
     )
     assert verdict == {old: True}
-    assert n_verify == 4
+    assert n_verify == 3
+
+
+def test_dedup_pass_shuffles_once(spark, tmp_path):
+    """With dedup on, `transform` hash-partitions by the partition columns
+    before the dedup window; the window key holds every partition column,
+    so the window, the writer's repartition and the cleaner's grouping all
+    reuse that one shuffle. A restructure pass and a verify_topic pass each
+    run 3 jobs (the flatten checkpoint, then the shuffle's map stage and
+    result stage), with the re-delivered record written once."""
+    from radar_output_restructure_spark.plans.cleaner import (
+        CleanerConfig,
+        SourceDataCleaner,
+    )
+    def rec(t, levels, props):
+        return {"key": {"projectId": "p", "userId": "u", "sourceId": "s"},
+                "value": {"time": t, "levels": levels, "props": props}}
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    old = _write_avro_fixture(
+        input_dir, "t", [rec(3600.0, [1, 2], {"b": "x"}), rec(3601.0, [], {})],
+        0, 0, 1, schema=DYNAMIC_SCHEMA,
+    )
+    _write_avro_fixture(
+        input_dir, "t", [rec(3601.0, [], {}), rec(7200.0, [3], {"a": "y"})],
+        0, 2, 3, schema=DYNAMIC_SCHEMA,
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        dedup=DedupConfig(enable=True),
+    )
+    finals, n_run = _jobs_in(
+        spark, "dedup-restructure-pass", RestructurePlan(spark, cfg).run
+    )
+    assert n_run == 3
+    first = open(os.path.join(output_dir, "p/u/t/19700101_0100.csv")).read()
+    assert first.splitlines()[1:] == ["p,u,s,3600.0,1,2,,x", "p,u,s,3601.0,,,,"]
+    assert len(finals["t"]) == 2
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    files = cleaner.candidate_files("t")
+    verdict, n_verify = _jobs_in(
+        spark, "dedup-verify-pass", lambda: cleaner.verify_topic("t", files)
+    )
+    assert verdict == {old: True}
+    assert n_verify == 3
+
+
+def test_avro_scan_builds_without_a_job(spark, tmp_path):
+    """The jar-less reader takes its record type from the header of the
+    first file it loads, read on the driver: building the scan runs no
+    Spark job, for a `paths` list and for a glob alike."""
+    input_dir = str(tmp_path / "in")
+    paths = [
+        _write_avro_fixture(
+            input_dir, "status", [_status_rec("p", "u", 1.0 + i, "S")],
+            0, i, i,
+        )
+        for i in range(2)
+    ]
+    for label, kwargs in (("paths", {"paths": paths}), ("glob", {})):
+        df, n_jobs = _jobs_in(
+            spark, f"avro-build-{label}",
+            lambda kw=kwargs: read_topic_tree(
+                spark, input_dir, topic="status", file_format="avro", **kw
+            ),
+        )
+        assert n_jobs == 0, label
+        assert sorted(r.offset_from for r in df.collect()) == [0, 1]
+
+
+def test_avro_scan_of_no_files_raises(spark, tmp_path):
+    input_dir = str(tmp_path / "in")
+    with pytest.raises(FileNotFoundError):
+        read_topic_tree(spark, input_dir, file_format="avro", paths=[])
+
+
+def test_avro_schema_larger_than_header_prefix(spark, tmp_path):
+    """A writer schema larger than the 64 KB header read falls back to the
+    whole file, for the fingerprint and for the scan's record type."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from radar_output_restructure_spark.sinks.storage import LocalTargetStorage
+
+    big = dict(STATUS_SCHEMA, doc="x" * (80 * 1024))
+    input_dir = str(tmp_path / "in")
+    p = _write_avro_fixture(
+        input_dir, "status", [_status_rec("p", "u", 1.0, "S")], 0, 0, 0,
+        schema=big,
+    )
+    with open(p, "rb") as fh:
+        assert avro_io.read_schema(fh) == big
+    plan = RestructurePlan.__new__(RestructurePlan)
+    plan.config = RestructureConfig(
+        input_dir=input_dir, output_dir=str(tmp_path / "out"),
+        source_format="avro",
+    )
+    plan.source_storage = LocalTargetStorage()
+    canon = T.StructType.fromJson(json.loads(plan._schema_canon(p)))
+    assert canon.fieldNames() == ["key", "value"]
+    rows = read_topic_tree(
+        spark, input_dir, file_format="avro", paths=[p]
+    ).collect()
+    assert [(r.key.userId, r.value.time) for r in rows] == [("u", 1.0)]

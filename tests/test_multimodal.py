@@ -1106,6 +1106,40 @@ def test_audio_fingerprint_and_near_dup_pairs(spark):
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
 
 
+def test_audio_fingerprint_32bit_matches_16bit():
+    """The exact 32-bit copy of a 16-bit tone (every sample << 16) scales
+    each frame's energy by 2^32 and so keeps every bit. A loud 32-bit
+    frame's squared samples sum past 2^63: in int64 the sum wraps negative
+    and the bits become noise."""
+    import io as _io
+    import wave as _wave
+
+    import numpy as np
+
+    from radar_output_restructure_spark.operators.multimodal import (
+        audio_fingerprint,
+    )
+
+    def wav_from(samples: np.ndarray, width: int) -> bytes:
+        buf = _io.BytesIO()
+        with _wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(width)
+            w.setframerate(8000)
+            w.writeframes(samples.astype(f"<i{width}").tobytes())
+        return buf.getvalue()
+
+    t = np.arange(8000) / 8000.0
+    tone = (
+        np.sin(2 * np.pi * 440 * t) * np.linspace(0.2, 0.9, 8000) * 32767
+    ).astype(np.int64)
+    h16, frames, dur = audio_fingerprint(wav_from(tone, 2))
+    h32, frames32, dur32 = audio_fingerprint(wav_from(tone << 16, 4))
+    assert (frames, dur) == (frames32, dur32) == (65, 1_000_000)
+    assert h16 != 0
+    assert h32 == h16
+
+
 def test_audio_frame_starts_align_to_channel_boundaries(spark):
     """Stereo WAV: every sampled window must start on a PCM frame boundary
     (an even interleaved index), not mid-frame."""
