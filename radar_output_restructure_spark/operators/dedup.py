@@ -40,6 +40,28 @@ def _ord_exprs(order_by) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
 
 
+def key_field_indexes(
+    header: Sequence[str],
+    distinct: Sequence[str] | None,
+    ignore: Sequence[str] | None,
+) -> list[int] | None:
+    """Indexes of the dedup key's fields in `header`, with the reference's
+    fallback order (CsvAvroConverterFactory.fieldIndexes): the distinct
+    fields when ALL are present, else header-minus-ignored when ANY ignored
+    field is present, else None (the whole record is the key). Shared by
+    the restructure transform and the writers' dedup-on-append, so a
+    misnamed field falls back the same way in both."""
+    if distinct:
+        idxs = [header.index(f) if f in header else -1 for f in distinct]
+        if -1 not in idxs:
+            return idxs
+    if ignore:
+        drop = {header.index(f) for f in ignore if f in header}
+        if drop:
+            return [i for i in range(len(header)) if i not in drop]
+    return None
+
+
 def _key_cols(
     df: DataFrame,
     distinct_fields: Sequence[str] | None,

@@ -352,9 +352,9 @@ class SourceDataCleaner:
                         self.plan.storage_index.remove(f.path)
                     deleted.append(f.path)
                 else:
-                    self.plan.manifest.revoke([f])  # T7 revocation
-                    revoked.append(f.path)
-        return {"deleted": deleted, "revoked": revoked}
+                    revoked.append(f)
+            self.plan.manifest.revoke(revoked)  # T7: one ledger segment
+        return {"deleted": deleted, "revoked": [f.path for f in revoked]}
 
     def run(self) -> dict[str, dict[str, list[str]]]:
         if self._owns_plan and self.plan.storage_index is not None:

@@ -35,7 +35,11 @@ from pyspark.sql import types as T
 from radar_output_restructure_spark.functions.flatten import flatten, pruned_struct
 from radar_output_restructure_spark.functions.schema_compat import conform_to
 from radar_output_restructure_spark.functions.timeutil import event_time
-from radar_output_restructure_spark.operators.dedup import dedup_keep_first, dedup_keep_last
+from radar_output_restructure_spark.operators.dedup import (
+    dedup_keep_first,
+    dedup_keep_last,
+    key_field_indexes,
+)
 from radar_output_restructure_spark.plans.path_format import (
     DEFAULT_FORMAT,
     BucketFormat,
@@ -219,14 +223,11 @@ class RestructurePlan:
         self.last_errors: dict[str, BaseException] = {}
         self._lock_manager = None
         if config.lock_dir:
-            # Scheme-aware (T5): s3://-/azure://-prefixed lock dirs
-            # coordinate replicas over conditional PUT with NO shared
-            # filesystem — the faithful analog of the reference's Redis
-            # locks for object-store deployments; plain paths keep the
-            # shared-FS manager.
-            from radar_output_restructure_spark.object_locks import (
-                lock_manager_for,
-            )
+            # Scheme-aware (T5): the locks are conditional writes through
+            # the storage backend of the lock dir's scheme — s3:// and
+            # azure:// coordinate replicas with NO shared filesystem, the
+            # faithful analog of the reference's Redis locks.
+            from radar_output_restructure_spark.locks import lock_manager_for
 
             self._lock_manager = lock_manager_for(
                 config.lock_dir,
@@ -519,25 +520,22 @@ class RestructurePlan:
         if dedup_cfg.enable:
             # Dedup scope is ONE OUTPUT FILE in the reference (FileCache close),
             # so the partition columns always join the distinct key; the order
-            # columns are never part of the key.
-            distinct = dedup_cfg.distinct_fields
-            ignore = None
-            if distinct:
-                distinct = [*part_cols, *distinct]
-            else:
-                # keep_cols must NOT join the implicit key: the cleaner
-                # passes keep_cols=('source_file',) and a key containing it
-                # would keep different survivors than the writer's transform
-                # (which never sees that column) — every cross-file
-                # duplicate would then fail verification and loop
-                # revoke/re-extract forever
-                ignore = (
-                    list(dedup_cfg.ignore_fields or [])
-                    + list(ORDER_COLS)
-                    + list(keep_cols)
-                )
+            # columns are never part of the key, and neither are keep_cols:
+            # the cleaner passes keep_cols=('source_file',) and a key
+            # containing it would keep different survivors than the writer's
+            # transform (which never sees that column) — every cross-file
+            # duplicate would then fail verification and loop
+            # revoke/re-extract forever. The record fields of the key follow
+            # the writers' rule (distinct fields, else minus ignored, else
+            # all), so a field the topic lacks falls back, not fails.
+            hidden = {*part_cols, *ORDER_COLS, *keep_cols}
+            fields = [c for c in flat.columns if c not in hidden]
+            idxs = key_field_indexes(
+                fields, dedup_cfg.distinct_fields, dedup_cfg.ignore_fields
+            )
+            key = fields if idxs is None else [fields[i] for i in idxs]
             flat = dedup_keep_last(
-                flat, ORDER_COLS, distinct, ignore, restore_order=False
+                flat, ORDER_COLS, [*part_cols, *key], None, restore_order=False
             )
         return flat, part_cols
 

@@ -49,6 +49,7 @@ import xml.etree.ElementTree as ET
 from contextlib import contextmanager
 
 from radar_output_restructure_spark.sinks.storage import (
+    RangedReader,
     TargetStorage,
     as_prefix,
 )
@@ -93,7 +94,7 @@ def _sign_shared_key(
             headers.get("Content-Type", ""),
             "",  # Date (empty: x-ms-date is used)
             "",  # If-Modified-Since
-            headers.get("If-Match", ""),  # conditional PUT (object_locks)
+            headers.get("If-Match", ""),  # conditional PUT (locks.py)
             headers.get("If-None-Match", ""),
             "",  # If-Unmodified-Since
             "",  # Range (ranged reads use x-ms-range, canonical above)
@@ -304,9 +305,6 @@ class AzureTargetStorage(TargetStorage):
             if not marker:
                 return
 
-    def walk_files(self, root: str) -> list[str]:
-        return [p for p, _m, _s in self.walk_file_status(root)]
-
     def walk_file_status(self, root: str) -> list[tuple[str, int, int]]:
         container, key = parse_azure_url(root)
         return [
@@ -314,19 +312,6 @@ class AzureTargetStorage(TargetStorage):
             for kind, name, m, s in self._list(container, as_prefix(key))
             if kind == "blob"
         ]
-
-    def list_dirs(self, root: str) -> list[str]:
-        container, key = parse_azure_url(root)
-        # set: a prefix spanning a page boundary may repeat across pages
-        return sorted(
-            {
-                name.rstrip("/").rsplit("/", 1)[-1]
-                for kind, name, _m, _s in self._list(
-                    container, as_prefix(key), delimiter="/"
-                )
-                if kind == "prefix"
-            }
-        )
 
     def list_entries(
         self, root: str, start_after: str | None = None
@@ -357,48 +342,48 @@ class AzureTargetStorage(TargetStorage):
         container, key = parse_azure_url(path)
         _s, headers, _b = self._request("HEAD", container, key)
         size = int({k.lower(): v for k, v in headers.items()}["content-length"])
-        return _RangedAzureBlob(self, container, key, size)
 
+        def fetch(start: int, n: int) -> bytes:
+            rng = {"x-ms-range": f"bytes={start}-{start + n - 1}"}
+            return self._request(
+                "GET", container, key, headers=rng, ok=(200, 206)
+            )[2]
 
-class _RangedAzureBlob(io.RawIOBase):
-    """Seekable read-only blob view over ranged GETs (the parquet-footer
-    read path — same shape as the S3 backend's _RangedS3File)."""
+        return RangedReader(size, fetch)
 
-    def __init__(self, storage: AzureTargetStorage, container, key, size):
-        self._st = storage
-        self._container = container
-        self._key = key
-        self._size = size
-        self._pos = 0
+    # -- conditional writes (the topic-lock primitives, locks.py) ----------
 
-    def readable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return True
-
-    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
-        if whence == io.SEEK_SET:
-            self._pos = offset
-        elif whence == io.SEEK_CUR:
-            self._pos += offset
-        else:
-            self._pos = self._size + offset
-        return self._pos
-
-    def tell(self) -> int:
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        if self._pos >= self._size:
-            return b""
-        end = self._size - 1 if n < 0 else min(self._pos + n - 1, self._size - 1)
-        _s, _h, body = self._st._request(
-            "GET",
-            self._container,
-            self._key,
-            headers={"x-ms-range": f"bytes={self._pos}-{end}"},
-            ok=(200, 206),
+    def _put_if(self, path: str, body: bytes, condition: dict) -> bool:
+        container, key = parse_azure_url(path)
+        # a failed If-None-Match:* is 409 BlobAlreadyExists, a failed
+        # If-Match 412 ConditionNotMet (both tolerated on either —
+        # emulators/proxies vary)
+        status, _h, _b = self._request(
+            "PUT", container, key, body=body, headers=condition,
+            ok=(201, 409, 412),
         )
-        self._pos += len(body)
-        return body
+        return status == 201
+
+    def create_if_absent(self, path: str, body: bytes) -> bool:
+        return self._put_if(path, body, {"If-None-Match": "*"})
+
+    def replace_if_match(self, path: str, body: bytes, etag: str) -> bool:
+        return self._put_if(path, body, {"If-Match": etag})
+
+    def read_with_etag(self, path: str) -> tuple[bytes, str, float | None] | None:
+        container, key = parse_azure_url(path)
+        status, headers, data = self._request(
+            "GET", container, key, ok=(200, 404)
+        )
+        if status == 404:
+            return None
+        low = {k.lower(): v for k, v in headers.items()}
+        mtime: float | None = None
+        if "last-modified" in low:
+            try:
+                mtime = email.utils.parsedate_to_datetime(
+                    low["last-modified"]
+                ).timestamp()
+            except (TypeError, ValueError):
+                mtime = None
+        return data, low.get("etag", ""), mtime

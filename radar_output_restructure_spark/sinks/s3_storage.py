@@ -17,7 +17,7 @@ Semantics mirror the reference's S3TargetStorage:
   stream costs disk, not memory; on error the spool is dropped and nothing
   is published.
 * object stores have no directories: `makedirs` is a no-op, listings are
-  prefix scans, `list_dirs` uses delimiter common-prefixes.
+  prefix scans, directory listings use delimiter common-prefixes.
 
 At 100 TB: every executor task holds one boto3 client (connection-pooled),
 uploads are multipart (bounded memory), and listing is paginated server-side
@@ -30,11 +30,11 @@ the storage raises with a clear message.
 
 from __future__ import annotations
 
-import io
 from contextlib import contextmanager
 
 from radar_output_restructure_spark.sinks.storage import (
     CHUNK_SIZE,
+    RangedReader,
     TargetStorage,
     as_prefix,
 )
@@ -244,9 +244,6 @@ class S3TargetStorage(TargetStorage):
                     int(obj["Size"]),
                 )
 
-    def walk_files(self, root: str) -> list[str]:
-        return [p for p, _m, _s in self.walk_file_status(root)]
-
     def walk_file_status(self, root: str) -> list[tuple[str, int, int]]:
         bucket, key = parse_s3_url(root)
         scheme = root.split("://", 1)[0]
@@ -254,17 +251,6 @@ class S3TargetStorage(TargetStorage):
             (f"{scheme}://{bucket}/{k}", m, s)
             for k, m, s in self._list(bucket, as_prefix(key))
         ]
-
-    def list_dirs(self, root: str) -> list[str]:
-        bucket, key = parse_s3_url(root)
-        paginator = self.client.get_paginator("list_objects_v2")
-        names: list[str] = []
-        for page in paginator.paginate(
-            Bucket=bucket, Prefix=as_prefix(key), Delimiter="/"
-        ):
-            for cp in page.get("CommonPrefixes", []):
-                names.append(cp["Prefix"].rstrip("/").rsplit("/", 1)[-1])
-        return sorted(names)
 
     def list_entries(
         self, root: str, start_after: str | None = None
@@ -304,56 +290,45 @@ class S3TargetStorage(TargetStorage):
     def open_seekable(self, path: str):
         bucket, key = parse_s3_url(path)
         head = self.client.head_object(Bucket=bucket, Key=key)
-        return _RangedS3File(self.client, bucket, key, int(head["ContentLength"]))
 
+        def fetch(start: int, n: int) -> bytes:
+            rng = f"bytes={start}-{start + n - 1}"
+            resp = self.client.get_object(Bucket=bucket, Key=key, Range=rng)
+            return resp["Body"].read()
 
-class _RangedS3File(io.RawIOBase):
-    """Seekable read-only file over ranged GETs — what pyarrow/zipfile need
-    to read footers/central directories without fetching the whole object."""
+        return RangedReader(int(head["ContentLength"]), fetch)
 
-    def __init__(self, client, bucket: str, key: str, size: int):
-        self._client = client
-        self._bucket = bucket
-        self._key = key
-        self._size = size
-        self._pos = 0
+    # -- conditional writes (the topic-lock primitives, locks.py) ----------
 
-    def size(self) -> int:
-        return self._size
+    def _put_if(self, path: str, body: bytes, **condition) -> bool:
+        bucket, key = parse_s3_url(path)
+        try:
+            self.client.put_object(Bucket=bucket, Key=key, Body=body, **condition)
+            return True
+        except self.client.exceptions.ClientError as exc:
+            code = exc.response.get("Error", {}).get("Code", "")
+            # 412 on both conditions; ConditionalRequestConflict (409) when
+            # a concurrent conditional write on the same key is in flight —
+            # the caller lost the race either way.
+            if code in ("PreconditionFailed", "ConditionalRequestConflict"):
+                return False
+            raise
 
-    def readable(self) -> bool:
-        return True
+    def create_if_absent(self, path: str, body: bytes) -> bool:
+        return self._put_if(path, body, IfNoneMatch="*")
 
-    def seekable(self) -> bool:
-        return True
+    def replace_if_match(self, path: str, body: bytes, etag: str) -> bool:
+        return self._put_if(path, body, IfMatch=etag)
 
-    def seek(self, pos: int, whence: int = 0) -> int:
-        if whence == 1:
-            pos = self._pos + pos
-        elif whence == 2:
-            pos = self._size + pos
-        self._pos = max(0, pos)
-        return self._pos
-
-    def tell(self) -> int:
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        remaining = self._size - self._pos
-        if n is None or n < 0 or n > remaining:
-            n = remaining
-        if n <= 0:
-            return b""
-        resp = self._client.get_object(
-            Bucket=self._bucket,
-            Key=self._key,
-            Range=f"bytes={self._pos}-{self._pos + n - 1}",
+    def read_with_etag(self, path: str) -> tuple[bytes, str, float | None] | None:
+        bucket, key = parse_s3_url(path)
+        try:
+            resp = self.client.get_object(Bucket=bucket, Key=key)
+        except self.client.exceptions.ClientError as exc:
+            if exc.response["Error"]["Code"] in ("404", "NoSuchKey"):
+                return None
+            raise
+        lm = resp.get("LastModified")
+        return resp["Body"].read(), resp["ETag"], (
+            lm.timestamp() if lm is not None else None
         )
-        data = resp["Body"].read()
-        self._pos += len(data)
-        return data
-
-    def readinto(self, b) -> int:
-        data = self.read(len(b))
-        b[: len(data)] = data
-        return len(data)

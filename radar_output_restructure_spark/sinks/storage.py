@@ -3,7 +3,10 @@ reference target/TargetStorage.kt:24-68 with LocalTargetStorage.kt,
 S3TargetStorage.kt, AzureTargetStorage.kt implementations).
 
 The writers only ever need six primitives — exists / read / atomic store /
-makedirs / delete / walk — so the storage backend is one small class:
+makedirs / delete / walk — so the storage backend is one small class. Three
+conditional writes (create-if-absent / read-with-etag / replace-if-match)
+carry the topic-lock protocol (locks.py) on the local, S3 and Azure
+backends:
 
 * `LocalTargetStorage`: os/shutil on a mounted filesystem (local disk, NFS,
   FUSE mounts of object stores). Picklable, so it ships to executors and the
@@ -23,6 +26,7 @@ object-store connectors implement as upload + server-side copy).
 
 from __future__ import annotations
 
+import fcntl
 import io
 import os
 import shutil
@@ -158,7 +162,7 @@ class TargetStorage:
 
     def walk_files(self, root: str) -> list[str]:
         """Every file path under root (recursive); [] when root is absent."""
-        raise NotImplementedError
+        return [p for p, _m, _s in self.walk_file_status(root)]
 
     # -- source-side listing surface (S2/S3: the reference's SourceStorage) --
 
@@ -168,7 +172,7 @@ class TargetStorage:
 
     def list_dirs(self, root: str) -> list[str]:
         """Names (not paths) of the immediate subdirectories of root."""
-        raise NotImplementedError
+        return self.list_entries(root)[0]
 
     def list_entries(
         self, root: str, start_after: str | None = None
@@ -196,6 +200,72 @@ class TargetStorage:
         """Binary file-like with read/seek/tell — what pyarrow needs for a
         parquet footer read without fetching the whole object."""
         raise NotImplementedError
+
+    # -- conditional writes: the topic-lock protocol's primitives (locks.py) --
+
+    def create_if_absent(self, path: str, body: bytes) -> bool:
+        """Atomically create `path` with `body` — True iff this call created
+        it (S3 `If-None-Match: *`)."""
+        raise NotImplementedError
+
+    def read_with_etag(self, path: str) -> tuple[bytes, object, float | None] | None:
+        """(content, etag, store Last-Modified as epoch seconds — or None
+        where the store doesn't report one), or None when absent."""
+        raise NotImplementedError
+
+    def replace_if_match(self, path: str, body: bytes, etag) -> bool:
+        """Atomically replace `path` with `body` — True iff it was still at
+        `etag` (S3 `If-Match`)."""
+        raise NotImplementedError
+
+
+class RangedReader(io.RawIOBase):
+    """Seekable read-only file over a `(size, fetch(start, n), close)`
+    triple: each read is one ranged fetch, so pyarrow/zipfile read footers
+    and central directories without fetching the whole object."""
+
+    def __init__(self, size: int, fetch, close=None):
+        self._size = size
+        self._fetch = fetch
+        self._close = close
+        self._pos = 0
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def seek(self, pos: int, whence: int = io.SEEK_SET) -> int:
+        if whence == io.SEEK_CUR:
+            pos = self._pos + pos
+        elif whence == io.SEEK_END:
+            pos = self._size + pos
+        self._pos = max(0, pos)
+        return self._pos
+
+    def tell(self) -> int:
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        remaining = self._size - self._pos
+        if n is None or n < 0 or n > remaining:
+            n = remaining
+        if n <= 0:
+            return b""
+        data = self._fetch(self._pos, n)
+        self._pos += len(data)
+        return data
+
+    def readinto(self, b) -> int:
+        data = self.read(len(b))
+        b[: len(data)] = data
+        return len(data)
+
+    def close(self) -> None:
+        if not self.closed and self._close is not None:
+            self._close()
+        super().close()
 
 
 class LocalTargetStorage(TargetStorage):
@@ -245,13 +315,6 @@ class LocalTargetStorage(TargetStorage):
                 out.append((full, int(st.st_mtime * 1000), st.st_size))
         return out
 
-    def list_dirs(self, root: str) -> list[str]:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))
-        )
-
     def mtime_ms(self, path: str) -> int:
         return int(os.stat(path).st_mtime * 1000)
 
@@ -276,63 +339,62 @@ class LocalTargetStorage(TargetStorage):
     def open_seekable(self, path: str):
         return open(path, "rb")
 
+    # Conditional writes over POSIX primitives. The etag is the content
+    # itself (there is no Last-Modified witness): comparing content is
+    # exactly the check a replace-if-match needs.
 
-class _JvmSeekableFile:
-    """Python file-like over a Hadoop FSDataInputStream (driver-side py4j).
-    Each read is one JVM round-trip — metadata-read sized, not data-path."""
+    def create_if_absent(self, path: str, body: bytes) -> bool:
+        # the body goes to a private temp file that is then hard-linked to
+        # `path` — atomic create-if-absent, and the file appears FULLY
+        # written, so a reader never sees a torn or empty lock
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "wb") as fh:
+            fh.write(body)
+        try:
+            os.link(tmp, path)
+            return True
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
 
-    mode = "rb"
+    def read_with_etag(self, path: str) -> tuple[bytes, bytes, None] | None:
+        try:
+            data = self.read(path)
+        except FileNotFoundError:
+            return None
+        return data, data, None
 
-    def __init__(self, jvm, fs, jpath):
-        self._stream = fs.open(jpath)
-        self._size = fs.getFileStatus(jpath).getLen()
-        self._jvm = jvm
-        self.closed = False
+    def replace_if_match(self, path: str, body: bytes, etag: bytes) -> bool:
+        # Compare-and-replace under an exclusive flock on the sidecar
+        # `<path>.mutex` (never unlinked; the flock dies with a crashed
+        # holder). The sidecar is the one earlier lock-file replicas take
+        # around their unlink+link break, so the two serialize.
+        fd = os.open(f"{path}.mutex", os.O_CREAT | os.O_RDWR, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            cur = self.read_with_etag(path)
+            if cur is None or cur[1] != etag:
+                return False
+            self.store_atomic(path, body)
+            return True
+        finally:
+            os.close(fd)  # releases the flock
 
-    def size(self) -> int:
-        return self._size
 
-    def read(self, n: int = -1) -> bytes:
-        remaining = self._size - self.tell()
-        if n is None or n < 0 or n > remaining:
-            n = remaining
-        if n <= 0:
-            return b""
+def _jvm_seekable(jvm, fs, jpath) -> RangedReader:
+    """RangedReader over a Hadoop FSDataInputStream (driver-side py4j).
+    Each read is one seek plus one JVM round-trip — metadata-read sized,
+    not data-path."""
+    stream = fs.open(jpath)
+
+    def fetch(start: int, n: int) -> bytes:
+        stream.seek(start)
         # commons-io (on Spark's classpath) returns the filled byte[] —
         # py4j copies Java byte[] RETURN values back as Python bytes
-        return bytes(
-            self._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                self._stream, n
-            )
-        )
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream, n))
 
-    def seek(self, pos: int, whence: int = 0) -> int:
-        if whence == 1:
-            pos = self.tell() + pos
-        elif whence == 2:
-            pos = self._size + pos
-        self._stream.seek(pos)
-        return pos
-
-    def tell(self) -> int:
-        return self._stream.getPos()
-
-    def seekable(self) -> bool:
-        return True
-
-    def readable(self) -> bool:
-        return True
-
-    def close(self) -> None:
-        if not self.closed:
-            self._stream.close()
-            self.closed = True
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
+    return RangedReader(fs.getFileStatus(jpath).getLen(), fetch, stream.close)
 
 
 class _JvmOutputFile:
@@ -493,9 +555,6 @@ class HadoopTargetStorage(TargetStorage):
         if fs.exists(jpath):
             fs.delete(jpath, True)
 
-    def walk_files(self, root: str) -> list[str]:
-        return [p for p, _m, _s in self.walk_file_status(root)]
-
     def walk_file_status(self, root: str) -> list[tuple[str, int, int]]:
         fs, jpath = self._fs_path(root)
         if not fs.exists(jpath):
@@ -514,16 +573,6 @@ class HadoopTargetStorage(TargetStorage):
                 (p, int(st.getModificationTime()), int(st.getLen()))
             )
         return out
-
-    def list_dirs(self, root: str) -> list[str]:
-        fs, jpath = self._fs_path(root)
-        if not fs.exists(jpath):
-            return []
-        return sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(jpath)
-            if st.isDirectory()
-        )
 
     def list_entries(
         self, root: str, start_after: str | None = None
@@ -551,4 +600,4 @@ class HadoopTargetStorage(TargetStorage):
 
     def open_seekable(self, path: str):
         fs, jpath = self._fs_path(path)
-        return _JvmSeekableFile(self._jvm, fs, jpath)
+        return _jvm_seekable(self._jvm, fs, jpath)

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from radar_output_restructure_spark.operators.dedup import key_field_indexes
 from radar_output_restructure_spark.sinks.storage import (
     LocalTargetStorage,
     TargetStorage,
@@ -116,26 +117,6 @@ def _avro_schema_json(schema: T.StructType, topic: str) -> str:
     return json.dumps(top, indent=2)
 
 
-def _field_indexes(
-    header: list[str],
-    distinct: list[str] | None,
-    ignore: list[str] | None,
-) -> list[int] | None:
-    """Key-column indexes for file-level dedup, with the reference's
-    fallback order (CsvAvroConverterFactory.fieldIndexes): the distinct
-    fields when ALL are present, else header-minus-ignored when ANY ignored
-    field is present, else None (whole record is the key)."""
-    if distinct:
-        idxs = [header.index(f) if f in header else -1 for f in distinct]
-        if -1 not in idxs:
-            return idxs
-    if ignore:
-        drop = {header.index(f) for f in ignore if f in header}
-        if drop:
-            return [i for i in range(len(header)) if i not in drop]
-    return None
-
-
 def _dedup_csv_content(
     old: bytes,
     new: bytes,
@@ -159,7 +140,7 @@ def _dedup_csv_content(
         header_line, body = lines[0], lines[1:]
         body += [ln for ln in text_new.split("\n") if ln != ""]
         header = header_line.split(",")
-        idxs = _field_indexes(header, distinct, ignore)
+        idxs = key_field_indexes(header, distinct, ignore)
         last: dict = {}
         for i, ln in enumerate(body):
             f = ln.split(",")
@@ -176,7 +157,7 @@ def _dedup_csv_content(
     rows_old = list(csv.reader(io.StringIO(text_old)))
     header = rows_old[0]
     body_rows = rows_old[1:] + list(csv.reader(io.StringIO(text_new)))
-    idxs = _field_indexes(header, distinct, ignore)
+    idxs = key_field_indexes(header, distinct, ignore)
     last = {}
     for i, row in enumerate(body_rows):
         key = tuple(row) if idxs is None else tuple(
@@ -213,28 +194,6 @@ def decompress(data: bytes, compression: str | None) -> bytes:
         with zipfile.ZipFile(io.BytesIO(data)) as zf:
             return zf.read(zf.namelist()[0])
     return data
-
-
-def _write_full_content(
-    final: str,
-    content: bytes,
-    compression: str | None,
-    storage: TargetStorage,
-) -> None:
-    """Atomically REPLACE the target with `content` (the dedup-rewrite
-    publish — the reference's dedupTmp -> tmpPath atomic move)."""
-    if compression == "gzip":
-        content = gzip.compress(content)
-        storage.store_atomic(final, content)
-        return
-    if compression == "zip":
-        entry = os.path.basename(final)[: -len(".zip")]
-        with storage.store_atomic_writer(final) as out, zipfile.ZipFile(
-            out, "w", zipfile.ZIP_DEFLATED, compresslevel=ZIP_LEVEL
-        ) as zf:
-            zf.writestr(entry, content)
-        return
-    storage.store_atomic(final, content)
 
 
 _FMT_EXT = {"csv": ".csv", "json": ".json", "parquet": ".parquet"}
@@ -302,7 +261,9 @@ def _store_payload(
             content = _dedup_csv_content(old_content, payload, dedup[0], dedup[1])
         else:
             content = _dedup_json_content(old_content, payload)
-        _write_full_content(final, content, compression, storage)
+        # atomic REPLACE of the whole target (the reference's dedupTmp ->
+        # tmpPath atomic move)
+        _store_payload(final, content, compression, storage, exists=False)
         return
     if compression == "zip":
         entry = os.path.basename(final)[: -len(".zip")]
@@ -320,7 +281,9 @@ def _store_payload(
             w.write(payload)
         return
     if compression == "gzip":
-        payload = gzip.compress(payload, 9)  # fresh member per append
+        # fresh member per append; MTIME 0 like the reference's
+        # GZIPOutputStream, so equal content gives equal bytes
+        payload = gzip.compress(payload, 9, mtime=0)
 
     def chunks():
         if exists:

@@ -185,10 +185,9 @@ def streaming_restructure(
             lock.close()
         raise
     if lock is not None:
-        ttl = getattr(plan._lock_manager, "ttl_s", 24 * 3600.0)
         threading.Thread(
             target=_keep_and_release,
-            args=(query, lock, ttl, acquired_at),
+            args=(query, lock, plan._lock_manager.ttl_s, acquired_at),
             daemon=True,
         ).start()
     return query

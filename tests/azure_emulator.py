@@ -75,7 +75,7 @@ class AzureBlobHandler(BaseHTTPRequestHandler):
         data = self.rfile.read(length)
         if_none = self.headers.get("If-None-Match")
         if_match = self.headers.get("If-Match")
-        # Conditional Put Blob (the object_locks.py contract): evaluate the
+        # Conditional Put Blob (the locks.py contract): evaluate the
         # condition and store ATOMICALLY under the server mutation mutex —
         # ThreadingHTTPServer handles requests concurrently, and the whole
         # point of these conditions is store-arbitrated single winners.

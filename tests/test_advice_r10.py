@@ -12,7 +12,7 @@
    (plans/path_format.PathFormat.partition_columns).
 4. conditional-PUT locks: a lost-response PUT (applied server-side, error
    raised client-side) is resolved by re-reading ownership instead of
-   stranding our own lock for the full TTL (object_locks).
+   stranding our own lock for the full TTL (locks.RemoteLockManager).
 5. Azure keep-alive: the automatic one-retry must not re-send conditional
    PUTs (sinks/azure_storage.AzureTargetStorage._request).
 """
@@ -25,9 +25,7 @@ import time
 
 import pytest
 
-from radar_output_restructure_spark.object_locks import (
-    ConditionalPutLockManager,
-)
+from radar_output_restructure_spark.locks import RemoteLockManager
 from radar_output_restructure_spark.sources.manifest import (
     FileEntry,
     ProcessedFileManifest,
@@ -231,38 +229,40 @@ def test_topic_sharing_segment_with_param_rejected():
 
 
 # ---------------------------------------------------------------------------
-# 4. conditional-PUT lock manager: lost-response resolution
+# 4. conditional-PUT lock protocol: lost-response resolution
 # ---------------------------------------------------------------------------
 
 
-class _LossyMemLockManager(ConditionalPutLockManager):
+class _LossyMemStorage:
     """In-memory store whose conditional PUTs can APPLY server-side and
     then raise client-side (dropped connection after send)."""
 
-    def __init__(self, **kw):
-        super().__init__("mem://locks", **kw)
+    def __init__(self):
         self.blobs: dict[str, tuple[bytes, int]] = {}  # url -> (body, ver)
         self.lose_next = 0  # apply, then raise, for the next N cond PUTs
+
+    def makedirs(self, path):
+        pass
 
     def _maybe_lose(self):
         if self.lose_next > 0:
             self.lose_next -= 1
             raise IOError("connection dropped after send")
 
-    def _create_if_absent(self, url, body):
+    def create_if_absent(self, url, body):
         if url in self.blobs:
             return False
         self.blobs[url] = (body, 1)
         self._maybe_lose()
         return True
 
-    def _read_with_etag(self, url):
+    def read_with_etag(self, url):
         if url not in self.blobs:
             return None
         body, ver = self.blobs[url]
         return body, str(ver), time.time()
 
-    def _replace_if_match(self, url, body, etag):
+    def replace_if_match(self, url, body, etag):
         cur = self.blobs.get(url)
         if cur is None or str(cur[1]) != etag:
             return False
@@ -271,9 +271,13 @@ class _LossyMemLockManager(ConditionalPutLockManager):
         return True
 
 
+def _lossy_manager() -> RemoteLockManager:
+    return RemoteLockManager("mem://locks", _LossyMemStorage(), ttl_s=60.0)
+
+
 def test_lost_response_create_still_acquires():
-    mgr = _LossyMemLockManager(ttl_s=60.0)
-    mgr.lose_next = 1
+    mgr = _lossy_manager()
+    mgr.storage.lose_next = 1
     lock = mgr.acquire_lock("t")
     assert lock is not None, (
         "a create that applied under our uuid must be recognized as OURS, "
@@ -284,17 +288,17 @@ def test_lost_response_create_still_acquires():
 
 
 def test_lost_response_renew_still_renews():
-    mgr = _LossyMemLockManager(ttl_s=60.0)
+    mgr = _lossy_manager()
     lock = mgr.acquire_lock("t")
-    mgr.lose_next = 1
+    mgr.storage.lose_next = 1
     assert lock.renew() is True
     lock.close()
 
 
 def test_lost_response_release_still_releases():
-    mgr = _LossyMemLockManager(ttl_s=60.0)
+    mgr = _lossy_manager()
     lock = mgr.acquire_lock("t")
-    mgr.lose_next = 1
+    mgr.storage.lose_next = 1
     lock.close()  # must not strand the tombstone PUT
     assert mgr.acquire_lock("t") is not None
 

@@ -82,6 +82,23 @@ def test_cleaner_revokes_unextracted(spark, tmp_path):
     assert os.path.exists(target)  # re-extracted
 
 
+def test_cleaner_revokes_in_one_ledger_segment(spark, tmp_path):
+    """A pass that revokes N unverified files appends ONE revoke segment
+    to the ledger, not one per file."""
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    paths = _hour_files(spark, input_dir, counts=(1, 1, 1, 1))
+    cfg = RestructureConfig(input_dir=input_dir, output_dir=output_dir)
+    for f in RestructurePlan(spark, cfg).run()["t"]:
+        if not f.endswith("_0400.csv"):
+            os.remove(f)  # the first three files are no longer extracted
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    before = len(cleaner.plan.manifest._segments())
+    result = cleaner.run_topic("t")
+    assert result["deleted"] == [] and result["revoked"] == paths[:3]
+    assert len(cleaner.plan.manifest._segments()) == before + 1
+
+
 def test_cleaner_age_gate(spark, tmp_path):
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
     _hour_files(spark, input_dir)

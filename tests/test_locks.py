@@ -1,6 +1,9 @@
 """T5 topic locks + O5 topic shuffle (reference
 accounting/RedisRemoteLockManager.kt:8-45,
-worker/RadarKafkaRestructure.kt:108-128,166-169)."""
+worker/RadarKafkaRestructure.kt:108-128,166-169).
+
+The lock protocol itself runs on every backend in test_object_locks.py;
+these are the local-filesystem invariants and the plan integration."""
 
 from __future__ import annotations
 
@@ -8,12 +11,21 @@ import json
 import os
 import time
 
-from radar_output_restructure_spark.locks import FileRemoteLockManager
+from radar_output_restructure_spark.locks import (
+    RemoteLockManager,
+    lock_manager_for,
+)
+from radar_output_restructure_spark.sinks.storage import LocalTargetStorage
+
+
+def _tombstoned(path) -> bool:
+    """Released: the lock file stays as an owner-signed tombstone."""
+    return json.load(open(path))["expires_at"] == 0.0
 
 
 def test_acquire_is_exclusive_across_instances(tmp_path):
-    a = FileRemoteLockManager(str(tmp_path))
-    b = FileRemoteLockManager(str(tmp_path))
+    a = lock_manager_for(str(tmp_path))
+    b = lock_manager_for(str(tmp_path))
     lock = a.acquire_lock("topic1")
     assert lock is not None
     assert b.acquire_lock("topic1") is None  # held elsewhere
@@ -23,8 +35,8 @@ def test_acquire_is_exclusive_across_instances(tmp_path):
 
 
 def test_stale_lock_is_broken_and_reacquired(tmp_path):
-    a = FileRemoteLockManager(str(tmp_path), ttl_s=0.01)
-    b = FileRemoteLockManager(str(tmp_path))
+    a = lock_manager_for(str(tmp_path), ttl_s=0.01)
+    b = lock_manager_for(str(tmp_path))
     assert a.acquire_lock("t") is not None
     time.sleep(0.05)  # a's lock expires (crashed holder)
     lock_b = b.acquire_lock("t")
@@ -34,14 +46,15 @@ def test_stale_lock_is_broken_and_reacquired(tmp_path):
     a._release("t")
     assert json.load(open(tmp_path / "t.lock"))["owner"] == b.uuid
     lock_b.close()
-    assert not os.path.exists(tmp_path / "t.lock")
+    assert _tombstoned(tmp_path / "t.lock")
+    assert lock_manager_for(str(tmp_path)).acquire_lock("t") is not None  # at once
 
 
 def test_renew_extends_expiry_and_reports_loss(tmp_path):
     """A holder outliving the TTL (resident streaming query) renews; a
     broken-and-reacquired lock answers renew() with False so the old
     holder knows mutual exclusion is gone — renew never re-acquires."""
-    a = FileRemoteLockManager(str(tmp_path), ttl_s=0.4)
+    a = lock_manager_for(str(tmp_path), ttl_s=0.4)
     lock_a = a.acquire_lock("t")
     assert lock_a is not None
     e0 = json.load(open(tmp_path / "t.lock"))["expires_at"]
@@ -54,7 +67,7 @@ def test_renew_extends_expiry_and_reports_loss(tmp_path):
     # expired + broken by another instance: renew reports the loss and
     # must not clobber the new holder's lock
     time.sleep(0.5)
-    b = FileRemoteLockManager(str(tmp_path), ttl_s=10.0)
+    b = lock_manager_for(str(tmp_path), ttl_s=10.0)
     lock_b = b.acquire_lock("t")
     assert lock_b is not None
     assert lock_a.renew() is False
@@ -63,12 +76,13 @@ def test_renew_extends_expiry_and_reports_loss(tmp_path):
     # renew after one's own release: also a loss, and no resurrection
     lock_b.close()
     assert lock_b.renew() is False
-    assert not os.path.exists(tmp_path / "t.lock")
+    assert _tombstoned(tmp_path / "t.lock")
+    assert lock_manager_for(str(tmp_path)).acquire_lock("t") is not None  # at once
 
 
 def test_try_with_lock_context(tmp_path):
-    a = FileRemoteLockManager(str(tmp_path))
-    b = FileRemoteLockManager(str(tmp_path))
+    a = lock_manager_for(str(tmp_path))
+    b = lock_manager_for(str(tmp_path))
     with a.try_with_lock("t") as la:
         assert la is not None
         with b.try_with_lock("t") as lb:
@@ -79,32 +93,33 @@ def test_try_with_lock_context(tmp_path):
 
 def test_unreadable_lock_file_is_breakable(tmp_path):
     (tmp_path / "t.lock").write_text("not json")
-    m = FileRemoteLockManager(str(tmp_path))
+    m = lock_manager_for(str(tmp_path))
     assert m.acquire_lock("t") is not None
 
 
 def test_lock_file_is_never_torn(tmp_path):
     """Link-published locks appear fully written: the payload is readable
     the instant the lock path exists (no zero-byte O_EXCL window)."""
-    m = FileRemoteLockManager(str(tmp_path))
+    m = lock_manager_for(str(tmp_path))
     assert m.acquire_lock("t") is not None
     info = json.load(open(tmp_path / "t.lock"))
     assert info["owner"] == m.uuid and info["expires_at"] > time.time()
-    assert not [p for p in os.listdir(tmp_path) if ".w." in p]  # temp cleaned
+    assert info["ttl_s"] == m.ttl_s  # breakers judge by the holder's TTL
+    assert os.listdir(tmp_path) == ["t.lock"]  # temp file cleaned
 
 
 def test_concurrent_stale_break_single_holder(tmp_path):
-    """N instances all observing the same expired lock: the atomic
-    rename-aside means at most one acquire succeeds (the r4 ADVICE
-    unlink-then-recreate double-hold cannot happen)."""
+    """N instances all observing the same expired lock: the flock-serialized
+    compare-and-replace means exactly one acquire succeeds (no
+    unlink-then-recreate double hold)."""
     import threading
 
-    stale = FileRemoteLockManager(str(tmp_path), ttl_s=-1.0)
+    stale = lock_manager_for(str(tmp_path), ttl_s=-1.0)
     assert stale.acquire_lock("t") is not None  # already expired
 
-    managers = [FileRemoteLockManager(str(tmp_path)) for _ in range(8)]
+    managers = [lock_manager_for(str(tmp_path)) for _ in range(8)]
     barrier = threading.Barrier(len(managers))
-    wins: list[FileRemoteLockManager] = []
+    wins: list[RemoteLockManager] = []
     lock_guard = threading.Lock()
 
     def attempt(m):
@@ -125,12 +140,12 @@ def test_concurrent_stale_break_single_holder(tmp_path):
 
 
 def test_break_loser_does_not_remove_winners_lock(tmp_path):
-    """A breaker that loses the rename race re-reads a FRESH lock and backs
-    off — it must not unlink the winner's re-acquired lock."""
-    stale = FileRemoteLockManager(str(tmp_path), ttl_s=-1.0)
+    """A breaker that loses the break race re-reads a FRESH lock and backs
+    off — it must not replace the winner's re-acquired lock."""
+    stale = lock_manager_for(str(tmp_path), ttl_s=-1.0)
     assert stale.acquire_lock("t") is not None
-    winner = FileRemoteLockManager(str(tmp_path))
-    loser = FileRemoteLockManager(str(tmp_path))
+    winner = lock_manager_for(str(tmp_path))
+    loser = lock_manager_for(str(tmp_path))
     assert winner.acquire_lock("t") is not None  # broke + re-acquired
     assert loser.acquire_lock("t") is None  # fresh lock: contended
     assert json.load(open(tmp_path / "t.lock"))["owner"] == winner.uuid
@@ -212,14 +227,12 @@ def test_locked_topic_is_skipped_by_second_plan(tmp_path, spark):
 def test_file_uri_lock_dir_resolves_to_local_path(tmp_path, monkeypatch):
     """A `file:` lock dir names the same directory from any cwd: two
     replicas started in different directories contend on one lock."""
-    from radar_output_restructure_spark.object_locks import lock_manager_for
-
     lock_dir = tmp_path / "locks"
     for cwd, uri in (("a", f"file://{lock_dir}"), ("b", f"file:{lock_dir}")):
         (tmp_path / cwd).mkdir()
         monkeypatch.chdir(tmp_path / cwd)
         mgr = lock_manager_for(uri)
-        assert isinstance(mgr, FileRemoteLockManager)
+        assert isinstance(mgr.storage, LocalTargetStorage)
         assert mgr.directory == str(lock_dir)
     held = lock_manager_for(f"file://{lock_dir}").acquire_lock("t")
     assert held is not None

@@ -1,7 +1,8 @@
-"""Object-store lock managers (VERDICT r6 item 3): the reference's Redis
-lock contract (accounting/RedisRemoteLockManager.kt:8-45) over S3
-conditional writes (moto server) and Azure Put Blob conditions (in-process
-emulator) — multi-replica coordination with NO shared POSIX filesystem.
+"""The topic-lock protocol over every storage backend's conditional writes:
+the reference's Redis lock contract (accounting/RedisRemoteLockManager.kt:
+8-45) on the local filesystem (link/flock), S3 conditional writes (moto
+server) and Azure Put Blob conditions (in-process emulator) — the object
+stores coordinate replicas with NO shared POSIX filesystem.
 
 Also covers the manifest-over-s3:// rerun-pruning path: the seen-offset
 ledger (sources/manifest.py) reading and committing through
@@ -20,12 +21,18 @@ import pytest
 boto3 = pytest.importorskip("boto3")
 pytest.importorskip("moto")
 
-from radar_output_restructure_spark.object_locks import (  # noqa: E402
-    AzureRemoteLockManager,
-    S3RemoteLockManager,
+from radar_output_restructure_spark.locks import (  # noqa: E402
+    RemoteLockManager,
+    lock_manager_for,
+)
+from radar_output_restructure_spark.sinks.azure_storage import (  # noqa: E402
+    AzureTargetStorage,
 )
 from radar_output_restructure_spark.sinks.s3_storage import (  # noqa: E402
     S3TargetStorage,
+)
+from radar_output_restructure_spark.sinks.storage import (  # noqa: E402
+    LocalTargetStorage,
 )
 from radar_output_restructure_spark.sources.manifest import (  # noqa: E402
     FileEntry,
@@ -56,8 +63,10 @@ def s3_endpoint():
 
 
 def _s3_manager(endpoint: str, prefix: str, ttl_s: float = 3600.0):
-    return S3RemoteLockManager(
-        f"s3://{BUCKET}/{prefix}", ttl_s=ttl_s, endpoint_url=endpoint, **S3_CRED
+    return RemoteLockManager(
+        f"s3://{BUCKET}/{prefix}",
+        S3TargetStorage(endpoint_url=endpoint, **S3_CRED),
+        ttl_s,
     )
 
 
@@ -70,17 +79,23 @@ def azure_endpoint():
 
 
 def _azure_manager(endpoint: str, prefix: str, ttl_s: float = 3600.0):
-    return AzureRemoteLockManager(
-        f"azure://locks/{prefix}", endpoint_url=endpoint, ttl_s=ttl_s
+    return RemoteLockManager(
+        f"azure://locks/{prefix}", AzureTargetStorage(endpoint), ttl_s
     )
 
 
-def _factories():
-    """(fixture name, manager factory) for both backends."""
-    return [
+def _local_manager(root, prefix: str, ttl_s: float = 3600.0):
+    return RemoteLockManager(str(root / prefix), LocalTargetStorage(), ttl_s)
+
+
+def _factories(local: bool = True):
+    """(fixture name, manager factory) per backend; local=False keeps the
+    object stores, whose Last-Modified is the second staleness witness."""
+    stores = [
         ("s3_endpoint", _s3_manager),
         ("azure_endpoint", _azure_manager),
     ]
+    return [("tmp_path", _local_manager), *stores] if local else stores
 
 
 @pytest.mark.parametrize("fixture,factory", _factories())
@@ -105,7 +120,7 @@ def test_stale_lock_is_broken_and_reacquired(fixture, factory, request):
     assert a.acquire_lock("topic") is not None
     time.sleep(0.1)
     lock = b.acquire_lock("topic")
-    assert lock is not None  # expired lock broken via If-Match replace
+    assert lock is not None  # expired lock broken via replace-if-match
     lock.close()
 
 
@@ -221,27 +236,18 @@ def test_manifest_rerun_pruning_over_s3(s3_endpoint):
     assert fourth.prune([files[0]]) == []  # compaction preserved state
 
 
-def test_lock_manager_for_scheme_dispatch(s3_endpoint, azure_endpoint):
-    from radar_output_restructure_spark.locks import FileRemoteLockManager
-    from radar_output_restructure_spark.object_locks import (
-        lock_manager_for,
-    )
-    from radar_output_restructure_spark.sinks.azure_storage import (
-        AzureTargetStorage,
-    )
-
+def test_lock_manager_for_scheme_dispatch(s3_endpoint, azure_endpoint, tmp_path):
     s3_storage = S3TargetStorage(endpoint_url=s3_endpoint, **S3_CRED)
     mgr = lock_manager_for(
         f"s3://{BUCKET}/dispatch", target_storage=s3_storage
     )
-    assert isinstance(mgr, S3RemoteLockManager)
-    assert mgr._storage is s3_storage  # sink client reused
+    assert mgr.storage is s3_storage  # sink client reused
     with mgr.try_with_lock("topic") as lock:
         assert lock is not None
 
     az_storage = AzureTargetStorage(azure_endpoint)
     mgr = lock_manager_for("azure://locks/dispatch", target_storage=az_storage)
-    assert isinstance(mgr, AzureRemoteLockManager)
+    assert mgr.storage is az_storage
     with mgr.try_with_lock("topic") as lock:
         assert lock is not None
 
@@ -249,9 +255,10 @@ def test_lock_manager_for_scheme_dispatch(s3_endpoint, azure_endpoint):
     with pytest.raises(ValueError):
         lock_manager_for("azure://locks/x", target_storage=s3_storage)
 
-    assert isinstance(
-        lock_manager_for("/tmp/some/dir"), FileRemoteLockManager
-    )
+    # a local lock dir with an object-store target: local conditional writes
+    mgr = lock_manager_for(str(tmp_path / "locks"), target_storage=s3_storage)
+    assert isinstance(mgr.storage, LocalTargetStorage)
+    assert (tmp_path / "locks").is_dir()
 
 
 def _two_replica_backend(fixture_name: str, endpoint: str):
@@ -260,24 +267,15 @@ def _two_replica_backend(fixture_name: str, endpoint: str):
         make_storage = lambda: S3TargetStorage(  # noqa: E731
             endpoint_url=endpoint, **S3_CRED
         )
-        make_mgr = lambda url: S3RemoteLockManager(  # noqa: E731
-            url, endpoint_url=endpoint, **S3_CRED
-        )
         root = f"s3://{BUCKET}/two_replica"
     else:
-        from radar_output_restructure_spark.sinks.azure_storage import (
-            AzureTargetStorage,
-        )
-
         make_storage = lambda: AzureTargetStorage(endpoint)  # noqa: E731
-        make_mgr = lambda url: AzureRemoteLockManager(  # noqa: E731
-            url, endpoint_url=endpoint
-        )
         root = "azure://tworep"
+    make_mgr = lambda url: RemoteLockManager(url, make_storage())  # noqa: E731
     return make_storage, make_mgr, f"{root}/out", f"{root}/locks"
 
 
-@pytest.mark.parametrize("fixture,_factory", _factories())
+@pytest.mark.parametrize("fixture,_factory", _factories(local=False))
 def test_two_replica_full_pipeline(fixture, _factory, request, spark):
     """r7 verdict item 4: TWO complete restructure instances running
     CONCURRENTLY against one shared object-store target (s3:// via moto,
@@ -407,20 +405,7 @@ def test_two_replica_full_pipeline(fixture, _factory, request, spark):
         assert all(files == [] for files in rerun.values()), rerun
 
 
-def test_skew_margin_override_reaches_public_managers():
-    """skew_margin_s is part of the documented API (module docstring: 'Pass
-    skew_margin_s to override') — both concrete managers must forward it."""
-    s3 = S3RemoteLockManager(
-        "s3://bucket/locks", ttl_s=100, storage=object(), skew_margin_s=5.0
-    )
-    assert s3.skew_margin_s == 5.0
-    az = AzureRemoteLockManager(
-        "https://acct.blob.example/c/locks", storage=object(), skew_margin_s=7.0
-    )
-    assert az.skew_margin_s == 7.0
-
-
-@pytest.mark.parametrize("fixture,factory", _factories())
+@pytest.mark.parametrize("fixture,factory", _factories(local=False))
 def test_break_consults_store_last_modified(fixture, factory, request):
     """Second staleness witness: a payload that claims to be expired but
     whose object the STORE says was written moments ago (= the holder's
@@ -437,16 +422,16 @@ def test_break_consults_store_last_modified(fixture, factory, request):
     skewed = json.dumps(
         {"owner": "skewed-holder", "expires_at": time.time() - 50, "ttl_s": 300}
     ).encode()
-    assert mgr._create_if_absent(url, skewed)
+    assert mgr.storage.create_if_absent(url, skewed)
     assert mgr.acquire_lock("topic") is None  # store says it is young
 
     # same payload shape but a ttl the store-observed age already exceeds
     # (1 s HTTP-date granularity slack included): genuinely abandoned
-    _raw, etag, _m = mgr._read_with_etag(url)
+    _raw, etag, _m = mgr.storage.read_with_etag(url)
     stale = json.dumps(
         {"owner": "skewed-holder", "expires_at": time.time() - 50, "ttl_s": 0.5}
     ).encode()
-    assert mgr._replace_if_match(url, stale, etag)
+    assert mgr.storage.replace_if_match(url, stale, etag)
     time.sleep(1.6)  # store age > ttl + slack
     lock = mgr.acquire_lock("topic")
     assert lock is not None
@@ -468,11 +453,11 @@ def test_renew_extends_and_reports_loss(fixture, factory, request):
     url = a._url("topic")
     lock_a = a.acquire_lock("topic")
     assert lock_a is not None
-    raw0, _e, _m = a._read_with_etag(url)
+    raw0, _e, _m = a.storage.read_with_etag(url)
     e0 = json.loads(raw0)["expires_at"]
     time.sleep(0.05)
     assert lock_a.renew() is True
-    raw1, _e, _m = a._read_with_etag(url)
+    raw1, _e, _m = a.storage.read_with_etag(url)
     assert json.loads(raw1)["expires_at"] > e0
     assert json.loads(raw1)["owner"] == a.uuid
 
@@ -483,17 +468,17 @@ def test_renew_extends_and_reports_loss(fixture, factory, request):
     lock_b = b.acquire_lock("topic")
     assert lock_b is not None
     assert lock_a.renew() is False
-    raw2, _e, _m = a._read_with_etag(url)
+    raw2, _e, _m = a.storage.read_with_etag(url)
     assert json.loads(raw2)["owner"] == b.uuid
 
     # one's own tombstone is never revived by renew
     lock_b.close()
     assert lock_b.renew() is False
-    raw3, _e, _m = b._read_with_etag(url)
+    raw3, _e, _m = b.storage.read_with_etag(url)
     assert json.loads(raw3)["expires_at"] == 0.0
 
 
-@pytest.mark.parametrize("fixture,factory", _factories())
+@pytest.mark.parametrize("fixture,factory", _factories(local=False))
 def test_witness_threshold_exceeds_ttl_plus_margin(fixture, factory, request):
     """The witness must DELAY breaking until store-observed age exceeds
     ttl + margin + slack — not ttl - margin - slack. A correct holder owns
@@ -504,14 +489,14 @@ def test_witness_threshold_exceeds_ttl_plus_margin(fixture, factory, request):
     the other witness tests never enter."""
     endpoint = request.getfixturevalue(fixture)
     mgr = factory(endpoint, "t8")
-    mgr.skew_margin_s = 0.0  # pin the window to (ttl - 1, ttl + 1)
+    # ttl 2 s: the margin is 1% of it, so the window is ~(ttl - 1, ttl + 1)
     url = mgr._url("topic")
 
     t0 = time.time()
     skewed = json.dumps(
         {"owner": "slow-clock-holder", "expires_at": t0 - 50, "ttl_s": 2.0}
     ).encode()
-    assert mgr._create_if_absent(url, skewed)
+    assert mgr.storage.create_if_absent(url, skewed)
 
     # payload-expired AND past the inverted threshold (age > ttl - 1), but
     # a correct holder would still be inside its own TTL: must refuse

@@ -452,9 +452,9 @@ def test_streaming_restructure_skips_locked_topic(spark, tmp_path):
         input_dir=input_dir, output_dir=output_dir, lock_dir=lock_dir
     )
 
-    from radar_output_restructure_spark.locks import FileRemoteLockManager
+    from radar_output_restructure_spark.locks import lock_manager_for
 
-    other = FileRemoteLockManager(lock_dir)
+    other = lock_manager_for(lock_dir)
     held = other.acquire_lock("t")
     assert streaming_restructure(spark, cfg, "t", str(tmp_path / "c1")) is None
     held.close()
@@ -462,13 +462,13 @@ def test_streaming_restructure_skips_locked_topic(spark, tmp_path):
     q = streaming_restructure(spark, cfg, "t", str(tmp_path / "c2"))
     assert q is not None
     # while the query lives, the topic is locked
-    assert FileRemoteLockManager(lock_dir).acquire_lock("t") is None
+    assert lock_manager_for(lock_dir).acquire_lock("t") is None
     q.awaitTermination(120)
     # released on termination (daemon thread): poll briefly
     import time as _time
 
     for _ in range(100):
-        lock = FileRemoteLockManager(lock_dir).acquire_lock("t")
+        lock = lock_manager_for(lock_dir).acquire_lock("t")
         if lock is not None:
             break
         _time.sleep(0.1)
@@ -485,7 +485,7 @@ def test_streaming_resident_lock_renewal(spark, tmp_path):
     would be breakable after one TTL while the query still writes."""
     import time as _time
 
-    from radar_output_restructure_spark.locks import FileRemoteLockManager
+    from radar_output_restructure_spark.locks import lock_manager_for
 
     input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
     lock_dir = str(tmp_path / "locks")
@@ -506,7 +506,7 @@ def test_streaming_resident_lock_renewal(spark, tmp_path):
     )
     assert q is not None
     try:
-        other = FileRemoteLockManager(lock_dir, ttl_s=1.5)
+        other = lock_manager_for(lock_dir, ttl_s=1.5)
         deadline = _time.time() + 4.0  # ~3x the TTL
         while _time.time() < deadline:
             # an unrenewed 1.5 s-TTL lock would be stale (and broken) here
@@ -617,11 +617,11 @@ def test_streaming_two_replica_exactly_once(spark, tmp_path):
     # locks all released (poll: release rides query-termination threads)
     import time as _time
 
-    from radar_output_restructure_spark.locks import FileRemoteLockManager
+    from radar_output_restructure_spark.locks import lock_manager_for
 
     for topic in topics:
         for _ in range(100):
-            lock = FileRemoteLockManager(lock_dir).acquire_lock(topic)
+            lock = lock_manager_for(lock_dir).acquire_lock(topic)
             if lock is not None:
                 break
             _time.sleep(0.1)
