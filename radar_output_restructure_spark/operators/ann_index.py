@@ -14,20 +14,53 @@ per-mille of it. Tests assert the pruning on the physical plan
 No reference analog (the reference never indexes embeddings); the design
 is the standard FAISS/SCANN deployment shape re-expressed as parquet
 layout + Catalyst partition pruning.
+
+Every file operation on the index goes through one `HadoopTargetStorage`,
+the filesystem Spark's writer resolved the index path to (a plain path is
+`fs.defaultFS`), whose rename and delete carry each data file's `.crc`
+sidecar along. Files replace or join a cell's files by one crash-safe
+STAGED SWAP, shared by compaction (`_compact_staging/`, intent
+`_SWAP_READY.json`) and the streaming epoch ingest (`_epoch_staging/`,
+intent `_EPOCH_INTENT.json`; streaming/index_ingest.py):
+
+1. Spark writes the new files `partitionBy(cell)` into the staging dir
+   (underscore-prefixed, so index readers never see it).
+2. The intent is published atomically inside staging, after that job's
+   commit: per cell the staged names with their destination names and
+   the exact OLD files they replace (none for an epoch).
+3. Apply deletes the listed old files that still exist, then moves each
+   staged file that still exists to its destination name;
+4. the caller's commit runs (the epoch ingest's ledger write);
+5. staging is dropped.
+
+Recovery (`recover_staged_swap`) has one rule for both dirs: a published
+intent is always completed, steps 3-5, and staging without an intent is
+discarded. `staged_swap` publishes and then runs that same recovery, so a
+swap and its completion after a crash are one code path. Each step skips
+what an earlier attempt did, so a crash at any point leaves every row in
+exactly one of destination or staging and the next call converges. Deleting only the listed old files means a file
+that joined a cell after the intent was published is never touched.
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from radar_output_restructure_spark.operators import driver_gate
 from radar_output_restructure_spark.operators.similarity import (
     _codebook,
     _codebook_argtop,
+    _collect_queries,
+    _probe_cells,
     _rerank,
     _vectors,
-    ivf_cells,
+)
+from radar_output_restructure_spark.sinks.storage import (
+    HadoopTargetStorage,
+    TargetStorage,
 )
 
 
@@ -96,20 +129,21 @@ def probe_ivf_index(
     feed the exact re-ranker (`similarity._rerank`) directly, with no join
     back to the corpus.
     """
-    query_cells = ivf_cells(
-        queries, centroids, id_col, vec_col, nprobe=nprobe
-    ).select(F.col("vec_id").alias("query_id"), "cell")
-    probe_rows = query_cells.collect()  # queries are driver-small by contract
-    needed = sorted({r.cell for r in probe_rows})
-
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(needed))
-    qc = driver_gate.local_frame(spark, probe_rows, query_cells.schema)
-    cand = idx.join(F.broadcast(qc), "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__v"),
+    q = _collect_queries(queries, id_col, vec_col, "probe_ivf_index")
+    qc, probed = _probe_cells(
+        queries, centroids, q, _codebook(centroids, id_col, vec_col), nprobe, id_col
     )
-    return _rerank(cand, queries, k, id_col, vec_col, "probe_ivf_index")
+    cand = (
+        spark.read.parquet(path)
+        .filter(F.col("cell").isin(probed))
+        .join(F.broadcast(qc), "cell")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("__v"),
+        )
+    )
+    return _rerank(cand, q, k)
 
 
 def append_ivf_index(
@@ -142,122 +176,80 @@ _STAGING_DIR = "_compact_staging"
 _SWAP_MANIFEST = "_SWAP_READY.json"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+def _parquet_names(storage: TargetStorage, dir_path: str) -> list[str]:
+    """Names of the parquet data files directly inside `dir_path`."""
+    files = storage.list_entries(dir_path)[1]
+    return [n for n, _m, _s in files if n.endswith(".parquet")]
 
 
-def _data_files(fs, jvm, dir_path: str) -> list[str]:
-    """Names of visible parquet data files directly inside `dir_path`."""
-    jdir = jvm.org.apache.hadoop.fs.Path(dir_path)
-    if not fs.exists(jdir):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(jdir)
-        if st.isFile() and st.getPath().getName().endswith(".parquet")
-    ]
+def _intent_moves(
+    storage: TargetStorage, path: str, intent: dict
+) -> tuple[dict, dict]:
+    """(cell -> {staged name: destination name}, cell -> [old names]) of
+    an intent in either on-disk shape: an epoch intent lists `e{batch_id}-`
+    tagged destinations and replaces nothing; a compaction manifest keeps
+    the staged names and lists `old_files` (a manifest written before
+    `old_files` existed replaces the complement of the staged names, which
+    was safe only because that format predates concurrent epoch appends)."""
+    if "batch_id" in intent:
+        tag = len(f"e{intent['batch_id']}-")
+        moves = intent["moves"]
+        return {c: {n[tag:]: n for n in ns} for c, ns in moves.items()}, {}
+    cells = intent["cells"]
+    old_files = intent.get("old_files")
+    if old_files is None:
+        old_files = {
+            c: [n for n in _parquet_names(storage, f"{path}/cell={c}") if n not in ns]
+            for c, ns in cells.items()
+        }
+    return {c: {n: n for n in ns} for c, ns in cells.items()}, old_files
 
 
-def _read_json(fs, jvm, path: str) -> dict:
-    """Read a small JSON manifest through the Hadoop FS (storage-agnostic:
-    file://, s3a://, abfs:// alike)."""
-    import json
-
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
-    try:
-        return json.loads(
-            bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        )
-    finally:
-        stream.close()
-
-
-def _publish_json(fs, jvm, path: str, obj: dict) -> None:
-    """Atomically publish a small JSON manifest: write to a dot-tmp
-    sibling, then checked-rename into place — readers (and crash
-    recovery) see the manifest fully written or not at all."""
-    import json
-    import os.path
-
-    tmp = f"{os.path.dirname(path)}/.{os.path.basename(path)}.tmp"
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(tmp), True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode()))
-    finally:
-        out.close()
-    _checked_rename(fs, jvm, tmp, path)
-
-
-def _checked_rename(fs, jvm, src: str, dest: str) -> None:
-    """fs.rename reports most failures (existing destination, missing
-    parent) by returning False, not raising — swallowing that here would
-    let the final staging delete silently drop the un-moved rows, so a
-    False is promoted to an error and the manifest survives for a retry."""
-    ok = fs.rename(
-        jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dest)
+def staged_swap(
+    storage: TargetStorage,
+    path: str,
+    staging_dir: str,
+    intent_name: str,
+    intent: dict,
+    commit: Callable[[dict], None] | None = None,
+) -> None:
+    """Publish `intent` inside the written staging dir, then carry it out
+    through the recovery path, so every swap runs the code a crash does."""
+    storage.store_atomic(
+        f"{path}/{staging_dir}/{intent_name}", json.dumps(intent).encode()
     )
-    if not ok:
-        raise IOError(f"rename failed (returned false): {src} -> {dest}")
+    recover_staged_swap(storage, path, staging_dir, intent_name, commit)
 
 
-def _complete_swap(spark: SparkSession, path: str, manifest: dict) -> None:
-    """Execute (or re-execute after a crash) the staged-cell swap.
-
-    Per cell: delete exactly the OLD destination files the manifest
-    recorded at publish time, then move staged files in. Deleting only the
-    recorded list (never complement-of-staged) means files appended to a
-    cell AFTER the manifest was published — e.g. a streaming-ingest epoch
-    that committed before crash recovery ran — are untouchable by
-    recovery. Both steps are idempotent: re-running after a crash at any
-    point converges to the compacted state with every row present in
-    exactly one of destination or staging throughout.
-    """
-    fs, jvm = _hadoop_fs(spark, path)
-    staging = f"{path}/{_STAGING_DIR}"
-    old_files = manifest.get("old_files")
-    for cell, staged_names in manifest["cells"].items():
-        dest = f"{path}/cell={cell}"
-        if old_files is not None:
-            stale = old_files.get(cell, [])
-        else:
-            # legacy manifest (pre old_files): complement-of-staged was the
-            # only record available; safe only because that format predates
-            # concurrent-epoch appends
-            staged_set = set(staged_names)
-            stale = [
-                n for n in _data_files(fs, jvm, dest) if n not in staged_set
-            ]
-        for name in stale:
-            p = jvm.org.apache.hadoop.fs.Path(f"{dest}/{name}")
-            if fs.exists(p):
-                fs.delete(p, False)
-        for name in staged_names:
-            src = jvm.org.apache.hadoop.fs.Path(f"{staging}/cell={cell}/{name}")
-            if fs.exists(src):  # not yet moved by a previous attempt
-                _checked_rename(fs, jvm, f"{staging}/cell={cell}/{name}", f"{dest}/{name}")
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-
-
-def recover_pending_swap(spark: SparkSession, path: str) -> None:
-    """Complete (or discard) any compaction swap a crash left behind.
-
-    A published manifest means phase 1 finished — finish the swap; staging
-    without a manifest is pre-publish garbage — drop it. Callers that
-    append to the index outside `compact_ivf_index` (the streaming epoch
-    ingestor) MUST run this before appending, so a pending swap can never
-    interleave with files newer than its manifest.
-    """
-    fs, jvm = _hadoop_fs(spark, path)
-    staging = f"{path}/{_STAGING_DIR}"
-    manifest_path = jvm.org.apache.hadoop.fs.Path(f"{staging}/{_SWAP_MANIFEST}")
-    if fs.exists(manifest_path):  # crashed after publish: finish the swap
-        manifest = _read_json(fs, jvm, f"{staging}/{_SWAP_MANIFEST}")
-        _complete_swap(spark, path, manifest)
-    elif fs.exists(jvm.org.apache.hadoop.fs.Path(staging)):
-        # crashed before publish: staging is incomplete garbage
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+def recover_staged_swap(
+    storage: TargetStorage,
+    path: str,
+    staging_dir: str,
+    intent_name: str,
+    commit: Callable[[dict], None] | None = None,
+) -> None:
+    """Steps 3-5 of the staged swap (module docstring) for a published
+    intent, `commit(intent)` after the last move; staging without an
+    intent is discarded. Every step skips what a crashed earlier attempt
+    did. Callers that append to the index outside `compact_ivf_index`
+    (the streaming epoch ingestor) run this for both staging dirs before
+    appending, so no swap can interleave with files newer than its
+    intent."""
+    staging = f"{path}/{staging_dir}"
+    if storage.exists(f"{staging}/{intent_name}"):
+        intent = json.loads(storage.read(f"{staging}/{intent_name}"))
+        moves, old_files = _intent_moves(storage, path, intent)
+        for cell, names in moves.items():
+            dest = f"{path}/cell={cell}"
+            for name in old_files.get(cell, ()):
+                storage.delete(f"{dest}/{name}")
+            storage.makedirs(dest)
+            for src, dst in names.items():
+                if storage.exists(f"{staging}/cell={cell}/{src}"):
+                    storage.move(f"{staging}/cell={cell}/{src}", f"{dest}/{dst}")
+        if commit is not None:
+            commit(intent)
+    storage.delete(staging)
 
 
 def compact_ivf_index(
@@ -279,14 +271,10 @@ def compact_ivf_index(
     * only CROWDED cells are re-read (partition-pruned scan) and
       `repartition("cell")` hash-routes each cell to exactly one task =
       one output file;
-    * the swap is CRASH-SAFE two-phase commit, never an in-place
-      overwrite: compacted copies land in `_compact_staging/` (the
-      underscore prefix hides it from index readers), a swap manifest is
-      published only after the staging write's job commit, and then old
-      files are deleted and staged files renamed in. A crash at any point
-      leaves every row in destination or staging; the next compaction
-      call first completes a published swap (or discards unpublished
-      staging), so no epoch-ledger/replay interaction can lose data.
+    * the compacted copies replace the crowded cells' files through the
+      staged swap (module docstring), never an in-place overwrite: the
+      intent lists the exact pre-compaction files, so anything appended
+      to a cell after it was published is never deleted.
 
     Probe results are unchanged by construction (same rows, same cells);
     a probe racing the swap itself can transiently see a thinner cell —
@@ -295,9 +283,9 @@ def compact_ivf_index(
 
     Returns {"cells_compacted", "files_before", "files_after"}.
     """
-    fs, jvm = _hadoop_fs(spark, path)
+    storage = HadoopTargetStorage(spark)
     staging = f"{path}/{_STAGING_DIR}"
-    recover_pending_swap(spark, path)
+    recover_staged_swap(storage, path, _STAGING_DIR, _SWAP_MANIFEST)
 
     census = (
         spark.read.parquet(path)
@@ -312,7 +300,7 @@ def compact_ivf_index(
     crowded = sorted(r.cell for r in census)
     files_before = sum(r.n_files for r in census)
 
-    # Phase 1: compacted copies into staging (job-commit atomic)
+    # the compacted copies into staging (job-commit atomic), then the swap
     (
         spark.read.parquet(path)
         .filter(F.col("cell").isin(crowded))
@@ -321,27 +309,17 @@ def compact_ivf_index(
         .partitionBy("cell")
         .parquet(staging)
     )
-    # Phase 2: publish the swap manifest (create is atomic-enough: its
-    # presence is the signal and its content was fully written before
-    # rename below; partial states are impossible past the rename). The
-    # manifest records the EXPLICIT list of pre-compaction files to delete,
-    # snapshotted here at publish time — recovery deletes only these, so
-    # anything appended to a cell after publish (a committed streaming
-    # epoch racing crash recovery) can never be collateral damage.
-    import json
-
     manifest = {
         "cells": {
-            str(c): _data_files(fs, jvm, f"{staging}/cell={c}")
+            str(c): _parquet_names(storage, f"{staging}/cell={c}")
             for c in crowded
         },
         "old_files": {
-            str(c): _data_files(fs, jvm, f"{path}/cell={c}") for c in crowded
+            str(c): _parquet_names(storage, f"{path}/cell={c}")
+            for c in crowded
         },
     }
-    _publish_json(fs, jvm, f"{staging}/{_SWAP_MANIFEST}", manifest)
-    # Phase 3+4: delete old files, move staged in, drop staging
-    _complete_swap(spark, path, manifest)
+    staged_swap(storage, path, _STAGING_DIR, _SWAP_MANIFEST, manifest)
     return {
         "cells_compacted": len(crowded),
         "files_before": files_before,

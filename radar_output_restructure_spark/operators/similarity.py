@@ -5,7 +5,10 @@ query set against the corpus, prune, then rank by (sim desc, neighbor_id
 asc). One private core does each of those steps once:
 
 * `_collect_queries`  — the one collect of the query set (ids, exact
-                        Python-float vectors, zero-guarded norms).
+                        Python-float vectors, zero-guarded norms). Every
+                        scorer and re-ranker takes this tuple, and the
+                        IVF operators rank the queries' probe cells from
+                        it on the driver (`_probe_cells`).
 * `_scan`             — the one map-only query-vs-corpus scan: a per-batch
                         (n, nq) similarity matrix, an optional validity
                         mask, then either the local top-k prune or a
@@ -174,17 +177,10 @@ def _scan(
     return out if k is None else _rank_topk(out, k)
 
 
-def _rerank(
-    cand: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    caller: str,
-) -> DataFrame:
+def _rerank(cand: DataFrame, q: tuple, k: int) -> DataFrame:
     """The one exact candidate re-ranker: (query_id, neighbor_id, __v)
-    rows scored against their own query with the oracle's sequential
-    per-dimension fold, then `_rank_topk`.
+    rows scored against their own query of the `_collect_queries` tuple
+    `q` with the oracle's sequential per-dimension fold, then `_rank_topk`.
 
     Batch rows are grouped by query and each group folds against that one
     query (the `_codebook_argtop` grouped-recompute trick): a dense
@@ -197,9 +193,7 @@ def _rerank(
     import numpy as np
     import pandas as pd
 
-    q_ids, q_lists, q_norms, _ = _collect_queries(
-        queries, id_col, vec_col, caller
-    )
+    q_ids, q_lists, q_norms, _ = q
     q_arr = np.array(q_lists, dtype=np.float64)
     q_index = {q: j for j, q in enumerate(q_ids)}
     nq = len(q_ids)
@@ -819,30 +813,20 @@ def _codebook_argtop(x, cents, cnorms, take: int):
     return out
 
 
-def _collect_centroids(
-    centroids: DataFrame, id_col: str, vec_col: str
-) -> list:
-    """The codebook collect shared by `ivf_cells` callers: one sorted
-    driver-side row list, so a caller assigning BOTH corpus and queries
-    (cosine_topk_ivf) pays the collect job once instead of per call."""
-    return sorted(
+def _codebook(centroids: DataFrame, id_col: str, vec_col: str):
+    """(cell ids, centroid matrix, centroid norms) of a coarse codebook,
+    from one sorted collect: the arrays every home-cell assignment
+    (`_codebook_argtop`) ships in its closure. A caller assigning both
+    corpus and queries (cosine_topk_ivf) passes them to `ivf_cells`, so
+    the collect runs once."""
+    import numpy as np
+
+    rows = sorted(
         centroids.select(
             F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
         ).collect(),
         key=lambda r: r.cell,
     )
-
-
-def _codebook(
-    centroids: DataFrame, id_col: str, vec_col: str, rows: list | None = None
-):
-    """(cell ids, centroid matrix, centroid norms) of a coarse codebook,
-    from `rows` or one `_collect_centroids`: the arrays every home-cell
-    assignment (`_codebook_argtop`) ships in its closure."""
-    import numpy as np
-
-    if rows is None:
-        rows = _collect_centroids(centroids, id_col, vec_col)
     lists = [[float(x) for x in r.centroid] for r in rows]
     return (
         np.array([r.cell for r in rows]),
@@ -857,7 +841,7 @@ def ivf_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 1,
-    cent_rows: list | None = None,
+    codebook: tuple | None = None,
 ) -> DataFrame:
     """(vec_id, cell, cell_rank): the `nprobe` nearest coarse cells per
     vector, ranked by cosine to the centroid set.
@@ -881,7 +865,9 @@ def ivf_cells(
     import numpy as np
     import pandas as pd
 
-    cells, cents, cnorms = _codebook(centroids, id_col, vec_col, cent_rows)
+    if codebook is None:
+        codebook = _codebook(centroids, id_col, vec_col)
+    cells, cents, cnorms = codebook
     cell_type = centroids.schema[id_col].dataType.simpleString()
     id_type = df.schema[id_col].dataType.simpleString()
     take = min(nprobe, len(cells))
@@ -904,6 +890,33 @@ def ivf_cells(
     return df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
     ).mapInPandas(assign, f"vec_id {id_type}, cell {cell_type}, cell_rank int")
+
+
+def _probe_cells(
+    queries: DataFrame,
+    centroids: DataFrame,
+    q: tuple,
+    codebook: tuple,
+    nprobe: int,
+    id_col: str,
+) -> tuple[DataFrame, list]:
+    """((query_id, cell) frame, sorted probed cells): each query's `nprobe`
+    nearest cells, ranked as `ivf_cells` ranks them but on the driver, from
+    the vectors of the `_collect_queries` tuple `q` — so the query frame is
+    read once."""
+    import numpy as np
+
+    cells, cents, cnorms = codebook
+    top = cells[
+        _codebook_argtop(np.array(q[1], dtype=np.float64), cents, cnorms, nprobe)
+    ].tolist()
+    rows = [(qid, cell) for qid, probed in zip(q[0].tolist(), top) for cell in probed]
+    id_type = queries.schema[id_col].dataType.simpleString()
+    cell_type = centroids.schema[id_col].dataType.simpleString()
+    frame = driver_gate.local_frame(
+        queries.sparkSession, rows, f"query_id {id_type}, cell {cell_type}"
+    )
+    return frame, sorted({cell for _, cell in rows})
 
 
 def quantize_embeddings(
@@ -1459,23 +1472,22 @@ def cosine_topk_ivf(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat approximate top-k: coarse-quantize the corpus (one cell per
-    vector), probe the query's `nprobe` nearest cells, exact cosine re-rank
-    (`exact_rerank`) inside the probed cells. The complement of the LSH
-    path: recall comes from probing more cells instead of more hash
-    tables."""
-    cent_rows = _collect_centroids(centroids, id_col, vec_col)
+    vector), probe the query's `nprobe` nearest cells (`_probe_cells`),
+    exact cosine re-rank (`_rerank`) inside the probed cells. The
+    complement of the LSH path: recall comes from probing more cells
+    instead of more hash tables."""
+    q = _collect_queries(queries, id_col, vec_col, "cosine_topk_ivf")
+    codebook = _codebook(centroids, id_col, vec_col)
     corpus_cells = ivf_cells(
-        corpus, centroids, id_col, vec_col, nprobe=1, cent_rows=cent_rows
+        corpus, centroids, id_col, vec_col, nprobe=1, codebook=codebook
     ).select(F.col("vec_id").alias("neighbor_id"), "cell")
-    query_cells = ivf_cells(
-        queries, centroids, id_col, vec_col, nprobe=nprobe, cent_rows=cent_rows
-    ).select(F.col("vec_id").alias("query_id"), "cell")
+    query_cells, _ = _probe_cells(queries, centroids, q, codebook, nprobe, id_col)
     cand = (
         corpus_cells.join(F.broadcast(query_cells), "cell")
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)
+    return _rerank(_shortlist_rows(corpus, cand, id_col, vec_col), q, k)
 
 
 def cosine_topk_ivfpq(
@@ -1520,8 +1532,8 @@ def cosine_topk_ivfpq(
     )
 
     # fused encode + home-cell assignment: one Arrow pass, zero shuffle
-    cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    cells, coarse, coarse_norms = _codebook(centroids, id_col, vec_col, cent_rows)
+    codebook = _codebook(centroids, id_col, vec_col)
+    cells, coarse, coarse_norms = codebook
     pq_codes = _pq_coder(codebooks)
     id_type = corpus.schema[id_col].dataType.simpleString()
     cell_type = centroids.schema[id_col].dataType.simpleString()
@@ -1544,15 +1556,11 @@ def cosine_topk_ivfpq(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
     ).mapInPandas(index_rows, index_schema)
 
-    query_cells = ivf_cells(
-        queries, centroids, id_col, vec_col, nprobe=nprobe, cent_rows=cent_rows
-    ).select(F.col("vec_id").alias("query_id"), "cell")
+    q = _collect_queries(queries, id_col, vec_col, "cosine_topk_ivfpq")
+    q_ids, q_lists, q_norms, _ = q
+    query_cells, _ = _probe_cells(queries, centroids, q, codebook, nprobe, id_col)
     cand = indexed.join(F.broadcast(query_cells), "cell").filter(
         F.col("vec_id") != F.col("query_id")
-    )
-
-    q_ids, q_lists, q_norms, _ = _collect_queries(
-        queries, id_col, vec_col, "cosine_topk_ivfpq"
     )
     adc = _adc_scorer(q_lists, q_norms, codebooks, dims, m)
 
@@ -1603,10 +1611,18 @@ def exact_rerank(
     Shortlist rows whose query is not in `queries`, and self-matches, are
     dropped.
     """
-    cand = corpus.select(
+    q = _collect_queries(queries, id_col, vec_col, "exact_rerank")
+    return _rerank(_shortlist_rows(corpus, shortlist, id_col, vec_col), q, k)
+
+
+def _shortlist_rows(
+    corpus: DataFrame, shortlist: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, __v, query_id): the corpus rows of a (query_id,
+    neighbor_id) shortlist, which broadcasts into the corpus scan."""
+    return corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
     ).join(F.broadcast(shortlist.select("query_id", "neighbor_id")), "neighbor_id")
-    return _rerank(cand, queries, k, id_col, vec_col, "exact_rerank")
 
 
 def semantic_dedup(

@@ -3,7 +3,8 @@ reference target/TargetStorage.kt:24-68 with LocalTargetStorage.kt,
 S3TargetStorage.kt, AzureTargetStorage.kt implementations).
 
 The writers only ever need six primitives — exists / read / atomic store /
-makedirs / delete / walk — so the storage backend is one small class. Three
+makedirs / delete / walk — so the storage backend is one small class; the
+persisted IVF index's staged swaps (operators/ann_index.py) add `move`. Three
 conditional writes (create-if-absent / read-with-etag / replace-if-match)
 carry the topic-lock protocol (locks.py) on the local, S3 and Azure
 backends:
@@ -158,6 +159,11 @@ class TargetStorage:
         raise NotImplementedError
 
     def delete(self, path: str) -> None:
+        raise NotImplementedError
+
+    def move(self, src: str, dest: str) -> None:
+        """Rename the file `src` to `dest` (the reference's `move`);
+        raises IOError when the store refuses it."""
         raise NotImplementedError
 
     def walk_files(self, root: str) -> list[str]:
@@ -554,6 +560,15 @@ class HadoopTargetStorage(TargetStorage):
         fs, jpath = self._fs_path(path)
         if fs.exists(jpath):
             fs.delete(jpath, True)
+
+    def move(self, src: str, dest: str) -> None:
+        # fs.rename reports most refusals (an existing destination, HDFS's
+        # missing parent) by returning False, not raising: a caller that
+        # went on to drop the source's directory would lose the file. The
+        # local FileSystem's rename carries the `.crc` sidecar along.
+        fs, jsrc = self._fs_path(src)
+        if not fs.rename(jsrc, self._jvm.org.apache.hadoop.fs.Path(dest)):
+            raise IOError(f"rename failed (returned false): {src} -> {dest}")
 
     def walk_file_status(self, root: str) -> list[tuple[str, int, int]]:
         fs, jpath = self._fs_path(root)

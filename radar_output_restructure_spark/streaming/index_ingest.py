@@ -11,22 +11,25 @@ Exactly-once contract — two cooperating mechanisms:
 
 * **Replay skip**: foreachBatch replays a failed epoch with the SAME
   batch_id, so the sink keeps a tiny `_ingest_ledger.json` holding the max
-  committed epoch id next to the index (written through the storage
-  backend — file:// and s3:// alike; epoch ids are strictly increasing, so
-  one integer suffices) and a replayed epoch at or below it is skipped.
-* **Idempotent append**: the residual window (append's job commit lands,
-  crash before the ledger write, epoch replays) is closed by staging each
-  epoch under `_epoch_staging/` and publishing an intent manifest — the
-  exact destination file names, tagged `e{batch_id}-…` — BEFORE any file
-  is moved into a `cell=` directory. A replay of an uncommitted epoch
-  first deletes exactly the files its intent named, then re-appends; a
-  replay of a committed epoch only clears leftover staging. Either way
-  every vector lands exactly once, so `probe_ivf_index` stays
-  rebuild-identical across any crash point. (The reference accepts the
-  weaker at-least-once window between file upload and offset commit —
-  worker/FileCache.kt:185, accountant.process after the write; the ledger
-  + intent pair here is the batch manifest's write-then-commit shape,
-  sources/manifest.py, extended with an undo log.)
+  committed epoch id next to the index (epoch ids are strictly increasing,
+  so one integer suffices) and a replayed epoch at or below it is skipped.
+* **Staged epochs**: each epoch lands through the index's staged swap
+  (operators/ann_index.py states the protocol once) in `_epoch_staging/`,
+  its intent `_EPOCH_INTENT.json` naming the exact `e{batch_id}-` tagged
+  destination of every staged file; the ledger write is the swap's commit
+  step, after the last move and before staging is dropped. Recovery rolls
+  a published intent FORWARD: it completes the moves and commits the
+  ledger for the intent's batch_id, so the replay of that epoch is then
+  skipped as committed and every vector lands exactly once —
+  `probe_ivf_index` stays rebuild-identical across any crash point. (The
+  reference accepts the weaker at-least-once window between file upload
+  and offset commit — worker/FileCache.kt:185, accountant.process after
+  the write; the intent + ledger pair here is the batch manifest's
+  write-then-commit shape, sources/manifest.py.)
+
+The ledger, the staging dirs and the data files all go through one
+`HadoopTargetStorage`, so they sit on the filesystem Spark's writer
+resolved the index path to.
 
 Single-writer contract — the ledger is keyed by the owning run: epoch ids
 only mean anything within ONE checkpoint lineage, so the ledger records a
@@ -45,14 +48,15 @@ source dir and delete `_ingest_ledger.json`.
 
 Optional auto-compaction bounds small-file growth: after every committed
 append, cells holding more than `compact_max_files_per_cell` files are
-rewritten to one file each (content-preserving, idempotent, and its swap
-manifest records the explicit old-file list — safe to run after the ledger
-commit, and any pending swap is completed before the next epoch appends).
+rewritten to one file each (content-preserving, idempotent, and its intent
+lists the explicit old files — safe to run after the ledger commit, and any
+pending swap is completed before the next epoch appends).
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,16 +64,18 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from radar_output_restructure_spark.operators.ann_index import (
-    _checked_rename,
-    _data_files,
-    _hadoop_fs,
-    _publish_json,
-    _read_json,
+    _STAGING_DIR,
+    _SWAP_MANIFEST,
+    _parquet_names,
     compact_ivf_index,
-    recover_pending_swap,
+    recover_staged_swap,
+    staged_swap,
     write_ivf_index,
 )
-from radar_output_restructure_spark.sinks.storage import storage_for
+from radar_output_restructure_spark.sinks.storage import (
+    HadoopTargetStorage,
+    TargetStorage,
+)
 
 LEDGER_NAME = "_ingest_ledger.json"
 EPOCH_STAGING_DIR = "_epoch_staging"
@@ -84,89 +90,39 @@ def _read_ledger(storage, ledger_path: str) -> dict:
     return state
 
 
-def _recover_epoch_staging(
-    spark: SparkSession, index_path: str, max_committed: int
-) -> None:
-    """Undo (or just clean up) whatever a crashed epoch append left behind.
-
-    Intent present + its epoch UNcommitted: the crash hit mid-move or
-    before the ledger write — delete exactly the destination files the
-    intent named (never a directory listing: committed epochs' files are
-    untouchable) and drop staging so the replay re-appends from scratch.
-    Intent present + epoch committed: the crash hit after the ledger write,
-    before cleanup — the moves all happened (the ledger is written last),
-    so only staging needs dropping. No intent: staging is pre-publish
-    garbage.
-    """
-    fs, jvm = _hadoop_fs(spark, index_path)
-    staging = f"{index_path}/{EPOCH_STAGING_DIR}"
-    jstaging = jvm.org.apache.hadoop.fs.Path(staging)
-    if not fs.exists(jstaging):
-        return
-    jintent = jvm.org.apache.hadoop.fs.Path(f"{staging}/{EPOCH_INTENT_NAME}")
-    if fs.exists(jintent):
-        intent = _read_json(fs, jvm, f"{staging}/{EPOCH_INTENT_NAME}")
-        if intent["batch_id"] > max_committed:
-            for cell, dest_names in intent["moves"].items():
-                for name in dest_names:
-                    p = jvm.org.apache.hadoop.fs.Path(
-                        f"{index_path}/cell={cell}/{name}"
-                    )
-                    if fs.exists(p):
-                        fs.delete(p, False)
-    fs.delete(jstaging, True)
-
-
 def _append_epoch(
-    spark: SparkSession,
+    storage: TargetStorage,
     batch_df: DataFrame,
     centroids: DataFrame,
     index_path: str,
     batch_id: int,
     id_col: str,
     vec_col: str,
+    commit: Callable[[dict], None],
 ) -> None:
-    """Stage the epoch's cell-assigned files, publish the intent, move in.
-
-    The intent manifest (exact destination names, `e{batch_id}-` tagged so
-    epochs never collide) is published via tmp+rename BEFORE the first
-    move, so _recover_epoch_staging can always undo a partial epoch
-    without listing or touching any other epoch's files.
-    """
+    """Stage the epoch's cell-assigned files, then swap them in under
+    `e{batch_id}-` tagged names (epochs never collide); `commit` runs
+    after the last move."""
     staging = f"{index_path}/{EPOCH_STAGING_DIR}"
     write_ivf_index(
         batch_df, centroids, staging, id_col, vec_col, mode="overwrite"
     )
-    fs, jvm = _hadoop_fs(spark, index_path)
-    jstaging = jvm.org.apache.hadoop.fs.Path(staging)
-    cells = [
-        st.getPath().getName().split("=", 1)[1]
-        for st in fs.listStatus(jstaging)
-        if st.isDirectory() and st.getPath().getName().startswith("cell=")
-    ]
     moves = {
-        cell: {
-            name: f"e{batch_id}-{name}"
-            for name in _data_files(fs, jvm, f"{staging}/cell={cell}")
-        }
-        for cell in cells
+        d.split("=", 1)[1]: sorted(
+            f"e{batch_id}-{n}"
+            for n in _parquet_names(storage, f"{staging}/{d}")
+        )
+        for d in storage.list_dirs(staging)
+        if d.startswith("cell=")
     }
-    intent = {
-        "batch_id": batch_id,
-        "moves": {c: sorted(m.values()) for c, m in moves.items()},
-    }
-    _publish_json(fs, jvm, f"{staging}/{EPOCH_INTENT_NAME}", intent)
-    for cell, m in moves.items():
-        dest_dir = jvm.org.apache.hadoop.fs.Path(f"{index_path}/cell={cell}")
-        if not fs.exists(dest_dir):
-            fs.mkdirs(dest_dir)
-        for src_name, dest_name in m.items():
-            _checked_rename(
-                fs,
-                jvm,
-                f"{staging}/cell={cell}/{src_name}",
-                f"{index_path}/cell={cell}/{dest_name}",
-            )
+    staged_swap(
+        storage,
+        index_path,
+        EPOCH_STAGING_DIR,
+        EPOCH_INTENT_NAME,
+        {"batch_id": batch_id, "moves": moves},
+        commit,
+    )
 
 
 def make_batch_ingestor(
@@ -183,7 +139,7 @@ def make_batch_ingestor(
     Exposed separately from `streaming_ivf_ingest` so the replay contract
     is directly testable: calling the returned function twice with the
     same batch_id appends exactly once, and a partial first attempt (crash
-    at any point) is undone before the retry re-appends.
+    at any point) is rolled forward and committed, so the retry skips it.
 
     `run_id` is the ownership key for the single-writer contract — the
     streaming entry point passes its checkpoint location. A ledger owned
@@ -198,7 +154,7 @@ def make_batch_ingestor(
     ledger, e.g. the same stream resuming over its own pre-ownership
     ledger) proceeds and stamps ownership at its first commit.
     """
-    storage = storage_for(index_path, spark)
+    storage = HadoopTargetStorage(spark)
     ledger = index_path.rstrip("/") + "/" + LEDGER_NAME
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -238,40 +194,57 @@ def make_batch_ingestor(
                 "Rebuild the index (or point this run at a clean source "
                 "dir) and delete the ledger to transfer ownership."
             )
-        # Undo any partial epoch and finish any published compaction swap
-        # BEFORE appending — recovery must never run with this epoch's
-        # fresh files already in the cell dirs (r8 review: a post-publish
-        # swap recovery that ran after the append deleted committed rows).
-        _recover_epoch_staging(spark, index_path, max_committed)
-        recover_pending_swap(spark, index_path)
+
+        def commit(intent: dict) -> None:
+            # the swap's commit step: the ledger write, for this epoch or
+            # for a crashed one that recovery rolled forward
+            nonlocal max_committed
+            done = intent["batch_id"]
+            if done <= max_committed:
+                return  # committed before the crash that left staging
+            if done > batch_id:
+                # epoch ids only grow within one checkpoint lineage, so an
+                # intent from a LATER epoch was left by another run;
+                # committing it would silently skip this batch
+                raise RuntimeError(
+                    f"index {index_path} holds the uncommitted epoch {done} "
+                    f"of another run, and this ingestor ({run_id!r}) "
+                    f"arrived with batch {batch_id}: committing it would "
+                    "silently skip this batch. Rebuild the index (or point "
+                    "this run at a clean source dir) and delete the ledger."
+                )
+            storage.store_atomic(
+                ledger,
+                json.dumps(
+                    {
+                        "max_committed_batch_id": done,
+                        # never erase an owner (a None harness can only get
+                        # here over an unowned ledger, but keep it structural)
+                        "run_id": run_id if run_id is not None else owner,
+                    }
+                ).encode(),
+            )
+            max_committed = done
+
+        # Roll a crashed epoch forward and finish any published compaction
+        # swap BEFORE appending — recovery must never run with this epoch's
+        # fresh files already in the cell dirs (a post-publish swap
+        # recovery that ran after the append once deleted committed rows).
+        recover_staged_swap(
+            storage, index_path, EPOCH_STAGING_DIR, EPOCH_INTENT_NAME, commit
+        )
+        recover_staged_swap(storage, index_path, _STAGING_DIR, _SWAP_MANIFEST)
         if batch_id <= max_committed:
             return  # replayed epoch already fully committed
         _append_epoch(
-            spark,
+            storage,
             batch_df.select(F.col(id_col), F.col(vec_col)),
             centroids,
             index_path,
             batch_id,
             id_col,
             vec_col,
-        )
-        storage.store_atomic(
-            ledger,
-            json.dumps(
-                {
-                    "max_committed_batch_id": batch_id,
-                    # never erase an owner (a None harness can only get
-                    # here over an unowned ledger, but keep it structural)
-                    "run_id": run_id if run_id is not None else owner,
-                }
-            ).encode(),
-        )
-        # post-commit cleanup of the epoch's staging (crash here is benign:
-        # recovery sees a committed intent and just re-drops staging)
-        fs, jvm = _hadoop_fs(spark, index_path)
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{index_path}/{EPOCH_STAGING_DIR}"),
-            True,
+            commit,
         )
         if compact_max_files_per_cell is not None:
             compact_ivf_index(

@@ -80,6 +80,30 @@ def test_ivf_index_prunes_and_matches(spark, sf_dir, tmp_path):
         assert marker not in scan_section
 
 
+def test_probe_reads_the_query_frame_once(spark, sf_dir, tmp_path):
+    """A probe's build+collect runs 6 Spark jobs: the codebook collect, the
+    one query collect (the probe cells are ranked on the driver from those
+    vectors), the index's schema read, the probe-cell broadcast, the rank
+    shuffle and the result. Collecting `ivf_cells(queries)` besides the
+    query collect made it 7."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    centroids = emb.filter(F.col("vec_id") < 16)
+    queries = emb.filter(F.col("vec_id") < 5)
+    path = str(tmp_path / "ivf_index")
+    write_ivf_index(emb, centroids, path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-probe", "ivf-probe")
+    try:
+        rows = probe_ivf_index(
+            spark, path, queries, centroids, k=5, nprobe=4
+        ).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rows) == 25
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf-probe")) == 6
+
+
 def test_incremental_append_equals_full_rebuild(spark, sf_dir, tmp_path):
     """append_ivf_index: base build + delta append produce byte-identical
     index CONTENT ((vec_id, cell) assignments) and probe results to a

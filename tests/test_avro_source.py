@@ -468,3 +468,100 @@ def test_avro_schema_larger_than_header_prefix(spark, tmp_path):
         spark, input_dir, file_format="avro", paths=[p]
     ).collect()
     assert [(r.key.userId, r.value.time) for r in rows] == [("u", 1.0)]
+
+
+# Jar-less decode across files: schemas that differ only in non-structural
+# attributes (doc/namespace/defaults) merge, structural drift fails loudly,
+# nullable longs stay exact above 2^53 (no float64 inference), and
+# exclude_topics prunes the native scan on the driver.
+LONG_SCHEMA = {
+    "type": "record",
+    "name": "r",
+    "fields": [
+        {"name": "id", "type": ["null", "long"]},
+        {"name": "tag", "type": "string"},
+    ],
+}
+
+# same structure, different non-structural metadata (doc + field default)
+LONG_SCHEMA_DOCUMENTED = {
+    "type": "record",
+    "name": "r",
+    "doc": "added by a later writer version",
+    "fields": [
+        {"name": "id", "type": ["null", "long"], "default": None},
+        {"name": "tag", "type": "string", "doc": "a tag"},
+    ],
+}
+
+
+def _write(input_dir, topic, part, off, schema, records):
+    d = os.path.join(input_dir, topic, f"partition={part}")
+    os.makedirs(d, exist_ok=True)
+    path = os.path.join(d, f"{topic}+{part}+{off}+{off}.avro")
+    return avro_io.write_container(path, schema, records)
+
+
+def test_python_avro_accepts_nonstructural_schema_drift(spark, tmp_path):
+    input_dir = str(tmp_path)
+    _write(input_dir, "t", 0, 0, LONG_SCHEMA, [{"id": 1, "tag": "a"}])
+    _write(
+        input_dir, "t", 0, 1, LONG_SCHEMA_DOCUMENTED, [{"id": 2, "tag": "b"}]
+    )
+    df = read_topic_tree(spark, input_dir, topic="t", file_format="avro")
+    assert {r["id"] for r in df.select("id").collect()} == {1, 2}
+
+
+def test_python_avro_rejects_structural_schema_drift(spark, tmp_path):
+    input_dir = str(tmp_path)
+    _write(input_dir, "t", 0, 0, LONG_SCHEMA, [{"id": 1, "tag": "a"}])
+    drifted = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "other", "type": "int"}],
+    }
+    _write(input_dir, "t", 0, 1, drifted, [{"other": 5}])
+    df = read_topic_tree(spark, input_dir, topic="t", file_format="avro")
+    with pytest.raises(Exception, match="differs from the probe"):
+        df.collect()
+
+
+def test_python_avro_nullable_long_exact_above_2_53(spark, tmp_path):
+    input_dir = str(tmp_path)
+    big = 9007199254740993  # 2^53 + 1: float64 rounds it to ...992
+    _write(
+        input_dir, "t", 0, 0, LONG_SCHEMA,
+        [{"id": None, "tag": "null-row"}, {"id": big, "tag": "big"}],
+    )
+    rows = {
+        r["tag"]: r["id"]
+        for r in read_topic_tree(
+            spark, input_dir, topic="t", file_format="avro"
+        ).collect()
+    }
+    assert rows["big"] == big, "nullable long corrupted via float64 inference"
+    assert rows["null-row"] is None
+
+
+def test_exclude_topics_prunes_native_scan(spark, tmp_path):
+    import glob
+    import shutil
+
+    input_dir = str(tmp_path)
+    good = spark.createDataFrame([(1, "a")], "id long, tag string")
+    # drifted topic: same column name, INCOMPATIBLE type — a post-scan
+    # filter still reads these files and fails (or null-fills)
+    bad = spark.createDataFrame([(("x",), "b")], "id struct<s:string>, tag string")
+    for topic, df in (("t_good", good), ("t_drifted", bad)):
+        stage = os.path.join(input_dir, "+stage")
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+        d = os.path.join(input_dir, topic, "partition=0")
+        os.makedirs(d)
+        shutil.move(part, os.path.join(d, f"{topic}+0+0+0.parquet"))
+        shutil.rmtree(stage)
+    out = read_topic_tree(
+        spark, input_dir, file_format="parquet", exclude_topics={"t_drifted"}
+    )
+    rows = out.select("id", "topic").collect()
+    assert [(r["id"], r["topic"]) for r in rows] == [(1, "t_good")]

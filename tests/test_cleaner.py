@@ -434,3 +434,54 @@ def test_cleaner_checks_each_target_once_without_listing(spark, tmp_path):
     assert sorted(p for op, p in targets if op == "exists") == sorted(finals)
     reads = [p for op, p in targets if op == "read"]
     assert len(reads) == len(set(reads)) and set(reads) <= set(finals)
+
+
+def test_cleaner_delete_updates_index(spark, tmp_path):
+    """SourceDataCleaner.run_topic removes deleted sources from the live
+    storage index instead of leaving stale paths until the full sync."""
+    from radar_output_restructure_spark.plans.restructure import (
+        RestructureConfig,
+        RestructurePlan,
+    )
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    from tests.test_restructure_e2e import SERVER_STATUS_SCHEMA, _write_fixture
+    from pyspark.sql import Row
+
+    # two files: the newest committed offset per partition is never removed,
+    # so only the first is a delete candidate
+    _write_fixture(
+        spark, input_dir, "t",
+        [Row(key=Row(projectId="p", userId="u", sourceId="s"),
+             value=Row(time=60.0, serverStatus="A", ipAddress=None))],
+        0, 0, 0, SERVER_STATUS_SCHEMA,
+    )
+    _write_fixture(
+        spark, input_dir, "t",
+        [Row(key=Row(projectId="p", userId="u", sourceId="s"),
+             value=Row(time=120.0, serverStatus="B", ipAddress=None))],
+        0, 1, 1, SERVER_STATUS_SCHEMA,
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, use_storage_index=True
+    )
+    plan = RestructurePlan(spark, cfg)
+    plan.run()
+    assert plan.storage_index.file_status_under(input_dir)
+
+    from radar_output_restructure_spark.plans.cleaner import (
+        CleanerConfig,
+        SourceDataCleaner,
+    )
+
+    cleaner = SourceDataCleaner(
+        spark, cfg, CleanerConfig(age_days=0.0), plan=plan
+    )
+    out = cleaner.run()["t"]
+    assert out["deleted"], "cleaner should delete the extracted source"
+    stale = [
+        p
+        for p, _m, _s in plan.storage_index.file_status_under(input_dir)
+        if p in set(out["deleted"])
+    ]
+    assert not stale, "deleted sources must leave the live index immediately"

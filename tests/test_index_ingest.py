@@ -34,6 +34,30 @@ def _content(spark, path):
     return {(r.vec_id, r.cell) for r in spark.read.parquet(path).collect()}
 
 
+class _Crash(Exception):
+    """A crash injected after an epoch's last move, before its ledger write."""
+
+
+def _crash_after_moves(spark, delta, centroids, index, batch_id):
+    """One epoch append that dies after moving every staged file into its
+    cell dir: the ledger is never written, staging and the intent stay."""
+    import pytest
+
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+    from radar_output_restructure_spark.streaming.index_ingest import (
+        _append_epoch,
+    )
+
+    def crash(_intent):
+        raise _Crash
+
+    with pytest.raises(_Crash):
+        _append_epoch(
+            HadoopTargetStorage(spark), delta, centroids, index, batch_id,
+            "vec_id", "embedding", crash,
+        )
+
+
 def test_streaming_ingest_exactly_once_across_restarts(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 16)
@@ -272,12 +296,11 @@ def test_streaming_second_ingestor_fails_loudly(spark, sf_dir, tmp_path):
 def test_replay_of_uncommitted_epoch_appends_exactly_once(
     spark, sf_dir, tmp_path
 ):
-    """Crash window between the append's job commit and the ledger write:
-    the replayed epoch must first undo its own partial files (named by the
-    intent manifest), so re-appending cannot duplicate vectors."""
+    """Crash window between the epoch's moves and the ledger write: the
+    replay's recovery rolls the published intent forward and commits the
+    epoch, so the replay itself is skipped and no vector lands twice."""
     from radar_output_restructure_spark.streaming.index_ingest import (
         EPOCH_STAGING_DIR,
-        _append_epoch,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -289,7 +312,7 @@ def test_replay_of_uncommitted_epoch_appends_exactly_once(
     )
 
     # simulate the crash: epoch 0 fully moved in, ledger never written
-    _append_epoch(spark, delta, centroids, index, 0, "vec_id", "embedding")
+    _crash_after_moves(spark, delta, centroids, index, 0)
     assert glob.glob(os.path.join(index, "cell=*", "e0-*.parquet"))
     assert not os.path.exists(_ledger_path(index))
 
@@ -306,13 +329,12 @@ def test_replay_of_uncommitted_epoch_appends_exactly_once(
 
 def test_replay_mid_move_crash_appends_exactly_once(spark, sf_dir, tmp_path):
     """Crash while moving staged files: some of the epoch's files reached
-    their cell dirs, the rest are still in staging. Recovery deletes the
-    moved ones and the replay re-appends the whole epoch exactly once."""
+    their cell dirs, the rest are still in staging. Recovery moves the rest
+    and commits the epoch, so the whole epoch lands exactly once."""
     import shutil as _sh
 
     from radar_output_restructure_spark.streaming.index_ingest import (
         EPOCH_STAGING_DIR,
-        _append_epoch,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -323,7 +345,7 @@ def test_replay_mid_move_crash_appends_exactly_once(spark, sf_dir, tmp_path):
         "vec_id", "embedding"
     )
 
-    _append_epoch(spark, delta, centroids, index, 3, "vec_id", "embedding")
+    _crash_after_moves(spark, delta, centroids, index, 3)
     moved = sorted(glob.glob(os.path.join(index, "cell=*", "e3-*.parquet")))
     assert len(moved) >= 2, "need >=2 epoch files to simulate a partial move"
     # un-move half the files back into staging = the mid-move crash state
@@ -350,7 +372,6 @@ def test_committed_epoch_leftover_staging_is_preserved(spark, sf_dir, tmp_path):
 
     from radar_output_restructure_spark.streaming.index_ingest import (
         EPOCH_STAGING_DIR,
-        _append_epoch,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -361,7 +382,7 @@ def test_committed_epoch_leftover_staging_is_preserved(spark, sf_dir, tmp_path):
     d1 = emb.filter("vec_id >= 150 and vec_id < 300").select(
         "vec_id", "embedding"
     )
-    _append_epoch(spark, d1, centroids, index, 5, "vec_id", "embedding")
+    _crash_after_moves(spark, d1, centroids, index, 5)
     with open(_ledger_path(index), "w") as fh:
         json.dump({"max_committed_batch_id": 5, "run_id": "ckpt"}, fh)
     # staging + intent intentionally left behind (the simulated crash)
@@ -456,6 +477,7 @@ def test_two_ingestor_chaos_crash_between_intent_and_first_move(
     import pytest
 
     import radar_output_restructure_spark.streaming.index_ingest as ii
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 16)
@@ -474,7 +496,7 @@ def test_two_ingestor_chaos_crash_between_intent_and_first_move(
     def no_rename(*a, **k):
         raise IOError("executor lost before the first move")
 
-    monkeypatch.setattr(ii, "_checked_rename", no_rename)
+    monkeypatch.setattr(HadoopTargetStorage, "move", no_rename)
     delta2 = emb.filter("vec_id >= 300 and vec_id < 450").select(
         "vec_id", "embedding"
     )
@@ -490,7 +512,7 @@ def test_two_ingestor_chaos_crash_between_intent_and_first_move(
 
     # ingestor B: same run_id lineage (driver restart over the checkpoint)
     ingest_b = make_batch_ingestor(spark, index, centroids, run_id="ckpt")
-    ingest_b(delta2, 1)  # recovery + idempotent re-append
+    ingest_b(delta2, 1)  # recovery rolls epoch 1 forward; replay skipped
     assert not os.path.exists(os.path.join(index, ii.EPOCH_STAGING_DIR))
 
     rebuild = str(tmp_path / "rebuild")
@@ -509,3 +531,33 @@ def test_two_ingestor_chaos_crash_between_intent_and_first_move(
     # and a replay of epoch 1 (foreachBatch at-least-once) is a no-op
     ingest_b(delta2, 1)
     assert probe(index) == probe(rebuild)
+
+
+def test_uncommitted_later_epoch_is_not_committed_under_an_earlier_batch(
+    spark, sf_dir, tmp_path
+):
+    """Recovery rolls a crashed epoch forward and commits its batch id, so
+    an intent from a LATER epoch than the arriving batch (left by another
+    run) must fail loudly: committing it would skip the arriving batch."""
+    import json
+
+    import pytest
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    centroids = emb.filter(F.col("vec_id") < 16)
+    index = str(tmp_path / "index")
+    write_ivf_index(emb.filter(F.col("vec_id") < 150), centroids, index)
+    delta = emb.filter("vec_id >= 150 and vec_id < 300").select(
+        "vec_id", "embedding"
+    )
+    _crash_after_moves(spark, delta, centroids, index, 9)
+
+    ingest = make_batch_ingestor(spark, index, centroids, run_id=None)
+    with pytest.raises(RuntimeError, match="uncommitted epoch 9"):
+        ingest(emb.filter("vec_id >= 300").select("vec_id", "embedding"), 2)
+    assert not os.path.exists(_ledger_path(index))
+
+    ingest(delta, 9)  # the epoch's own replay commits it, landing it once
+    with open(_ledger_path(index)) as fh:
+        assert json.load(fh)["max_committed_batch_id"] == 9
+    assert len(_content(spark, index)) == emb.filter("vec_id < 300").count()

@@ -247,6 +247,17 @@ def test_hadoop_target_storage_roundtrip(spark, tmp_path):
     assert st.read(p) == b"replaced"
     files = st.walk_files(root)
     assert len(files) == 1 and files[0].endswith("/sub/a.txt")
+    # move: the file and its .crc sidecar arrive, the source is gone
+    q = root + "/sub/b.txt"
+    st.move(p, q)
+    assert not st.exists(p) and st.read(q) == b"replaced"
+    assert sorted(os.listdir(tmp_path / "hstore" / "sub")) == [".b.txt.crc", "b.txt"]
+    # the local FileSystem refuses a rename onto an existing file by
+    # returning False (a destination under a file raises in Java instead)
+    st.store_atomic(p, b"other")
+    with pytest.raises(IOError, match="returned false"):
+        st.move(p, q)
+    assert st.read(p) == b"other" and st.read(q) == b"replaced"
     st.delete(root)
     assert not st.exists(p)
     assert st.walk_files(root) == []

@@ -202,3 +202,74 @@ def test_plan_with_index_is_incremental_and_correct(spark, tmp_path):
     st.calls.clear()
     assert plan.run() == {"t": []}
     assert [os.path.basename(r) for r, _sa in st.calls] == ["partition=0"]
+
+
+# A new topic or partition dir under a dirs-only parent is found on the
+# empty-rescan cadence, not only by the full sync; the per-directory cursor
+# cache invalidates on remove().
+class _Clock:
+    def __init__(self, t0=1000.0):
+        self.t = t0
+
+    def __call__(self):
+        return self.t
+
+
+def _touch(*paths):
+    for p in paths:
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "w") as fh:
+            fh.write("x")
+
+
+def test_new_topic_dir_discovered_incrementally(tmp_path):
+    root = str(tmp_path / "in")
+    _touch(os.path.join(root, "t1", "partition=0", "t1+0+0000000001+0000000002.avro"))
+    clock = _Clock()
+    idx = StorageIndexManager(
+        LocalTargetStorage(), root, rescan_s=3600, rescan_empty_s=900,
+        clock=clock,
+    )
+    idx.update()  # initial full sync
+    # a NEW topic and a NEW partition dir arrive after the sync
+    _touch(
+        os.path.join(root, "t2", "partition=0", "t2+0+0000000001+0000000002.avro"),
+        os.path.join(root, "t1", "partition=1", "t1+1+0000000001+0000000002.avro"),
+    )
+    clock.t += 901  # cross the EMPTY cadence, stay well under the full sync
+    idx.update()
+    found = {p for p, _m, _s in idx.file_status_under(root)}
+    assert any("t2+0" in p for p in found), (
+        "new topic under the dirs-only root invisible until full sync"
+    )
+    clock.t += 901  # the new partition dir was discovered last tick; its
+    idx.update()  # files index on the next empty-cadence tick
+    found = {p for p, _m, _s in idx.file_status_under(root)}
+    assert any("partition=1" in p for p in found), (
+        "new partition dir under a topic invisible until full sync"
+    )
+
+
+def test_cursor_cache_invalidates_on_remove(tmp_path):
+    root = str(tmp_path / "in")
+    d = os.path.join(root, "t", "partition=0")
+    f1 = os.path.join(d, "t+0+0000000001+0000000002.avro")
+    f2 = os.path.join(d, "t+0+0000000003+0000000004.avro")
+    _touch(f1, f2)
+    clock = _Clock()
+    idx = StorageIndexManager(
+        LocalTargetStorage(), root, rescan_s=3600, rescan_empty_s=900,
+        clock=clock,
+    )
+    idx.update()
+    # remove the LAST file (the cursor), then add an earlier-sorting one:
+    # set size is back to 2 — a size-keyed cache must not reuse the stale
+    # cursor f2 and skip the new arrival
+    idx.remove(f2)
+    os.remove(f2)
+    f_new = os.path.join(d, "t+0+0000000002+0000000002.avro")
+    _touch(f_new)
+    clock.t += 1
+    idx.update()
+    found = {p for p, _m, _s in idx.file_status_under(root)}
+    assert f_new in found
