@@ -700,8 +700,8 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     # unionByName branches), and the label seed all read a single
     # materialization instead of re-running candidate generation 3x
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    rows = driver_gate.collect_if_fits(pairs, CLUSTER_DRIVER_MAX_PAIRS)
-    if rows is not None:
+    table = driver_gate.collect_if_fits(pairs, CLUSTER_DRIVER_MAX_PAIRS)
+    if table is not None:
         parent: dict = {}
 
         def find(x):
@@ -710,8 +710,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
                 x = parent[x]
             return x
 
-        for row in rows:
-            a, b = row[0], row[1]
+        for a, b in zip(*table.to_pydict().values()):  # (doc_a, doc_b) columns
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

@@ -1,11 +1,12 @@
 """The driver boundary, in both directions.
 
 Out: `collect_if_fits`, the one "collect to the driver if it fits, else
-distribute" decision. Every operator with a driver path and a distributed
-fallback (Lloyd training, BPE training, near-dup union-find) asks it with
-its own module-level cap and takes the distributed loop on `None`. Both
-paths compute bit-identical results, and tests prove it by forcing this
-one function to decline (tests/test_dual_paths.py).
+distribute" decision, in one Spark job returning one Arrow table. Every
+operator with a driver path and a distributed fallback (Lloyd training,
+BPE training, near-dup union-find) asks it with its own module-level cap
+and takes the distributed loop on `None`. Both paths compute
+bit-identical results, and tests prove it by forcing this one function
+to decline (tests/test_dual_paths.py).
 
 In: `local_frame`, the one way rows computed on the driver become a
 DataFrame again. The rows travel as one Arrow table into a JVM local
@@ -23,21 +24,21 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
-def collect_if_fits(df: DataFrame, cap: int) -> list | None:
-    """All rows of `df` as one driver-side list, or None when `df` holds
-    more than `cap` rows.
+def collect_if_fits(df: DataFrame, cap: int) -> pa.Table | None:
+    """All rows of `df` as one driver-side Arrow table, or None when `df`
+    holds more than `cap` rows.
 
-    A `limit(cap + 1).count()` pre-count decides first: column pruning
-    reduces it to a row count, so an over-cap frame never ships its
-    payload columns to the driver. At or under the cap the limited
-    collect returns the WHOLE frame, so the driver path sees exactly the
-    data the distributed path would; the second length check covers a
-    frame that is not deterministic between the two jobs.
+    One Spark job: `limit(cap + 1).toArrow()` ships at most cap + 1 rows,
+    so the driver never holds more than the cap admits, and a frame that
+    comes back with cap + 1 rows is declined. At or under the cap the
+    limited collect is the WHOLE frame, so the driver path sees exactly
+    the data the distributed path would. Callers read columns
+    (`column(..).to_pylist()`, a flattened list column), not Rows, and
+    checkpoint their input first, so a declined gate's distributed
+    fallback does not recompute the plan.
     """
-    if df.limit(cap + 1).count() > cap:
-        return None
-    rows = df.limit(cap + 1).collect()
-    return rows if len(rows) <= cap else None
+    table = df.limit(cap + 1).toArrow()
+    return table if table.num_rows <= cap else None
 
 
 def local_frame(

@@ -6,9 +6,10 @@ asc). One private core does each of those steps once:
 
 * `_collect_queries`  — the one collect of the query set (ids, exact
                         Python-float vectors, zero-guarded norms). Every
-                        scorer and re-ranker takes this tuple, and the
-                        IVF operators rank the queries' probe cells from
-                        it on the driver (`_probe_cells`).
+                        scorer and re-ranker takes this tuple; the IVF
+                        operators rank the queries' probe cells from it
+                        on the driver (`_probe_cells`), the LSH operators
+                        hash the queries' buckets (`_bucket_candidates`).
 * `_scan`             — the one map-only query-vs-corpus scan: a per-batch
                         (n, nq) similarity matrix, an optional validity
                         mask, then either the local top-k prune or a
@@ -56,11 +57,28 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _milli(x: Column, scale: int) -> Column:
+    """round(x * scale) as an exact BIGINT: the quantized element of the
+    centroid and projection operators."""
+    return F.round(x.cast("double") * scale, 0).cast("long")
+
+
 def _vectors(pdf, col: str = "__v"):
     """The (n, dims) float64 matrix of one Arrow batch's vector column."""
     import numpy as np
 
     return np.stack(pdf[col].to_numpy()).astype(np.float64)
+
+
+def _arrow_matrix(col):
+    """The (n, dims) float64 matrix of an Arrow list column (an Array or a
+    ChunkedArray of n >= 1 equal-length vectors): one flatten and one
+    reshape, no per-row objects."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    return flat.reshape(len(col), -1).astype(np.float64)
 
 
 def _seq_norms(lists):
@@ -352,6 +370,93 @@ def _plane_weight(plane: int, dim: int) -> int:
     return (int.from_bytes(digest[:4], "big") % 7) - 3
 
 
+def _lsh_kernel(num_planes: int, dims: int, num_tables: int):
+    """`buckets(x)`: the (n, num_tables) int64 b-bit sign hashes of the
+    float64 rows `x` — the one hyperplane bucket kernel, run per Arrow
+    batch by the bucketizers and on the driver for collected queries.
+
+    Bit-exactness vs the SQL oracle is preserved by construction: the
+    accumulation loops over DIMENSIONS sequentially (acc += v[d] * w[p,d]
+    for d = 0..dims-1, vectorized across rows and planes), which performs
+    the identical left-to-right IEEE-double fold as the oracle's unrolled
+    `0.0 + v[1]*w + v[2]*w + ...` per plane — never numpy's blocked/
+    pairwise `@` matmul, whose different rounding could flip a
+    near-boundary sign.
+
+    Buckets assemble from the sign bits with int64 ops (bucket_t =
+    sum 2^i * bit[t*b+i]), so plane counts up to 31 cannot overflow. Planes
+    are deduplicated by weight vector first, so a hash family that repeats
+    planes costs one projection per DISTINCT plane.
+    """
+    import numpy as np
+
+    total = num_tables * num_planes
+    weights = [
+        tuple(float(_plane_weight(p, d)) for d in range(dims)) for p in range(total)
+    ]
+    distinct: dict[tuple[float, ...], int] = {}
+    slot_of: list[int] = []  # plane index -> 0-based row in the distinct matrix
+    for w in weights:
+        if w not in distinct:
+            distinct[w] = len(distinct)
+        slot_of.append(distinct[w])
+    w_mat = np.array(list(distinct), dtype=np.float64)  # (n_distinct, dims)
+    slots = np.array(slot_of, dtype=np.int64).reshape(num_tables, num_planes)
+    powers = 2 ** np.arange(num_planes, dtype=np.int64)
+
+    def buckets(x):
+        acc = np.zeros((x.shape[0], w_mat.shape[0]), dtype=np.float64)
+        for d in range(dims):  # sequential over dims == the oracle's fold
+            acc += x[:, d : d + 1] * w_mat[:, d]
+        bits = (acc > 0).astype(np.int64)  # (n, n_distinct)
+        return (bits[:, slots] * powers).sum(axis=2)  # (n, tables)
+
+    return buckets
+
+
+def _lsh_bucket_rows(
+    df: DataFrame,
+    num_planes: int,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+    num_tables: int,
+    carry: tuple[str, ...],
+) -> DataFrame:
+    """(*carry, table, bucket): one `mapInArrow` pass of `_lsh_kernel` over
+    (vec_id, __v) that emits the `carry` columns with each row's array of
+    per-table buckets; the JVM `posexplode`s that array into (table,
+    bucket). Map-only: at 100 TB it runs embarrassingly parallel with
+    zero shuffle."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    kernel = _lsh_kernel(num_planes, dims, num_tables)
+    src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
+    schema = StructType(
+        [src.schema[c] for c in carry]
+        + [StructField("buckets", ArrayType(LongType(), False), False)]
+    )
+
+    def bucketize(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            flat = pa.array(kernel(_arrow_matrix(batch.column("__v"))).reshape(-1))
+            offsets = pa.array(np.arange(0, n * num_tables + 1, num_tables, np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in carry]
+                + [pa.ListArray.from_arrays(offsets, flat)],
+                names=[*carry, "buckets"],
+            )
+
+    return src.mapInArrow(bucketize, schema).select(
+        *carry, F.posexplode("buckets").alias("table", "bucket")
+    )
+
+
 def hyperplane_lsh_buckets(
     df: DataFrame,
     num_planes: int = 8,
@@ -372,70 +477,30 @@ def hyperplane_lsh_buckets(
     is either an interpreted higher-order fold per plane (~40 nested lambda
     folds per row) or a ~2,200-term unrolled scalar tree (16 s of py4j plan
     build + janino recompilation per plan); both measured 5-10x slower at
-    sf0.1 than this vectorized mapInPandas (0.6 s vs 3.6-9.7 s steady
-    state), and the gap widens with planes x dims.
-
-    Bit-exactness vs the SQL oracle is preserved by construction: the
-    accumulation loops over DIMENSIONS sequentially (acc += v[d] * w[p,d]
-    for d = 0..dims-1, vectorized across rows and planes), which performs
-    the identical left-to-right IEEE-double fold as the oracle's unrolled
-    `0.0 + v[1]*w + v[2]*w + ...` per plane — never numpy's blocked/
-    pairwise `@` matmul, whose different rounding could flip a
-    near-boundary sign.
-
-    Buckets assemble from the sign bits with int64 ops (bucket_t =
-    sum 2^i * bit[t*b+i]), so plane counts up to 31 cannot overflow. Planes
-    are deduplicated by weight vector first, so a hash family that repeats
-    planes costs one projection per DISTINCT plane. Earlier formulations
-    (broadcast-crossJoin + groupBy, then nested HOF folds) shuffled or
-    interpreted their way through the same math; this one is a pure
-    Arrow-batched projection — at 100 TB it runs embarrassingly parallel
-    with zero shuffle.
+    sf0.1 than a vectorized Arrow map (0.6 s vs 3.6-9.7 s steady state),
+    and the gap widens with planes x dims. Each `mapInArrow` batch reads
+    its vector column as one flattened float64 matrix and runs
+    `_lsh_kernel`; the JVM explodes the per-row bucket array.
     """
-    import numpy as np
-    import pandas as pd
+    return _lsh_bucket_rows(
+        df, num_planes, dims, id_col, vec_col, num_tables, ("vec_id",)
+    )
 
-    total = num_tables * num_planes
-    weights = [
-        tuple(float(_plane_weight(p, d)) for d in range(dims)) for p in range(total)
-    ]
-    distinct: dict[tuple[float, ...], int] = {}
-    slot_of: list[int] = []  # plane index -> 0-based row in the distinct matrix
-    for w in weights:
-        if w not in distinct:
-            distinct[w] = len(distinct)
-        slot_of.append(distinct[w])
-    w_mat = np.array(list(distinct), dtype=np.float64)  # (n_distinct, dims)
-    slots = np.array(slot_of, dtype=np.int64).reshape(num_tables, num_planes)
-    powers = (2 ** np.arange(num_planes, dtype=np.int64))
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"vec_id {id_type}, table int, bucket long"
-
-    def bucketize(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)  # (n, dims)
-            n = x.shape[0]
-            acc = np.zeros((n, w_mat.shape[0]), dtype=np.float64)
-            for d in range(dims):  # sequential over dims == the oracle's fold
-                acc = acc + x[:, d : d + 1] * w_mat[:, d]
-            bits = (acc > 0).astype(np.int64)  # (n, n_distinct)
-            buckets = (bits[:, slots] * powers).sum(axis=2)  # (n, tables)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), num_tables),
-                    "table": np.tile(
-                        np.arange(num_tables, dtype=np.int32), n
-                    ),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(bucketize, out_schema)
+def lsh_bucket_vectors(
+    df: DataFrame,
+    num_planes: int = 8,
+    dims: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    num_tables: int = 1,
+) -> DataFrame:
+    """(vec_id, __v, table, bucket): `hyperplane_lsh_buckets` with each
+    row's vector riding along — the input of `near_dup_pairs_from_buckets`
+    from ONE scan of `df`, no join back to the vectors."""
+    return _lsh_bucket_rows(
+        df, num_planes, dims, id_col, vec_col, num_tables, ("vec_id", "__v")
+    )
 
 
 def auto_num_planes(
@@ -464,6 +529,7 @@ def auto_num_planes(
 def _bucket_candidates(
     corpus: DataFrame,
     queries: DataFrame,
+    q: tuple,
     num_planes: int,
     num_tables: int,
     dims: int,
@@ -472,21 +538,28 @@ def _bucket_candidates(
     multiprobe: bool,
 ) -> DataFrame:
     """Distinct (query_id, neighbor_id) pairs sharing a (table, bucket):
-    the LSH candidate builder of both LSH operators. With `multiprobe`
-    each query ALSO probes the `num_planes` buckets at Hamming distance 1
-    (one sign bit flipped) in every table — expansion on the QUERY side
-    only (queries x L x (b+1) rows, broadcast), so the corpus-side plan is
-    the single-probe one."""
+    the LSH candidate builder of both LSH operators. The query buckets are
+    hashed on the driver by `_lsh_kernel` from the vectors of the
+    `_collect_queries` tuple `q`, so the query frame is read once. With
+    `multiprobe` each query ALSO probes the `num_planes` buckets at
+    Hamming distance 1 (one sign bit flipped) in every table — expansion
+    on the QUERY side only (queries x L x (b+1) rows, broadcast), so the
+    corpus-side plan is the single-probe one."""
+    import numpy as np
+
+    qb = _lsh_kernel(num_planes, dims, num_tables)(np.array(q[1], dtype=np.float64))
+    flips = [0] + [1 << i for i in range(num_planes)] if multiprobe else [0]
+    rows = [
+        (qid, t, int(b) ^ f)
+        for qid, row in zip(q[0].tolist(), qb)
+        for t, b in enumerate(row)
+        for f in flips
+    ]
+    id_type = queries.schema[id_col].dataType.simpleString()
+    qp = driver_gate.local_frame(
+        queries.sparkSession, rows, f"query_id {id_type}, table int, bucket bigint"
+    )
     cb = hyperplane_lsh_buckets(corpus, num_planes, dims, id_col, vec_col, num_tables)
-    qb = hyperplane_lsh_buckets(queries, num_planes, dims, id_col, vec_col, num_tables)
-    bucket = F.col("bucket")
-    if multiprobe:
-        bucket = F.explode(
-            F.array(
-                bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)]
-            )
-        )
-    qp = qb.select(F.col("vec_id").alias("query_id"), "table", bucket.alias("bucket"))
     return (
         cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
         .join(F.broadcast(qp), ["table", "bucket"])
@@ -506,17 +579,17 @@ def cosine_topk_lsh(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates = docs sharing any (table, bucket) with
-    the query, exact cosine re-rank (`exact_rerank`) over the candidate
-    union.
+    the query, exact cosine re-rank (`_rerank`) over the candidate union.
 
     At 100 TB: corpus buckets are precomputed once (map-only, L small ints
     per vector) and bucket-partitioned on disk; per-query work is L buckets'
     worth of exact scoring instead of the full corpus.
     """
+    q = _collect_queries(queries, id_col, vec_col, "cosine_topk_lsh")
     cand = _bucket_candidates(
-        corpus, queries, num_planes, num_tables, dims, id_col, vec_col, False
+        corpus, queries, q, num_planes, num_tables, dims, id_col, vec_col, False
     )
-    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)
+    return _rerank(_shortlist_rows(corpus, cand, id_col, vec_col), q, k)
 
 
 def _adc_scorer(q_lists, q_norms, codebooks, dims: int, m: int):
@@ -566,15 +639,11 @@ def _adc_scorer(q_lists, q_norms, codebooks, dims: int, m: int):
 
 
 def near_dup_pairs_from_buckets(
-    emb: DataFrame,
-    buckets: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    chunk_pairs: int = 1 << 21,
+    rows: DataFrame, threshold: float, chunk_pairs: int = 1 << 21
 ) -> DataFrame:
-    """(vec_a, vec_b, sim): every id-ordered pair sharing a (table, bucket)
-    whose exact cosine >= `threshold`, verified WITHIN the bucket.
+    """(vec_a, vec_b, sim): every id-ordered pair of (table, bucket, vec_id,
+    __v) `rows` sharing a (table, bucket) whose exact cosine >=
+    `threshold`, verified WITHIN the bucket.
 
     The verification stage of embedding near-dup (the analog of MinHash's
     jaccard_for_pairs). Earlier plan: bucket self-join -> distinct pairs ->
@@ -582,95 +651,78 @@ def near_dup_pairs_from_buckets(
     That materializes and shuffles every candidate pair THREE times (join,
     distinct, vector joins) and folds 2*dims interpreted lambda steps per
     pair — measured 15 s at sf0.1 against ~1.5 s for this form. Here each
-    (table, bucket) group verifies its own pairs in one Arrow batch: the
-    vectors shuffle ONCE (to their buckets — linear in corpus x tables),
-    pairs above threshold are the only per-pair rows ever materialized, and
-    a final distinct dedupes pairs colliding in several tables.
+    (table, bucket) group verifies its own pairs as one `pyarrow.Table`
+    (`applyInArrow`): the vectors shuffle ONCE (to their buckets — linear
+    in corpus x tables), pairs above threshold are the only per-pair rows
+    ever materialized, and a final distinct dedupes pairs colliding in
+    several tables. The rows come from `lsh_bucket_vectors` (the LSH
+    near-dup) or from a cell frame with its vectors joined on
+    (`semantic_dedup`).
 
-    Bit-exactness vs the Column/SQL form is preserved the same way as
-    `hyperplane_lsh_buckets`: dots and norms accumulate sequentially over
-    DIMENSIONS (vectorized across pairs), reproducing the left-to-right
-    IEEE fold of zip_with/aggregate and the oracle's unrolled sum; rounding
-    is `_round6_spark` (Spark's HALF_UP on the shortest-decimal value).
-    A duplicate-heavy bucket at 100 TB is inherently quadratic in ITS OWN
-    size for any exact-verify design; pair work here is chunked so memory
-    stays bounded even for a degenerate bucket.
+    A group sorts its ids with a stable argsort, reads its vectors as one
+    float64 matrix and scores pairs in blocks of anchor rows x the
+    partners after them: acc += a[d] * b[d] for d = 0..dims-1 in place,
+    so every dot (and norm) is the left-to-right IEEE fold from 0.0 of
+    zip_with/aggregate and the oracle's unrolled sum; rounding is
+    `_round6_spark` (Spark's HALF_UP on the shortest-decimal value). Ids
+    keep the id column's own Arrow type. A duplicate-heavy bucket at 100 TB
+    is inherently quadratic in ITS OWN size for any exact-verify design; a
+    block holds at most `chunk_pairs` pairs (or one anchor row), so memory
+    stays O(max(chunk_pairs, m)) even for a degenerate bucket of m rows.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    id_type = emb.schema[id_col].dataType.simpleString()
-    out_schema = f"vec_a {id_type}, vec_b {id_type}, sim double"
-    chunk = chunk_pairs  # pairs per verification chunk (~2M -> tens of MB)
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        idd = pdf["vec_id"].dtype
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series([], dtype=idd),
-                "vec_b": pd.Series([], dtype=idd),
-                "sim": pd.Series([], dtype="float64"),
-            }
+    def verify(group: pa.Table) -> pa.Table:
+        ids = group.column("vec_id")
+        schema = pa.schema(
+            [("vec_a", ids.type), ("vec_b", ids.type), ("sim", pa.float64())]
         )
-        m = len(pdf)
+        m = group.num_rows
         if m < 2:
-            return empty
-        pdf = pdf.sort_values("vec_id", kind="stable")
-        ids = pdf["vec_id"].to_numpy()
-        x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)  # (m, dims)
-        dims = x.shape[1]
+            return schema.empty_table()
+        order = pc.sort_indices(ids)  # stable: ids ascending -> vec_a < vec_b
+        ids = ids.take(order)
+        x = _arrow_matrix(group.column("__v"))[order.to_numpy()]
+        xt = np.ascontiguousarray(x.T)  # (dims, m), columns in id order
         sq = np.zeros(m)
-        for d in range(dims):  # sequential over dims == the fold order
-            xd = x[:, d]
-            sq = sq + xd * xd
+        for xd in xt:  # sequential over dims == the fold order
+            sq += xd * xd
         norms = np.sqrt(sq)
         # zero-norm vectors pin sim 0.0, never NaN (repo-wide convention;
         # the oracle's guarded norms do the same) — a zero vector's dot is
         # 0, so dividing by the substituted 1.0 yields exactly 0.0
         norms = np.where(norms == 0.0, 1.0, norms)
-        # Pair indices are generated PER CHUNK (ids sorted -> vec_a <
-        # vec_b): materializing the full triangle up front
-        # (np.triu_indices) allocates m(m-1)/2 int64 pairs before any
-        # chunk runs — ~550 GB for a 260k-row degenerate bucket, exactly
-        # the case the chunking exists to survive. Each chunk covers a
-        # block of anchor rows whose combined pair count stays <= chunk
-        # (or one anchor when a single row's pairs exceed it, bounding
-        # memory at O(max(chunk, m))).
         outs = []
-        cum = np.cumsum(m - 1 - np.arange(m - 1))  # pairs through anchor i
-        anchor = 0
-        while anchor < m - 1:
-            base = int(cum[anchor - 1]) if anchor else 0
-            end = int(np.searchsorted(cum, base + chunk)) + 1
-            block = np.arange(anchor, min(max(end, anchor + 1), m - 1))
-            ja = np.repeat(block, m - 1 - block)
-            jb = np.concatenate([np.arange(i + 1, m) for i in block])
-            anchor = int(block[-1]) + 1
-            a, b = x[ja], x[jb]
-            acc = np.zeros(len(ja))
-            for d in range(dims):
-                acc = acc + a[:, d] * b[:, d]
-            sim = _round6_spark(acc / (norms[ja] * norms[jb]))
-            keep = sim >= threshold
-            if keep.any():
+        lo = 0
+        while lo < m - 1:
+            width = m - 1 - lo  # partners lo+1..m-1 of the block's anchors
+            hi = min(m - 1, lo + max(1, chunk_pairs // width))
+            acc = np.zeros((hi - lo, width))
+            for xd in xt:
+                acc += xd[lo:hi, None] * xd[None, lo + 1 :]
+            sim = _round6_spark(acc / (norms[lo:hi, None] * norms[None, lo + 1 :]))
+            # column c is row lo+1+c: a pair once, anchor before partner
+            keep = (sim >= threshold) & (
+                np.arange(width)[None, :] >= np.arange(hi - lo)[:, None]
+            )
+            ra, cb = np.nonzero(keep)
+            if len(ra):
                 outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids[ja[keep]],
-                            "vec_b": ids[jb[keep]],
-                            "sim": sim[keep],
-                        }
+                    pa.table(
+                        [ids.take(ra + lo), ids.take(cb + lo + 1), sim[ra, cb]],
+                        schema=schema,
                     )
                 )
-        if not outs:
-            return empty
-        return pd.concat(outs, ignore_index=True)
+            lo = hi
+        return pa.concat_tables(outs) if outs else schema.empty_table()
 
-    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
+    id_type = rows.schema["vec_id"].dataType.simpleString()
     return (
-        buckets.join(vecs, "vec_id")
+        rows.select("table", "bucket", "vec_id", "__v")
         .groupBy("table", "bucket")
-        .applyInPandas(verify, out_schema)
+        .applyInArrow(verify, f"vec_a {id_type}, vec_b {id_type}, sim double")
         .distinct()
     )
 
@@ -1110,7 +1162,6 @@ def _driver_train_probe(df: DataFrame, id_col: str, vec_col: str):
     (Python would hash 'None' where Spark orders NULL first, and a None
     breaks the (md5, id) tiebreak sort).
     """
-    import numpy as np
     from pyspark.sql import types as T
 
     if not isinstance(
@@ -1118,15 +1169,15 @@ def _driver_train_probe(df: DataFrame, id_col: str, vec_col: str):
         (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.StringType),
     ):
         return None
-    rows = driver_gate.collect_if_fits(
+    table = driver_gate.collect_if_fits(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
         DRIVER_TRAIN_MAX_ROWS,
     )
-    if rows is None or any(r.id is None for r in rows):
+    if table is None or table.column("id").null_count:
         return None
-    if not rows:
+    if not table.num_rows:
         return [], None
-    return [r.id for r in rows], np.array([r.v for r in rows], dtype=np.float64)
+    return table.column("id").to_pylist(), _arrow_matrix(table.column("v"))
 
 
 def _driver_seed_order(ids: list) -> list[int]:
@@ -1337,8 +1388,9 @@ def train_pq_codebooks(
             def partials(batches, c_arrs=c_arrs, c_norms=c_norms):
                 for pdf in batches:
                     if len(pdf):
-                        x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                        cnt, sm = _lloyd_partials(x, bounds, c_arrs, c_norms)
+                        cnt, sm = _lloyd_partials(
+                            _vectors(pdf, "v"), bounds, c_arrs, c_norms
+                        )
                         yield pd.DataFrame({"cnt": [cnt.ravel()], "sums": [sm.ravel()]})
 
             stats = src.mapInPandas(
@@ -1598,7 +1650,8 @@ def exact_rerank(
     scored exactly, and the top-k comes from the exact scores. Recovers
     most of the recall the code quantization loses while still never
     scanning raw vectors for the untouched corpus. The LSH and IVF-flat
-    operators end here too, with their bucket / cell candidates.
+    operators end in the same `_rerank`, with their bucket / cell
+    candidates.
 
     Plan shape at 100 TB: `shortlist` is (queries x refine*k) rows —
     kilobytes — so it BROADCASTS into a semi-join-shaped inner join that
@@ -1661,27 +1714,24 @@ def semantic_dedup(
     cells = ivf_cells(
         emb, centroids, id_col=id_col, vec_col=vec_col, nprobe=1
     ).select("vec_id", "cell")
-    buckets = cells.select(
-        F.lit(0).alias("table"), F.col("cell").alias("bucket"), "vec_id"
-    )
+    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
     pairs = near_dup_pairs_from_buckets(
-        emb, buckets, threshold, id_col=id_col, vec_col=vec_col
+        cells.join(vecs, "vec_id").select(
+            F.lit(0).alias("table"), F.col("cell").alias("bucket"), "vec_id", "__v"
+        ),
+        threshold,
     )
     # one scan of the pair set: each pair contributes a neighbor count to
     # both sides and a "dropped" vote to the larger id (vec_a < vec_b by
     # construction in the verifier)
     sides = pairs.select(
-        F.explode(
+        F.inline(
             F.array(
-                F.struct(
-                    F.col("vec_a").alias("vec_id"), F.lit(0).alias("d")
-                ),
-                F.struct(
-                    F.col("vec_b").alias("vec_id"), F.lit(1).alias("d")
-                ),
+                F.struct(F.col("vec_a").alias("vec_id"), F.lit(0).alias("d")),
+                F.struct(F.col("vec_b").alias("vec_id"), F.lit(1).alias("d")),
             )
-        ).alias("e")
-    ).select("e.vec_id", "e.d")
+        )
+    )
     agg = sides.groupBy("vec_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_dups"),
         F.max("d").alias("__dropped"),
@@ -1725,7 +1775,7 @@ def label_centroid_similarity(
     runs on |labels| rows (kilobytes), where the pair join broadcasts
     trivially.
     """
-    q = F.round(F.col("val").cast("double") * scale, 0).cast("long")
+    q = _milli(F.col("val"), scale)
     sums = (
         df.select(
             F.col(label_col).alias("label"),
@@ -1741,12 +1791,7 @@ def label_centroid_similarity(
             lambda e: e.getField("s").cast("double"),
         ).alias("sv")
     )
-    n2 = F.aggregate(
-        F.transform(F.col("sv"), lambda x: x * x),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norms = vecs.select("label", "sv", n2.alias("n2"))
+    norms = vecs.select("label", "sv", _dot(F.col("sv"), F.col("sv")).alias("n2"))
     norms = norms.localCheckpoint(eager=False)  # tiny; feeds both sides
     a = norms.select(
         F.col("label").alias("label_a"),
@@ -1758,11 +1803,7 @@ def label_centroid_similarity(
         F.col("sv").alias("__sb"),
         F.col("n2").alias("__nb2"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("__sa"), F.col("__sb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("__sa"), F.col("__sb"))
     # zero-norm guard (same as centroid_outlier_scores): a label whose sum
     # vector is all zeros would emit NaN cos for every pair it touches;
     # the numerator is 0 there, so coalescing the norms to 1 pins cos at
@@ -1816,11 +1857,8 @@ def centroid_outlier_scores(
     `is_outlier` compares the ROUNDED cosine strictly below `tau`, so the
     flag is deterministic wherever the rounded value is.
     """
-    q = F.round(F.col("val").cast("double") * scale, 0).cast("long")
-    qvec = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale, 0).cast("long"),
-    )
+    q = _milli(F.col("val"), scale)
+    qvec = F.transform(F.col(vec_col), lambda x: _milli(x, scale))
     sums = (
         df.select(F.posexplode(vec_col).alias("pos", "val"))
         .select("pos", q.alias("q"))
@@ -1833,24 +1871,13 @@ def centroid_outlier_scores(
             lambda e: e.getField("s"),
         ).alias("sv")
     )
-    zipped = F.zip_with(
-        F.col("__q"),
-        F.col("sv"),
-        lambda a, b: a.cast("double") * b.cast("double"),
-    )
-    dot = F.aggregate(zipped, F.lit(0.0), lambda acc, x: acc + x)
+    dot = _dot(F.col("__q"), F.col("sv"))
     nq2 = F.aggregate(
         F.transform(F.col("__q"), lambda a: a * a),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    ns2 = F.aggregate(
-        F.transform(
-            F.col("sv"), lambda a: a.cast("double") * a.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    ns2 = _dot(F.col("sv"), F.col("sv"))
     cos = F.when(
         (F.col("__nq2") == 0) | (F.col("__ns2") == 0.0), F.lit(0.0)
     ).otherwise(
@@ -1992,10 +2019,7 @@ def random_projection(
     any corpus size.
     """
     signs = rp_sign_matrix(out_dims)
-    qvec = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * scale, 0).cast("long"),
-    )
+    qvec = F.transform(F.col(vec_col), lambda x: _milli(x, scale))
     base = df.select(F.col(id_col).alias("vec_id"), qvec.alias("__q"))
     projs = F.array(
         *[
@@ -2046,12 +2070,9 @@ def gram_matrix(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            q = _round_half_away_np(x * scale)
+            q = _round_half_away_np(_vectors(pdf) * scale)
             g = q.T @ q  # exact int64 matmul
-            yield pd.DataFrame(
-                {"i": out_i, "j": out_j, "s": g[iu]}
-            )
+            yield pd.DataFrame({"i": out_i, "j": out_j, "s": g[iu]})
 
     part = df.select(F.col(vec_col).alias("__v")).mapInPandas(
         partials, schema="i int, j int, s long"
@@ -2080,9 +2101,10 @@ def cosine_topk_lsh_multiprobe(
     index (ann_lsh_topk) at 30% of the index footprint. Only the query
     buckets widen (`_bucket_candidates`), so the corpus-side plan is
     identical to the single-probe index: one map-only bucket pass, join,
-    `exact_rerank`.
+    `_rerank`.
     """
+    q = _collect_queries(queries, id_col, vec_col, "cosine_topk_lsh_multiprobe")
     cand = _bucket_candidates(
-        corpus, queries, num_planes, num_tables, dims, id_col, vec_col, True
+        corpus, queries, q, num_planes, num_tables, dims, id_col, vec_col, True
     )
-    return exact_rerank(corpus, queries, cand, k, id_col, vec_col)
+    return _rerank(_shortlist_rows(corpus, cand, id_col, vec_col), q, k)

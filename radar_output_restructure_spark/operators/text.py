@@ -723,16 +723,16 @@ def bpe_learn_merges(
 BPE_DRIVER_MAX_VOCAB = 2_000_000
 
 
-def _bpe_train_driver(rows, n_merges):
+def _bpe_train_driver(vocab, n_merges):
     """Pure-Python replica of the per-round merge selection over a
-    driver-resident (word, seg, freq) vocab. Semantics are bit-identical
+    driver-resident (word, seg, freq) vocab table. Semantics are bit-identical
     to the distributed loop (and therefore to the unrolled SQL oracle):
     symbols parse as the non-empty '  '-splits, pair counts weight by word
     freq, best pair orders by (freq DESC, lhs ASC, rhs ASC) — Python's
     code-point string order equals Spark's UTF8 binary order because UTF-8
     preserves code-point order — and the merge applies as the same
     left-to-right non-overlapping `' L  R ' -> ' LR '` replace."""
-    segs = [(r[0], r[1], r[2]) for r in rows]  # (word, seg, freq)
+    segs = list(zip(*vocab.to_pydict().values()))  # (word, seg, freq) rows
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         counts: dict[tuple[str, str], int] = {}
@@ -788,9 +788,9 @@ def _bpe_train(df, text_col, n_merges):
         .localCheckpoint(eager=False)
     )
 
-    rows = driver_gate.collect_if_fits(words, BPE_DRIVER_MAX_VOCAB)
-    if rows is not None:
-        merges, segs = _bpe_train_driver(rows, n_merges)
+    vocab = driver_gate.collect_if_fits(words, BPE_DRIVER_MAX_VOCAB)
+    if vocab is not None:
+        merges, segs = _bpe_train_driver(vocab, n_merges)
         schema = "word string not null, seg string not null, freq bigint not null"
         return merges, lambda: driver_gate.local_frame(df.sparkSession, segs, schema)
 

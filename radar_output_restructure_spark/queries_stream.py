@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.operators.similarity import (
     auto_num_planes,
-    hyperplane_lsh_buckets,
+    lsh_bucket_vectors,
+    near_dup_pairs_from_buckets,
 )
 from radar_output_restructure_spark.queries import register
 from radar_output_restructure_spark.queries_sim import (
@@ -97,20 +98,17 @@ def _embedding_near_dup(
     The plane count comes from the Parquet footer's row count
     (`table_num_rows`), so building the plan runs no count job. The
     embedding analog of MinHash near-dup (candidates per bucket, never
-    all-pairs). Verification is the per-bucket Arrow path
-    (operators/similarity.near_dup_pairs_from_buckets): vectors shuffle once
-    to their buckets and each bucket verifies its own pairs in numpy with
-    the oracle's exact fold order — the earlier candidate self-join +
+    all-pairs). The table is scanned once: the bucketizer carries each
+    vector with its buckets (operators/similarity.lsh_bucket_vectors), the
+    vectors shuffle once to their buckets and each bucket verifies its own
+    pairs as one Arrow table with the oracle's exact fold order
+    (near_dup_pairs_from_buckets) — the earlier candidate self-join +
     per-pair HOF cosine materialized every candidate through three shuffles
     and ran ~10x slower at sf0.1."""
-    from radar_output_restructure_spark.operators.similarity import (
-        near_dup_pairs_from_buckets,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     planes = auto_num_planes(table_num_rows(spark, sf_dir, "embeddings"))
-    cb = hyperplane_lsh_buckets(emb, num_planes=planes, num_tables=NUM_TABLES)
-    return emb, near_dup_pairs_from_buckets(emb, cb, NEAR_DUP_COSINE)
+    rows = lsh_bucket_vectors(emb, num_planes=planes, num_tables=NUM_TABLES)
+    return emb, near_dup_pairs_from_buckets(rows, NEAR_DUP_COSINE)
 
 
 def _embedding_clusters(

@@ -459,6 +459,7 @@ class HadoopTargetStorage(TargetStorage):
 
     def __init__(self, spark):
         self._jvm = spark._jvm
+        self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
 
     def _fs_path(self, path: str):
@@ -466,12 +467,25 @@ class HadoopTargetStorage(TargetStorage):
         fs = jpath.getFileSystem(self._conf)
         return fs, jpath
 
+    def _read_fs_path(self, path: str):
+        """`_fs_path` for reading without checksum verification: a
+        ChecksumFileSystem (the local one) reads through its raw
+        FileSystem, so a file edited by hand after its `.crc` sidecar was
+        written still reads. The cached FileSystem other callers share is
+        left as it is."""
+        from py4j.java_gateway import is_instance_of
+
+        fs, jpath = self._fs_path(path)
+        if is_instance_of(self._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+            fs = fs.getRawFileSystem()
+        return fs, jpath
+
     def exists(self, path: str) -> bool:
         fs, jpath = self._fs_path(path)
         return fs.exists(jpath)
 
     def read(self, path: str) -> bytes:
-        fs, jpath = self._fs_path(path)
+        fs, jpath = self._read_fs_path(path)
         stream = fs.open(jpath)
         try:
             helper = self._jvm.org.apache.commons.io.IOUtils
@@ -565,9 +579,15 @@ class HadoopTargetStorage(TargetStorage):
         # fs.rename reports most refusals (an existing destination, HDFS's
         # missing parent) by returning False, not raising: a caller that
         # went on to drop the source's directory would lose the file. The
-        # local FileSystem's rename carries the `.crc` sidecar along.
+        # destination's parent must already be a directory: HDFS refuses a
+        # missing one, which the local FileSystem would create, and a parent
+        # that is a file makes Java raise. The local FileSystem's rename
+        # carries the `.crc` sidecar along.
         fs, jsrc = self._fs_path(src)
-        if not fs.rename(jsrc, self._jvm.org.apache.hadoop.fs.Path(dest)):
+        jdest = self._jvm.org.apache.hadoop.fs.Path(dest)
+        if not fs.isDirectory(jdest.getParent()):
+            raise IOError(f"rename {src} -> {dest}: its parent is not a directory")
+        if not fs.rename(jsrc, jdest):
             raise IOError(f"rename failed (returned false): {src} -> {dest}")
 
     def walk_file_status(self, root: str) -> list[tuple[str, int, int]]:
@@ -614,5 +634,5 @@ class HadoopTargetStorage(TargetStorage):
         return int(fs.getFileStatus(jpath).getModificationTime())
 
     def open_seekable(self, path: str):
-        fs, jpath = self._fs_path(path)
+        fs, jpath = self._read_fs_path(path)
         return _jvm_seekable(self._jvm, fs, jpath)

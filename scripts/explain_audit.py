@@ -37,7 +37,9 @@ INTERESTING = {
     "BatchEvalPython": "py_row",
     "ArrowEvalPython": "py_arrow",
     "FlatMapGroupsInPandas": "py_groups",
+    "FlatMapGroupsInArrow": "py_groups",
     "MapInPandas": "py_map",
+    "MapInArrow": "py_map",
     "TakeOrderedAndProject": "takeordered",
     "GlobalLimit": "limit",
     "CollectLimit": "limit",

@@ -304,7 +304,7 @@ def _reference_configs() -> dict:
         simhash_near_dup_pairs,
     )
     from radar_output_restructure_spark.operators.similarity import (
-        hyperplane_lsh_buckets,
+        lsh_bucket_vectors,
         near_dup_pairs_from_buckets,
     )
     from radar_output_restructure_spark.queries_sim import (
@@ -316,8 +316,8 @@ def _reference_configs() -> dict:
 
     def emb_fixed4(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
-        cb = hyperplane_lsh_buckets(emb, num_planes=4, num_tables=NUM_TABLES)
-        return near_dup_pairs_from_buckets(emb, cb, NEAR_DUP_COSINE)
+        rows = lsh_bucket_vectors(emb, num_planes=4, num_tables=NUM_TABLES)
+        return near_dup_pairs_from_buckets(rows, NEAR_DUP_COSINE)
 
     def simhash_32bit(spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents", spread=True)

@@ -108,7 +108,6 @@ SLOW_TESTS = {
         "test_jaccard_stop_shingle_cap",
         "test_log_bucket_quantiles_mergeable_and_bounded_error",
         "test_minhash_identical_docs_share_all_bands",
-        "test_near_dup_bucket_verify_matches_column_form",
         "test_per_source_cap",
         "test_shingles_and_jaccard",
         "test_simhash_near_dup_pairs",

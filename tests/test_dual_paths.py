@@ -7,7 +7,8 @@ distributed fallback), and requires exactly equal results: the same rows
 and, for a DataFrame, the same schema. The model is spark-rapids'
 `assert_gpu_and_cpu_are_equal_collect`.
 
-`driver_gate.local_frame`, the way driver results become frames again, is
+The real gate (one job, one Arrow table or None) and
+`driver_gate.local_frame`, the way driver results become frames again, are
 tested here too.
 """
 
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import DataFrame
 
@@ -39,9 +41,9 @@ def assert_paths_agree(run):
     accepted = []
 
     def spy(df, cap):
-        rows = real(df, cap)
-        accepted.append(rows is not None)
-        return rows
+        table = real(df, cap)
+        accepted.append(table is not None)
+        return table
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(driver_gate, "collect_if_fits", spy)
@@ -134,6 +136,35 @@ CASES = {
 @pytest.mark.parametrize("case", list(CASES))
 def test_driver_and_distributed_paths_agree(spark, case):
     assert_paths_agree(CASES[case](spark))
+
+
+@pytest.mark.parametrize("n_rows", [5, 6, 0])
+def test_collect_if_fits_takes_one_job(spark, n_rows):
+    """The real gate at cap 5 over a frame with an Exchange, checkpointed
+    lazily as the callers do (which runs the shuffle stage while the frame
+    is built): up to the cap it returns the whole frame as one Arrow table
+    (an empty frame as an empty table of its schema), over it None; either
+    way in one Spark job."""
+    from pyspark.sql import functions as F
+
+    df = (
+        spark.range(n_rows, numPartitions=2)
+        .repartition(3, "id")
+        .select("id", F.array(F.col("id").cast("double")).alias("v"))
+        .localCheckpoint(eager=False)
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    table = driver_gate.collect_if_fits(df, 5)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    if n_rows > 5:
+        assert table is None
+        return
+    assert table.schema.names == ["id", "v"]
+    assert table.schema.field("id").type == pa.int64()
+    assert table.schema.field("v").type.value_type == pa.float64()
+    assert sorted(table.column("id").to_pylist()) == list(range(n_rows))
+    assert table.num_rows == n_rows
 
 
 LOCAL_ROWS = [("doc-1", 7, [0.5, None, -2.0]), ("dokümän-文書", None, None)]

@@ -263,6 +263,38 @@ def test_hadoop_target_storage_roundtrip(spark, tmp_path):
     assert st.walk_files(root) == []
 
 
+def test_hadoop_storage_reads_a_file_edited_by_hand(spark, tmp_path):
+    """The local FileSystem writes a `.crc` sidecar; a file edited by hand
+    afterwards (a ledger fixed up by an operator) still reads, whole and
+    ranged."""
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+
+    st = HadoopTargetStorage(spark)
+    p = str(tmp_path / "ledger.json")
+    st.store_atomic(p, b'{"committed": 1}')
+    assert os.path.exists(tmp_path / ".ledger.json.crc")
+    with open(p, "wb") as fh:
+        fh.write(b'{"committed": 2, "edited": true}')
+    assert st.read(p) == b'{"committed": 2, "edited": true}'
+    assert b"".join(st.open_read_chunks(p, 5)) == b'{"committed": 2, "edited": true}'
+
+
+def test_hadoop_storage_move_refuses_a_missing_or_file_parent(spark, tmp_path):
+    """`move` raises IOError, and moves nothing, when the destination's
+    parent is missing (HDFS refuses that rename; the local FileSystem would
+    create the parent) or is a file (Java raises)."""
+    from radar_output_restructure_spark.sinks.storage import HadoopTargetStorage
+
+    st = HadoopTargetStorage(spark)
+    src = str(tmp_path / "a.bin")
+    st.store_atomic(src, b"payload")
+    for dest in (tmp_path / "missing" / "a.bin", tmp_path / "a.bin" / "b.bin"):
+        with pytest.raises(IOError, match="is not a directory"):
+            st.move(src, str(dest))
+        assert st.read(src) == b"payload"
+    assert not os.path.exists(tmp_path / "missing")
+
+
 def test_hadoop_storage_streaming_writer_and_error_discard(spark, tmp_path):
     """store_atomic_writer on the Hadoop backend (file:// = the rename-atomic
     branch): streamed chunks publish atomically; an exception mid-write

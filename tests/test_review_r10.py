@@ -71,41 +71,6 @@ def test_content_split_null_text_hashes_like_empty(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_near_dup_pairs_chunked_generation_matches_single_chunk(spark):
-    """Per-chunk pair generation (the O(m^2)-allocation fix) must emit the
-    identical pair set as one big chunk."""
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        near_dup_pairs_from_buckets,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            Row(vec_id=i, embedding=[float(i % 4 + 1), float((i * 7) % 5 + 1)])
-            for i in range(24)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    buckets = spark.createDataFrame(
-        [Row(table=0, bucket=0, vec_id=i) for i in range(24)],
-        "table int, bucket int, vec_id long",
-    )
-
-    def pairs(chunk):
-        return sorted(
-            (r["vec_a"], r["vec_b"], r["sim"])
-            for r in near_dup_pairs_from_buckets(
-                emb, buckets, threshold=0.2, chunk_pairs=chunk
-            ).collect()
-        )
-
-    big = pairs(1 << 21)  # single chunk covers all 276 pairs
-    small = pairs(7)  # many chunks, anchors split mid-row-range
-    assert big == small
-    assert len(big) > 0
-
-
 def test_label_centroid_zero_norm_label_pins_cos_zero(spark):
     from pyspark.sql import Row
 

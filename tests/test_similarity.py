@@ -418,3 +418,136 @@ def test_multiprobe_lsh_never_below_single_probe(spark, sf_dir):
     n_cand_m = multi.count()
     n_cand_s = single.count()
     assert n_cand_m >= n_cand_s
+
+
+# ---------------------------------------------------------------------------
+# near-dup verifier (near_dup_pairs_from_buckets)
+# ---------------------------------------------------------------------------
+
+
+def _verified(rows, threshold: float, chunk_pairs: int = 1 << 21) -> list:
+    from radar_output_restructure_spark.operators.similarity import (
+        near_dup_pairs_from_buckets,
+    )
+
+    return sorted(
+        (r["vec_a"], r["vec_b"], r["sim"])
+        for r in near_dup_pairs_from_buckets(rows, threshold, chunk_pairs).collect()
+    )
+
+
+def test_near_dup_verifier_matches_per_pair_model(spark):
+    """The per-bucket Arrow verifier against a pure-Python per-pair model
+    (left-to-right fold, zero norms read as 1, Spark's round): string ids
+    (whose order is not the integer order), a zero-norm vector, a one-row
+    bucket, a pair found in two tables, and a bucket split into blocks by
+    `chunk_pairs=7`. Each pair comes out once."""
+    members = {
+        (0, 0): range(12),  # ZERO and the TIED pair; 66 pairs, many blocks
+        (0, 1): [20],  # one row: no pair
+        (1, 0): [*TIED, 3, 30],  # the TIED pair again, in another table
+        (1, 3): [31, 32, 33],
+    }
+    rows = spark.createDataFrame(
+        [
+            (t, b, str(i), VECS[i])
+            for (t, b), ids in members.items()
+            for i in ids
+        ],
+        "table int, bucket bigint, vec_id string, __v array<double>",
+    )
+    threshold = 0.0
+    want = set()
+    for ids in members.values():
+        for a in ids:
+            for b in ids:
+                if str(a) < str(b) and _sim(a, b) >= threshold:
+                    want.add((str(a), str(b), _sim(a, b)))
+    assert ("1", str(ZERO), 0.0) in want  # zero vector: sim 0.0, never NaN
+    for chunk in (7, 1 << 21):
+        got = _verified(rows, threshold, chunk)
+        assert len(got) == len(set(got))
+        assert set(got) == want
+
+
+def test_near_dup_pairs_chunked_generation_matches_single_chunk(spark):
+    """Per-block pair generation must emit the identical pair set as one
+    big block."""
+    rows = spark.createDataFrame(
+        [
+            (0, 0, i, [float(i % 4 + 1), float((i * 7) % 5 + 1)])
+            for i in range(24)
+        ],
+        "table int, bucket int, vec_id long, __v array<double>",
+    )
+    big = _verified(rows, 0.2)  # single block covers all 276 pairs
+    small = _verified(rows, 0.2, 7)  # many blocks, anchors split mid-row-range
+    assert big == small
+    assert len(big) > 0
+
+
+def test_near_dup_bucket_verify_matches_column_form(spark):
+    """The LSH near-dup (one bucketizer scan carrying the vectors, then the
+    per-bucket verifier) must reproduce the Column-expression plan (bucket
+    self-join -> HOF cosine per pair) bit-for-bit: same pairs, same rounded
+    sims, across multi-table collisions and sub-threshold drops."""
+    from radar_output_restructure_spark.operators.similarity import (
+        _dot,
+        _norm,
+        hyperplane_lsh_buckets,
+        lsh_bucket_vectors,
+    )
+
+    emb = spark.createDataFrame(
+        [
+            Row(
+                vec_id=i,
+                embedding=[
+                    float(((i * 13 + d * 7) % 11) - 5) / 3.0 for d in range(16)
+                ],
+            )
+            for i in range(40)
+        ]
+    )
+    threshold = 0.2
+    got = _verified(
+        lsh_bucket_vectors(emb, num_planes=3, dims=16, num_tables=2), threshold
+    )
+
+    cb = hyperplane_lsh_buckets(emb, num_planes=3, dims=16, num_tables=2)
+    cand = (
+        cb.select(F.col("vec_id").alias("vec_a"), "table", "bucket")
+        .join(
+            cb.select(F.col("vec_id").alias("vec_b"), "table", "bucket"),
+            ["table", "bucket"],
+        )
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+    )
+    a = emb.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("qv"),
+        _norm(F.col("embedding")).alias("na"),
+    )
+    b = emb.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("cv"),
+        _norm(F.col("embedding")).alias("nb"),
+    )
+    want = sorted(
+        (r.vec_a, r.vec_b, r.sim)
+        for r in cand.join(a, "vec_a")
+        .join(b, "vec_b")
+        .select(
+            "vec_a",
+            "vec_b",
+            F.round(
+                _dot(F.col("qv"), F.col("cv")) / (F.col("na") * F.col("nb")), 6
+            ).alias("sim"),
+        )
+        .filter(F.col("sim") >= threshold)
+        .collect()
+    )
+    assert got == want
+    assert len(got) > 0  # the fixture must actually exercise collisions

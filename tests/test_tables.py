@@ -38,13 +38,13 @@ def test_embedding_near_dup_planes_come_from_the_footer(
     )
 
     planes = []
-    lsh = queries_stream.hyperplane_lsh_buckets
+    lsh = queries_stream.lsh_bucket_vectors
 
     def spy(emb, num_planes, **kwargs):
         planes.append(num_planes)
         return lsh(emb, num_planes=num_planes, **kwargs)
 
-    monkeypatch.setattr(queries_stream, "hyperplane_lsh_buckets", spy)
+    monkeypatch.setattr(queries_stream, "lsh_bucket_vectors", spy)
     emb = load_table(spark, sf_dir, "embeddings")  # session schema cache
     tracker = spark.sparkContext.statusTracker()
     jobs = set(tracker.getJobIdsForGroup(None))

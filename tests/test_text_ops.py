@@ -658,77 +658,6 @@ def test_round6_spark_property_decimal_halfup():
     check()
 
 
-def test_near_dup_bucket_verify_matches_column_form(spark):
-    """The per-bucket Arrow verifier must reproduce the Column-expression
-    plan (bucket self-join -> HOF cosine per pair) bit-for-bit: same pairs,
-    same rounded sims, across multi-table collisions and sub-threshold
-    drops."""
-    from pyspark.sql import Row
-
-    from radar_output_restructure_spark.operators.similarity import (
-        _dot,
-        _norm,
-        hyperplane_lsh_buckets,
-        near_dup_pairs_from_buckets,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            Row(
-                vec_id=i,
-                embedding=[
-                    float(((i * 13 + d * 7) % 11) - 5) / 3.0 for d in range(16)
-                ],
-            )
-            for i in range(40)
-        ]
-    )
-    cb = hyperplane_lsh_buckets(emb, num_planes=3, dims=16, num_tables=2)
-    threshold = 0.2
-
-    got = {
-        (r.vec_a, r.vec_b): r.sim
-        for r in near_dup_pairs_from_buckets(emb, cb, threshold).collect()
-    }
-
-    cand = (
-        cb.select(F.col("vec_id").alias("vec_a"), "table", "bucket")
-        .join(
-            cb.select(F.col("vec_id").alias("vec_b"), "table", "bucket"),
-            ["table", "bucket"],
-        )
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("qv"),
-        _norm(F.col("embedding")).alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("nb"),
-    )
-    want = {
-        (r.vec_a, r.vec_b): r.sim
-        for r in cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
-        .collect()
-    }
-    assert got == want
-    assert len(got) > 0  # the fixture must actually exercise collisions
-
-
 def test_winnowing_fingerprints_guarantee(spark):
     """Winnowing guarantee: two docs sharing a substring of length
     >= k + w - 1 share at least one fingerprint; docs shorter than k emit
