@@ -30,9 +30,9 @@ Materialization: map keys and array arities are data-dependent, so when the
 non-excluded schema has map or array leaves `flatten` runs ONE job — the
 input stored with `localCheckpoint` while an `Observation` on the same pass
 collects the shapes — and projects the stored rows. Whatever consumes the
-flat frame (the writer's dedup/repartition job, the cleaner's expectations)
-reads those rows instead of re-running the scan, the Avro decode and the
-path formatting. The stored blocks belong to the returned frame: Spark's
+flat frame (the writer's dedup/repartition job, the cleaner's check where
+it needs the dedup survivors) reads those rows instead of re-running the
+scan, the Avro decode and the path formatting. The stored blocks belong to the returned frame: Spark's
 ContextCleaner releases them once that frame is dropped. Schemas without
 map/array leaves get a plain projection and no job.
 """

@@ -86,11 +86,3 @@ def event_time(df: DataFrame) -> Column:
     if not candidates:
         return F.lit(None).cast("timestamp")
     return F.coalesce(*candidates)
-
-
-def event_time_seconds(df: DataFrame) -> Column:
-    """Event time as double epoch-seconds (the reference's canonical unit,
-    TimeUtil.kt:127-132 keeps sub-second precision; unix_micros/1e6 preserves
-    microseconds, which covers every double the fixtures use)."""
-    ts = event_time(df)
-    return (F.unix_micros(ts).cast("double") / F.lit(1_000_000.0)).alias("event_time_s")

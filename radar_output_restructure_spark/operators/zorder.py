@@ -73,11 +73,6 @@ def z_value_sql(x_expr: str, y_expr: str, bits: int = Z_BITS) -> str:
     )
 
 
-def z_value(x_expr: str, y_expr: str, bits: int = Z_BITS):
-    """The z-value as a Spark Column (same shared SQL text)."""
-    return F.expr(z_value_sql(x_expr, y_expr, bits))
-
-
 def z_order_stats(
     df: DataFrame,
     x_expr: str,

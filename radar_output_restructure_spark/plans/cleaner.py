@@ -9,14 +9,28 @@ Reference semantics, re-expressed as one grouped Spark pass per topic:
   exists for its Kafka partition — the max-offset file is never removed
   (SourceDataCleaner.kt:99-113 `incrementTo` containment).
 * C2 extraction check (distributed): recompute each source record's target
-  file path and event time with the SAME plan the writer used, group the
-  records by the partition columns (the shuffle `transform` already ran;
-  a target path is one partition-column tuple per attempt), sort them by
-  target path, and run one partition loop over them. For each
-  target file it asks the storage once whether the file exists, reads it
-  once, builds the file's set of event times (the reference's
-  TimestampFileCache) and emits every source file with a record whose time
-  is not in that set. A missing target fails every source in its group;
+  file path and event time with the writer's own routing,
+  `RestructurePlan.route` (event-time cascade, path partition columns,
+  bucket), over the same read+conform+union step (`plan.attempt_frames`).
+  The time is rendered as the target holds it: the CSV cell through
+  flatten's leaf renderer, the typed value for parquet, the writer's JSON
+  line (`RestructurePlan.json_line`). No flatten job and no dedup window
+  run: when the topic's dedup key holds `value.time` (dedup off, the whole
+  record or JSON line as key, `distinct_fields` naming it, `ignore_fields`
+  leaving it in; `_key_holds_time`), every duplicate the writer dropped
+  shares its survivor's partition columns and time, so it expects the same
+  (target, time) pair, and checking every record gives each file of a
+  healthy tree the verdict that checking the survivors would. Where a
+  survivor's time is missing, every file holding a copy of that record is
+  revoked, not only the survivor's. A key that leaves `value.time` out
+  drops records whose time no target holds, so that topic's check runs
+  the writer's `transform` and expects its survivors only. The records are
+  grouped by the partition columns (one shuffle: a target path is one
+  partition-column tuple per attempt), sorted by target path, and one
+  partition loop runs over them. For each target file it asks the storage
+  once whether the file exists, reads it once, builds the file's set of
+  event times (the reference's TimestampFileCache) and emits every source
+  file with a record whose time is not in that set. A missing target fails every source in its group;
   records with no event time are conservatively unmatched (the reference's
   extraction check also fails them: TimestampExtractionCheck errors => not
   extracted). A source file is extracted iff it emitted nothing. The loop
@@ -30,7 +44,7 @@ Reference semantics, re-expressed as one grouped Spark pass per topic:
 
 Event times compare per format: CSV and zip targets are parsed whole-file
 through the writer's codec, each against its own header, and the
-`value.time` token is compared with the expectation's Spark string cast;
+`value.time` token is compared with the expectation's rendered cell;
 JSON lines compare the `value.time` that one Python extraction (`_json_time`)
 finds in the target line and in the expectation's rendered line; parquet
 compares typed values, NaN matching NaN.
@@ -45,10 +59,16 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
+from radar_output_restructure_spark.functions.flatten import _render_leaf
+from radar_output_restructure_spark.plans.restructure import (
+    DedupConfig,
+    RestructureConfig,
+    RestructurePlan,
+)
 from radar_output_restructure_spark.sinks.storage import TargetStorage
 from radar_output_restructure_spark.sinks.writers import decompress, run_partition_loop
 from radar_output_restructure_spark.sources.kafka_tree import (
@@ -56,6 +76,50 @@ from radar_output_restructure_spark.sources.kafka_tree import (
 )
 from radar_output_restructure_spark.sources.manifest import FileEntry
 from radar_output_restructure_spark.timer import Timer
+
+
+#: the event-time leaf the check compares, by its flat (dotted) name
+TIME = "value.time"
+
+
+def _key_holds_time(dedup: DedupConfig, fmt: str) -> bool:
+    """Whether the writer's dedup key holds `value.time`. The key always
+    holds the partition columns, so then every record the window drops has
+    its survivor's target path and time, and checking every record gives
+    a healthy tree the verdicts that checking the survivors would. It
+    holds with dedup off, for JSON (the whole line is the key), and for
+    CSV and parquet unless `ignore_fields` names `value.time` or
+    `distinct_fields` leaves it out. Where a missing distinct field makes
+    the key fall back (`operators.dedup.key_field_indexes`), it falls back
+    to the whole record or the ignore rule, which keep `value.time`."""
+    if not dedup.enable or fmt == "json":
+        return True
+    if TIME in (dedup.ignore_fields or ()):
+        return False
+    return not dedup.distinct_fields or TIME in dedup.distinct_fields
+
+
+def _time_column(
+    schema: T.StructType, excluded: set[str], rendered: bool
+) -> Column | None:
+    """The flat `value.time` leaf of a routed frame as `flatten` projects
+    it (rendered for CSV, typed for parquet), or None where it projects
+    none: `value` or `value.time` excluded or absent, or `value.time` a
+    record, map or array. A map `value` gives its `time` key, NULL where
+    a record lacks it, as the flattened column does."""
+    if "value" in excluded or TIME in excluded:
+        return None
+    value = next((f.dataType for f in schema.fields if f.name == "value"), None)
+    if isinstance(value, T.MapType):
+        leaf = F.try_element_at(F.col("value"), F.lit("time"))
+        dtype = value.valueType
+    elif isinstance(value, T.StructType) and "time" in value.fieldNames():
+        leaf, dtype = F.col(TIME), value["time"].dataType
+        if isinstance(dtype, (T.StructType, T.MapType, T.ArrayType)):
+            return None
+    else:
+        return None
+    return _render_leaf(leaf, dtype) if rendered else leaf
 
 
 def _time_key(value):
@@ -190,54 +254,67 @@ class SourceDataCleaner:
         self, topic: str, files: list[FileEntry]
     ) -> tuple[DataFrame | None, list[str], set[str]]:
         """((source_file, target_path, time, *partition columns) per source
-        record, the partition columns, covered source paths) — the same
-        routing + rendering plan the writer ran. `time` is the CSV cell
-        string, the JSON line, or the typed parquet value; `target_path` is
-        NULL for a record with no event time. The frame is None when no
-        file is covered.
+        record, the partition columns, covered source paths): each record's
+        target path and rendered event time, as the writer routed and
+        rendered them. `time` is the CSV cell string, the JSON line, or the
+        typed parquet value; `target_path` is NULL for a record with no
+        event time. The frame is None when no file is covered.
 
-        Shares `plan.attempt_frames` with `run_topic` — ONE definition of
-        the per-attempt read+conform+union step, so dedup survivors in
-        verification are byte-identical to what the writer kept (a
-        divergent copy here could keep a different duplicate than the
-        union-scoped writer did when distinct_fields dedup spans two
-        groups, revoking healthy files forever). Files whose schema cannot
-        be read right now are NOT covered — the caller must treat them as
-        unverified, never as extracted."""
+        When the topic's dedup key holds `value.time` (`_key_holds_time`),
+        the rows come straight off `plan.route`: no flatten, no window. A
+        key without it keeps the survivors of `plan.transform`, the
+        writer's own frame. Either way the frames come from
+        `plan.attempt_frames`, the ONE read+conform+union step `run_topic`
+        uses, so the transform path keeps exactly the survivors the writer
+        kept (a divergent read could keep another duplicate than the
+        union-scoped writer did, revoking healthy files forever). Files
+        whose schema cannot be read right now are NOT covered: the caller
+        must treat them as unverified, never as extracted."""
         cfg = self.config
+        plan = self.plan
+        json_out = cfg.output_format == "json"
+        direct = _key_holds_time(plan.dedup_config(topic), cfg.output_format)
         parts: list[DataFrame] = []
         part_cols: list[str] = []
         covered: set[str] = set()
         out_root = self._output_root()
-        for attempt, _sup, df, group_files in self.plan.attempt_frames(
-            topic, files
-        ):
+        for attempt, _sup, df, group_files in plan.attempt_frames(topic, files):
             covered.update(f.path for f in group_files)
-            flat, part_cols = self.plan.transform(
-                df, topic, keep_cols=("source_file",)
-            )
-            ext = self.plan.attempt_extension(attempt)
-            target = F.concat_ws(
-                os.sep, F.lit(out_root),
-                *[F.col(c) for c in part_cols],
-            )
-            target = F.concat(target, F.lit(ext))
-            if cfg.output_format == "json":
-                # the rendered line: the check extracts its time in Python,
-                # as it does from the target's lines
-                event_time = F.col("line")
-            else:
+            # JSON: the rendered line; the check extracts its time in
+            # Python, as it does from the target's lines
+            if direct:
+                rows, part_cols = plan.route(df, topic)
                 event_time = (
-                    F.col("`value.time`")
-                    if "value.time" in flat.columns
-                    else F.lit(None).cast("string")
+                    plan.json_line(rows, part_cols, topic)
+                    if json_out
+                    else _time_column(
+                        rows.schema,
+                        plan.excluded_fields(topic),
+                        rendered=cfg.output_format == "csv",
+                    )
                 )
-                if cfg.output_format == "csv":
-                    event_time = event_time.cast("string")
+            else:
+                rows, part_cols = plan.transform(
+                    df, topic, keep_cols=("source_file",)
+                )
+                event_time = (
+                    F.col("line") if json_out
+                    else F.col(f"`{TIME}`") if TIME in rows.columns
+                    else None
+                )
+            if event_time is None:
+                event_time = F.lit(None).cast("string")
+            target = F.concat(
+                F.concat_ws(
+                    os.sep, F.lit(out_root), *[F.col(c) for c in part_cols]
+                ),
+                F.lit(plan.attempt_extension(attempt)),
+            )
+            if not json_out:
                 # no event time: no target file can hold the record
                 target = F.when(event_time.isNotNull(), target)
             parts.append(
-                flat.select(
+                rows.select(
                     "source_file",
                     target.alias("target_path"),
                     event_time.alias("time"),
@@ -275,8 +352,8 @@ class SourceDataCleaner:
 
                 table = pq.read_table(io.BytesIO(data))
                 values = (
-                    table.column("value.time").to_pylist()
-                    if "value.time" in table.column_names
+                    table.column(TIME).to_pylist()
+                    if TIME in table.column_names
                     else []
                 )
                 keys = map(_time_key, values)
@@ -287,7 +364,7 @@ class SourceDataCleaner:
                 else:
                     rows = csv.reader(io.StringIO(text))
                     header = next(rows, [])
-                    ti = header.index("value.time") if "value.time" in header else -1
+                    ti = header.index(TIME) if TIME in header else -1
                     keys = (row[ti] for row in rows if 0 <= ti < len(row))
             out[path] = set(keys) - {None}
         return out
@@ -296,12 +373,14 @@ class SourceDataCleaner:
     def verify_topic(self, topic: str, files: list[FileEntry]) -> dict[str, bool]:
         """source_file -> fully extracted? One grouped pass for the whole
         topic: the expectations shuffle by their partition columns (the
-        hash `transform` already applied, so Spark plans no second
-        Exchange), sort by target path within each partition, and one
-        partition loop checks each target file against its own records;
-        the driver collects only the unmatched source files. A target path
-        is one (partition columns, attempt) pair, so its records share a
-        partition.
+        one Exchange; on the `transform` path it is transform's own, so
+        Spark plans no second one), sort by target path within each
+        partition, and one partition loop checks each target file against
+        its own records; the driver collects only the unmatched source
+        files. A target path is one (partition columns, attempt) pair, so
+        its records share a partition. Two Spark jobs: the shuffle's map
+        stage and the check (flatten's checkpoint adds one on the
+        `transform` path when the schema has map or array leaves).
 
         A file the expectation scan could NOT cover (its schema read failed
         right now — transient storage error or post-commit corruption) is

@@ -19,6 +19,9 @@ Catalyst sees the whole pipeline, so column pruning reaches the scan, and the
 one shuffle is `transform`'s hash partitioning by the output-file path
 columns: the dedup window's key holds every path column, and the writer's
 repartition by the same columns is dropped as redundant.
+
+`route` is the event-time and path half (plus the bucket and the arrival
+order columns); the cleaner's extraction check reads it directly.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ import logging
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -385,33 +388,35 @@ class RestructurePlan:
         exactly what DedupConfig carries (the reference's distinctFields /
         ignoreFields address the same rendered header,
         CsvAvroConverterFactory.fieldIndexes)."""
-        cfg = self.config
-        tcfg = cfg.topics.get(topic or "", TopicConfig())
-        dedup_cfg = tcfg.dedup or cfg.dedup
+        dedup_cfg = self.dedup_config(topic)
         if not dedup_cfg.enable:
             return None
         return (dedup_cfg.distinct_fields, dedup_cfg.ignore_fields)
 
-    def transform(
-        self,
-        df: DataFrame,
-        topic: str | None = None,
-        keep_cols: tuple[str, ...] = (),
-    ) -> tuple[DataFrame, list[str]]:
-        """Scan DataFrame -> flattened, partition-column-annotated DataFrame.
-
-        Returns (df, partition_cols), hash-partitioned by partition_cols
-        before the optional dedup window: the window, the writer and the
-        cleaner's grouping then share that one shuffle. Plan construction
-        only, except that `flatten` stores the pre-projection rows in one
-        job when the schema has map/array leaves (functions/flatten.py);
-        the writer and the cleaner both read those stored rows.
-        `keep_cols`: extra scan columns carried through unchanged (e.g. the
-        cleaner keeps `source_file` to attribute records back to sources).
-        """
+    def excluded_fields(self, topic: str | None = None) -> set[str]:
+        """Every dotted name the output leaves out for `topic`: the global
+        and per-topic `excludeFields` plus the scan's metadata columns."""
         cfg = self.config
         tcfg = cfg.topics.get(topic or "", TopicConfig())
-        # one dimension snapshot per transform: resolving again for the
+        return cfg.exclude_fields | tcfg.exclude_fields | {*META_COLS, "topic"}
+
+    def dedup_config(self, topic: str | None = None) -> DedupConfig:
+        """The topic's dedup settings, else the global ones."""
+        cfg = self.config
+        tcfg = cfg.topics.get(topic or "", TopicConfig())
+        return tcfg.dedup or cfg.dedup
+
+    def route(
+        self, df: DataFrame, topic: str | None = None
+    ) -> tuple[DataFrame, list[str]]:
+        """The routing half of `transform`: `df` with each record's
+        output-file partition columns (the event-time cascade, the path
+        format's segments and the optional bucket, which leads) and the
+        arrival-order columns `ORDER_COLS` appended. Returns (df,
+        partition_cols). Plan construction only: no job, no shuffle."""
+        cfg = self.config
+        tcfg = cfg.topics.get(topic or "", TopicConfig())
+        # one dimension snapshot per route: resolving again for the
         # bucket below could route path segments and the bucket on two
         # DIFFERENT subject snapshots (TTL expiry between the calls)
         mp_dim = self._resolve_mp_dim()
@@ -452,9 +457,6 @@ class RestructurePlan:
             # mp_<attr> columns already
             df = bucket.attach(df, ts, out_col="pf_bucket")
             part_cols = ["pf_bucket", *part_cols]
-        meta_cols = [*META_COLS, "topic"]
-        excluded = cfg.exclude_fields | tcfg.exclude_fields | set(meta_cols)
-        dedup_cfg = tcfg.dedup or cfg.dedup
         # Offset-aware arrival order (reference: files are processed in Kafka
         # offset order, RestructureWorker.kt). monotonically_increasing_id
         # alone follows SCAN-PARTITION order, and the file source bin-packs
@@ -473,29 +475,61 @@ class RestructurePlan:
             .withColumn("__ord_off", F.col("offset_from").cast("bigint"))
             .withColumn("__pos", F.monotonically_increasing_id())
         )
+        return df, part_cols
+
+    def json_line(
+        self, routed: DataFrame, part_cols: list[str], topic: str | None = None
+    ) -> Column:
+        """The JSON-lines writer's rendered line of each record of a
+        `route`d frame: the record nesting kept (format/JsonAvroConverter.kt:
+        30-60), `excludeFields` pruned in place, NULL fields explicit
+        (Jackson writes them). Shared by `transform` and the cleaner's
+        expectations, so both render the same bytes."""
+        excluded = self.excluded_fields(topic)
+        non_record = excluded | {*ORDER_COLS, *part_cols}
+        record = pruned_struct(
+            T.StructType(
+                [f for f in routed.schema.fields if f.name not in non_record]
+            ),
+            excluded,
+        )
+        if record is None:
+            raise ValueError(
+                "excludeFields removes every value field for topic "
+                f"{topic!r}; JSON output would be empty objects — "
+                "narrow the excludeFields configuration"
+            )
+        return F.to_json(record, {"ignoreNullFields": "false"})
+
+    def transform(
+        self,
+        df: DataFrame,
+        topic: str | None = None,
+        keep_cols: tuple[str, ...] = (),
+    ) -> tuple[DataFrame, list[str]]:
+        """Scan DataFrame -> flattened, partition-column-annotated DataFrame.
+
+        Returns (df, partition_cols), hash-partitioned by partition_cols
+        before the optional dedup window: the window and the writer then
+        share that one shuffle. Plan construction only, except that
+        `flatten` stores the pre-projection rows in one job when the schema
+        has map/array leaves (functions/flatten.py); the writer reads those
+        stored rows. `keep_cols`: extra scan columns carried through
+        unchanged (the cleaner keeps `source_file` to attribute records
+        back to sources when its check needs the dedup survivors).
+        """
+        cfg = self.config
+        df, part_cols = self.route(df, topic)
+        excluded = self.excluded_fields(topic)
+        dedup_cfg = self.dedup_config(topic)
 
         if cfg.output_format == "json":
-            # JSON-lines preserves nesting (format/JsonAvroConverter.kt:30-60);
-            # excludeFields prunes keys in place; null fields stay explicit
-            # (Jackson writes them). One rendered `line` column per record.
-            non_record = excluded | {*ORDER_COLS, *part_cols}
-            record = pruned_struct(
-                T.StructType(
-                    [f for f in df.schema.fields if f.name not in non_record]
-                ),
-                excluded,
-            )
-            if record is None:
-                raise ValueError(
-                    "excludeFields removes every value field for topic "
-                    f"{topic!r}; JSON output would be empty objects — "
-                    "narrow the excludeFields configuration"
-                )
+            # One rendered `line` column per record.
             lines = df.select(
                 *[F.col(c) for c in part_cols],
                 *[F.col(c) for c in ORDER_COLS],
                 *[F.col(c) for c in keep_cols],
-                F.to_json(record, {"ignoreNullFields": "false"}).alias("line"),
+                self.json_line(df, part_cols, topic).alias("line"),
             ).repartition(*part_cols)
             if dedup_cfg.enable:
                 # JSON dedup is whole-line keep-FIRST regardless of
@@ -662,7 +696,7 @@ class RestructurePlan:
         (the writer) and the cleaner's _source_expectations must see
         byte-identical frames, or dedup keeps different survivors in
         verification than were written and the cleaner revokes/re-extracts
-        the same files forever (plans/cleaner.py:120)."""
+        the same files forever (`SourceDataCleaner._source_expectations`)."""
         cfg = self.config
         for attempt, schema_json, fp_groups in self._fingerprint_groups(
             topic, files

@@ -61,17 +61,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def avro_supported(spark: SparkSession) -> bool:
-    """True when the spark-avro DataSource jar is on the classpath.
-
-    Avro works EITHER way: with the jar, `read_topic_tree` uses the native
-    DataSource; without it (pip pyspark), the distributed pure-Python
-    container reader in sources/avro_io.py takes over. This predicate only
-    reports which path is active."""
-    from radar_output_restructure_spark.sources.kafka_tree import (
-        has_native_avro,
-    )
-
-    return has_native_avro(spark)

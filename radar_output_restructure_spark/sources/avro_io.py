@@ -10,8 +10,8 @@ Avro 1.x Object Container File format from the spec directly:
 
 * header: magic `Obj\\x01`, metadata map (`avro.schema` JSON, `avro.codec`),
   16-byte sync marker;
-* blocks: record count (zigzag long), byte size, payload (null/deflate codec),
-  sync marker.
+* blocks: record count (zigzag long), byte size, payload (null, deflate,
+  snappy, zstandard, bzip2 or xz codec), sync marker.
 
 `read_avro_tree` stays distributed: a `binaryFile` scan ships each container
 to an executor, and an Arrow-batched `mapInPandas` decodes records into the
@@ -27,8 +27,10 @@ format is implemented from the Apache Avro specification.
 
 from __future__ import annotations
 
+import bz2
 import io
 import json
+import lzma
 import os
 import struct
 import zlib
@@ -237,6 +239,72 @@ def encode_value(out: bytearray, schema, value) -> None:
 
 
 # ---------------------------------------------------------------------------
+# block codecs
+# ---------------------------------------------------------------------------
+
+
+def _snappy_decode(payload: bytes) -> bytes:
+    """An Avro snappy block: raw snappy, then a 4-byte big-endian CRC32 of
+    the uncompressed bytes. Raw snappy opens with the uncompressed length
+    as an unsigned varint, which pyarrow's decoder needs up front."""
+    import pyarrow as pa
+
+    body, crc = payload[:-4], payload[-4:]
+    size = shift = 0
+    for i, b in enumerate(body):
+        size |= (b & 0x7F) << shift
+        shift += 7
+        if not b & 0x80 or i == 4:
+            break
+    data = pa.Codec("snappy").decompress(body, decompressed_size=size, asbytes=True)
+    if len(crc) != 4 or struct.unpack(">I", crc)[0] != zlib.crc32(data):
+        raise ValueError("avro snappy block fails its CRC32 check")
+    return data
+
+
+def _snappy_encode(data: bytes) -> bytes:
+    import pyarrow as pa
+
+    return pa.Codec("snappy").compress(data, asbytes=True) + struct.pack(
+        ">I", zlib.crc32(data)
+    )
+
+
+def _zstd_decode(payload: bytes) -> bytes:
+    # the stream reader needs no content size in the frame header
+    import pyarrow as pa
+
+    return pa.CompressedInputStream(pa.BufferReader(payload), "zstd").read()
+
+
+def _zstd_encode(data: bytes) -> bytes:
+    import pyarrow as pa
+
+    return pa.Codec("zstd").compress(data, asbytes=True)
+
+
+#: `avro.codec` name -> (decode, encode) of one block's payload
+_CODECS = {
+    "null": (bytes, bytes),
+    "deflate": (
+        lambda b: zlib.decompress(b, -15),
+        lambda b: zlib.compress(b, 6)[2:-4],  # raw deflate
+    ),
+    "snappy": (_snappy_decode, _snappy_encode),
+    "zstandard": (_zstd_decode, _zstd_encode),
+    "bzip2": (bz2.decompress, bz2.compress),
+    "xz": (lzma.decompress, lzma.compress),
+}
+
+
+def _codec(name: str):
+    try:
+        return _CODECS[name]
+    except KeyError:
+        raise ValueError(f"unsupported avro codec: {name!r}") from None
+
+
+# ---------------------------------------------------------------------------
 # container files
 # ---------------------------------------------------------------------------
 
@@ -296,12 +364,7 @@ def read_container(source) -> tuple[dict, list]:
     while r.pos < len(r.buf):
         count = r.long()
         size = r.long()
-        payload = r.read(size)
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported avro codec: {codec!r}")
-        block = _Reader(payload)
+        block = _Reader(_codec(codec)[0](r.read(size)))
         for _ in range(count):
             records.append(decode_value(block, schema))
         if r.read(16) != sync:
@@ -336,11 +399,7 @@ def write_container(
         body = bytearray()
         for rec in chunk:
             encode_value(body, schema, rec)
-        payload = bytes(body)
-        if codec == "deflate":
-            payload = zlib.compress(payload, 6)[2:-4]  # raw deflate
-        elif codec != "null":
-            raise ValueError(f"unsupported avro codec: {codec!r}")
+        payload = _codec(codec)[1](bytes(body))
         out.write(_zigzag(len(chunk)))
         out.write(_zigzag(len(payload)))
         out.write(payload)

@@ -112,10 +112,6 @@ def _file_facts(spark: SparkSession, path: str) -> _FileFacts:
     return facts
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def dataset_fingerprint(sf_dir: str, names: tuple[str, ...]) -> str:
     """12-hex fingerprint of the named tables' on-disk state (relative
     file names + sizes + mtimes). Cache keys derived from it (persisted

@@ -24,7 +24,11 @@ system) of:
 It also prints the Spark jobs each operation launched and the tasks they
 ran (each stage once, skipped stages none), from
 `SparkContext.statusTracker()`, so a change in job count shows without a
-traced run.
+traced run, and the classes Spark's code generator compiled with Janino
+(`janino`: the count of `CodegenMetrics`' compilation-time histogram, one
+per code-cache miss). A cycle over a schema already seen should compile
+none; a count that stays above zero cycle after cycle means per-cycle
+literals reach the generated code.
 
 The same split is then printed per span the workload opens (for
 `registry_mix`, each query's plan build and its exec), averaged over the
@@ -141,6 +145,12 @@ def spark_counts(sc, jobs: set[int]) -> tuple[int, int]:
     return len(jobs), tasks
 
 
+def janino_compiles(sc) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def snapshot(jvm_pid: int) -> dict[str, float]:
     f = _stat_fields("/proc/self/stat")
     snap = {"driver": (int(f[11]) + int(f[12])) / TICK}
@@ -151,8 +161,10 @@ def snapshot(jvm_pid: int) -> dict[str, float]:
 
 @contextlib.contextmanager
 def measured(sc, jvm_pid: int, out: list):
-    """Append to `out` the (wall, CPU split, jobs, tasks) of the block."""
+    """Append to `out` the (wall, CPU split, jobs, tasks, Janino compiles)
+    of the block."""
     jobs_before = spark_jobs(sc)
+    compiles_before = janino_compiles(sc)
     before = snapshot(jvm_pid)
     t0 = time.perf_counter()
     try:
@@ -166,14 +178,16 @@ def measured(sc, jvm_pid: int, out: list):
         row["jvm.other"] = (after["jvm"] - before["jvm"]) - sum(
             row[c] for c in COLUMNS if c.startswith("jvm.") and c != "jvm.other"
         )
-        out.append((wall, row, jobs, tasks))
+        out.append((wall, row, jobs, tasks, janino_compiles(sc) - compiles_before))
 
 
-def print_row(label: str, wall: float, row: dict, jobs: float, tasks: float) -> None:
+def print_row(
+    label: str, wall: float, row: dict, jobs: float, tasks: float, janino: float
+) -> None:
     print(
         f"{label:>3} {wall:6.2f} "
         + " ".join(f"{row[c]:12.2f}" for c in COLUMNS)
-        + f" {sum(row.values()):7.2f} {jobs:5.1f} {tasks:6.1f}"
+        + f" {sum(row.values()):7.2f} {jobs:5.1f} {tasks:6.1f} {janino:6.1f}"
     )
 
 
@@ -184,6 +198,7 @@ def mean(rows: list) -> tuple:
         {c: sum(r[1][c] for r in rows) / n for c in COLUMNS},
         sum(r[2] for r in rows) / n,
         sum(r[3] for r in rows) / n,
+        sum(r[4] for r in rows) / n,
     )
 
 
@@ -226,7 +241,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(
             f"{'op':>3} {'wall':>6} " + " ".join(f"{c:>12}" for c in COLUMNS)
-            + f" {'total':>7} {'jobs':>5} {'tasks':>6}"
+            + f" {'total':>7} {'jobs':>5} {'tasks':>6} {'janino':>6}"
         )
         ops: list = []
         for i in range(args.ops):

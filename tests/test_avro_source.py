@@ -251,6 +251,20 @@ def test_native_avro_detection(spark):
     assert has_native_avro(spark) in (True, False)
 
 
+def test_avro_snappy_block_crc_is_checked(tmp_path):
+    """A snappy block carries a CRC32 of its uncompressed bytes after the
+    compressed ones: a block whose checksum does not match is refused, not
+    decoded into silently wrong records."""
+    path = str(tmp_path / "s.avro")
+    records = [_status_rec("p", "u", 1.0 + i, "S") for i in range(5)]
+    avro_io.write_container(path, STATUS_SCHEMA, records, codec="snappy")
+    assert avro_io.read_container(path)[1] == records
+    data = bytearray(open(path, "rb").read())
+    data[-17] ^= 0xFF  # the last CRC byte, just before the sync marker
+    with pytest.raises(ValueError, match="CRC32"):
+        avro_io.read_container(bytes(data))
+
+
 def test_empty_avro_container(spark, tmp_path):
     """A header-only container (flush with zero records) reads as zero rows
     without breaking the scan or the pipeline."""
@@ -313,15 +327,16 @@ DYNAMIC_SCHEMA = {
 
 def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
     """With map/array leaves, flatten stores its input in one job whose
-    Observation yields the shapes, and the writer and the cleaner's
-    expectations read the stored rows: each pass decodes the Avro files
-    once. Before, a separate shape aggregate (two jobs under AQE) decoded
-    them too: 5 jobs per restructure run and 8 per verify_topic on this
-    fixture. verify_topic checks each target file inside the grouped pass
-    over its expectations (no target-path collect, listing job or
-    anti-join). The Avro record type is read on the driver, not by a
-    `first()` job: 3 jobs per pass (the checkpoint, then the shuffle's
-    map stage and result stage), 4 before."""
+    Observation yields the shapes, and the writer reads the stored rows:
+    the restructure pass decodes the Avro files once. Before, a separate
+    shape aggregate (two jobs under AQE) decoded them too. The Avro record
+    type is read on the driver, not by a `first()` job: 3 jobs per
+    restructure pass (the checkpoint, then the shuffle's map stage and
+    result stage). verify_topic needs no flatten: it takes each record's
+    target path and `value.time` straight off `RestructurePlan.route` and
+    checks each target file inside the grouped pass over them (no
+    target-path collect, listing job or anti-join): 2 jobs (the shuffle's
+    map stage and result stage), 3 while it ran the flatten checkpoint."""
     from radar_output_restructure_spark.plans.cleaner import (
         CleanerConfig,
         SourceDataCleaner,
@@ -362,16 +377,19 @@ def test_flatten_materialization_saves_one_job_per_pass(spark, tmp_path):
         spark, "verify-pass", lambda: cleaner.verify_topic("t", files)
     )
     assert verdict == {old: True}
-    assert n_verify == 3
+    assert n_verify == 2
 
 
 def test_dedup_pass_shuffles_once(spark, tmp_path):
     """With dedup on, `transform` hash-partitions by the partition columns
     before the dedup window; the window key holds every partition column,
-    so the window, the writer's repartition and the cleaner's grouping all
-    reuse that one shuffle. A restructure pass and a verify_topic pass each
-    run 3 jobs (the flatten checkpoint, then the shuffle's map stage and
-    result stage), with the re-delivered record written once."""
+    so the window and the writer's repartition reuse that one shuffle. A
+    restructure pass runs 3 jobs (the flatten checkpoint, then the
+    shuffle's map stage and result stage), with the re-delivered record
+    written once. The whole-record key holds `value.time`, so verify_topic
+    checks every record straight off `RestructurePlan.route`, without the
+    window or the checkpoint: 2 jobs (one shuffle by the partition
+    columns, its map stage and result stage), 3 before."""
     from radar_output_restructure_spark.plans.cleaner import (
         CleanerConfig,
         SourceDataCleaner,
@@ -407,7 +425,7 @@ def test_dedup_pass_shuffles_once(spark, tmp_path):
         spark, "dedup-verify-pass", lambda: cleaner.verify_topic("t", files)
     )
     assert verdict == {old: True}
-    assert n_verify == 3
+    assert n_verify == 2
 
 
 def test_avro_scan_builds_without_a_job(spark, tmp_path):

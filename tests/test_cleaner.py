@@ -5,6 +5,7 @@ cleaner/SourceDataCleanerTest behavior + TimestampExtractionCheck.kt:23-106."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -12,6 +13,7 @@ from pyspark.sql import Row
 
 from radar_output_restructure_spark.plans.cleaner import CleanerConfig, SourceDataCleaner
 from radar_output_restructure_spark.plans.restructure import (
+    DedupConfig,
     RestructureConfig,
     RestructurePlan,
 )
@@ -485,3 +487,247 @@ def test_cleaner_delete_updates_index(spark, tmp_path):
         if p in set(out["deleted"])
     ]
     assert not stale, "deleted sources must leave the live index immediately"
+
+
+# ---------------------------------------------------------------------------
+# the expectations straight off the routed scan vs the writer's transform
+# ---------------------------------------------------------------------------
+
+
+def _redelivery_files(input_dir: str, time_field: str = "time") -> tuple[str, str]:
+    """Three Avro files of topic `t` with map and array leaves. Record B
+    (time 3601) sits in f0 and is re-delivered in f1, next to B2, which
+    differs from B in `value.props.a` only; f2 holds the newest offset, so
+    f0 and f1 are the candidates. `time_field` names the record's time
+    field. Returns (f0, f1)."""
+    from tests.test_avro_source import DYNAMIC_SCHEMA, _write_avro_fixture
+
+    schema = json.loads(
+        json.dumps(DYNAMIC_SCHEMA).replace('"time"', json.dumps(time_field))
+    )
+
+    def rec(t, levels, props):
+        return {"key": {"projectId": "p", "userId": "u", "sourceId": "s"},
+                "value": {time_field: t, "levels": levels, "props": props}}
+
+    b = rec(3601.0, [], {})
+    f0 = _write_avro_fixture(
+        input_dir, "t", [rec(3600.0, [1, 2], {"b": "x"}), b], 0, 0, 1,
+        schema=schema,
+    )
+    f1 = _write_avro_fixture(
+        input_dir, "t",
+        [b, rec(3601.0, [], {"a": "z"}), rec(3602.0, [3], {"a": "y"})],
+        0, 2, 4, schema=schema,
+    )
+    _write_avro_fixture(
+        input_dir, "t", [rec(7200.0, [4], {})], 0, 5, 5, schema=schema
+    )
+    return f0, f1
+
+
+def _expectations(cleaner, files) -> set[tuple]:
+    src, _cols, _covered = cleaner._source_expectations("t", files)
+    return {
+        (r.source_file, r.target_path, r.time)
+        for r in src.select("source_file", "target_path", "time").collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "fmt,dedup",
+    [
+        ("csv", None),
+        ("csv", DedupConfig(enable=True)),
+        ("csv", DedupConfig(enable=True, ignore_fields=["value.props.a"])),
+        ("json", DedupConfig(enable=True)),
+        ("parquet", DedupConfig(enable=True)),
+    ],
+    ids=["dedup-off", "whole-record", "ignore-fields", "json", "parquet"],
+)
+def test_cleaner_direct_route_verdicts_match_transform(
+    spark, tmp_path, monkeypatch, fmt, dedup
+):
+    """Whenever the dedup key holds `value.time`, the check reads each
+    record's (target, time) straight off `RestructurePlan.route`, with no
+    flatten and no dedup window. A duplicate the writer dropped has its
+    survivor's target and time, so the direct route expects the same
+    (target, time) pairs as the writer's `transform(keep_cols=
+    ('source_file',))` (a superset of its rows: the dropped copies too) and
+    gives the same verdicts on a healthy tree."""
+    from radar_output_restructure_spark.plans import cleaner as cleaner_mod
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    f0, f1 = _redelivery_files(input_dir)
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        output_format=fmt, dedup=dedup or DedupConfig(),
+    )
+    RestructurePlan(spark, cfg).run()
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    files = cleaner.candidate_files("t")
+    assert [f.path for f in files] == [f0, f1]
+    assert cleaner_mod._key_holds_time(cleaner.plan.dedup_config("t"), fmt)
+
+    direct = _expectations(cleaner, files)
+    verdict = cleaner.verify_topic("t", files)
+    monkeypatch.setattr(cleaner_mod, "_key_holds_time", lambda *_a: False)
+    survivors = _expectations(cleaner, files)
+    assert cleaner.verify_topic("t", files) == verdict == {f0: True, f1: True}
+
+    assert survivors <= direct
+    assert {e[1:] for e in survivors} == {e[1:] for e in direct}
+    # the re-delivered B is expected from both files on the direct route
+    assert {e[0] for e in direct} == {f0, f1}
+    if dedup is not None and fmt != "json":
+        assert len(survivors) < len(direct)
+
+
+def test_cleaner_distinct_fields_without_time_keeps_survivor_expectations(
+    spark, tmp_path, monkeypatch
+):
+    """A `distinct_fields` key that leaves `value.time` out drops records
+    whose time the target never holds (here every record of a user but the
+    last in each hour file). The check then still runs the writer's
+    `transform` and expects the survivors only: both candidates verify and
+    none is revoked, so nothing loops through revoke and re-extraction."""
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    f0, f1 = _redelivery_files(input_dir)
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        dedup=DedupConfig(enable=True, distinct_fields=["key.userId"]),
+    )
+    RestructurePlan(spark, cfg).run()
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    calls = []
+    transform = cleaner.plan.transform
+    monkeypatch.setattr(
+        cleaner.plan, "transform",
+        lambda *a, **kw: calls.append(kw) or transform(*a, **kw),
+    )
+    assert cleaner.run_topic("t") == {"deleted": [f0, f1], "revoked": []}
+    assert calls == [{"keep_cols": ("source_file",)}]
+
+
+def test_cleaner_missing_time_revokes_every_file_holding_the_record(
+    spark, tmp_path, monkeypatch
+):
+    """A target file that lacks one record's time revokes EVERY candidate
+    file holding that record, the dropped duplicates' files included.
+    Expecting the survivors only, the check revoked just the survivor's
+    file (f1, keep-last) and deleted f0, whose copy of the record was
+    never verified. This is the one verdict the direct route changes: it
+    is stricter, and it never deletes a file whose record is missing."""
+    from radar_output_restructure_spark.plans import cleaner as cleaner_mod
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    f0, f1 = _redelivery_files(input_dir)
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        dedup=DedupConfig(enable=True),
+    )
+    (target,) = [
+        f for f in RestructurePlan(spark, cfg).run()["t"]
+        if f.endswith("19700101_0100.csv")
+    ]
+    with open(target) as fh:
+        lines = fh.read().splitlines()
+    kept = [ln for ln in lines if ",3601.0," not in ln]
+    assert len(kept) == len(lines) - 2  # B and B2
+    with open(target, "w") as fh:
+        fh.write("\n".join(kept) + "\n")
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    files = cleaner.candidate_files("t")
+    assert cleaner.verify_topic("t", files) == {f0: False, f1: False}
+    monkeypatch.setattr(cleaner_mod, "_key_holds_time", lambda *_a: False)
+    assert cleaner.verify_topic("t", files) == {f0: True, f1: False}
+
+
+@pytest.mark.parametrize("case", ["excluded", "absent"])
+def test_cleaner_revokes_all_without_value_time(spark, tmp_path, case):
+    """With `value.time` excluded from the output, or absent from the
+    schema (the record routes by `value.timeReceived`), no target holds a
+    time to check: every candidate is revoked."""
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    f0, f1 = _redelivery_files(
+        input_dir, "timeReceived" if case == "absent" else "time"
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        exclude_fields={"value.time"} if case == "excluded" else set(),
+        dedup=DedupConfig(enable=True),
+    )
+    finals = RestructurePlan(spark, cfg).run()["t"]
+    assert any(f.endswith("19700101_0100.csv") for f in finals)
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    assert cleaner.run_topic("t") == {"deleted": [], "revoked": [f0, f1]}
+
+
+def test_key_holds_time_rule():
+    """The rule that lets the check skip the dedup window."""
+    from radar_output_restructure_spark.plans.cleaner import _key_holds_time
+
+    def holds(fmt="csv", **kw):
+        return _key_holds_time(DedupConfig(**kw), fmt)
+
+    assert holds(enable=False, distinct_fields=["key.userId"])
+    assert holds(enable=True)
+    assert holds("json", enable=True, distinct_fields=["key.userId"])
+    assert holds("parquet", enable=True, ignore_fields=["value.x"])
+    assert holds(enable=True, distinct_fields=["key.userId", "value.time"])
+    assert not holds(enable=True, distinct_fields=["key.userId"])
+    assert not holds("parquet", enable=True, ignore_fields=["value.time"])
+    assert not holds(
+        enable=True, distinct_fields=["value.time"], ignore_fields=["value.time"]
+    )
+
+
+def test_steady_state_cycle_compiles_nothing(spark, tmp_path):
+    """A restructure + cleaner cycle over a new landing of a schema the
+    service has already seen generates no new code: every whole-stage and
+    expression class it needs is in Janino's cache, so no per-cycle
+    literal (file list, offsets, time bounds) reaches generated code.
+    Two cycles warm the cache (the first cleaner pass of a topic, then a
+    cycle shaped like the measured one); the third must add 0 to Spark's
+    codegen compile count."""
+    from tests.test_avro_source import DYNAMIC_SCHEMA, _write_avro_fixture
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        compression="gzip", dedup=DedupConfig(enable=True),
+    )
+    plan = RestructurePlan(spark, cfg)
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0), plan=plan)
+
+    def land(i: int) -> str:
+        # one file per cycle, same map keys and array arity, with one
+        # record re-delivered from the previous landing
+        recs = [
+            {"key": {"projectId": "p", "userId": "u", "sourceId": "s"},
+             "value": {"time": 3600.0 * (1 + i) + j, "levels": [j, i],
+                       "props": {"a": str(j)}}}
+            for j in range(-1, 3)
+        ]
+        return _write_avro_fixture(
+            input_dir, "t", recs, 0, 4 * i, 4 * i + 3, schema=DYNAMIC_SCHEMA
+        )
+
+    def cycle(i: int) -> dict:
+        land(i)
+        assert plan.run()["t"]
+        return cleaner.run_topic("t")
+
+    land(0)
+    assert cycle(1)["deleted"]
+    assert cycle(2)["deleted"]
+    before = compiles()
+    result = cycle(3)
+    assert result["deleted"] and not result["revoked"]
+    assert compiles() - before == 0
