@@ -70,15 +70,23 @@ def _vectors(pdf, col: str = "__v"):
     return np.stack(pdf[col].to_numpy()).astype(np.float64)
 
 
-def _arrow_matrix(col):
-    """The (n, dims) float64 matrix of an Arrow list column (an Array or a
-    ChunkedArray of n >= 1 equal-length vectors): one flatten and one
-    reshape, no per-row objects."""
-    import numpy as np
+def _arrow_matrix(col, dtype="float64"):
+    """The (n, dims) `dtype` matrix of an Arrow list column (an Array or a
+    ChunkedArray of equal-length vectors): one flatten and one reshape, no
+    per-row objects. Raises ValueError on a NULL vector or on vectors of
+    different lengths, which a bare reshape would fail on or silently
+    regroup into wrong rows."""
     import pyarrow.compute as pc
 
+    lengths = pc.list_value_length(col)
+    if lengths.null_count:
+        raise ValueError(f"vector column holds {lengths.null_count} NULL vector(s)")
+    span = pc.min_max(lengths)
+    lo, hi = span["min"].as_py() or 0, span["max"].as_py() or 0
+    if lo != hi:
+        raise ValueError(f"vector column is ragged: lengths from {lo} to {hi}")
     flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
-    return flat.reshape(len(col), -1).astype(np.float64)
+    return flat.reshape(len(col), hi).astype(dtype)
 
 
 def _seq_norms(lists):
@@ -423,11 +431,11 @@ def _lsh_bucket_rows(
     num_tables: int,
     carry: tuple[str, ...],
 ) -> DataFrame:
-    """(*carry, table, bucket): one `mapInArrow` pass of `_lsh_kernel` over
-    (vec_id, __v) that emits the `carry` columns with each row's array of
-    per-table buckets; the JVM `posexplode`s that array into (table,
-    bucket). Map-only: at 100 TB it runs embarrassingly parallel with
-    zero shuffle."""
+    """(*carry, buckets, table, bucket): one `mapInArrow` pass of
+    `_lsh_kernel` over (vec_id, __v) that emits the `carry` columns with
+    each row's array of per-table buckets; the JVM `posexplode`s that array
+    into (table, bucket) beside it. Map-only: at 100 TB it runs
+    embarrassingly parallel with zero shuffle."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -453,7 +461,7 @@ def _lsh_bucket_rows(
             )
 
     return src.mapInArrow(bucketize, schema).select(
-        *carry, F.posexplode("buckets").alias("table", "bucket")
+        *carry, "buckets", F.posexplode("buckets").alias("table", "bucket")
     )
 
 
@@ -484,7 +492,7 @@ def hyperplane_lsh_buckets(
     """
     return _lsh_bucket_rows(
         df, num_planes, dims, id_col, vec_col, num_tables, ("vec_id",)
-    )
+    ).drop("buckets")
 
 
 def lsh_bucket_vectors(
@@ -495,9 +503,11 @@ def lsh_bucket_vectors(
     vec_col: str = "embedding",
     num_tables: int = 1,
 ) -> DataFrame:
-    """(vec_id, __v, table, bucket): `hyperplane_lsh_buckets` with each
-    row's vector riding along — the input of `near_dup_pairs_from_buckets`
-    from ONE scan of `df`, no join back to the vectors."""
+    """(vec_id, __v, buckets, table, bucket): `hyperplane_lsh_buckets` with
+    each row's vector and its whole per-table bucket array riding along —
+    the input of `near_dup_pairs_from_buckets` from ONE scan of `df`, no
+    join back to the vectors. The verifier reads `buckets` to emit a pair
+    only from the first table in which its two vectors share a bucket."""
     return _lsh_bucket_rows(
         df, num_planes, dims, id_col, vec_col, num_tables, ("vec_id", "__v")
     )
@@ -639,54 +649,78 @@ def _adc_scorer(q_lists, q_norms, codebooks, dims: int, m: int):
 
 
 def near_dup_pairs_from_buckets(
-    rows: DataFrame, threshold: float, chunk_pairs: int = 1 << 21
+    rows: DataFrame, threshold: float, chunk_pairs: int = 1 << 16
 ) -> DataFrame:
     """(vec_a, vec_b, sim): every id-ordered pair of (table, bucket, vec_id,
-    __v) `rows` sharing a (table, bucket) whose exact cosine >=
-    `threshold`, verified WITHIN the bucket.
+    __v, buckets) `rows` sharing a (table, bucket) whose exact cosine >=
+    `threshold`, verified WITHIN the bucket. `buckets` is the row's whole
+    per-table bucket array (`bucket` == `buckets[table]`).
 
     The verification stage of embedding near-dup (the analog of MinHash's
     jaccard_for_pairs). Earlier plan: bucket self-join -> distinct pairs ->
     two row-joins back to the vectors -> interpreted HOF cosine per pair.
     That materializes and shuffles every candidate pair THREE times (join,
     distinct, vector joins) and folds 2*dims interpreted lambda steps per
-    pair — measured 15 s at sf0.1 against ~1.5 s for this form. Here each
-    (table, bucket) group verifies its own pairs as one `pyarrow.Table`
-    (`applyInArrow`): the vectors shuffle ONCE (to their buckets — linear
-    in corpus x tables), pairs above threshold are the only per-pair rows
-    ever materialized, and a final distinct dedupes pairs colliding in
-    several tables. The rows come from `lsh_bucket_vectors` (the LSH
+    pair — measured 15 s at sf0.1 against ~1.5 s for this form. Here the
+    vectors shuffle ONCE, hash-partitioned by (table, bucket) and sorted by
+    (table, bucket, vec_id) within each partition (linear in corpus x
+    tables), and one `mapInArrow` pass scores every complete group of an
+    Arrow batch together: no Python call per bucket. The rows of a batch's
+    last group are held over to the next batch, so no group is split.
+    Pairs above threshold are the only per-pair rows ever materialized.
+    A pair is emitted only by the FIRST table in which its two vectors
+    share a bucket (their `buckets` arrays are compared over the tables
+    before), so a pair colliding in several tables comes out once with no
+    distinct shuffle. The rows come from `lsh_bucket_vectors` (the LSH
     near-dup) or from a cell frame with its vectors joined on
-    (`semantic_dedup`).
+    (`semantic_dedup`, one table).
 
-    A group sorts its ids with a stable argsort, reads its vectors as one
-    float64 matrix and scores pairs in blocks of anchor rows x the
-    partners after them: acc += a[d] * b[d] for d = 0..dims-1 in place,
-    so every dot (and norm) is the left-to-right IEEE fold from 0.0 of
-    zip_with/aggregate and the oracle's unrolled sum; rounding is
-    `_round6_spark` (Spark's HALF_UP on the shortest-decimal value). Ids
-    keep the id column's own Arrow type. A duplicate-heavy bucket at 100 TB
-    is inherently quadratic in ITS OWN size for any exact-verify design; a
-    block holds at most `chunk_pairs` pairs (or one anchor row), so memory
-    stays O(max(chunk_pairs, m)) even for a degenerate bucket of m rows.
+    A group's rows are in id order (Spark's sort, NULLs last like a stable
+    argsort), so every pair is oriented vec_a before vec_b. Each row's
+    norm is folded once and each pair's dot is acc += a[d] * b[d] for d =
+    0..dims-1 in place, so every dot (and norm) is the left-to-right IEEE
+    fold from 0.0 of zip_with/aggregate and the oracle's unrolled sum;
+    rounding is `_round6_spark` (Spark's HALF_UP on the shortest-decimal
+    value). Ids keep the id column's own Arrow type. A duplicate-heavy
+    bucket at 100 TB is inherently quadratic in ITS OWN size for any
+    exact-verify design, so pairs are scored in blocks of consecutive
+    anchor rows (each row against the rows after it in its group): a block
+    packs many small groups, a group whose triangle exceeds `chunk_pairs`
+    spans several blocks split at anchor rows, and a block holds at most
+    `chunk_pairs` pairs or one anchor row. No group's whole m(m-1)/2 index
+    triangle is built, so memory stays O(max(chunk_pairs, m)) even for a
+    degenerate bucket of m rows. The default block keeps a block's
+    per-dimension gathers (512 KB each) in cache: on a 4-vCPU host, numpy
+    alone scored 64-d groups of 31 to 3000 rows about 1.5-2x faster in
+    64K-pair blocks than in 2M-pair blocks.
     """
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    def verify(group: pa.Table) -> pa.Table:
-        ids = group.column("vec_id")
-        schema = pa.schema(
-            [("vec_a", ids.type), ("vec_b", ids.type), ("sim", pa.float64())]
-        )
-        m = group.num_rows
-        if m < 2:
-            return schema.empty_table()
-        order = pc.sort_indices(ids)  # stable: ids ascending -> vec_a < vec_b
-        ids = ids.take(order)
-        x = _arrow_matrix(group.column("__v"))[order.to_numpy()]
-        xt = np.ascontiguousarray(x.T)  # (dims, m), columns in id order
-        sq = np.zeros(m)
+    def keys(data):
+        """(table, bucket, new): `data`'s key arrays, and for rows 1..n-1
+        whether each starts a new group."""
+        tbl = data.column("table").to_numpy(zero_copy_only=False)
+        bkt = data.column("bucket").to_numpy(zero_copy_only=False)
+        return tbl, bkt, (tbl[1:] != tbl[:-1]) | (bkt[1:] != bkt[:-1])
+
+    def score(parts):
+        """The owned above-threshold pairs of `parts`: RecordBatches of
+        whole groups in (table, bucket, vec_id) order."""
+        parts = [p for p in parts if p.num_rows]
+        if not parts:
+            return
+        part = pa.Table.from_batches(parts)
+        n = part.num_rows
+        tbl, _, new = keys(part)
+        first = np.r_[True, new]
+        ends = np.r_[np.flatnonzero(first)[1:], n]
+        partners = ends[np.cumsum(first) - 1] - np.arange(n) - 1
+        if not partners.any():
+            return
+        ids = part.column("vec_id")
+        xt = np.ascontiguousarray(_arrow_matrix(part.column("__v")).T)
+        sq = np.zeros(n)
         for xd in xt:  # sequential over dims == the fold order
             sq += xd * xd
         norms = np.sqrt(sq)
@@ -694,36 +728,56 @@ def near_dup_pairs_from_buckets(
         # the oracle's guarded norms do the same) — a zero vector's dot is
         # 0, so dividing by the substituted 1.0 yields exactly 0.0
         norms = np.where(norms == 0.0, 1.0, norms)
-        outs = []
+        owners = _arrow_matrix(part.column("buckets"), "int64")
+        cum = np.cumsum(partners)  # pairs anchored at rows 0..r
         lo = 0
-        while lo < m - 1:
-            width = m - 1 - lo  # partners lo+1..m-1 of the block's anchors
-            hi = min(m - 1, lo + max(1, chunk_pairs // width))
-            acc = np.zeros((hi - lo, width))
-            for xd in xt:
-                acc += xd[lo:hi, None] * xd[None, lo + 1 :]
-            sim = _round6_spark(acc / (norms[lo:hi, None] * norms[None, lo + 1 :]))
-            # column c is row lo+1+c: a pair once, anchor before partner
-            keep = (sim >= threshold) & (
-                np.arange(width)[None, :] >= np.arange(hi - lo)[:, None]
-            )
-            ra, cb = np.nonzero(keep)
-            if len(ra):
-                outs.append(
-                    pa.table(
-                        [ids.take(ra + lo), ids.take(cb + lo + 1), sim[ra, cb]],
-                        schema=schema,
-                    )
-                )
+        while lo < n:
+            base = cum[lo] - partners[lo]
+            hi = max(lo + 1, int(np.searchsorted(cum, base + chunk_pairs, "right")))
+            c = partners[lo:hi]
+            ia = np.repeat(np.arange(lo, hi), c)
+            # partner = anchor + 1 + the pair's offset within its anchor run
+            ib = ia + 1 + np.arange(len(ia)) - np.repeat(cum[lo:hi] - c - base, c)
             lo = hi
-        return pa.concat_tables(outs) if outs else schema.empty_table()
+            acc = np.zeros(len(ia))
+            for xd in xt:
+                acc += xd[ia] * xd[ib]
+            sim = _round6_spark(acc / (norms[ia] * norms[ib]))
+            keep = sim >= threshold
+            ia, ib, sim = ia[keep], ib[keep], sim[keep]
+            # first-table rule: a pair that shares a bucket in an earlier
+            # table belongs to that table's group
+            tb = tbl[ia]
+            own = np.ones(len(ia), bool)
+            for t in range(int(tb.max(initial=0))):
+                own &= (tb <= t) | (owners[ia, t] != owners[ib, t])
+            if own.any():
+                yield from pa.Table.from_arrays(
+                    [ids.take(ia[own]), ids.take(ib[own]), pa.array(sim[own])],
+                    names=["vec_a", "vec_b", "sim"],
+                ).to_batches()
+
+    def verify(batches):
+        held, key = [], None  # the open group's rows and (table, bucket)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            tbl, bkt, new = keys(batch)
+            starts = np.flatnonzero(new)
+            cut = int(starts[-1]) + 1 if len(starts) else 0  # last group's start
+            if cut or (tbl[0], bkt[0]) != key:  # the held group is complete
+                yield from score([*held, batch.slice(0, cut)])
+                held = []
+            held.append(batch.slice(cut))
+            key = (tbl[-1], bkt[-1])
+        yield from score(held)
 
     id_type = rows.schema["vec_id"].dataType.simpleString()
     return (
-        rows.select("table", "bucket", "vec_id", "__v")
-        .groupBy("table", "bucket")
-        .applyInArrow(verify, f"vec_a {id_type}, vec_b {id_type}, sim double")
-        .distinct()
+        rows.select("table", "bucket", "vec_id", "__v", "buckets")
+        .repartition("table", "bucket")
+        .sortWithinPartitions("table", "bucket", F.col("vec_id").asc_nulls_last())
+        .mapInArrow(verify, f"vec_a {id_type}, vec_b {id_type}, sim double")
     )
 
 
@@ -1702,8 +1756,10 @@ def semantic_dedup(
     plain LSH near-dup has no such occupancy guarantee under semantic
     clustering drift. The plan is: one map-only home-cell assignment
     (`ivf_cells`, codebook in the closure), ONE shuffle of the corpus to
-    its cells, per-cell Arrow pairwise verification emitting only
-    above-threshold pairs (`near_dup_pairs_from_buckets`), and a single
+    its cells, pairwise verification emitting only above-threshold pairs
+    (`near_dup_pairs_from_buckets`: one Arrow pass per shuffle partition,
+    in blocks of at most `chunk_pairs` pairs; with one table its
+    first-table rule keeps every pair), and a single
     explode+groupBy over those pairs (pair-set-sized, not corpus-sized) to
     derive per-vector dup counts and the keep flag. Training the codebook
     is `train_ivf_centroids` (bounded Lloyd partials).
@@ -1717,7 +1773,11 @@ def semantic_dedup(
     vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
     pairs = near_dup_pairs_from_buckets(
         cells.join(vecs, "vec_id").select(
-            F.lit(0).alias("table"), F.col("cell").alias("bucket"), "vec_id", "__v"
+            F.lit(0).alias("table"),
+            F.col("cell").alias("bucket"),
+            "vec_id",
+            "__v",
+            F.array("cell").alias("buckets"),
         ),
         threshold,
     )

@@ -99,12 +99,15 @@ def _embedding_near_dup(
     (`table_num_rows`), so building the plan runs no count job. The
     embedding analog of MinHash near-dup (candidates per bucket, never
     all-pairs). The table is scanned once: the bucketizer carries each
-    vector with its buckets (operators/similarity.lsh_bucket_vectors), the
-    vectors shuffle once to their buckets and each bucket verifies its own
-    pairs as one Arrow table with the oracle's exact fold order
-    (near_dup_pairs_from_buckets) — the earlier candidate self-join +
-    per-pair HOF cosine materialized every candidate through three shuffles
-    and ran ~10x slower at sf0.1."""
+    vector with its bucket array (operators/similarity.lsh_bucket_vectors)
+    and the vectors shuffle once to their buckets. One vectorized Arrow
+    pass per shuffle partition then verifies every bucket's pairs with the
+    oracle's exact fold order, in blocks of at most `chunk_pairs` pairs
+    (many small buckets to a block, a large bucket split at anchor rows),
+    and emits each pair only from the first table in which it collides,
+    so no distinct shuffle follows (near_dup_pairs_from_buckets).
+    The earlier candidate self-join + per-pair HOF cosine materialized
+    every candidate through three shuffles and ran ~10x slower at sf0.1."""
     emb = load_table(spark, sf_dir, "embeddings")
     planes = auto_num_planes(table_num_rows(spark, sf_dir, "embeddings"))
     rows = lsh_bucket_vectors(emb, num_planes=planes, num_tables=NUM_TABLES)

@@ -13,10 +13,11 @@ Each query prints one line of counts, so plan tables come from this script
 rather than from hand `grep`s over the files:
 
     <query>: <build s> exchanges=N broadcasts=N scans=N python_maps=N
-        checkpoints=N checkpoint_exchanges=N jobs=N
+        python_groups=N checkpoints=N checkpoint_exchanges=N jobs=N
 
 Node counts are `explain_audit.audit` over the formatted query plan
-(`python_maps` counts MapInPandas and MapInArrow nodes)
+(`python_maps` counts MapInPandas and MapInArrow nodes, `python_groups`
+FlatMapGroupsInPandas and FlatMapGroupsInArrow nodes)
 (`checkpoint_exchanges` over the checkpointed frames' plans). `jobs` is the
 number of Spark jobs the build itself launched, read from the status
 tracker. A plan dump is not free of execution: eager builds (k-means
@@ -99,6 +100,7 @@ def main() -> None:
             f"{name}: {time.perf_counter() - t0:.2f}s"
             f" exchanges={c.get('shuffle', 0)} broadcasts={c.get('bcast', 0)}"
             f" scans={c.get('scan', 0)} python_maps={c.get('py_map', 0)}"
+            f" python_groups={c.get('py_groups', 0)}"
             f" checkpoints={len(checkpoints)}"
             f" checkpoint_exchanges={ckpt_exchanges} jobs={len(jobs)}",
             flush=True,

@@ -425,22 +425,40 @@ def test_multiprobe_lsh_never_below_single_probe(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _verified(rows, threshold: float, chunk_pairs: int = 1 << 21) -> list:
+def _verified(rows, threshold: float, *chunk_pairs: int) -> list:
     from radar_output_restructure_spark.operators.similarity import (
         near_dup_pairs_from_buckets,
     )
 
     return sorted(
         (r["vec_a"], r["vec_b"], r["sim"])
-        for r in near_dup_pairs_from_buckets(rows, threshold, chunk_pairs).collect()
+        for r in near_dup_pairs_from_buckets(rows, threshold, *chunk_pairs).collect()
+    )
+
+
+def _bucket_rows(spark, buckets: dict, id_type: str = "string", tables=None):
+    """(table, bucket, vec_id, __v, buckets) rows, one per vector and table
+    as the LSH bucketizer's posexplode emits them, for vectors of `VECS`
+    with their per-table bucket arrays `buckets`; `tables` restricts the
+    rows to some tables (the arrays stay whole)."""
+    cast = str if id_type == "string" else int
+    return spark.createDataFrame(
+        [
+            (t, b, cast(i), VECS[i], bs)
+            for i, bs in buckets.items()
+            for t, b in enumerate(bs)
+            if tables is None or t in tables
+        ],
+        f"table int, bucket bigint, vec_id {id_type}, __v array<double>,"
+        " buckets array<bigint>",
     )
 
 
 def test_near_dup_verifier_matches_per_pair_model(spark):
-    """The per-bucket Arrow verifier against a pure-Python per-pair model
+    """The Arrow verifier against a pure-Python per-pair model
     (left-to-right fold, zero norms read as 1, Spark's round): string ids
     (whose order is not the integer order), a zero-norm vector, a one-row
-    bucket, a pair found in two tables, and a bucket split into blocks by
+    bucket, pairs found in two tables, and a bucket split into blocks by
     `chunk_pairs=7`. Each pair comes out once."""
     members = {
         (0, 0): range(12),  # ZERO and the TIED pair; 66 pairs, many blocks
@@ -448,14 +466,12 @@ def test_near_dup_verifier_matches_per_pair_model(spark):
         (1, 0): [*TIED, 3, 30],  # the TIED pair again, in another table
         (1, 3): [31, 32, 33],
     }
-    rows = spark.createDataFrame(
-        [
-            (t, b, str(i), VECS[i])
-            for (t, b), ids in members.items()
-            for i in ids
-        ],
-        "table int, bucket bigint, vec_id string, __v array<double>",
-    )
+    # a vector outside a listed bucket sits alone in a bucket of its own
+    buckets = {i: [100 + i, 100 + i] for ids in members.values() for i in ids}
+    for (t, b), ids in members.items():
+        for i in ids:
+            buckets[i][t] = b
+    rows = _bucket_rows(spark, buckets)
     threshold = 0.0
     want = set()
     for ids in members.values():
@@ -470,20 +486,82 @@ def test_near_dup_verifier_matches_per_pair_model(spark):
         assert set(got) == want
 
 
+def test_near_dup_pair_belongs_to_its_first_colliding_table(spark):
+    """A pair colliding in tables 0 and 2 comes out once; a pair colliding
+    only in table 2 comes out once, from table 2. Table 2's copy of the
+    first pair defers to table 0 even when only table 2's rows are
+    verified."""
+    buckets = {
+        1: [7, 50, 9],  # (1, 2) share tables 0 and 2
+        2: [7, 51, 9],
+        3: [60, 61, 4],  # (3, 4) share table 2 only
+        4: [62, 63, 4],
+    }
+    both, late = (1, 2, _sim(1, 2)), (3, 4, _sim(3, 4))
+    assert _verified(_bucket_rows(spark, buckets, "long"), -1.0) == [both, late]
+    only2 = _bucket_rows(spark, buckets, "long", tables={2})
+    assert _verified(only2, -1.0) == [late]
+
+
+def test_near_dup_verifier_holds_groups_across_arrow_batches(spark):
+    """With 3-row Arrow batches every group of 2+ rows spans batches; the
+    verifier holds a batch's last group over to the next batch and gives
+    the same pairs as with the default batch size."""
+    sizes = [1, 2, 3, 4, 5, 7, 2, 1, 8, 3]
+    buckets, i = {}, 0
+    for b, m in enumerate(sizes):
+        for _ in range(m):
+            buckets[i] = [b, 200 + i]  # table 1: every vector alone
+            i += 1
+    rows = _bucket_rows(spark, buckets, "long")
+    want = _verified(rows, -1.0)
+    assert len(want) == sum(m * (m - 1) // 2 for m in sizes)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        assert _verified(rows, -1.0) == want
+        assert _verified(rows, -1.0, 4) == want
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_near_dup_pairs_chunked_generation_matches_single_chunk(spark):
     """Per-block pair generation must emit the identical pair set as one
-    big block."""
+    big block: a 24-row bucket (276 pairs) larger than `chunk_pairs` splits
+    by anchor rows, and twenty 3-row buckets (3 pairs each) pack into
+    shared blocks."""
+    groups = [(0, 24)] + [(1 + g, 3) for g in range(20)]
+    data, i = [], 0
+    for bucket, m in groups:
+        for _ in range(m):
+            data.append(
+                (0, bucket, i, [float(i % 4 + 1), float((i * 7) % 5 + 1)], [bucket])
+            )
+            i += 1
     rows = spark.createDataFrame(
-        [
-            (0, 0, i, [float(i % 4 + 1), float((i * 7) % 5 + 1)])
-            for i in range(24)
-        ],
-        "table int, bucket int, vec_id long, __v array<double>",
+        data,
+        "table int, bucket int, vec_id long, __v array<double>, buckets array<int>",
     )
-    big = _verified(rows, 0.2)  # single block covers all 276 pairs
-    small = _verified(rows, 0.2, 7)  # many blocks, anchors split mid-row-range
-    assert big == small
-    assert len(big) > 0
+    big = _verified(rows, 0.2)  # single block covers all 336 pairs
+    for chunk in (7, 100):  # anchors split mid-row-range; small buckets packed
+        assert _verified(rows, 0.2, chunk) == big
+    assert len(big) == 276 + 20 * 3  # positive 2-d vectors: every cos > 0.4
+
+
+def test_arrow_matrix_rejects_ragged_and_null_vectors():
+    """A ragged vector column must not be reshaped into wrong vectors, and
+    a NULL vector must not fail as a bare reshape error."""
+    import pyarrow as pa
+
+    from radar_output_restructure_spark.operators.similarity import _arrow_matrix
+
+    good = _arrow_matrix(pa.array([[1, 2], [3, 4]]))
+    assert good.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    with pytest.raises(ValueError, match="ragged"):
+        _arrow_matrix(pa.array([[1, 2, 3], [4], [5, 6]]))
+    with pytest.raises(ValueError, match="NULL"):
+        _arrow_matrix(pa.chunked_array([[[1.0, 2.0]], [None, [3.0, 4.0]]]))
 
 
 def test_near_dup_bucket_verify_matches_column_form(spark):
